@@ -28,6 +28,7 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from serialization_agents_spark.parallel import spread
+from serialization_agents_spark.plans.pipeline import PipelineResult, run_pipeline
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -39,7 +40,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # instead of re-deriving it per query (and customer counts are read once,
 # not once per plan build).
 _KG_N: dict[tuple[str, str], int] = {}
-_KG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame, DataFrame]] = {}
+_KG_CACHE: dict[tuple[str, str], PipelineResult] = {}
 
 
 def _kg_customer_count(spark: SparkSession, sf_dir: str) -> int:
@@ -282,48 +283,20 @@ def _kg_redirects(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markup mentions plus the P4-promoted name-typed subjects — one
-    page scan for all span kinds."""
-    from serialization_agents_spark.operators.mentions import detect_mentions
-
-    return detect_mentions(_kg_pages(spark, sf_dir), include_subjects=True)
-
-
-def _kg_canonical(spark: SparkSession, sf_dir: str):
+def _kg_canonical(spark: SparkSession, sf_dir: str) -> PipelineResult:
+    """The kg pipeline through the enumerated canonical agents, built once
+    per (spark app, sf_dir) by the in-memory run_pipeline: the kg_*
+    queries read its pinned `linked`, `agents` and `canonical` frames."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _KG_CACHE:
-        return _KG_CACHE[key]
-
-    from serialization_agents_spark.operators.canonicalize import canonicalize_agents
-    from serialization_agents_spark.operators.linking import link_mentions
-    from serialization_agents_spark.operators.merge import merge_entities, score_alt_forms
-
-    mentions = _kg_mentions(spark, sf_dir)
-    # the authority feeds THREE broadcast builds inside link_mentions
-    # (viaf keys, lc keys, name-block argmax) — pin it once so the
-    # customer scan + normalize chain computes once, not per subtree
-    auth = _kg_authority(spark, sf_dir).localCheckpoint(eager=False)
-    linked, _dead = link_mentions(
-        mentions, auth, redirects=_kg_redirects(spark, sf_dir)
-    )
-    # persist the fan-out frames: `linked` feeds merge + provenance
-    # triples; `canonical` feeds 7 union branches in materialize_triples.
-    linked = linked.persist()
-    # lazily pin the merged agents too: canonicalize materializes them
-    # anyway (its own eager checkpoint rides this one), and the direct
-    # kg_agents/kg_enumerate consumers then read the pinned rows instead
-    # of re-running the merge aggregation off `linked` per query. The
-    # cache drop in kg_cache_clear releases the block via ContextCleaner
-    # like every other pipeline checkpoint.
-    agents = merge_entities(linked).localCheckpoint(eager=False)
-    canonical, _iters = canonicalize_agents(agents)
-    # X2/X3 altForm scores, entity-scale — same stage order as
-    # plans/pipeline.py:run_pipeline
-    canonical = score_alt_forms(canonical)
-    canonical = canonical.persist()
-    _KG_CACHE[key] = (linked, agents, canonical)
-    return linked, agents, canonical
+    if key not in _KG_CACHE:
+        _KG_CACHE[key] = run_pipeline(
+            spark,
+            _kg_pages(spark, sf_dir),
+            _kg_authority(spark, sf_dir),
+            redirects=_kg_redirects(spark, sf_dir),
+            until="canonical",
+        )
+    return _KG_CACHE[key]
 
 
 def kg_cache_clear(
@@ -336,23 +309,24 @@ def kg_cache_clear(
     storage. Returns the number of entries released.
 
     `.unpersist()` covers the two explicit persists; the pipeline's
-    `localCheckpoint` blocks (CC loop, enumerate offsets, block-argmax
-    dimension) are pinned by RDD references, not the CacheManager, and
-    are NOT unpersisted directly — doing so would corrupt any
-    still-referenced frame, because a local checkpoint truncates lineage
-    (the blocks are the only copy). They are instead released by Spark's
-    ContextCleaner once unreachable: with `wait_cleanup_s` > 0 this
-    drops the Python references, forces a GC on both sides, and polls
-    storage until the checkpoint blocks are gone (or the deadline
-    passes). Returns even if blocks remain — callers that require a
-    clean storage state assert on it (bench.py does)."""
+    `localCheckpoint` blocks (authority, merged agents, CC loop,
+    enumerate offsets, block-argmax dimension) are pinned by RDD
+    references, not the CacheManager, and are NOT unpersisted directly
+    — doing so would corrupt any still-referenced frame, because a local
+    checkpoint truncates lineage (the blocks are the only copy). They are
+    instead released by Spark's ContextCleaner once unreachable: with
+    `wait_cleanup_s` > 0 this drops the Python references, forces a GC
+    on both sides, and polls storage until the checkpoint blocks are
+    gone (or the deadline passes). Returns even if blocks remain —
+    callers that require a clean storage state assert on it (bench.py
+    does)."""
     released = 0
     for key in list(_KG_CACHE):
         if sf_dir is not None and key[1] != sf_dir:
             continue
-        linked, _agents, canonical = _KG_CACHE.pop(key)
-        linked.unpersist()
-        canonical.unpersist()
+        res = _KG_CACHE.pop(key)
+        res.linked.unpersist()
+        res.canonical.unpersist()
         _KG_N.pop(key, None)
         released += 1
     if wait_cleanup_s > 0:
@@ -364,7 +338,7 @@ def kg_cache_clear(
         spark = SparkSession.getActiveSession()
         if spark is not None:
             if released:
-                del linked, _agents, canonical  # drop the loop's refs
+                del res  # drop the loop's ref
             gc.collect()  # release py4j handles -> JVM refs unreachable
             jsc = spark.sparkContext._jsc.sc()
             deadline = time.time() + wait_cleanup_s
@@ -818,13 +792,11 @@ FROM walk w WHERE i = length(q)
 # ---------------------------------------------------------------------------
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG pipeline at sf0.001; driver checks rows > 0."""
-    from serialization_agents_spark.operators.enumerate_ids import enumerate_ids
     from serialization_agents_spark.operators.triples import materialize_triples
 
     sf_dir = "/root/testdata/sf0.001"
-    linked, _agents, canonical = _kg_canonical(spark, sf_dir)
-    canonical = enumerate_ids(canonical, order_col="entity_key")
-    return materialize_triples(canonical, linked)
+    res = _kg_canonical(spark, sf_dir)
+    return materialize_triples(res.canonical, res.linked)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1622,18 +1594,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         b_neg = entity at ((idx_a * salt + idx_b) mod n) + 1 in the
         enumerated registry order, degenerate and false negatives
         dropped. Pure integer sampling: same negatives in any engine."""
-        from serialization_agents_spark.operators.enumerate_ids import enumerate_ids
         from serialization_agents_spark.operators.graph import (
             cooccurrence_edges,
             negative_edge_samples,
         )
 
-        linked, _agents, canonical = _kg_canonical(spark, sf)
-        edges = cooccurrence_edges(linked, doc_col="url", key_col="entity_key")
-        ids = enumerate_ids(canonical, order_col="entity_key").select(
+        res = _kg_canonical(spark, sf)
+        edges = cooccurrence_edges(res.linked, doc_col="url", key_col="entity_key")
+        ids = res.canonical.select(
             "entity_key", (F.col("registry_id") - 9999999).alias("idx")
         )
-        return negative_edge_samples(edges, ids, canonical.count())
+        return negative_edge_samples(edges, ids, res.canonical.count())
 
     def kg_temporal_provenance(spark, sf):
         """Temporal provenance for the KG: per entity, the first/last
@@ -1643,7 +1614,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         warc_ts law (epoch + doc_id * 37, __spark_entry__._kg_pages),
         reconstructed from the url on both engines; one distinct + one
         hash agg on the already-linked layer."""
-        linked, _agents, _canonical = _kg_canonical(spark, sf)
+        linked = _kg_canonical(spark, sf).linked
         d = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long")
         pages = linked.select(
             "entity_key", "url", (F.lit(1704067200) + d * 37).alias("ts_s")
@@ -1666,7 +1637,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             pairwise_cluster_metrics,
         )
 
-        linked, _agents, _canonical = _kg_canonical(spark, sf)
+        linked = _kg_canonical(spark, sf).linked
         items = linked.select("url", "name_raw", "entity_key", "name_norm").distinct()
         return pairwise_cluster_metrics(
             items, gold_col="entity_key", pred_col="name_norm"
@@ -1704,7 +1675,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         consumers."""
         from serialization_agents_spark.operators.graph import cooccurrence_edges
 
-        linked, _agents, _canonical = _kg_canonical(spark, sf)
+        linked = _kg_canonical(spark, sf).linked
         return cooccurrence_edges(linked, doc_col="url", key_col="entity_key")
 
     def kg_triangles(spark, sf):
@@ -1718,7 +1689,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             triangle_counts,
         )
 
-        linked, _agents, _canonical = _kg_canonical(spark, sf)
+        linked = _kg_canonical(spark, sf).linked
         edges = cooccurrence_edges(linked, doc_col="url", key_col="entity_key")
         return triangle_counts(edges, src="a", dst="b").select(
             F.col("node").alias("entity_key"), "n_triangles"
@@ -2004,13 +1975,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return dead
 
     def j2_lcnaf_fallback(spark, sf):
-        from serialization_agents_spark.operators.linking import link_mentions
-
-        linked, _ = link_mentions(
-            _kg_mentions(spark, sf),
-            _kg_authority(spark, sf),
-            redirects=_kg_redirects(spark, sf),
-        )
+        linked = _kg_canonical(spark, sf).linked
         return linked.where(F.col("lc_hint").isNotNull()).select(
             "url", "name_raw", "lc_hint", "entity_key"
         )
@@ -2021,10 +1986,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rows (reference lib/utils.js:238 logError)."""
         from serialization_agents_spark.operators.extract import with_extracted_text
         from serialization_agents_spark.operators.linking import resolve_redirects
+        from serialization_agents_spark.operators.mentions import detect_mentions
         from serialization_agents_spark.plans.errors import pipeline_errors
 
         pages_x = with_extracted_text(_kg_pages(spark, sf))
-        mentions = _kg_mentions(spark, sf)
+        mentions = detect_mentions(_kg_pages(spark, sf), include_subjects=True)
         _resolved, dead = resolve_redirects(mentions, _kg_redirects(spark, sf))
         bl = spark.createDataFrame(
             [("Unlisted Person 3",), ("Unlisted Person 17",)], "name string"
@@ -2032,20 +1998,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return pipeline_errors(pages_x, mentions, dead, bl)
 
     def kg_linked(spark, sf):
-        from serialization_agents_spark.operators.linking import link_mentions
-
-        linked, _ = link_mentions(
-            _kg_mentions(spark, sf),
-            _kg_authority(spark, sf),
-            redirects=_kg_redirects(spark, sf),
-        )
+        linked = _kg_canonical(spark, sf).linked
         return linked.select("url", "name_raw", "entity_key").distinct()
 
     def kg_agents(spark, sf):
         """Also certifies X4 (lc_terms with ' (Spirit)' are stripped back
         to c_name — the oracle derives names WITHOUT the suffix) and X6
         (ulan = getty_id int-cast, lib/utils_shadowcat.js:230,236)."""
-        _linked, agents, _canonical = _kg_canonical(spark, sf)
+        agents = _kg_canonical(spark, sf).agents
         return agents.select(
             "entity_key", "name_controlled", "is_controlled", "type",
             "ulan", "mention_count",
@@ -2063,8 +2023,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bucketed layout must be a pure physical choice with zero effect
         on results."""
         import tempfile
-
-        from serialization_agents_spark.plans.pipeline import run_pipeline
 
         out = tempfile.mkdtemp(prefix="kg_bucketed_") + "/run"
         res = run_pipeline(
@@ -2089,7 +2047,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stores on every agent (poverlap at lib/utils_shadowcat.js:247,
         fuzzy vs the final nameControlled; trivial-case 100/1.0 at :401),
         computed by merge.score_alt_forms on entity-scale rows."""
-        _linked, _agents, canonical = _kg_canonical(spark, sf)
+        canonical = _kg_canonical(spark, sf).canonical
         af = canonical.select(
             "entity_key", F.explode("alt_forms").alias("af")
         )
@@ -2102,14 +2060,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def kg_triples(spark, sf):
-        linked, _agents, canonical = _kg_canonical(spark, sf)
-        return materialize_triples(canonical, linked)
+        res = _kg_canonical(spark, sf)
+        return materialize_triples(res.canonical, res.linked)
 
     def kg_enumerate_agents(spark, sf):
-        _linked, _agents, canonical = _kg_canonical(spark, sf)
-        return enumerate_ids(canonical, order_col="entity_key").select(
-            "entity_key", "registry_id"
-        )
+        canonical = _kg_canonical(spark, sf).canonical
+        return canonical.select("entity_key", "registry_id")
 
     def kg_lineage(spark, sf):
         """A7/X13 under the hash gate: per-stage lineage metrics —
@@ -2119,9 +2075,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         an order-independent SUM over md5-prefix ints (md5, not
         xxhash64, so DuckDB can derive the identical value); the
         pipeline's per-partition variant lives in plans/lineage.py."""
-        linked, agents, canonical = _kg_canonical(spark, sf)
-        mentions = _kg_mentions(spark, sf)
-        triples = materialize_triples(canonical, linked)
+        res = _kg_canonical(spark, sf)
+        mentions, linked, agents = res.mentions, res.linked, res.agents
+        triples = materialize_triples(res.canonical, linked)
 
         def m(df, stage, key):
             return (
@@ -2199,9 +2155,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         must hash-match the SAME oracle SQL as kg_agents."""
         import tempfile
 
-        from serialization_agents_spark.operators.linking import link_mentions
-        from serialization_agents_spark.operators.mentions import detect_mentions
-        from serialization_agents_spark.operators.merge import merge_entities
         from serialization_agents_spark.streaming.incremental import (
             fold_batch_into_agents,
         )
@@ -2212,11 +2165,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         red = _kg_redirects(spark, sf)
         d = F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("long")
         for b in range(3):
-            mentions = detect_mentions(
-                pages.where(d % 3 == b), include_subjects=True
+            res = run_pipeline(
+                spark, pages.where(d % 3 == b), auth, redirects=red,
+                until="agents", cache=False,
             )
-            linked, _dead = link_mentions(mentions, auth, redirects=red)
-            fold_batch_into_agents(spark, agents_dir, merge_entities(linked), b)
+            fold_batch_into_agents(spark, agents_dir, res.agents, b)
         folded = spark.read.parquet(agents_dir)
         return folded.select(
             "entity_key", "name_controlled", "is_controlled", "type",

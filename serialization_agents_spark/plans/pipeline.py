@@ -104,7 +104,12 @@ def run_pipeline(
     never DECLARED, so Spark schedules nothing for them. A maintenance
     job that only refreshes the agents table (the common 10^12-scale
     case) must not pay the CC loop, triple explode, and error audit of
-    the full flagship run."""
+    the full flagship run.
+
+    `cache` (in-memory runs only): pin the frames later stages read more
+    than once — the authority, `linked`, the agents, the canonical rows.
+    `cache=False` pins nothing, for callers that use each frame once
+    (a streaming micro-batch)."""
     if until not in _STAGE_ORDER:
         raise ValueError(f"until must be one of {_STAGE_ORDER}, got {until!r}")
     cutoff = _STAGE_ORDER.index(until)
@@ -114,6 +119,7 @@ def run_pipeline(
             "written alongside the stage parquet, so without out_dir the "
             "request would be silently ignored"
         )
+    pin = cache and out_dir is None
     resumed: list[str] = []
     computed: list[str] = []
     observations: dict[str, Observation] = {}
@@ -131,8 +137,14 @@ def run_pipeline(
         /root/reference/lib/shadowcat_serialize_viaf_agents.js:63-77).
         """
         if out_dir is None:
-            if cache and stage in ("linked", "canonical"):
+            if pin and stage in ("linked", "canonical"):
                 return df.persist()
+            if pin and stage == "agents":
+                # lazy: canonicalize's own eager checkpoint of the agents
+                # rides this one, and direct agents consumers read the
+                # pinned rows instead of re-running the merge aggregation.
+                # ContextCleaner releases the blocks once unreferenced.
+                return df.localCheckpoint(eager=False)
             return df
         path = _stage_path(out_dir, stage)
         bucketed = stage == "agents" and agents_table is not None
@@ -179,6 +191,11 @@ def run_pipeline(
     if cutoff == 1:
         return _partial(pages=pages_x, mentions=mentions)
 
+    if pin:
+        # the authority feeds THREE broadcast builds inside link_mentions
+        # (viaf keys, lc keys, name-block argmax): pin it once so its scan
+        # and normalize chain run once, not once per build
+        authority = authority.localCheckpoint(eager=False)
     linked, dead = link_mentions(mentions, authority, redirects, blacklist)
     linked = materialize(linked, "linked", "mention_id")
     if cutoff == 2:
@@ -195,10 +212,14 @@ def run_pipeline(
         )
 
     canonical, iters = canonicalize_agents(agents)
-    canonical = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
-    if out_dir is None and cache:
-        canonical = canonical.persist()  # 7 union branches read it below
-    canonical = enumerate_ids(canonical, order_col="entity_key")
+    scored = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
+    if pin:
+        # enumerate_ids reads the scored rows twice (range-bound sample,
+        # then its eager checkpoint of the range shuffle)
+        scored = scored.persist()
+    canonical = enumerate_ids(scored, order_col="entity_key")
+    if pin:
+        scored.unpersist()  # the eager checkpoint now holds the rows
     canonical = materialize(canonical, "canonical", "entity_key")
     if cutoff == 4:
         return _partial(

@@ -64,117 +64,4 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if os.environ.get("SPARK_GRAFT_WARM", "1") != "0":
-        _warm_session(spark)
     return spark
-
-
-_WARMED: set[str] = set()
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time executor/codegen warm-up on synthetic rows (no test data
-    touched, nothing precomputed): exercises the engine paths every real
-    query hits cold otherwise — shuffle writers/readers, window exec,
-    object-hash aggregation with array/struct buffers, interpreted
-    higher-order functions, broadcast build, and the Arrow Python-worker
-    fork — so their JIT/infra cost lands at session build instead of
-    inside the first queries measured. A fresh JVM pays this either way;
-    doing it here just moves it out of per-query walls, the same intent
-    as the existing range-sum warmup callers already run. Opt out with
-    SPARK_GRAFT_WARM=0.
-
-    Second stage: one tiny end-to-end pass of the flagship KG operator
-    stack (extract -> mentions -> link -> merge -> CC canonicalize ->
-    triples) over ~100 GENERATED pages (synth.py's spark.range-derived
-    fixtures — the parquet corpora are never read here, and the pass's
-    result is discarded, so nothing any query computes is precomputed).
-    The flagship pipeline's cold-start cost is dominated not by data but
-    by first-use engine machinery — analyzer/optimizer rules JIT'ing on
-    its very wide expression trees, the interpreted-HOF evaluators
-    (fuzzy-score fold, normalize regexes), ObjectHashAggregate with
-    struct/array buffers, and the checkpoint/broadcast infrastructure —
-    all of which are shared JVM classes, not per-dataset state. Measured:
-    a fresh process builds kg_triples in ~8.2 s cold vs ~4.3 s after this
-    pass (sf0.001, local[32]), with the pass itself costing ~10 s once at
-    session build. The pass's own checkpoint blocks are dereferenced and
-    left to ContextCleaner (nudged with one System.gc), so storage-
-    cleanliness asserts (bench.py's) see an empty cache."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WARMED:
-        return
-    _WARMED.add(app_id)
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
-
-        n = spark.sparkContext.defaultParallelism
-        df = spark.range(0, 10_000, 1, max(n, 2)).select(
-            F.col("id"),
-            (F.col("id") % 100).alias("k"),
-            F.concat(F.lit("w "), F.col("id").cast("string")).alias("s"),
-        )
-        w = Window.partitionBy("k").orderBy("id")
-        r = (
-            df.withColumn("rn", F.row_number().over(w))
-            .withColumn(
-                "h",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(3)),
-                    lambda i: F.xxhash64(F.col("s"), i),
-                ),
-            )
-            .groupBy("k")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("id", "s"))).alias("c"),
-                F.min("rn").alias("m"),
-            )
-        )
-        r.join(F.broadcast(df.groupBy("k").count()), "k").write.format(
-            "noop"
-        ).mode("overwrite").save()
-        spark.range(0, max(n, 2), 1, max(n, 2)).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        # warm-up must never break session creation (e.g. a stripped
-        # environment without pandas); queries just run cold instead
-        pass
-    try:
-        _warm_kg_stack(spark)
-    except Exception:
-        pass
-
-
-def _warm_kg_stack(spark: SparkSession) -> None:
-    """The KG-shaped second warm-up stage (see _warm_session docstring).
-    Kept un-guarded so tests can assert it actually executes — a silent
-    failure here would quietly put the flagship pipeline's cold-start
-    cost back inside the first measured query."""
-    from serialization_agents_spark import synth
-    from serialization_agents_spark.operators.canonicalize import canonicalize_agents
-    from serialization_agents_spark.operators.linking import link_mentions
-    from serialization_agents_spark.operators.mentions import detect_mentions
-    from serialization_agents_spark.operators.merge import (
-        merge_entities,
-        score_alt_forms,
-    )
-    from serialization_agents_spark.operators.triples import materialize_triples
-
-    pages = synth.synth_pages(spark, n_pages=96, n_auth=40, n_noise=8)
-    auth = synth.synth_authority(spark, 40)
-    mentions = detect_mentions(pages, include_subjects=True)
-    linked, _dead = link_mentions(
-        mentions, auth, redirects=synth.synth_redirects(spark)
-    )
-    canonical, _iters = canonicalize_agents(merge_entities(linked))
-    materialize_triples(score_alt_forms(canonical), linked).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # drop every reference so ContextCleaner can release the pass's
-    # localCheckpoint blocks; one GC nudge starts that immediately.
-    del pages, auth, mentions, linked, canonical
-    import gc
-
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()

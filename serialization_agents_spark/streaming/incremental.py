@@ -5,9 +5,11 @@ replaced the reference's ORDER-DEPENDENT upserts with a commutative,
 associative merge algebra (operators/merge.py, SURVEY.md §4.3). A
 commutative fold can be applied incrementally: for each micro-batch,
 
-    1. detect + link the new pages' mentions (dimension joins only),
-    2. merge them into per-entity partial rows (same salted aggregation),
-    3. fold partials into the persisted agents table keyed by entity_key
+    1. run the batch pipeline through its agents stage over the new
+       pages (`run_pipeline(until="agents", cache=False)`): detect + link
+       their mentions (dimension joins only) and merge them into
+       per-entity partial rows (the same salted aggregation),
+    2. fold partials into the persisted agents table keyed by entity_key
        — the same second-phase aggregation the batch job uses between
        salt buckets, so batch(all) == fold(batches) by construction.
 
@@ -32,10 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serialization_agents_spark.operators.extract import with_extracted_text
-from serialization_agents_spark.operators.linking import link_mentions
-from serialization_agents_spark.operators.mentions import detect_mentions
-from serialization_agents_spark.operators.merge import merge_entities
+from serialization_agents_spark.plans.pipeline import run_pipeline
 
 # columns folded as sets / counters / priority-coalesced scalars
 _SET_COLS = ["viaf", "name_normalized", "alt_forms", "fast", "viaf_merged", "merge_source"]
@@ -189,16 +188,11 @@ def stream_pages_to_agents(
     redirects: DataFrame | None = None,
     blacklist: DataFrame | None = None,
     trigger_available_now: bool = True,
-    include_subjects: bool = True,
 ):
-    """readStream(new page parquet files) -> link -> merge -> fold into
-    the persisted bucket-partitioned agents table (fold_batch_into_agents
-    carries the per-batch exactly-once + partial-rewrite semantics).
-
-    `include_subjects` defaults True to MATCH the batch pipeline
-    (plans/pipeline.py runs detect_mentions(include_subjects=True)) —
-    the batch(all) == fold(batches) contract requires both paths to scan
-    the same span kinds."""
+    """readStream(new page parquet files) -> the batch pipeline through
+    the agents stage -> fold into the persisted bucket-partitioned agents
+    table (fold_batch_into_agents carries the per-batch exactly-once +
+    partial-rewrite semantics)."""
     from serialization_agents_spark.sources.pages import read_pages_stream
 
     stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=16)
@@ -206,10 +200,11 @@ def stream_pages_to_agents(
     def process_batch(batch_pages: DataFrame, batch_id: int) -> None:
         if batch_pages.isEmpty():
             return
-        px = with_extracted_text(batch_pages)
-        mentions = detect_mentions(px, include_subjects=include_subjects)
-        linked, _dead = link_mentions(mentions, authority, redirects, blacklist)
-        fold_batch_into_agents(spark, agents_dir, merge_entities(linked), batch_id)
+        res = run_pipeline(
+            spark, batch_pages, authority, redirects, blacklist,
+            until="agents", cache=False,
+        )
+        fold_batch_into_agents(spark, agents_dir, res.agents, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -25,8 +25,8 @@ def test_kg_cache_clear_drains_checkpoint_blocks(spark):
 
     # Run the memoized pipeline (persists + several localCheckpoints).
     sf = "/root/testdata/sf0.001"
-    linked, _agents, canonical = entrymod._kg_canonical(spark, sf)
-    assert canonical.count() > 0
+    res = entrymod._kg_canonical(spark, sf)
+    assert res.canonical.count() > 0
     during = _cached_rdd_ids(spark)
     assert during - before, "pipeline should have pinned storage"
 
@@ -36,7 +36,7 @@ def test_kg_cache_clear_drains_checkpoint_blocks(spark):
     # clear in a long-lived host).
     released = entrymod.kg_cache_clear()
     assert released >= 1
-    del linked, _agents, canonical
+    del res
     entrymod.kg_cache_clear(wait_cleanup_s=30.0)
 
     after = _cached_rdd_ids(spark)

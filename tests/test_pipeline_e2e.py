@@ -115,6 +115,33 @@ def test_rerun_is_deterministic(spark, corpus):
     assert c1 == c2
 
 
+def test_in_memory_run_leaves_no_storage(spark, corpus):
+    """An in-memory run pins storage only through the frames it returns:
+    once the caller unpersists them and drops the result, ContextCleaner
+    releases every checkpoint block and nothing stays cached."""
+    import gc
+    import time
+
+    def stored() -> set[int]:
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    pages, authority, redirects, blacklist = corpus
+    before = stored()
+    res = run_pipeline(spark, pages, authority, redirects, blacklist)
+    assert res.triples.count() > 0
+    for stage in ("pages", "mentions", "linked", "agents", "canonical", "triples", "errors"):
+        getattr(res, stage).unpersist()
+    del res
+    gc.collect()
+    deadline = time.time() + 30.0
+    leaked = stored() - before
+    while leaked and time.time() < deadline:
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.25)
+        leaked = stored() - before
+    assert not leaked, f"in-memory run left storage pinned: {leaked}"
+
+
 def test_resume_from_checkpoint(spark, corpus, tmp_path):
     pages, authority, redirects, blacklist = corpus
     out = str(tmp_path / "ckpt")

@@ -97,6 +97,36 @@ def test_kg_cache_clear_releases_and_rederives(spark):
     entry.kg_cache_clear()
 
 
+def test_kg_consumers_read_the_memoized_pipeline(spark, monkeypatch):
+    """After one memoized kg build, the linked/agents/registry consumers
+    plan over its pinned frames (the InMemoryTableScan of a persist or
+    the Scan ExistingRDD of a checkpoint) and declare no linking or
+    enumeration of their own."""
+    from serialization_agents_spark.operators import enumerate_ids, linking
+    from serialization_agents_spark.plans import pipeline
+
+    entry._kg_canonical(spark, SF)
+    declared = []
+
+    def spy(name, fn):
+        def wrapped(*args, **kwargs):
+            declared.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    for mod, name in (
+        (pipeline, "link_mentions"), (linking, "link_mentions"),
+        (pipeline, "enumerate_ids"), (enumerate_ids, "enumerate_ids"),
+    ):
+        monkeypatch.setattr(mod, name, spy(name, getattr(mod, name)))
+    qs = entry.queries()
+    for q in ("kg_linked", "j2_lcnaf_fallback", "kg_agents", "kg_enumerate_agents"):
+        plan = _plan(qs[q](spark, SF))
+        assert "InMemoryTableScan" in plan or "Scan ExistingRDD" in plan, q
+    assert not declared, f"consumers re-declared {declared}"
+
+
 def test_chunk_dedup_is_two_shuffles_no_joins(spark):
     """dedup_chunks: pruned scan -> [optional round-robin fan-out of an
     under-parallel scan] -> chunk-hash Exchange -> Window -> partial agg

@@ -19,8 +19,9 @@ from serialization_agents_spark.streaming.incremental import (
 
 
 def _agents_for(spark, pages, authority):
-    # include_subjects=True matches BOTH the batch pipeline and the
-    # streaming default — the two paths must scan the same span kinds.
+    # include_subjects=True matches run_pipeline, which both the batch
+    # build and the streaming fold run — the reference must scan the
+    # same span kinds.
     px = with_extracted_text(pages)
     linked, _ = link_mentions(
         detect_mentions(px, include_subjects=True), authority
