@@ -99,33 +99,21 @@ def _connected_components_ex(
         edges.groupBy("merge_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > 1)
-        .select("merge_key")
         # small by construction (only colliding keys); pinned so the
-        # zero-merge probe below and the semi-join share one computation
+        # active-edge count below and the semi-join share one computation
         .localCheckpoint(eager=False)
     )
-    iters = 0
-    # cheap zero-merge probe: no shared key => no active entity. This
-    # answers the common no-collision case from the key aggregate alone,
-    # WITHOUT materializing (and checkpoint-writing) the semi-joined
-    # edge set just to count it.
-    if shared_keys.isEmpty():
+    # sum(n) over the shared keys IS the semi-joined edge count, so one
+    # aggregate answers both "any merge at all?" and the loop width —
+    # without materializing the semi-joined edge set just to count it.
+    n_active = shared_keys.agg(F.sum("n")).collect()[0][0] or 0
+    if n_active == 0:
         return (
             all_nodes.select("entity_key", F.col("entity_key").alias("component")),
-            iters,
+            0,
             0,
         )
-    active = edges.join(shared_keys, "merge_key", "left_semi")
-
-    e = active.select("entity_key", "merge_key").localCheckpoint()
-
-    n_active = e.count()
-    if n_active == 0:  # unreachable given the probe; kept as a guard
-        return (
-            all_nodes.select("entity_key", F.col("entity_key").alias("component")),
-            iters,
-            0,
-        )
+    active = edges.join(shared_keys.select("merge_key"), "merge_key", "left_semi")
 
     # The loop operates on ENTITY-scale data (orders of magnitude smaller
     # than the corpus), so every exchange below is an EXPLICIT repartition
@@ -136,7 +124,11 @@ def _connected_components_ex(
     spark = edges.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cc_parts = max(8, min(session_parts, n_active // 100_000 + 1))
-    e = e.repartition(cc_parts, "entity_key").localCheckpoint()
+    e = (
+        active.select("entity_key", "merge_key")
+        .repartition(cc_parts, "entity_key")
+        .localCheckpoint()
+    )
 
     labels = e.select("entity_key").dropDuplicates().select(
         "entity_key", F.col("entity_key").alias("label")

@@ -96,6 +96,16 @@ def resolve_redirects(
     return resolved, dead
 
 
+def drop_blacklisted(mentions: DataFrame, blacklist: DataFrame | None) -> DataFrame:
+    """F6 — drop junk names by broadcast anti-join (beats isin() for an
+    updatable dimension)."""
+    if blacklist is None:
+        return mentions
+    return mentions.join(
+        broadcast(blacklist.withColumnRenamed("name", "name_raw")), "name_raw", "left_anti"
+    )
+
+
 def link_mentions(
     mentions: DataFrame,
     authority: DataFrame,
@@ -111,16 +121,7 @@ def link_mentions(
     name-block window, which AQE coalesces (candidates are a tiny
     fraction of mentions).
     """
-    m = mentions
-    if blacklist is not None:
-        # F6 — broadcast anti-join beats isin() for an updatable dimension.
-        m = m.join(
-            broadcast(blacklist.withColumnRenamed("name", "name_raw")),
-            "name_raw",
-            "left_anti",
-        )
-
-    m, dead = resolve_redirects(m, redirects)
+    m, dead = resolve_redirects(drop_blacklisted(mentions, blacklist), redirects)
 
     # --- J1: viaf-key join, keyed by every id in each cluster ------------
     viaf_keys = authority.select(

@@ -26,8 +26,6 @@ the expensive work happens after this exchange, not before it.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 # The planned-partition probe (DataFrame -> RDD conversion) costs tens of
@@ -57,18 +55,8 @@ def _planned_partitions(df: DataFrame) -> int:
 
 def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
     """Fan ``df`` out to ``defaultParallelism * multiplier`` partitions
-    before per-row-expensive work, unless it already has that many.
-
-    Set ``SPARK_GRAFT_SPREAD=0`` to disable (measurement control), or to
-    an integer to override the target partition count.
-    """
-    env = os.environ.get("SPARK_GRAFT_SPREAD")
-    if env is not None and env.strip() == "0":
-        return df
-    sc = df.sparkSession.sparkContext
-    target = (
-        int(env) if env else sc.defaultParallelism * multiplier
-    )
+    before per-row-expensive work, unless it already has that many."""
+    target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     if _planned_partitions(df) >= target:
         return df
     return df.repartition(target)

@@ -15,9 +15,12 @@ CC = 2 shuffles x iterations over the (small) entity set; enumerate = 1
 range shuffle of entities; triples narrow + 1 join for merged-key remap.
 The 100 TB fact table is shuffled exactly ONCE (the merge).
 
-Resume: when `out_dir` is given, each stage writes parquet + lineage and
-a completed stage (parquet `_SUCCESS` present) is READ BACK instead of
-recomputed on the next run — the Spark translation of the reference's
+One stage rule: a stage is declared only when this run computes it.
+When `out_dir` is given, a stage whose parquet `_SUCCESS` exists is READ
+BACK and its operator is never called — a resume runs none of linking's,
+CC's or enumerate's driver actions for a finished stage; any other stage
+is built and written with its lineage. The `_errors` side table follows
+the same rule. This is the Spark translation of the reference's
 re-queue-on-restart worker protocol
 (/root/reference/lib/shadowcat_serialize_viaf_agents.js:78-84,128-137).
 """
@@ -25,7 +28,9 @@ re-queue-on-restart worker protocol
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +38,11 @@ from pyspark.sql import functions as F
 from serialization_agents_spark.operators.canonicalize import canonicalize_agents
 from serialization_agents_spark.operators.enumerate_ids import enumerate_ids
 from serialization_agents_spark.operators.extract import with_extracted_text
-from serialization_agents_spark.operators.linking import link_mentions
+from serialization_agents_spark.operators.linking import (
+    drop_blacklisted,
+    link_mentions,
+    resolve_redirects,
+)
 from serialization_agents_spark.operators.mentions import detect_mentions
 from serialization_agents_spark.operators.merge import merge_entities, score_alt_forms
 from serialization_agents_spark.operators.triples import materialize_triples
@@ -42,20 +51,20 @@ from serialization_agents_spark.sources.bucketed import read_bucketed, write_buc
 
 
 _STAGE_ORDER = ("extract", "mentions", "linked", "agents", "canonical", "triples")
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
 
 @dataclass
 class PipelineResult:
     # stages past a `run_pipeline(until=...)` cutoff are None
-    pages: DataFrame
+    pages: DataFrame | None = None
     mentions: DataFrame | None = None
     linked: DataFrame | None = None
-    dead_viaf: DataFrame | None = None
     agents: DataFrame | None = None
     canonical: DataFrame | None = None
     triples: DataFrame | None = None
     errors: DataFrame | None = None  # S15 audit side table
-    cc_iterations: int = 0
+    cc_iterations: int = 0  # CC iterations THIS run performed
     stages_resumed: list[str] = field(default_factory=list)
     stages_computed: list[str] = field(default_factory=list)
     # A7/X13 — per-stage observe() counters (the Spark-native analogue of
@@ -66,12 +75,18 @@ class PipelineResult:
     observations: dict[str, Observation] = field(default_factory=dict)
 
 
-def _stage_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, stage)
-
-
-def _is_complete(out_dir: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(_stage_path(out_dir, stage), "_SUCCESS"))
+@contextmanager
+def _job_group(spark: SparkSession, group: str):
+    """Label every job started inside with `group`; restore the caller's
+    group and description afterwards."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
 
 
 def run_pipeline(
@@ -112,7 +127,6 @@ def run_pipeline(
     (a streaming micro-batch)."""
     if until not in _STAGE_ORDER:
         raise ValueError(f"until must be one of {_STAGE_ORDER}, got {until!r}")
-    cutoff = _STAGE_ORDER.index(until)
     if agents_table is not None and out_dir is None:
         raise ValueError(
             "agents_table requires out_dir: the bucketed catalog table is "
@@ -120,53 +134,55 @@ def run_pipeline(
             "request would be silently ignored"
         )
     pin = cache and out_dir is None
-    resumed: list[str] = []
-    computed: list[str] = []
-    observations: dict[str, Observation] = {}
+    res = PipelineResult()
 
-    def materialize(df: DataFrame, stage: str, key_col: str) -> DataFrame:
-        """Write stage output + lineage if out_dir set; resume if present.
-
-        Without out_dir, fan-out stages are persisted in memory/disk so
-        the DAG is computed once, not once per downstream action —
-        `linked` feeds both the merge and the provenance triples.
-
-        Every computed stage also carries an `observe()` metric (A7 —
-        zero-cost counters piggybacking the stage's own write action, the
-        analogue of the reference's per-record progress IPC,
-        /root/reference/lib/shadowcat_serialize_viaf_agents.js:63-77).
-        """
-        if out_dir is None:
-            if pin and stage in ("linked", "canonical"):
-                return df.persist()
-            if pin and stage == "agents":
-                # lazy: canonicalize's own eager checkpoint of the agents
-                # rides this one, and direct agents consumers read the
-                # pinned rows instead of re-running the merge aggregation.
-                # ContextCleaner releases the blocks once unreferenced.
-                return df.localCheckpoint(eager=False)
-            return df
-        path = _stage_path(out_dir, stage)
-        bucketed = stage == "agents" and agents_table is not None
-        if _is_complete(out_dir, stage):
-            resumed.append(stage)
+    def stage(name: str, key_col: str | None, build: Callable[[], DataFrame]) -> DataFrame:
+        """The one read-back-or-build rule. A stage complete under
+        `out_dir` is read back and `build` is never called. Otherwise
+        `build()` runs under job group `<run_id>:<name>`; in memory the
+        frames later stages re-read are pinned (`linked` feeds both the
+        merge and the provenance triples), with `out_dir` the stage is
+        written with an `observe()` row counter (A7 — zero-cost, riding
+        the write action) and its `_metrics` lineage. `key_col=None`
+        marks a side table: written, but neither counted nor listed."""
+        path = os.path.join(out_dir, name) if out_dir is not None else None
+        bucketed = name == "agents" and agents_table is not None
+        listed = key_col is not None
+        if path is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
+            if listed:
+                res.stages_resumed.append(name)
             if bucketed and spark.catalog.tableExists(agents_table):
                 return read_bucketed(spark, agents_table)
             return spark.read.parquet(path)
-        obs = Observation(f"{run_id}:{stage}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
-        if bucketed:
-            write_bucketed(df, agents_table, path, ["entity_key"])
-            observations[stage] = obs
-            out = read_bucketed(spark, agents_table)
-        else:
-            df.write.mode("overwrite").parquet(path)
-            observations[stage] = obs  # filled: the write action ran above
-            out = spark.read.parquet(path)
-        stage_metrics(out, run_id, stage, key_col).write.mode("append").parquet(
-            os.path.join(out_dir, "_metrics")
-        )
-        computed.append(stage)
+        with _job_group(spark, f"{run_id}:{name}"):
+            df = build()
+            if path is None:
+                if pin and name in ("linked", "canonical"):
+                    return df.persist()
+                if pin and name == "agents":
+                    # lazy: canonicalize's own eager checkpoint of the
+                    # agents rides this one, and direct agents consumers
+                    # read the pinned rows instead of re-running the merge
+                    # aggregation. ContextCleaner releases the blocks once
+                    # unreferenced.
+                    return df.localCheckpoint(eager=False)
+                return df
+            if not listed:
+                df.write.mode("overwrite").parquet(path)
+                return spark.read.parquet(path)
+            obs = Observation(f"{run_id}:{name}")
+            df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
+            if bucketed:
+                write_bucketed(df, agents_table, path, ["entity_key"])
+                out = read_bucketed(spark, agents_table)
+            else:
+                df.write.mode("overwrite").parquet(path)
+                out = spark.read.parquet(path)
+            res.observations[name] = obs  # filled: the write action ran above
+            stage_metrics(out, run_id, name, key_col).write.mode("append").parquet(
+                os.path.join(out_dir, "_metrics")
+            )
+        res.stages_computed.append(name)
         return out
 
     # F1-analogue: the reference drops non-research bibs
@@ -174,82 +190,56 @@ def run_pipeline(
     if lang_filter is not None:
         pages = pages.where(F.col("lang") == lang_filter)
 
-    def _partial(**stages) -> PipelineResult:
-        return PipelineResult(
-            stages_resumed=resumed, stages_computed=computed,
-            observations=observations, **stages,
-        )
-
-    pages_x = with_extracted_text(pages)
-    pages_x = materialize(pages_x, "extract", "url")
-    if cutoff == 0:
-        return _partial(pages=pages_x)
-
-    # P4 subjects ride the same single page scan as the agent spans
-    mentions = detect_mentions(pages_x, include_subjects=True)
-    mentions = materialize(mentions, "mentions", "mention_id")
-    if cutoff == 1:
-        return _partial(pages=pages_x, mentions=mentions)
-
-    if pin:
+    def build_linked() -> DataFrame:
         # the authority feeds THREE broadcast builds inside link_mentions
         # (viaf keys, lc keys, name-block argmax): pin it once so its scan
         # and normalize chain run once, not once per build
-        authority = authority.localCheckpoint(eager=False)
-    linked, dead = link_mentions(mentions, authority, redirects, blacklist)
-    linked = materialize(linked, "linked", "mention_id")
-    if cutoff == 2:
-        return _partial(
-            pages=pages_x, mentions=mentions, linked=linked, dead_viaf=dead
+        auth = authority.localCheckpoint(eager=False) if pin else authority
+        linked, _dead = link_mentions(res.mentions, auth, redirects, blacklist)
+        return linked
+
+    def build_canonical() -> DataFrame:
+        canonical, res.cc_iterations = canonicalize_agents(res.agents)
+        scored = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
+        if pin:
+            # enumerate_ids reads the scored rows twice (range-bound sample,
+            # then its eager checkpoint of the range shuffle)
+            scored = scored.persist()
+        out = enumerate_ids(scored, order_col="entity_key")
+        if pin:
+            scored.unpersist()  # the eager checkpoint now holds the rows
+        return out
+
+    def build_errors() -> DataFrame:
+        # S15 — per-row failure audit (reference lib/utils.js:238 logError).
+        # Dead ids as link_mentions finds them: after the blacklist anti-join.
+        from serialization_agents_spark.plans.errors import pipeline_errors
+
+        _resolved, dead = resolve_redirects(
+            drop_blacklisted(res.mentions, blacklist), redirects
         )
+        return pipeline_errors(res.pages, res.mentions, dead, blacklist)
 
-    agents = merge_entities(linked)
-    agents = materialize(agents, "agents", "entity_key")
-    if cutoff == 3:
-        return _partial(
-            pages=pages_x, mentions=mentions, linked=linked,
-            dead_viaf=dead, agents=agents,
-        )
-
-    canonical, iters = canonicalize_agents(agents)
-    scored = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
-    if pin:
-        # enumerate_ids reads the scored rows twice (range-bound sample,
-        # then its eager checkpoint of the range shuffle)
-        scored = scored.persist()
-    canonical = enumerate_ids(scored, order_col="entity_key")
-    if pin:
-        scored.unpersist()  # the eager checkpoint now holds the rows
-    canonical = materialize(canonical, "canonical", "entity_key")
-    if cutoff == 4:
-        return _partial(
-            pages=pages_x, mentions=mentions, linked=linked,
-            dead_viaf=dead, agents=agents, canonical=canonical,
-            cc_iterations=iters,
-        )
-
-    triples = materialize_triples(canonical, linked)
-    triples = materialize(triples, "triples", "subj")
-
-    # S15 — per-row failure audit (reference lib/utils.js:238 logError)
-    from serialization_agents_spark.plans.errors import pipeline_errors
-
-    errors = pipeline_errors(pages_x, mentions, dead, blacklist)
-    if out_dir is not None:
-        errors.write.mode("overwrite").parquet(os.path.join(out_dir, "_errors"))
-        errors = spark.read.parquet(os.path.join(out_dir, "_errors"))
-
-    return PipelineResult(
-        pages=pages_x,
-        mentions=mentions,
-        linked=linked,
-        dead_viaf=dead,
-        agents=agents,
-        canonical=canonical,
-        triples=triples,
-        errors=errors,
-        cc_iterations=iters,
-        stages_resumed=resumed,
-        stages_computed=computed,
-        observations=observations,
+    res.pages = stage("extract", "url", lambda: with_extracted_text(pages))
+    if until == "extract":
+        return res
+    # P4 subjects ride the same single page scan as the agent spans
+    res.mentions = stage(
+        "mentions", "mention_id", lambda: detect_mentions(res.pages, include_subjects=True)
     )
+    if until == "mentions":
+        return res
+    res.linked = stage("linked", "mention_id", build_linked)
+    if until == "linked":
+        return res
+    res.agents = stage("agents", "entity_key", lambda: merge_entities(res.linked))
+    if until == "agents":
+        return res
+    res.canonical = stage("canonical", "entity_key", build_canonical)
+    if until == "canonical":
+        return res
+    res.triples = stage(
+        "triples", "subj", lambda: materialize_triples(res.canonical, res.linked)
+    )
+    res.errors = stage("_errors", None, build_errors)
+    return res

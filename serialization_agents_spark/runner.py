@@ -22,7 +22,9 @@ whose _SUCCESS marker exists (per-partition lineage rows in
 
 Exit contract: prints one JSON summary line on success (stage rows,
 resume status, cc iterations) and exits non-zero on any failure, so a
-workflow scheduler can gate downstream jobs on it.
+workflow scheduler can gate downstream jobs on it. `cc_iterations`
+counts the iterations THIS run performed, so it is 0 when the
+`canonical` stage was resumed.
 """
 
 from __future__ import annotations

@@ -107,3 +107,27 @@ def test_cc_converges_on_long_chain(spark):
     # hash-to-min + one pointer-jump per round: ~2.5 * log2(n) on a pure
     # chain (observed 14 for n=41), vs O(n)=40 without jumping.
     assert iters <= 16
+
+
+def test_zero_collisions_are_identity_singletons(spark):
+    """No shared name or VIAF id: CC runs zero iterations and every row
+    leaves through the identity projection, its own component."""
+    agents = _agents_df(
+        spark,
+        [
+            ("viaf:7", True, "Name A", ["7", "3"], "Q1"),
+            ("viaf:8", True, "Name B", ["8"], None),
+            ("noViaf:zz", False, "Name C", [], None),
+        ],
+    )
+    canonical, iters = canonicalize_agents(agents)
+    assert iters == 0
+    rows = {r["entity_key"]: r.asDict() for r in canonical.collect()}
+    assert set(rows) == {"viaf:7", "viaf:8", "noViaf:zz"}
+    for ek, r in rows.items():
+        assert r["component"] == ek
+        assert r["merge_source"] == [] and r["viaf_merged"] == []
+        assert r["mention_count"] == 1
+    assert rows["viaf:7"]["viaf"] == ["3", "7"]  # sorted, not merged
+    assert rows["viaf:7"]["wikidata"] == "Q1"
+    assert rows["noViaf:zz"]["name_controlled"] == "Name C"

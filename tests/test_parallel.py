@@ -1,11 +1,9 @@
 """Focused pins for the round-6 scan fan-out primitive: spread() must
-repartition an under-parallel source, be an exact no-op (same plan, no
-exchange) on an already-parallel source, and respect the env toggles —
-the property that keeps it scale-adaptive rather than a local[N] tune."""
+repartition an under-parallel source and be an exact no-op (same plan,
+no exchange) on an already-parallel source — the property that keeps it
+scale-adaptive rather than a local[N] tune."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -27,21 +25,3 @@ def test_spread_is_noop_on_parallel_input(spark):
     out = spread(df)
     # no exchange added: the returned frame IS the input frame
     assert out is df
-
-
-def test_spread_disabled_by_env(spark):
-    os.environ["SPARK_GRAFT_SPREAD"] = "0"
-    try:
-        df = spark.range(0, 10, 1, 1)
-        assert spread(df) is df
-    finally:
-        del os.environ["SPARK_GRAFT_SPREAD"]
-
-
-def test_spread_env_override_target(spark):
-    os.environ["SPARK_GRAFT_SPREAD"] = "7"
-    try:
-        df = spark.range(0, 100, 1, 1)
-        assert spread(df).rdd.getNumPartitions() == 7
-    finally:
-        del os.environ["SPARK_GRAFT_SPREAD"]

@@ -56,6 +56,11 @@ def test_error_log_side_table(spark, corpus, tmp_path):
             ("u://junk/3", None,
              b'<p><span class="agent" data-viaf="9431627">Ghost</span></p>',
              None, "en"),
+            # blacklisted name carrying the dead id: the anti-join drops
+            # it first, so it is logged as blacklisted, never as dead
+            ("u://junk/4", None,
+             b'<p><span class="agent" data-viaf="9431627">Unknown</span></p>',
+             None, "en"),
         ],
         pages.schema,
     )
@@ -68,8 +73,8 @@ def test_error_log_side_table(spark, corpus, tmp_path):
     for r in errs:
         by_reason.setdefault(r["reason"], []).append(r)
     assert [e["url"] for e in by_reason["empty_text"]] == ["u://junk/1"]
-    assert [(e["url"], e["detail"]) for e in by_reason["blacklisted_name"]] == [
-        ("u://junk/2", "Unknown")
+    assert sorted((e["url"], e["detail"]) for e in by_reason["blacklisted_name"]) == [
+        ("u://junk/2", "Unknown"), ("u://junk/4", "Unknown")
     ]
     assert [(e["url"], e["detail"]) for e in by_reason["dead_viaf"]] == [
         ("u://junk/3", "9431627")
@@ -142,7 +147,11 @@ def test_in_memory_run_leaves_no_storage(spark, corpus):
     assert not leaked, f"in-memory run left storage pinned: {leaked}"
 
 
-def test_resume_from_checkpoint(spark, corpus, tmp_path):
+def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
+    import os
+
+    from serialization_agents_spark.plans import pipeline
+
     pages, authority, redirects, blacklist = corpus
     out = str(tmp_path / "ckpt")
 
@@ -158,6 +167,26 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path):
         full.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
     )
 
+    # a completed out_dir is read back whole: no stage operator is called
+    # and the `_errors` side table is not rewritten
+    errors_done = os.path.join(out, "_errors", "_SUCCESS")
+    errors_mtime = os.stat(errors_done).st_mtime_ns
+
+    def recomputed(*_args, **_kwargs):
+        raise AssertionError("a completed stage was recomputed")
+
+    with monkeypatch.context() as m:
+        for name in ("link_mentions", "score_alt_forms", "canonicalize_agents", "enumerate_ids"):
+            m.setattr(pipeline, name, recomputed)
+        again = run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
+    assert again.stages_resumed == list(pipeline._STAGE_ORDER)
+    assert not again.stages_computed
+    assert os.stat(errors_done).st_mtime_ns == errors_mtime
+    assert again.cc_iterations == 0
+    assert global_checksum(
+        again.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
+    ) == want
+
     # simulate a crash after 'linked': drop everything later
     for stage in ["agents", "canonical", "triples"]:
         shutil.rmtree(f"{out}/{stage}", ignore_errors=True)
@@ -169,6 +198,25 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path):
         resumed.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
     )
     assert got == want
+
+
+def test_stage_jobs_carry_run_job_group(spark, corpus, tmp_path):
+    """Each stage's jobs run under job group `<run_id>:<stage>`, and the
+    caller's own group is restored afterwards."""
+    sc = spark.sparkContext
+    pages, authority, redirects, blacklist = corpus
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        run_pipeline(
+            spark, pages, authority, redirects, blacklist,
+            out_dir=str(tmp_path / "grouped"), run_id="grouped", until="canonical",
+        )
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup("grouped:canonical")
 
 
 def test_until_agents_skips_downstream_and_resumes_forward(spark, corpus, tmp_path):
@@ -198,7 +246,7 @@ def test_until_agents_skips_downstream_and_resumes_forward(spark, corpus, tmp_pa
 
 def test_agents_table_without_out_dir_raises(spark, corpus):
     """ADVICE round-4: agents_table with out_dir=None was silently
-    ignored (materialize returns early) — must fail loudly instead."""
+    ignored — must fail loudly instead."""
     import pytest
 
     pages, authority, redirects, blacklist = corpus
