@@ -15,7 +15,7 @@ Known permanent exclusion — S12 (truncate/prepare, plans/pipeline.py
 `mode("overwrite")` per stage): a WRITE MODE is not observable through a
 read-only query result, so S12 has no `queries()` row BY NATURE. Its
 semantics (stage overwrite + resume-skip on `_SUCCESS`) are pinned by
-the resume pytest (tests/test_pipeline.py) instead.
+the resume pytest (tests/test_pipeline_e2e.py) instead.
 """
 
 from __future__ import annotations

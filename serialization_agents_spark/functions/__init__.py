@@ -1,17 +1,13 @@
 """Scalar function library: normalization, fuzzy scoring, text analysis.
 
-All hot-path functions come in two forms where possible:
-- a pure Spark Column expression (JVM-side, whole-stage codegen), and
-- a vectorized pandas UDF (Arrow-batched) for semantics the built-ins
-  can't express (Unicode accent folding, the fuzzy scorer).
+Hot-path functions are pure Spark Column expressions (JVM-side,
+whole-stage codegen); the ``*_py`` functions are their byte-stable
+reference definitions.
 """
 
 from serialization_agents_spark.functions.normalize import (  # noqa: F401
     fuzzy_score_py,
-    fuzzy_score_udf,
     normalize_name_expr,
     normalize_name_py,
-    normalize_name_udf,
     percent_overlap_py,
-    percent_overlap_udf,
 )

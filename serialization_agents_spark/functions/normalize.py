@@ -33,11 +33,8 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StringType
 
 _NON_ALNUM = re.compile(r"[^a-z0-9]+")
 
@@ -110,12 +107,6 @@ def normalize_name_py(s: str | None) -> str | None:
     return _NON_ALNUM.sub(" ", folded.lower().translate(_EXTRA_MAP)).strip()
 
 
-@pandas_udf(StringType())
-def normalize_name_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized normalization. Use when input may carry diacritics."""
-    return s.map(normalize_name_py, na_action="ignore")
-
-
 def normalize_name_expr(col: Column) -> Column:
     """JVM-side fast path (whole-stage codegen), byte-identical to
     normalize_name_py over the full Latin-1..Latin Extended Additional
@@ -123,8 +114,6 @@ def normalize_name_expr(col: Column) -> Column:
     GENERATED from the same NFD fold (see _gen_fold_table), so the two
     impls cannot drift. Chars outside the table fold to whitespace in
     both (same as punctuation).
-
-    Keep this in the hot path: ~10-50x cheaper than the pandas UDF.
     """
     folded = F.lower(F.translate(col, _FOLD_SRC, _FOLD_DST))
     return F.trim(F.regexp_replace(folded, r"[^a-z0-9]+", " "))
@@ -187,14 +176,6 @@ def fuzzy_score_py(target: str | None, query: str | None, fuzziness: float = 0.5
     return final
 
 
-@pandas_udf(DoubleType())
-def fuzzy_score_udf(target: pd.Series, query: pd.Series) -> pd.Series:
-    """Arrow-batched fuzzy scorer (fuzziness pinned to the reference's 0.5)."""
-    return pd.Series(
-        [fuzzy_score_py(t, q) for t, q in zip(target, query)], dtype="float64"
-    )
-
-
 def fuzzy_score_expr(target: Column, query: Column) -> Column:
     """string_score as a PURE JVM expression — F.aggregate over query
     positions with a (running, start_at, fuzzies) struct accumulator,
@@ -203,8 +184,7 @@ def fuzzy_score_expr(target: Column, query: Column) -> Column:
 
     This is the production path: it keeps the linking cascade free of
     Python workers entirely (worker init is seconds per executor slot
-    here and the scorer sits on the J4 hot path at 100 TB). The pandas
-    UDF above remains as the Arrow reference implementation.
+    here and the scorer sits on the J4 hot path at 100 TB).
 
     ARG CONTRACT: pass CHEAP column references (concrete columns or
     struct fields), never expression trees. Higher-order functions are
@@ -270,14 +250,9 @@ def percent_overlap_py(a: str | None, b: str | None) -> float:
     return 100.0 * len(ta & tb) / max(len(ta), len(tb))
 
 
-@pandas_udf(DoubleType())
-def percent_overlap_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([percent_overlap_py(x, y) for x, y in zip(a, b)], dtype="float64")
-
-
 def percent_overlap_expr(a: Column, b: Column) -> Column:
-    """percentOverlap as pure Column expressions (JVM path; the pandas UDF
-    above is the Arrow reference implementation)."""
+    """percentOverlap as pure Column expressions (JVM path; percent_overlap_py
+    is the reference definition)."""
 
     def toks(c: Column) -> Column:
         # array_remove('') matches Python str.split()'s empty-run handling

@@ -13,22 +13,17 @@ extractor)". The extraction CONTRACT (canonical, byte-stable):
    &nbsp; &copy;);
 5. collapse all whitespace runs to one space and trim.
 
-Two implementations, asserted byte-identical in tests:
-- ``extract_text_expr``  — pure Column expressions (whole-stage codegen,
-  the 100 TB hot path: no Python at all);
-- ``extract_text_udf``   — Arrow-batched pandas UDF (the input_hint's
-  "vectorized pandas/Arrow UDF" form; also the reference oracle).
+``extract_text_expr`` is the production path: pure Column expressions
+(whole-stage codegen, no Python at all). ``extract_text_py`` is the
+byte-stable reference it is asserted identical to in tests.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StringType
 
 _BLOCK_RE = re.compile(
     r"(?is)<head\b.*?</head>|<script\b.*?</script>|<style\b.*?</style>"
@@ -56,12 +51,6 @@ def extract_text_py(html: bytes | str | None) -> str | None:
     return _WS_RE.sub(" ", s).strip(" \t\n\r\f\x0b")
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-vectorized extraction over the binary `html` column."""
-    return html.map(extract_text_py, na_action="ignore")
-
-
 # The same block/tag regexes, Java-regex flavored for JVM execution.
 _BLOCK_RE_JAVA = (
     r"(?is)<head\b.*?</head>|<script\b.*?</script>|<style\b.*?</style>"
@@ -71,11 +60,8 @@ _BLOCK_RE_JAVA = (
 
 
 def extract_text_expr(html: Column) -> Column:
-    """JVM-side extractor — identical contract, zero Python in the plan.
-
-    Stays inside whole-stage codegen; prefer this in the hot path and
-    keep the pandas UDF for parity testing and exotic inputs.
-    """
+    """JVM-side extractor — identical contract, zero Python in the plan;
+    stays inside whole-stage codegen."""
     s = html.cast("string")  # binary -> UTF-8 string (Spark semantic)
     s = F.regexp_replace(s, _BLOCK_RE_JAVA, " ")
     s = F.regexp_replace(s, r"(?s)<[^>]*>", " ")
@@ -84,12 +70,13 @@ def extract_text_expr(html: Column) -> Column:
     return F.trim(F.regexp_replace(s, r"\s+", " "))
 
 
-def with_extracted_text(pages: "DataFrame", use_udf: bool = False) -> "DataFrame":  # noqa: F821
+def with_extracted_text(pages: "DataFrame") -> "DataFrame":  # noqa: F821
     """pages(url, warc_ts, html, text, lang) -> same + `text` filled.
 
     Honors pre-extracted text when present (the reference trusts its
     source fields the same way); extraction only runs where text is NULL,
     so the expensive path touches the minimal row set.
     """
-    extractor = extract_text_udf(F.col("html")) if use_udf else extract_text_expr(F.col("html"))
-    return pages.withColumn("text", F.coalesce(F.col("text"), extractor))
+    return pages.withColumn(
+        "text", F.coalesce(F.col("text"), extract_text_expr(F.col("html")))
+    )

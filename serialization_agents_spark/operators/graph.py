@@ -81,7 +81,6 @@ def pagerank(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, rank) after `iterations` fixed-point PageRank steps.
 
@@ -94,8 +93,7 @@ def pagerank(
         .distinct()
         .repartition("src")
     )
-    if checkpoint:
-        e = e.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -119,8 +117,7 @@ def pagerank(
             .cast("long")
             .alias("rank"),
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=False)
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -209,7 +206,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, label) after `iterations` SYNCHRONOUS label-propagation
     steps — the community-detection sibling of `pagerank`, deterministic
@@ -240,8 +236,7 @@ def label_propagation(
     ).repartition("dst")  # the per-iteration join keys on dst — pinning
     # that partitioning here (preserved through the localCheckpoint's
     # LogicalRDD) saves one edge-list Exchange every round
-    if checkpoint:
-        und = und.localCheckpoint(eager=True)
+    und = und.localCheckpoint(eager=True)
     nodes = (
         und.select(F.col("src").alias("node")).distinct()
     )  # symmetrized: every endpoint appears as src
@@ -263,8 +258,7 @@ def label_propagation(
                 "node", F.coalesce("new_label", "label").cast("long").alias("label")
             )
         )
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=False)
+        labels = labels.localCheckpoint(eager=False)
     return labels
 
 
@@ -274,7 +268,6 @@ def bfs_distances(
     max_hops: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, dist) = shortest hop count from any source node within
     `max_hops` synchronous BFS rounds — the multi-source reachability
@@ -294,8 +287,7 @@ def bfs_distances(
     und = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition("dst")  # frontier join keys on dst (see label_propagation)
-    if checkpoint:
-        und = und.localCheckpoint(eager=True)
+    und = und.localCheckpoint(eager=True)
     nodes = und.select(F.col("src").alias("node")).distinct()
     dist = nodes.join(
         sources.select(F.col(sources.columns[0]).alias("node")).distinct()
@@ -316,8 +308,7 @@ def bfs_distances(
         dist = dist.join(reach, "node", "left").select(
             "node", F.least(F.col("dist"), F.col("via")).alias("dist")
         )
-        if checkpoint:
-            dist = dist.localCheckpoint(eager=False)
+        dist = dist.localCheckpoint(eager=False)
     return dist.where(F.col("dist").isNotNull())
 
 

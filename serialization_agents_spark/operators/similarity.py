@@ -7,17 +7,14 @@
   (sign of dot(v, r_i) for H deterministic pseudo-random planes) so each
   query only scans its bucket. One shuffle keyed by bucket signature.
   Corpus-side signatures come from an Arrow-batched numpy matmul (one
-  BLAS call per batch); the JVM expression path stays available as the
-  reference implementation (`corpus_arrow=False`). The in-bucket exact
-  re-rank likewise scores candidate pairs in an Arrow kernel
-  (`pair_arrow=True`, _pair_cosine_kernel) — raw cosine from numpy,
-  decimal rounding kept JVM-side for oracle parity.
+  BLAS call per batch). The in-bucket exact re-rank likewise scores
+  candidate pairs in an Arrow kernel (_pair_cosine_kernel) — raw cosine
+  from numpy, decimal rounding kept JVM-side for oracle parity.
 
 - ``ivf_topk``          — IVF-flat: corpus vectors live in exactly ONE
   argmax-dot centroid cell (narrow map + one hash join); queries probe
-  their best `n_probes` cells. Deterministic LCG centroids by default;
-  ``kmeans_refine`` runs Lloyd iterations as DataFrame aggregations for
-  a real deployment (plan shape unchanged).
+  their best `n_probes` cells. Deterministic LCG centroids; ``kmeans_lloyd``
+  runs quantized Lloyd iterations over the same init.
 - ``embedding_neardup_pairs`` — the dedup-family face of this module:
   sign-LSH blocked self-join + exact cosine ≥ threshold, with the same
   degenerate-bucket cap + drop-accounting as the MinHash pipeline.
@@ -101,23 +98,11 @@ def _hyperplane(dim: int, seed: int, plane: int) -> list[float]:
     return out
 
 
-def _guard_dim(vec: Column, dim: int, assigned: Column) -> Column:
-    """NULL-parity guard for the EXPRESSION bucket/cell paths: a NULL or
-    wrong-length vector gets a NULL assignment (dropping out of the
-    downstream equi-join), exactly like the Arrow kernels' masked rows.
-    Without it, a NULL dot walks through `when(x >= 0, '1').otherwise('0')`
-    to bit '0' and malformed rows pool in the all-zeros bucket.
-    (`F.size` is -1 or NULL for NULL arrays depending on ANSI mode —
-    both fail the == dim test, so the guard holds either way.)"""
-    return F.when(F.size(vec) == dim, assigned)
-
-
 def _stack_valid(series, dim: int):
     """(mask, matrix) for an Arrow column of embeddings: rows that are
     NULL or not exactly `dim` floats are masked out instead of crashing
-    np.stack — one bad row must not kill a 100 TB job (the expression
-    path degrades to a NULL result for such rows; the kernels match by
-    emitting NULL for masked rows, which drops out of every equi-join)."""
+    np.stack — one bad row must not kill a 100 TB job. The kernels emit
+    NULL for masked rows, which drops out of every equi-join."""
     import numpy as np
 
     mask = np.array(
@@ -134,9 +119,9 @@ def _stack_valid(series, dim: int):
 def _bucket_kernel(planes: list[list[float]], id_out: str, vec_out: str):
     """mapInPandas kernel computing LSH bucket signatures with ONE numpy
     matmul per Arrow batch (BLAS dgemm), instead of per-row interpreted
-    F.aggregate HOFs x n_planes x dim — the JVM expression path never
-    enters codegen and dominates at corpus scale. Vector math is the one
-    case where Arrow-batched Python beats interpreted JVM expressions.
+    F.aggregate HOFs x n_planes x dim, which never enter codegen and
+    dominate at corpus scale. Vector math is the one case where
+    Arrow-batched Python beats interpreted JVM expressions.
 
     NULL / wrong-length vectors get a NULL bucket (dropped by the
     downstream equi-join) rather than crashing the stack — matching the
@@ -145,8 +130,8 @@ def _bucket_kernel(planes: list[list[float]], id_out: str, vec_out: str):
     Sign parity note: summation order differs from the sequential fold
     (BLAS is blocked/SIMD), so a dot within ~1e-15 of 0 could flip
     engines' sign. Components are O(1) draws, so in practice signs —
-    hence buckets — agree (asserted vs the expression path in
-    tests/test_similarity.py and vs DuckDB by the driver gate).
+    hence buckets — agree (asserted against the DuckDB oracles in
+    tests/test_similarity.py and by the driver gate).
     """
     import numpy as np
 
@@ -219,22 +204,15 @@ def _score_pairs(
     a_vec: str,
     b_vec: str,
     dim: int,
-    pair_arrow: bool,
 ) -> DataFrame:
     """(a_id, b_id, cosine) for a candidate-pair frame carrying both
-    vectors; `pair_arrow=True` (default) scores via _pair_cosine_kernel,
-    False keeps the pure-expression reference path for oracle parity."""
-    if pair_arrow:
-        scored = joined.select(a_id, b_id, a_vec, b_vec).mapInPandas(
-            _pair_cosine_kernel(a_id, b_id, a_vec, b_vec, dim),
-            f"{a_id} long, {b_id} long, cosine_raw double",
-        )
-        return scored.select(
-            a_id, b_id, F.round(F.col("cosine_raw"), 4).alias("cosine")
-        )
-    return joined.select(
-        a_id, b_id,
-        F.round(cosine(F.col(a_vec), F.col(b_vec)), 4).alias("cosine"),
+    vectors, scored by _pair_cosine_kernel and rounded Spark-side."""
+    scored = joined.select(a_id, b_id, a_vec, b_vec).mapInPandas(
+        _pair_cosine_kernel(a_id, b_id, a_vec, b_vec, dim),
+        f"{a_id} long, {b_id} long, cosine_raw double",
+    )
+    return scored.select(
+        a_id, b_id, F.round(F.col("cosine_raw"), 4).alias("cosine")
     )
 
 
@@ -248,8 +226,6 @@ def lsh_bucket_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probes: int = 0,
-    corpus_arrow: bool = True,
-    pair_arrow: bool = True,
 ) -> DataFrame:
     """Random-hyperplane LSH: bucket = sign-bit signature over n_planes.
     Query and corpus rows meet in a hash join on the bucket key, then
@@ -263,11 +239,9 @@ def lsh_bucket_topk(
     join fan-out is only (1 + n_probes) x queries — not corpus-sized.
 
     The CORPUS side (billions of vectors at scale) computes its bucket
-    via an Arrow-batched numpy matmul (`corpus_arrow=True`, the default
-    — see _bucket_kernel); `corpus_arrow=False` keeps the pure-JVM
-    expression path as the reference implementation. The query side is
-    small and stays on expressions (its per-plane margins also drive the
-    multi-probe bit ranking).
+    via an Arrow-batched numpy matmul (see _bucket_kernel). The query
+    side is small and stays on expressions (its per-plane margins also
+    drive the multi-probe bit ranking).
     """
     planes = [_hyperplane(dim, seed, p) for p in range(n_planes)]
 
@@ -284,17 +258,10 @@ def lsh_bucket_topk(
     c = spread(embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ))
-    if corpus_arrow:
-        c = c.mapInPandas(
-            _bucket_kernel(planes, "neighbor_id", "cv"),
-            "neighbor_id long, cv array<double>, bucket string",
-        )
-    else:
-        c = c.withColumn(
-            "bucket",
-            _guard_dim(F.col("cv"), dim, sig_from_dots(dots(F.col("cv")))),
-        )
+    )).mapInPandas(
+        _bucket_kernel(planes, "neighbor_id", "cv"),
+        "neighbor_id long, cv array<double>, bucket string",
+    )
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -333,7 +300,7 @@ def lsh_bucket_topk(
 
     cand = c.join(q, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
     scored = _score_pairs(
-        cand, "query_id", "neighbor_id", "qv", "cv", dim, pair_arrow
+        cand, "query_id", "neighbor_id", "qv", "cv", dim
     ).dropDuplicates(["query_id", "neighbor_id"])
     # multi-probe: a pair can meet in several probed buckets -> dedup
     return _topk(scored, k)
@@ -360,8 +327,7 @@ IVF_CENTROID_BASE = 1000  # LCG index offset decoupling centroids from LSH plane
 def ivf_centroids(n_centroids: int, dim: int = 64, seed: int = 42) -> list[list[float]]:
     """Deterministic centroids from the same LCG family as the LSH planes
     (offset so the two never coincide). The driver oracle transcribes the
-    identical recurrence; `kmeans_refine` upgrades these to data-adapted
-    centroids when cross-engine reproducibility is not required."""
+    identical recurrence; `kmeans_lloyd` starts from these."""
     return [_hyperplane(dim, seed, IVF_CENTROID_BASE + c) for c in range(n_centroids)]
 
 
@@ -398,13 +364,10 @@ def ivf_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    corpus_arrow: bool = True,
-    pair_arrow: bool = True,
 ) -> DataFrame:
     """IVF-flat: each corpus vector is assigned to its single best
     (argmax dot) centroid cell — a NARROW map (numpy matmul per Arrow
-    batch by default; `corpus_arrow=False` keeps the pure-expression
-    reference path) — and each query probes its `n_probes` best cells.
+    batch) — and each query probes its `n_probes` best cells.
     Exact cosine re-ranks inside the probed cells, so one hash join on
     `cell` is the only shuffle and recall follows the probe count. A
     corpus row lives in exactly one cell, so no pair-dedup is needed.
@@ -429,19 +392,10 @@ def ivf_topk(
     c = spread(embeddings.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
-    ))
-    if corpus_arrow:
-        c = c.mapInPandas(
-            _cell_kernel(cents, "neighbor_id", "cv"),
-            "neighbor_id long, cv array<double>, cell int",
-        )
-    else:
-        c = c.withColumn(
-            "cell",
-            _guard_dim(
-                F.col("cv"), dim, F.array_min(F.array(*cell_structs(F.col("cv"))))["c"]
-            ),
-        )
+    )).mapInPandas(
+        _cell_kernel(cents, "neighbor_id", "cv"),
+        "neighbor_id long, cv array<double>, cell int",
+    )
 
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -457,47 +411,8 @@ def ivf_topk(
     )
 
     cand = c.join(q, "cell").where(F.col("neighbor_id") != F.col("query_id"))
-    scored = _score_pairs(
-        cand, "query_id", "neighbor_id", "qv", "cv", dim, pair_arrow
-    )
+    scored = _score_pairs(cand, "query_id", "neighbor_id", "qv", "cv", dim)
     return _topk(scored, k)
-
-
-def kmeans_refine(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Lloyd refinement of IVF centroids as DataFrame aggregations:
-    assign cells (narrow numpy pass), then per-(cell, dim) mean via one
-    posexplode + groupBy — one shuffle of (cells x dim) rows per
-    iteration, never a driver-side loop over vectors. Empty cells keep
-    their previous centroid. Returns driver-side centroid lists (the
-    centroid table is tiny by construction)."""
-    cents = [list(c) for c in centroids]
-    dim = len(cents[0])
-    emb = spread(embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ))
-    for _ in range(n_iters):
-        assigned = emb.mapInPandas(
-            _cell_kernel(cents, "neighbor_id", "cv"),
-            "neighbor_id long, cv array<double>, cell int",
-        )
-        means = (
-            assigned.select("cell", F.posexplode("cv").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in cents]
-        for r in means:
-            new[r["cell"]][r["pos"]] = r["m"]
-        cents = new
-    return cents
 
 
 def _cell_sum_kernel(centroids: list[list[float]], vec_in: str):
@@ -620,8 +535,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int | None = 4096,
-    corpus_arrow: bool = True,
-    pair_arrow: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-duplicate (id_a, id_b, cosine) pairs: sign-LSH blocking
     (self-join within buckets, never all-pairs) + exact cosine >=
@@ -641,31 +554,10 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     ))
-    if corpus_arrow:
-        sigs = v.mapInPandas(
-            _bucket_kernel(planes, "vid", "cv"),
-            "vid long, cv array<double>, bucket string",
-        )
-    else:
-        def dots(vec: Column) -> Column:
-            return F.array(
-                *[_dot(vec, F.array(*[F.lit(float(w)) for w in p])) for p in planes]
-            )
-
-        sigs = v.withColumn(
-            "bucket",
-            _guard_dim(
-                F.col("cv"),
-                dim,
-                F.array_join(
-                    F.transform(
-                        dots(F.col("cv")),
-                        lambda x: F.when(x >= 0, "1").otherwise("0"),
-                    ),
-                    "",
-                ),
-            ),
-        )
+    sigs = v.mapInPandas(
+        _bucket_kernel(planes, "vid", "cv"),
+        "vid long, cv array<double>, bucket string",
+    )
 
     if max_bucket is not None:
         sizes = sigs.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
@@ -679,29 +571,21 @@ def embedding_neardup_pairs(
             .withColumn("bucket_size", F.lit(0).cast("long"))
         )
 
-    if pair_arrow:
-        # one grouped shuffle keyed by bucket (each vector crosses ONCE),
-        # then a blocked in-kernel GEMM per bucket — never a pair join
-        # that re-ships both vectors per candidate. NULL buckets (invalid
-        # vectors) are dropped exactly as the old equi-join dropped them.
-        scored = (
-            sigs.where(F.col("bucket").isNotNull())
-            .groupBy("bucket")
-            .applyInPandas(
-                _bucket_gram_kernel(dim, threshold),
-                "id_a long, id_b long, cosine_raw double",
-            )
+    # one grouped shuffle keyed by bucket (each vector crosses ONCE),
+    # then a blocked in-kernel GEMM per bucket — never a pair join that
+    # re-ships both vectors per candidate. NULL buckets (invalid vectors)
+    # are dropped, as an equi-join on the bucket would drop them.
+    scored = (
+        sigs.where(F.col("bucket").isNotNull())
+        .groupBy("bucket")
+        .applyInPandas(
+            _bucket_gram_kernel(dim, threshold),
+            "id_a long, id_b long, cosine_raw double",
         )
-        pairs = scored.select(
-            "id_a", "id_b", F.round("cosine_raw", 4).alias("cosine")
-        ).where(F.col("cosine") >= threshold)
-    else:
-        a = sigs.select("bucket", F.col("vid").alias("id_a"), F.col("cv").alias("va"))
-        b = sigs.select("bucket", F.col("vid").alias("id_b"), F.col("cv").alias("vb"))
-        cand = a.join(b, "bucket").where(F.col("id_a") < F.col("id_b"))
-        pairs = _score_pairs(cand, "id_a", "id_b", "va", "vb", dim, False).where(
-            F.col("cosine") >= threshold
-        )
+    )
+    pairs = scored.select(
+        "id_a", "id_b", F.round("cosine_raw", 4).alias("cosine")
+    ).where(F.col("cosine") >= threshold)
     return pairs, dropped
 
 

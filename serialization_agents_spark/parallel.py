@@ -32,7 +32,9 @@ from pyspark.sql import DataFrame
 # milliseconds per call; its answer depends only on the logical plan (the
 # file listing is part of it) and the session, so memoize per
 # (application, semanticHash). Bounded: one entry per distinct projected
-# scan per session.
+# scan per session. The probe runs on the driver: planning the scan walks
+# the source's file listing to split it into partitions, so its cost grows
+# with the file count (paid once per distinct scan, thanks to the memo).
 _PROBE_CACHE: dict[tuple[str, int], int] = {}
 
 
@@ -53,10 +55,10 @@ def _planned_partitions(df: DataFrame) -> int:
     return n
 
 
-def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
-    """Fan ``df`` out to ``defaultParallelism * multiplier`` partitions
-    before per-row-expensive work, unless it already has that many."""
-    target = df.sparkSession.sparkContext.defaultParallelism * multiplier
+def spread(df: DataFrame) -> DataFrame:
+    """Fan ``df`` out to ``defaultParallelism`` partitions before
+    per-row-expensive work, unless it already has that many."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _planned_partitions(df) >= target:
         return df
     return df.repartition(target)

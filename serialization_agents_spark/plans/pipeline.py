@@ -107,7 +107,7 @@ def run_pipeline(
     plain parquet, and hand the catalog-read frame downstream — the
     canonicalize groupBys and every later entity_key join/aggregation
     over the agents table then plan with NO shuffle Exchange on the
-    agents side (asserted by tests/test_pipeline.py). At 10^12 entities
+    agents side (asserted by tests/test_pipeline_e2e.py). At 10^12 entities
     this removes the dominant network cost of the maintenance jobs; on
     resume the bucket spec comes from the metastore (in-session here; a
     real deployment's persistent metastore keeps it across jobs — absent

@@ -1,5 +1,5 @@
-"""Extraction contract: JVM expression == Arrow UDF == Python reference,
-byte-for-byte, and both equal the generator's pre-extracted text
+"""Extraction contract: JVM expression == Python reference, byte-for-byte,
+and both equal the generator's pre-extracted text
 (input_hint per-row invariant: byte-identical extracted text per url)."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from serialization_agents_spark import synth
 from serialization_agents_spark.operators.extract import (
     extract_text_expr,
     extract_text_py,
-    extract_text_udf,
 )
 
 CASES = [
@@ -31,17 +30,15 @@ def test_extract_py_semantics():
     assert extract_text_py(None) is None
 
 
-def test_extract_expr_udf_py_byte_identical(spark):
+def test_extract_expr_py_byte_identical(spark):
     df = spark.createDataFrame([(c,) for c in CASES], "html binary")
     out = df.select(
         "html",
         extract_text_expr(F.col("html")).alias("via_expr"),
-        extract_text_udf(F.col("html")).alias("via_udf"),
     ).collect()
     for row in out:
         want = extract_text_py(bytes(row["html"]))
         assert row["via_expr"] == want
-        assert row["via_udf"] == want
 
 
 def test_extract_matches_generator_text(spark):

@@ -17,7 +17,7 @@ def test_two_node_cycle_is_fixed_point(spark):
     invariant of the damping arithmetic."""
     e = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
     for iters in (1, 4):
-        got = _ranks(pagerank(e, iterations=iters, checkpoint=False))
+        got = _ranks(pagerank(e, iterations=iters))
         assert got == {"a": SCALE, "b": SCALE}
         assert BASE + SCALE * 17 // 20 == SCALE
 
@@ -26,7 +26,7 @@ def test_star_three_iterations_hand_computed(spark):
     e = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "a")], "src string, dst string"
     )
-    assert _ranks(pagerank(e, iterations=3, checkpoint=False)) == {
+    assert _ranks(pagerank(e, iterations=3)) == {
         "a": 638750,
         "b": 421468,
         "c": 421468,
@@ -37,12 +37,11 @@ def test_duplicate_edges_are_deduped(spark):
     e = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("b", "a")], "src string, dst string"
     )
-    dup = _ranks(pagerank(e, iterations=2, checkpoint=False))
+    dup = _ranks(pagerank(e, iterations=2))
     clean = _ranks(
         pagerank(
             spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string"),
             iterations=2,
-            checkpoint=False,
         )
     )
     assert dup == clean
@@ -52,7 +51,7 @@ def test_partitioning_invariance(spark):
     rows = [(i % 11, (i * 3 + 1) % 11) for i in range(60)]
     e = spark.createDataFrame(rows, "src long, dst long")
     a = _ranks(pagerank(e.repartition(7), iterations=3))
-    b = _ranks(pagerank(e.coalesce(1), iterations=3, checkpoint=False))
+    b = _ranks(pagerank(e.coalesce(1), iterations=3))
     assert a == b
 
 

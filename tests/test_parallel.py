@@ -1,4 +1,4 @@
-"""Focused pins for the round-6 scan fan-out primitive: spread() must
+"""Focused pins for the scan fan-out primitive: spread() must
 repartition an under-parallel source and be an exact no-op (same plan,
 no exchange) on an already-parallel source — the property that keeps it
 scale-adaptive rather than a local[N] tune."""
@@ -25,3 +25,17 @@ def test_spread_is_noop_on_parallel_input(spark):
     out = spread(df)
     # no exchange added: the returned frame IS the input frame
     assert out is df
+
+
+def test_spread_is_noop_on_multi_file_parquet(spark, tmp_path):
+    """The scale case: a table written as >= defaultParallelism files
+    already plans that many scan partitions, so spread adds no Exchange."""
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "multi")
+    spark.range(0, 1000).repartition(n * 2).write.parquet(path)
+    df = spark.read.parquet(path).select("id")
+    out = spread(df)
+    assert out is df
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert out.agg(F.sum("id")).collect()[0][0] == 499500

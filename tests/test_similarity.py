@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import math
 
+import pytest
+
 from serialization_agents_spark.operators import similarity as S
+
+SF = "/root/testdata/sf0.001"
 
 
 def _emb(spark):
@@ -48,24 +52,28 @@ def test_lsh_bucket_topk_finds_parallel_vector(spark):
     assert 3 not in ids  # opposite vector lands in the complement bucket
 
 
-def test_lsh_arrow_buckets_match_expression_path(spark):
-    """The Arrow/numpy corpus-side bucket kernel (production path) must
-    return exactly the rows of the pure-JVM expression path on a real
-    embeddings table — same buckets, same re-ranked neighbors."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where("vec_id < 5")
-    corpus = emb.where("vec_id >= 5")
+@pytest.mark.parametrize(
+    "name",
+    ["ann_lsh_top3", "ann_lsh_multiprobe_top3", "ann_ivf_top3",
+     "dedup_embedding_neardup"],
+)
+def test_ann_kernels_match_duckdb_oracle(spark, name):
+    """The Arrow kernels (corpus bucket/cell assignment, pair re-rank,
+    per-bucket GEMM) must return exactly the DuckDB oracle's rows on a
+    real embeddings table — pinning that BLAS summation order never
+    flips a sign bit or crosses a 4dp rounding boundary on this data."""
+    import duckdb
 
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-            for r in df.collect()
-        )
+    import __spark_entry__ as entry
 
-    for probes in (0, 3):
-        arrow = S.lsh_bucket_topk(corpus, q, k=3, n_probes=probes, corpus_arrow=True)
-        expr = S.lsh_bucket_topk(corpus, q, k=3, n_probes=probes, corpus_arrow=False)
-        assert rows(arrow) == rows(expr), f"n_probes={probes}"
+    got = sorted(tuple(r) for r in entry.queries()[name](spark, SF).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS "
+        f"SELECT * FROM read_parquet('{SF}/embeddings.parquet')"
+    )
+    want = sorted(con.execute(entry.oracle_sql()[name]).fetchall())
+    assert got and got == want
 
 
 def _twin_corpus(spark):
@@ -116,21 +124,6 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark):
     assert r_multi >= 0.9
 
 
-def test_ivf_arrow_matches_expression_path(spark):
-    """IVF cell assignment via the numpy kernel must return exactly the
-    expression path's rows on a real embeddings table."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where("vec_id < 5")
-    corpus = emb.where("vec_id >= 5")
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    arrow = S.ivf_topk(corpus, q, k=3, corpus_arrow=True)
-    expr = S.ivf_topk(corpus, q, k=3, corpus_arrow=False)
-    assert rows(arrow) == rows(expr)
-
-
 def test_ivf_recall_on_planted_twins(spark):
     """With 4 of 16 cells probed, a query's planted twin (a small
     perturbation — its cell is almost always among the query's best
@@ -150,7 +143,8 @@ def test_ivf_recall_on_planted_twins(spark):
 
 
 def test_kmeans_refine_reduces_sse(spark):
-    """Lloyd refinement over two tight blobs must cut within-cell SSE."""
+    """Lloyd refinement (kmeans_lloyd) over two tight blobs must cut
+    within-cell SSE relative to its LCG init."""
     import random
 
     import numpy as np
@@ -172,8 +166,9 @@ def test_kmeans_refine_reduces_sse(spark):
         d = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         return d.min(axis=1).sum()
 
-    c1 = S.kmeans_refine(emb, c0, n_iters=2)
-    assert len(c1) == 4 and len(c1[0]) == dim
+    c1 = [[0.0] * dim for _ in range(4)]
+    for r in S.kmeans_lloyd(emb, n_centroids=4, n_iters=2, dim=dim).collect():
+        c1[r["cell"]][r["pos"]] = r["c_val"]
     assert sse(c1) < sse(c0) * 0.5
 
 
@@ -196,37 +191,10 @@ def test_embedding_neardup_finds_planted_twins(spark):
     assert len(twin_hits) / n_q >= 0.5
 
 
-def test_pair_arrow_rerank_matches_expression_path(spark):
-    """Round-4: the in-bucket/in-cell exact-cosine re-rank moved into an
-    Arrow kernel (raw dot/norms in numpy, round(4) kept JVM-side). It
-    must return EXACTLY the expression path's rows on real embeddings —
-    pinning that BLAS summation order never crosses a rounding boundary
-    on this data, the precondition for oracle parity."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.where("vec_id < 8")
-    corpus = emb.where("vec_id >= 8")
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    arrow = S.lsh_bucket_topk(corpus, q, k=3, n_probes=2, pair_arrow=True)
-    expr = S.lsh_bucket_topk(corpus, q, k=3, n_probes=2, pair_arrow=False)
-    assert rows(arrow) == rows(expr)
-
-    arrow = S.ivf_topk(corpus, q, k=3, pair_arrow=True)
-    expr = S.ivf_topk(corpus, q, k=3, pair_arrow=False)
-    assert rows(arrow) == rows(expr)
-
-    a_p, _ = S.embedding_neardup_pairs(emb, threshold=0.2, pair_arrow=True)
-    e_p, _ = S.embedding_neardup_pairs(emb, threshold=0.2, pair_arrow=False)
-    assert rows(a_p) == rows(e_p)
-
-
 def test_kernels_tolerate_null_and_ragged_vectors(spark):
     """ADVICE round-3: a NULL or wrong-length embedding must not kill the
     job (np.stack would raise) — the kernels route such rows to a NULL
-    bucket/cell, which drops out of every equi-join, mirroring the
-    expression path's NULL degradation."""
+    bucket/cell, which drops out of every equi-join."""
     import random
 
     rng = random.Random(7)
@@ -236,25 +204,18 @@ def test_kernels_tolerate_null_and_ragged_vectors(spark):
     emb = spark.createDataFrame(good + bad, "vec_id long, embedding array<double>")
     q = emb.where("vec_id < 3")
 
-    # Both corpus paths must agree on the NULL posture (ADVICE round-4:
-    # without _guard_dim the expression path pooled malformed rows in
-    # the all-zeros bucket instead of a NULL drop).
-    for corpus_arrow in (True, False):
-        out = S.lsh_bucket_topk(emb.where("vec_id >= 3"), q, k=3,
-                                n_planes=4, dim=dim,
-                                corpus_arrow=corpus_arrow).collect()
-        assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
+    out = S.lsh_bucket_topk(emb.where("vec_id >= 3"), q, k=3,
+                            n_planes=4, dim=dim).collect()
+    assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
 
-        out = S.ivf_topk(emb.where("vec_id >= 3"), q, k=3,
-                         n_centroids=4, n_probes=4, dim=dim,
-                         corpus_arrow=corpus_arrow).collect()
-        assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
+    out = S.ivf_topk(emb.where("vec_id >= 3"), q, k=3,
+                     n_centroids=4, n_probes=4, dim=dim).collect()
+    assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
 
-        pairs, _ = S.embedding_neardup_pairs(emb, threshold=0.0,
-                                             n_planes=2, dim=dim,
-                                             corpus_arrow=corpus_arrow)
-        ids = {x for r in pairs.collect() for x in (r["id_a"], r["id_b"])}
-        assert ids.isdisjoint({100, 101, 102})
+    pairs, _ = S.embedding_neardup_pairs(emb, threshold=0.0,
+                                         n_planes=2, dim=dim)
+    ids = {x for r in pairs.collect() for x in (r["id_a"], r["id_b"])}
+    assert ids.isdisjoint({100, 101, 102})
 
 
 def _py_kmeans_lloyd(vectors, n_centroids, n_iters, dim, seed=42):

@@ -1,21 +1,18 @@
 """N -> 4N scaling via REAL multi-JVM executors (local-cluster mode).
 
-The north rule asks for throughput scaling efficiency >= 0.8 between N
-and 4N EXECUTORS. Rounds 3-4 established that this sandbox throttles
-multithreaded single processes (a local[8] JVM gets capped at ~2-3 cores
-while 8 single-threaded processes run at full speed — see
-BENCH/BASELINE.md sections 6-7), which both poisons local[8]-vs-local[2]
-measurements AND is unrepresentative of a real cluster, where each
-executor is its own small JVM.
-
 `local-cluster[n, cores, mem_mb]` is Spark's multi-process standalone
 shim: it spawns n REAL executor JVMs with `cores` threads each, with
 netty shuffle between them — the closest thing to "N executors" a single
-box offers, and with cores=2 every JVM stays below the host cap's
-multithread trigger. N -> 4N is then 1 executor vs 4 executors at fixed
-cores-per-executor, exactly the criterion's shape.
+box offers. N -> 4N is then 1 executor vs 4 executors at fixed
+cores-per-executor. Each cell is a fresh process running the full
+`run_pipeline` over a synthetic corpus; the result is one JSON line.
 
-    python tools/cluster_scaling.py [n_pages] [cores_per_exec] [mem_mb]
+    python tools/cluster_scaling.py [small_pages] [big_pages] \
+        [cores_per_exec] [mem_mb] [--out result.json]
+
+`python tools/cluster_scaling.py 2000 4000 1 1024` compares
+local-cluster[1,1,1024] against local-cluster[4,1,1024] and fits a
+4-core host.
 """
 
 from __future__ import annotations
@@ -25,9 +22,10 @@ import os
 import subprocess
 import sys
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 from serialization_agents_spark.session import get_spark
 from serialization_agents_spark import synth
 from serialization_agents_spark.plans.pipeline import run_pipeline
@@ -80,6 +78,9 @@ def run_cluster(n_exec: int, cores: int, mem_mb: int, n_pages: int,
                 timeout: float = 3600) -> dict:
     env = dict(
         os.environ,
+        PYTHONPATH=os.pathsep.join(
+            p for p in (REPO_ROOT, os.environ.get("PYTHONPATH")) if p
+        ),
         CLUSTER_EXECUTORS=str(n_exec),
         CLUSTER_CORES=str(cores),
         CLUSTER_MEM_MB=str(mem_mb),
@@ -98,8 +99,7 @@ def run_cluster(n_exec: int, cores: int, mem_mb: int, n_pages: int,
 
 
 def main():
-    """Marginal-cost measurement (BENCH/BASELINE.md section 2 method):
-    fixed per-job costs (JVM/executor spin-up, plan build, dimension
+    """Marginal-cost measurement: fixed per-job costs (JVM/executor spin-up, plan build, dimension
     broadcast) dominate small corpora and make same-size throughput
     ratios meaningless, so each config runs TWO corpus sizes and the
     per-page marginal cost is compared:
