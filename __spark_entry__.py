@@ -2151,7 +2151,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         into 3 deterministic batches (doc_id % 3) and folded one at a
         time into a persisted bucket-partitioned agents table via
         fold_batch_into_agents — the module's batch(all) == fold(batches)
-        contract (streaming/incremental.py:1-27) means the folded table
+        contract (streaming/incremental.py) means the folded table
         must hash-match the SAME oracle SQL as kg_agents."""
         import tempfile
 

@@ -10,10 +10,10 @@ and enumerates sequential registry ids).
 This engine re-expresses those semantics over columnar tables
 (Parquet / Iceberg-style layouts) with the DataFrame API:
 
-- ``operators.extract``     — boilerplate-stripped text extraction (Arrow UDF)
+- ``operators.extract``     — boilerplate-stripped text extraction (Column expressions)
 - ``operators.mentions``    — agent-mention detection (vectorized gazetteer)
-- ``operators.candidates``  — blocking-key candidate generation (broadcast joins)
-- ``operators.linking``     — fuzzy scoring + per-mention top-1 (window)
+- ``operators.linking``     — blocking-key candidates (broadcast joins), fuzzy
+  scoring + per-mention top-1 (window)
 - ``operators.merge``       — priority merge algebra (salted two-phase agg)
 - ``operators.canonicalize``— connected-components canonicalization
 - ``operators.triples``     — (subj, pred, obj) triple materialization

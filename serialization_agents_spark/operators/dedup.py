@@ -180,8 +180,8 @@ def minhash_candidate_pairs_capped(
     docs in a dropped bucket are still caught by exact dedup on the
     content hash (operators/dedup.py:exact_duplicates).
 
-    Returns (pairs, dropped_buckets(band, bucket_size)) — route the
-    second into the S15 error/audit side table.
+    Returns (pairs, dropped_buckets(band, bucket_size)); accounting
+    for the dropped buckets is the caller's.
     """
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, band_size, hash_fn)
     n_bands = n_hashes // band_size

@@ -9,10 +9,7 @@ the pipeline outputs. Rows currently captured:
 - extract: pages whose html decodes to empty text ("no mentions can
   possibly be detected" — the audit trail for silent F2 drops);
 - link/blacklist: mentions dropped by the junk-name anti-join (F6);
-- link/dead_viaf: hints whose redirect chase ends nowhere (S11);
-- dedup/lsh_bucket_capped: degenerate LSH buckets dropped by the
-  bucket-size cap (operators/dedup.py:minhash_candidate_pairs_capped)
-  — caps must never drop silently (SURVEY.md §4.4).
+- link/dead_viaf: hints whose redirect chase ends nowhere (S11).
 """
 
 from __future__ import annotations
@@ -71,15 +68,6 @@ def blacklist_errors(mentions: DataFrame, blacklist: DataFrame | None) -> DataFr
 def dead_viaf_errors(dead: DataFrame) -> DataFrame:
     """S11 side-output rows as audit errors."""
     return _as_errors(dead, "link", "dead_viaf", F.col("url"), F.col("dead_viaf"))
-
-
-def lsh_drop_errors(dropped_buckets: DataFrame) -> DataFrame:
-    """Degenerate LSH buckets dropped by the size cap — logged, never
-    silent."""
-    return _as_errors(
-        dropped_buckets, "dedup", "lsh_bucket_capped",
-        F.lit(None), F.concat(F.col("band"), F.lit(":"), F.col("bucket_size")),
-    )
 
 
 def pipeline_errors(

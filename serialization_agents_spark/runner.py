@@ -79,11 +79,11 @@ def build_arg_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_arg_parser().parse_args(argv)
 
-    from serialization_agents_spark import schemas
     from serialization_agents_spark.plans.pipeline import run_pipeline
     from serialization_agents_spark.session import get_spark
     from serialization_agents_spark.sources.pages import (
         read_authority,
+        read_blacklist,
         read_pages,
         read_redirects,
     )
@@ -99,20 +99,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     authority = read_authority(spark, args.authority)
     redirects = read_redirects(spark, args.redirects) if args.redirects else None
-    blacklist = None
-    if args.blacklist:
-        blacklist = spark.read.parquet(args.blacklist)
-        missing = [
-            f.name for f in schemas.NAME_BLACKLIST.fields
-            if f.name not in blacklist.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"blacklist at {args.blacklist} missing columns: {missing}"
-            )
-        blacklist = blacklist.select(
-            [f.name for f in schemas.NAME_BLACKLIST.fields]
-        )
+    blacklist = read_blacklist(spark, args.blacklist) if args.blacklist else None
 
     res = run_pipeline(
         spark,

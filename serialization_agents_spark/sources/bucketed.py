@@ -6,8 +6,9 @@ that key makes every such join co-located: both sides are pre-hashed into
 the same bucket files, so the join (and `groupBy(entity_key)`
 aggregations) run with ZERO shuffle exchange — at 10^12-entity scale that
 removes the dominant network cost of the maintenance jobs. This is the
-batch counterpart of streaming/table_format.ParquetBucketTable's
-`bucket=` partitioning (which prunes; bucketing co-locates).
+batch counterpart of the `bucket=` partitioning of
+streaming/incremental.fold_batch_into_agents (which prunes; bucketing
+co-locates).
 
 Spark requires bucketed tables to live in a catalog (`saveAsTable`) —
 the metastore records the bucket spec that lets the planner elide the

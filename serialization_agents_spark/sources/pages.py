@@ -7,9 +7,10 @@ become table scans of a lakehouse corpus plus small snapshot dimensions.
 These helpers pin three things every scan at that scale depends on:
 
 1. **Schema enforcement** — every reader applies the canonical
-   StructType (schemas.PAGES / AUTHORITY / VIAF_REDIRECTS), so drift in
-   the underlying files fails loudly at plan time, not 3 stages later,
-   and json/csv readers never pay inference scans over 100 TB.
+   StructType (schemas.PAGES / AUTHORITY / VIAF_REDIRECTS /
+   NAME_BLACKLIST), so drift in the underlying files fails loudly at
+   plan time, not 3 stages later, and json/csv readers never pay
+   inference scans over 100 TB.
 2. **Partition layout** — `write_pages_partitioned` lays the corpus out
    by crawl date (`warc_ts` day), the natural ingestion key; date-ranged
    jobs then prune partitions at the source (verify: PartitionFilters in
@@ -24,10 +25,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from serialization_agents_spark import schemas
 
 PAGE_FORMATS = ("parquet", "json", "csv")
+
+
+def _conform(df: DataFrame, schema: StructType, what: str, path: str) -> DataFrame:
+    """Select `schema`'s columns from `df`; raise ValueError naming the
+    missing ones if any are absent."""
+    missing = [f.name for f in schema.fields if f.name not in df.columns]
+    if missing:
+        raise ValueError(f"{what} at {path} missing columns: {missing}")
+    return df.select([f.name for f in schema.fields])
 
 
 def read_pages(
@@ -54,10 +65,7 @@ def read_pages(
             if "crawl_date" not in df.columns:
                 raise ValueError(f"pages at {path} are not date-partitioned")
             df = df.where(F.col("crawl_date").between(*dates))
-        missing = [f.name for f in schemas.PAGES.fields if f.name not in df.columns]
-        if missing:
-            raise ValueError(f"pages at {path} missing columns: {missing}")
-        return df.select([f.name for f in schemas.PAGES.fields])
+        return _conform(df, schemas.PAGES, "pages", path)
     # html travels base64-encoded in text formats
     txt_schema = "url string, warc_ts timestamp, html_b64 string, text string, lang string"
     if fmt == "json":
@@ -129,20 +137,20 @@ def read_pages_stream(
 def read_authority(spark: SparkSession, path: str) -> DataFrame:
     """Authority snapshot dimension (the VIAF cluster table the reference
     queries live, lib/utils.js:75-77) — schema-checked parquet."""
-    df = spark.read.parquet(path)
-    missing = [f.name for f in schemas.AUTHORITY.fields if f.name not in df.columns]
-    if missing:
-        raise ValueError(f"authority at {path} missing columns: {missing}")
-    return df.select([f.name for f in schemas.AUTHORITY.fields])
+    return _conform(spark.read.parquet(path), schemas.AUTHORITY, "authority", path)
 
 
 def read_redirects(spark: SparkSession, path: str) -> DataFrame:
     """VIAF redirects snapshot (stands in for live redirect chasing,
     lib/viaf.js:57-101)."""
-    df = spark.read.parquet(path)
-    missing = [
-        f.name for f in schemas.VIAF_REDIRECTS.fields if f.name not in df.columns
-    ]
-    if missing:
-        raise ValueError(f"redirects at {path} missing columns: {missing}")
-    return df.select([f.name for f in schemas.VIAF_REDIRECTS.fields])
+    return _conform(
+        spark.read.parquet(path), schemas.VIAF_REDIRECTS, "redirects", path
+    )
+
+
+def read_blacklist(spark: SparkSession, path: str) -> DataFrame:
+    """Junk-name blacklist (the F6 anti-join's right side,
+    lib/tms_serialize_objects_agents.js:211) — schema-checked parquet."""
+    return _conform(
+        spark.read.parquet(path), schemas.NAME_BLACKLIST, "blacklist", path
+    )

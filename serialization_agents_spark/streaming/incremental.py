@@ -17,13 +17,7 @@ The fold is a BUCKETED partial rewrite (`fold_batch_into_agents`): the
 agents table is hash-partitioned on entity_key and each micro-batch
 rewrites only the buckets its keys touch — O(batch) work per batch, not
 O(|agents|) — with a persisted last-batch marker + batch-keyed staging
-for replay safety. The durability primitives (marker, pruned read,
-staging, swap) live behind streaming/table_format.AgentsTable:
-`ParquetBucketTable` is the local-fs implementation used here, and
-`LakehouseAgentsTable` collapses the whole fold into one atomic
-`MERGE INTO` (table_format.merge_into_sql carries the identical
-set-union / priority-coalesce update expressions) for object-storage
-deployments where renames are unsafe. Canonicalization (CC) and
+for replay safety. Canonicalization (CC) and
 enumeration remain periodic batch jobs over the maintained agents
 table — exactly the reference's split between continuous serializers
 and the final enumerate pass (/root/reference/README.md:22-46).
@@ -31,10 +25,17 @@ and the final enumerate pass (/root/reference/README.md:22-46).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.plans.pipeline import run_pipeline
+
+# agents-table layout: `bucket=` partitions of pmod(xxhash64(entity_key),
+# N_BUCKETS) — fixed, or existing tables stop being readable
+N_BUCKETS = 64
 
 # columns folded as sets / counters / priority-coalesced scalars
 _SET_COLS = ["viaf", "name_normalized", "alt_forms", "fast", "viaf_merged", "merge_source"]
@@ -119,12 +120,19 @@ def incremental_merge_batch(
     return agg.select(*cols)
 
 
+def _commit_batch_id(agents_dir: str, batch_id: int) -> None:
+    """Persist the replay marker with an atomic rename."""
+    tmp = os.path.join(agents_dir, "_last_batch.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(str(batch_id))
+    os.replace(tmp, os.path.join(agents_dir, "_last_batch"))
+
+
 def fold_batch_into_agents(
     spark: SparkSession,
-    agents_dir: "str | None",
+    agents_dir: str,
     batch_agents: DataFrame,
     batch_id: int,
-    table=None,
 ) -> bool:
     """Fold one micro-batch into the bucket-partitioned agents table.
 
@@ -133,49 +141,63 @@ def fold_batch_into_agents(
     - the agents table is hash-partitioned into N_BUCKETS `bucket=`
       directories on entity_key; a micro-batch touches only the buckets
       its keys land in, so the per-batch fold reads/rewrites
-      O(|batch| / |agents| * N_BUCKETS) of the table, not all of it —
-      the parquet stand-in for the `MERGE INTO` a lakehouse table format
-      runs (streaming/table_format.merge_into_sql is that statement);
+      O(|batch| / |agents| * N_BUCKETS) of the table, not all of it;
     - replay guard: the last applied batch id is persisted next to the
-      table; a foreachBatch replay after a crash short-circuits instead
-      of double-folding mention counts (parquet overwrite has no sink
-      commit log of its own);
+      table (`_last_batch`); a foreachBatch replay after a crash
+      short-circuits instead of double-folding mention counts (parquet
+      overwrite has no sink commit log of its own);
     - crash-consistent staging: the folded buckets are staged under a
-      batch-id-keyed location BEFORE the swap. A replay that finds the
-      staging complete re-runs only the (idempotent) swap + marker; it
-      never refolds from a half-swapped table. Staging is dropped after
-      the marker commits.
+      batch-id-keyed location (`<agents_dir>.staging/b<id>`) BEFORE the
+      swap. A replay that finds the staging complete re-runs only the
+      (idempotent) swap + marker; it never refolds from a half-swapped
+      table. Staging is dropped after the marker commits.
 
-    All durability primitives live behind the `AgentsTable` interface
-    (streaming/table_format.py): `ParquetBucketTable` implements them
-    with local-fs renames (the sandbox), `LakehouseAgentsTable` with one
-    atomic MERGE INTO (object storage). Pass `table` to override the
-    default ParquetBucketTable(agents_dir).
+    The marker rename and the dynamic-partition-overwrite swap are atomic
+    only on POSIX filesystems; object stores need a table format whose
+    commit is the transaction.
 
     Returns True if the batch was applied, False if skipped as replayed.
     """
-    from serialization_agents_spark.streaming.table_format import (
-        ParquetBucketTable,
-        bucket_expr,
-    )
+    marker = os.path.join(agents_dir, "_last_batch")
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            if batch_id <= int(fh.read().strip()):
+                return False  # replayed batch: already folded
 
-    if table is None:
-        table = ParquetBucketTable(agents_dir)
-
-    if batch_id <= table.last_batch_id():
-        return False  # replayed batch: already folded
-
-    if not table.staging_complete(batch_id):
-        keyed = batch_agents.withColumn("bucket", bucket_expr())
-        touched = [r["bucket"] for r in keyed.select("bucket").distinct().collect()]
-        # partition-pruned read: only the buckets this batch touches
-        current = table.read_buckets(spark, touched) if table.exists() else None
+    bucket = F.pmod(F.xxhash64("entity_key"), F.lit(N_BUCKETS)).cast("int")
+    staging_root = agents_dir + ".staging"
+    staging = os.path.join(staging_root, f"b{batch_id}")
+    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
+        current = None
+        # dynamic partition overwrite leaves NO root _SUCCESS; the table
+        # exists iff bucket= partition dirs do
+        if os.path.isdir(agents_dir) and any(
+            e.startswith("bucket=") for e in os.listdir(agents_dir)
+        ):
+            touched = [
+                r[0] for r in batch_agents.select(bucket).distinct().collect()
+            ]
+            # partition-pruned read: only the buckets this batch touches
+            current = (
+                spark.read.parquet(agents_dir)
+                .where(F.col("bucket").isin(touched))
+                .drop("bucket")
+            )
         folded = incremental_merge_batch(current, batch_agents)
-        table.write_staging(folded, batch_id)
+        folded.withColumn("bucket", bucket).write.mode("overwrite").partitionBy(
+            "bucket"
+        ).parquet(staging)
 
-    table.swap_staging(spark, batch_id)
-    table.commit_batch_id(batch_id)
-    table.drop_staging(batch_id)
+    # swap: dynamic partition overwrite replaces ONLY the staged buckets
+    (
+        spark.read.parquet(staging)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(agents_dir)
+    )
+    _commit_batch_id(agents_dir, batch_id)
+    shutil.rmtree(staging_root, ignore_errors=True)
     return True
 
 

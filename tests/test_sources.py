@@ -11,8 +11,11 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark import synth
 from serialization_agents_spark.sources import (
+    read_authority,
+    read_blacklist,
     read_bucketed,
     read_pages,
+    read_redirects,
     write_bucketed,
     write_pages_partitioned,
 )
@@ -51,11 +54,16 @@ def test_json_roundtrip_preserves_html_bytes(spark, pages, tmp_path):
     assert got == want  # base64 interchange is byte-exact
 
 
-def test_schema_enforcement_fails_loudly(spark, tmp_path):
-    path = str(tmp_path / "not_pages")
+@pytest.mark.parametrize(
+    "reader",
+    [read_pages, read_authority, read_redirects, read_blacklist],
+    ids=["pages", "authority", "redirects", "blacklist"],
+)
+def test_schema_enforcement_fails_loudly(spark, tmp_path, reader):
+    path = str(tmp_path / "not_a_source")
     spark.range(3).write.mode("overwrite").parquet(path)
     with pytest.raises(ValueError, match="missing columns"):
-        read_pages(spark, path)
+        reader(spark, path)
 
 
 def test_bucketed_join_and_agg_shuffle_nothing(spark, tmp_path):

@@ -120,96 +120,53 @@ def test_bucketed_fold_touches_only_batch_buckets(spark, tmp_path):
     assert w == g
 
 
-def test_merge_into_sql_covers_fold_columns():
-    """The lakehouse MERGE INTO shim must carry an update rule for every
-    column the parquet-era fold maintains — guards drift between
-    table_format.merge_into_sql and incremental_merge_batch."""
-    from serialization_agents_spark.streaming.incremental import (
-        _SCALAR_COLS,
-        _SET_COLS,
-    )
-    from serialization_agents_spark.streaming.table_format import merge_into_sql
+def test_fold_replay_after_crash_between_swap_and_marker(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after the swap but before the marker commits leaves the
+    swapped buckets AND the complete staging behind; the replay of the
+    same batch id must re-swap the staged rows (not refold them onto the
+    already-swapped table), commit the marker and drop the staging."""
+    import os
 
-    sql = merge_into_sql("agents", "batch")
-    for c in [*_SET_COLS, *_SCALAR_COLS,
-              "name_controlled", "name_pref_rank", "primary_source",
-              "mention_count", "source_priority", "is_controlled",
-              "registry_id"]:
-        assert f"{c} =" in sql, c
-    assert "MERGE INTO agents" in sql and "WHEN NOT MATCHED THEN INSERT" in sql
-
-
-def test_merge_into_sql_parses_as_merge_plan(spark):
-    """Statement-shape gate: Spark's own SQL parser must accept
-    merge_into_sql's text as a MergeIntoTable logical plan (the parser
-    needs no catalog, so this runs offline where no Iceberg/Delta jar
-    resolves) — a syntax slip in the generated MERGE can no longer hide
-    behind simulate_merge, which executes the algebra but never the
-    statement. Also pins that a broken statement DOES raise, so the
-    positive assertion isn't vacuous."""
-    from serialization_agents_spark.streaming.table_format import merge_into_sql
-
-    parser = spark._jsparkSession.sessionState().sqlParser()
-    for batch_id in (None, 7):
-        sql = merge_into_sql("agents_tbl", "batch_view", batch_id=batch_id)
-        plan = parser.parsePlan(sql)
-        assert plan.nodeName() == "MergeIntoTable", plan.nodeName()
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="PARSE_SYNTAX_ERROR|ParseException"):
-        parser.parsePlan("MERGE INTO t USING s ON WHEN MATCHED")
-
-
-def test_lakehouse_fold_rejects_unmigrated_target(spark):
-    """ADVICE round-4: a target table created before the replay-guard
-    column existed must fail fold() with the migration statement, not an
-    opaque MERGE analysis error."""
     import pytest
 
-    from serialization_agents_spark.streaming.table_format import (
-        LakehouseAgentsTable,
-    )
+    from serialization_agents_spark.streaming import incremental
 
-    spark.createDataFrame(
-        [], "entity_key string, mention_count long"
-    ).createOrReplaceTempView("t_legacy_agents")
-    spark.createDataFrame([], "batch_id long").createOrReplaceTempView(
-        "t_legacy_ledger"
-    )
-    t = LakehouseAgentsTable("t_legacy_agents", ledger_table="t_legacy_ledger")
-    batch = spark.createDataFrame([], "entity_key string, mention_count long")
-    with pytest.raises(ValueError, match="last_folded_batch"):
-        t.fold(spark, batch, batch_id=0)
-
-
-def test_simulate_merge_equals_incremental_fold(spark):
-    """The MERGE INTO shim's update expressions, EXECUTED via
-    simulate_merge (full-outer join + the identical expression strings),
-    must reproduce incremental_merge_batch row-for-row on real merged
-    agents — the strongest execution evidence available without a v2
-    catalog."""
-    from serialization_agents_spark.streaming.table_format import simulate_merge
-
-    pages = synth.synth_pages(spark, n_pages=300, n_auth=80)
-    authority = synth.synth_authority(spark, n_auth=80)
+    pages = synth.synth_pages(spark, n_pages=200, n_auth=50)
+    authority = synth.synth_authority(spark, n_auth=50)
+    agents_dir = str(tmp_path / "agents")
     half1 = pages.where(F.xxhash64("url") % 2 == 0)
     half2 = pages.where(F.xxhash64("url") % 2 != 0)
-    existing = _agents_for(spark, half1, authority)
-    batch = _agents_for(spark, half2, authority)
+    batch0 = _agents_for(spark, half1, authority)
+    batch1 = _agents_for(spark, half2, authority)
+    assert incremental.fold_batch_into_agents(spark, agents_dir, batch0, 0)
 
-    want = {r["entity_key"]: r.asDict() for r in
-            incremental_merge_batch(existing, batch).collect()}
-    got = {r["entity_key"]: r.asDict() for r in
-           simulate_merge(existing, batch).collect()}
-    assert set(want) == set(got)
-    for k, w in want.items():
-        assert got[k] == w, f"{k}: {got[k]} != {w}"
+    commit = incremental._commit_batch_id
+
+    def crash_once(agents_dir, batch_id):
+        monkeypatch.setattr(incremental, "_commit_batch_id", commit)
+        raise OSError("crash before the marker commits")
+
+    monkeypatch.setattr(incremental, "_commit_batch_id", crash_once)
+    with pytest.raises(OSError, match="crash before"):
+        incremental.fold_batch_into_agents(spark, agents_dir, batch1, 1)
+    assert os.path.exists(os.path.join(agents_dir + ".staging", "b1", "_SUCCESS"))
+
+    assert incremental.fold_batch_into_agents(spark, agents_dir, batch1, 1)
+    want = {r["entity_key"]: r["mention_count"]
+            for r in incremental_merge_batch(batch0, batch1).collect()}
+    got = {r["entity_key"]: r["mention_count"]
+           for r in spark.read.parquet(agents_dir).collect()}
+    assert got == want
+    with open(os.path.join(agents_dir, "_last_batch")) as fh:
+        assert fh.read().strip() == "1"
+    assert not os.path.exists(agents_dir + ".staging")
 
 
 def _merge_row(entity_key, **over):
     """A full agents-schema row (fold-column superset) with overridable
-    fields — the fixture builder for the tie-break tests."""
+    fields — the fixture builder for the tie-break test."""
     row = {
         "entity_key": entity_key, "registry_id": None,
         "is_controlled": True, "name_controlled": None,
@@ -236,78 +193,42 @@ _MERGE_SCHEMA = (
 )
 
 
-def test_simulate_merge_tie_breaks_and_null_arrays(spark):
-    """ADVICE round-3: at EQUAL rank the fold keeps the lexicographically
-    smaller value (min over (rank, value) structs) — a strict '<' on rank
-    alone would keep the existing side, making the MERGE form
-    ingestion-order dependent; and a NULL set column must not wipe the
-    other side (concat(NULL, x) is NULL). Pinned against
-    incremental_merge_batch on engineered ties, both orders."""
-    from serialization_agents_spark.streaming.table_format import simulate_merge
-
+def test_fold_tie_breaks_and_null_arrays(spark):
+    """At EQUAL rank the fold keeps the lexicographically smaller value
+    (min over (rank, value) structs) — keeping either side at a tie would
+    make the fold ingestion-order dependent; and a NULL set column must
+    not wipe the other side (concat(NULL, x) is NULL). Pinned on
+    engineered ties, in both fold orders."""
     t_rows = [
         # equal name_pref_rank, t holds the LARGER name -> s must win
         _merge_row("e1", name_controlled="Beta", name_pref_rank=1),
         # equal source_priority, t holds larger primary_source
         _merge_row("e2", primary_source="srcB", source_priority=2),
-        # NULL array on the target side
+        # NULL array on one side
         _merge_row("e3", viaf=None, name_normalized=["x"]),
-        # target-only row: must pass through untouched (rank explicit —
-        # merge_entities always emits a rank alongside a name; a
-        # NULL-rank-with-name row only the fold would coalesce to 3)
+        # one-sided row: must pass through untouched (rank explicit —
+        # merge_entities always emits a rank alongside a name)
         _merge_row("e4", name_controlled="Solo", name_pref_rank=3),
     ]
     s_rows = [
         _merge_row("e1", name_controlled="Alpha", name_pref_rank=1),
         _merge_row("e2", primary_source="srcA", source_priority=2),
         _merge_row("e3", viaf=["42"], name_normalized=None),
-        # source-only row: the INSERT arm
+        # row only on the other side
         _merge_row("e5", name_controlled="New", name_pref_rank=3),
     ]
     t = spark.createDataFrame(t_rows, _MERGE_SCHEMA)
     s = spark.createDataFrame(s_rows, _MERGE_SCHEMA)
 
-    got = {r["entity_key"]: r.asDict() for r in simulate_merge(t, s).collect()}
-    assert got["e1"]["name_controlled"] == "Alpha"
-    assert got["e2"]["primary_source"] == "srcA"
-    assert got["e3"]["viaf"] == ["42"]
-    assert got["e3"]["name_normalized"] == ["x"]
-    assert got["e4"]["name_controlled"] == "Solo"
-    assert got["e5"]["name_controlled"] == "New"
-
-    # full parity with the fold algebra, in BOTH fold orders
     for a, b in ((t, s), (s, t)):
-        want = {r["entity_key"]: r.asDict()
-                for r in incremental_merge_batch(a, b).collect()}
-        sim = {r["entity_key"]: r.asDict()
-               for r in simulate_merge(a, b).collect()}
-        for k, w in want.items():
-            assert sim[k] == w, f"{k}: {sim[k]} != {w}"
-
-
-def test_simulate_merge_batch_id_replay_guard(spark):
-    """The exactly-once hole (VERDICT round-3 #3): with batch_id set, the
-    MERGE itself is idempotent per row — replaying an already-folded
-    batch changes nothing, even without the ledger."""
-    from pyspark.sql import functions as SF_
-    from serialization_agents_spark.streaming.table_format import simulate_merge
-
-    t = spark.createDataFrame(
-        [_merge_row("e1", mention_count=5)], _MERGE_SCHEMA
-    ).withColumn("last_folded_batch", SF_.lit(7))
-    s = spark.createDataFrame(
-        [_merge_row("e1", mention_count=3), _merge_row("e2")], _MERGE_SCHEMA
-    ).withColumn("last_folded_batch", SF_.lit(7))
-
-    replay = {r["entity_key"]: r.asDict()
-              for r in simulate_merge(t, s, batch_id=7).collect()}
-    assert replay["e1"]["mention_count"] == 5  # NOT double-folded
-    assert "e2" in replay  # inserts are naturally idempotent (same row)
-
-    fresh = {r["entity_key"]: r.asDict()
-             for r in simulate_merge(t, s, batch_id=8).collect()}
-    assert fresh["e1"]["mention_count"] == 8
-    assert fresh["e1"]["last_folded_batch"] == 8
+        got = {r["entity_key"]: r.asDict()
+               for r in incremental_merge_batch(a, b).collect()}
+        assert got["e1"]["name_controlled"] == "Alpha"
+        assert got["e2"]["primary_source"] == "srcA"
+        assert got["e3"]["viaf"] == ["42"]
+        assert got["e3"]["name_normalized"] == ["x"]
+        assert got["e4"]["name_controlled"] == "Solo"
+        assert got["e5"]["name_controlled"] == "New"
 
 
 def test_stream_drains_directory(spark, tmp_path):

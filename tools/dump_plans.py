@@ -12,7 +12,8 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from serialization_agents_spark.session import get_spark  # noqa: E402
@@ -22,7 +23,7 @@ def main():
     tag, suffix = sys.argv[1], sys.argv[2]
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     names = sys.argv[4:]
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(REPO_ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan-dump", shuffle_partitions=32)
     qs = entrymod.queries()
