@@ -65,9 +65,7 @@ def build_merge_edges(agents: DataFrame) -> DataFrame:
 BROADCAST_LABELS_MAX = 1_000_000
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = MAX_CC_ITERATIONS
-) -> tuple[DataFrame, int]:
+def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """edges(entity_key, merge_key) -> (labels(entity_key, component), iters).
 
     `component` is the lexicographic-min entity_key of the component —
@@ -76,13 +74,11 @@ def connected_components(
     collisions would spuriously merge ~1e4 components, so the STRING key
     stays the identifier end-to-end).
     """
-    labels, iters, _ = _connected_components_ex(edges, max_iterations)
+    labels, iters, _ = _connected_components_ex(edges)
     return labels, iters
 
 
-def _connected_components_ex(
-    edges: DataFrame, max_iterations: int = MAX_CC_ITERATIONS
-) -> tuple[DataFrame, int, int]:
+def _connected_components_ex(edges: DataFrame) -> tuple[DataFrame, int, int]:
     """connected_components plus the active-edge count the caller can
     use to skip merge machinery entirely: an entity is ACTIVE iff it
     shares a merge key with another entity, which holds iff its
@@ -137,9 +133,7 @@ def _connected_components_ex(
     # thing actually broadcast), not the edge count — an entity averages
     # >1 edge, so gating on edges disabled the fast path too early.
     n_entities = labels.count()
-    labels, iters = _cc_loop(
-        e, labels, cc_parts, n_entities <= BROADCAST_LABELS_MAX, max_iterations
-    )
+    labels, iters = _cc_loop(e, labels, cc_parts, n_entities <= BROADCAST_LABELS_MAX)
 
     active_labels = labels.select("entity_key", F.col("label").alias("component"))
     # Singletons are their own component.
@@ -149,13 +143,10 @@ def _connected_components_ex(
     return active_labels.unionByName(singleton_labels), iters, n_active
 
 
-def _cc_loop(
-    e: DataFrame,
-    labels: DataFrame,
-    cc_parts: int,
-    broadcast_maps: bool,
-    max_iterations: int,
-):
+def _cc_loop(e: DataFrame, labels: DataFrame, cc_parts: int, broadcast_maps: bool):
+    """Hash-to-min rounds until no label changes; raises if labels are
+    still changing after MAX_CC_ITERATIONS rounds (read per call) rather
+    than return components that have not converged."""
     from pyspark.sql.functions import broadcast as _b
 
     # label maps are entity-scale; broadcast keeps every join narrow so
@@ -165,9 +156,7 @@ def _cc_loop(
     def dim(df: DataFrame, key: str) -> DataFrame:
         return _b(df) if broadcast_maps else df.repartition(cc_parts, key)
 
-    iters = 0
-    for _ in range(max_iterations):
-        iters += 1
+    for iters in range(1, MAX_CC_ITERATIONS + 1):
         # (1) hash-to-min through the bipartite edges.
         key_label = (
             e.join(dim(labels, "entity_key"), "entity_key")
@@ -205,8 +194,11 @@ def _cc_loop(
         n_changed = merged.where(F.col("changed")).count()
         labels = merged.select("entity_key", "label")
         if n_changed == 0:
-            break
-    return labels, iters
+            return labels, iters
+    raise RuntimeError(
+        f"connected components did not converge in {MAX_CC_ITERATIONS} "
+        f"iterations ({n_changed} labels still changing)"
+    )
 
 
 def _singleton_projection(df: DataFrame) -> DataFrame:
@@ -247,9 +239,7 @@ def _argmin_field(prio: F.Column, value: F.Column, name: str) -> F.Column:
     ].alias(name)
 
 
-def canonicalize_agents(
-    agents: DataFrame, max_iterations: int = MAX_CC_ITERATIONS
-) -> tuple[DataFrame, int]:
+def canonicalize_agents(agents: DataFrame) -> tuple[DataFrame, int]:
     """Merge agent rows whose components collide; returns (canonical
     agents, cc_iterations). Input is `merge_entities` output."""
     # The CC machinery below issues several driver actions (edge counts,
@@ -258,7 +248,7 @@ def canonicalize_agents(
     # entity-scale — instead of re-running the merge per action.
     agents = agents.localCheckpoint(eager=True)
     edges = build_merge_edges(agents)
-    labels, iters, n_active = _connected_components_ex(edges, max_iterations)
+    labels, iters, n_active = _connected_components_ex(edges)
 
     if n_active == 0:
         # Nothing shares a merge key with anything: EVERY component is a

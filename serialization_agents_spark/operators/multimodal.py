@@ -132,7 +132,9 @@ AUDIO_FEATURES_SCHEMA = (
 
 FRAME_SCHEMA = "media_id long, frame_idx int, ts_ms int, frame binary"
 
-RESIZED_SCHEMA = "media_id long, width int, height int, content binary"
+RESIZED_SCHEMA = (
+    "media_id long, width int, height int, content binary, resize_ok boolean"
+)
 
 
 def _fake_audio_decode(content: bytes, n_features: int = 8) -> tuple[int, list[float]]:
@@ -236,7 +238,8 @@ def resize_images(
     """Image resize kernel (PIL when the import probe found it and
     fake=False); the fake path emits a digest-derived payload of
     deterministic size so the Spark-side shape — narrow map, binary out,
-    metadata columns — is real either way."""
+    metadata columns — is real either way. Unresizable rows degrade to a
+    NULL payload with resize_ok=False, never a task failure."""
     if not fake and not _HAVE_PIL:
         raise NotImplementedError(
             "real resizing requires PIL; not present in this environment "
@@ -258,10 +261,13 @@ def resize_images(
             rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 try:
-                    rows.append((mid, width, height, resize(bytes(content or b""))))
+                    payload = resize(bytes(content or b""))
+                    rows.append((mid, width, height, payload, True))
                 except Exception:
-                    rows.append((mid, width, height, None))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "content"])
+                    rows.append((mid, width, height, None, False))
+            yield pd.DataFrame(
+                rows, columns=["media_id", "width", "height", "content", "resize_ok"]
+            )
 
     images = media.where(F.col("kind") == "image").select("media_id", "content")
     return images.mapInPandas(kernel, RESIZED_SCHEMA)

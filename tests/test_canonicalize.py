@@ -3,6 +3,7 @@ transitive chains the reference only reaches over repeated upserts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.operators.canonicalize import (
@@ -107,6 +108,22 @@ def test_cc_converges_on_long_chain(spark):
     # hash-to-min + one pointer-jump per round: ~2.5 * log2(n) on a pure
     # chain (observed 14 for n=41), vs O(n)=40 without jumping.
     assert iters <= 16
+
+
+def test_cc_iteration_cap_fails_loudly(spark, monkeypatch):
+    """A cap hit while labels are still changing raises instead of
+    returning unconverged components; the cap is read per call."""
+    from serialization_agents_spark.operators import canonicalize
+
+    edges = spark.createDataFrame(
+        [("E0", "K0"), ("E1", "K0"), ("E1", "K1"), ("E2", "K1")],
+        "entity_key string, merge_key string",
+    )
+    labels, iters = connected_components(edges)
+    assert iters >= 2 and {r["component"] for r in labels.collect()} == {"E0"}
+    monkeypatch.setattr(canonicalize, "MAX_CC_ITERATIONS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
+        connected_components(edges)
 
 
 def test_zero_collisions_are_identity_singletons(spark):

@@ -20,12 +20,13 @@ def _cached_rdd_ids(spark) -> set[int]:
 
 def test_kg_cache_clear_drains_checkpoint_blocks(spark):
     import __spark_entry__ as entrymod
+    from serialization_agents_spark.queries.common import kg_canonical
 
     before = _cached_rdd_ids(spark)
 
     # Run the memoized pipeline (persists + several localCheckpoints).
     sf = "/root/testdata/sf0.001"
-    res = entrymod._kg_canonical(spark, sf)
+    res = kg_canonical(spark, sf)
     assert res.canonical.count() > 0
     during = _cached_rdd_ids(spark)
     assert during - before, "pipeline should have pinned storage"

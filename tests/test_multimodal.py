@@ -85,7 +85,9 @@ def test_real_image_decode_with_pil(spark, tmp_path):
     resized = {r["media_id"]: r for r in
                resize_images(media, width=4, height=4, fake=False).collect()}
     assert len(bytes(resized[1]["content"])) == 4 * 4 * 3
+    assert resized[1]["resize_ok"]
     assert resized[2]["content"] is None
+    assert resized[2]["resize_ok"] is False  # flagged, not a bare NULL
 
 
 def test_real_audio_decode_with_soundfile(spark):
@@ -157,3 +159,4 @@ def test_resize_payload_shape(spark):
     out = resize_images(media, width=32, height=8).collect()
     assert all(len(r["content"]) == 32 * 8 for r in out)
     assert all(r["width"] == 32 and r["height"] == 8 for r in out)
+    assert all(r["resize_ok"] for r in out)

@@ -104,8 +104,9 @@ def test_kg_consumers_read_the_memoized_pipeline(spark, monkeypatch):
     enumeration of their own."""
     from serialization_agents_spark.operators import enumerate_ids, linking
     from serialization_agents_spark.plans import pipeline
+    from serialization_agents_spark.queries.common import kg_canonical
 
-    entry._kg_canonical(spark, SF)
+    kg_canonical(spark, SF)
     declared = []
 
     def spy(name, fn):
