@@ -9,12 +9,7 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark.operators import dedup as D
 from serialization_agents_spark.operators import similarity as S
-from serialization_agents_spark.queries.common import (
-    SHINGLES,
-    TOKS,
-    registry,
-    table,
-)
+from serialization_agents_spark.queries.common import SHINGLES, TOKS, registry, table
 
 ENTRIES, query = registry()
 

@@ -160,3 +160,35 @@ def test_resize_payload_shape(spark):
     assert all(len(r["content"]) == 32 * 8 for r in out)
     assert all(r["width"] == 32 and r["height"] == 8 for r in out)
     assert all(r["resize_ok"] for r in out)
+
+
+def test_resize_failure_is_flagged(spark, monkeypatch):
+    """A row the kernel cannot resize comes back as a NULL payload with
+    resize_ok=False. The kernel runs in-process here: the fake resize
+    cannot fail on real bytes, and the PIL case above needs PIL."""
+    import pandas as pd
+
+    from serialization_agents_spark.operators import multimodal as M
+
+    kernels = []
+
+    class Frame:  # records the kernel resize_images hands to mapInPandas
+        def where(self, _cond):
+            return self
+
+        def select(self, *_cols):
+            return self
+
+        def mapInPandas(self, kernel, _schema):
+            kernels.append(kernel)
+
+    M.resize_images(Frame(), width=4, height=4)
+
+    def broken(*_args):
+        raise ValueError("undecodable")
+
+    monkeypatch.setattr(M.hashlib, "md5", broken)
+    batch = pd.DataFrame({"media_id": [7], "content": [b"payload"]})
+    (out,) = kernels[0](iter([batch]))
+    assert out["resize_ok"].tolist() == [False]
+    assert out["content"].tolist() == [None]
