@@ -25,6 +25,12 @@ Each iteration is two shuffles on (key, entity); `localCheckpoint()`
 truncates lineage so plans stay O(1) per iteration (SURVEY.md §4.2.2;
 cf. the BTS/large-star-small-star literature in PAPERS.md). Convergence
 takes O(log n) iterations on pathological chains, 1-2 on real data.
+
+Only the ACTIVE set — entities sharing a merge key with another entity —
+enters the loop. An entity is active iff its component has >= 2
+members, so the active labels are the whole split `canonicalize_agents`
+needs: agents without a label are singletons (identity projection),
+agents with one are group-merged per component.
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.functions.normalize import normalize_name_expr
+from serialization_agents_spark.operators.merge import argmin_by, capped_union
 
 MAX_CC_ITERATIONS = 25
 
@@ -72,20 +79,25 @@ def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     stable across runs and partitionings, and collision-free (earlier
     revisions used xxhash64 ids; at 10^12 entities 64-bit birthday
     collisions would spuriously merge ~1e4 components, so the STRING key
-    stays the identifier end-to-end).
+    stays the identifier end-to-end). Every entity outside the active set
+    is its own component.
     """
-    labels, iters, _ = _connected_components_ex(edges)
+    active, iters, _ = _active_components(edges)
+    nodes = edges.select("entity_key").dropDuplicates()
+    if active is None:
+        return nodes.withColumn("component", F.col("entity_key")), iters
+    labels = nodes.join(active, "entity_key", "left").select(
+        "entity_key", F.coalesce("component", "entity_key").alias("component")
+    )
     return labels, iters
 
 
-def _connected_components_ex(edges: DataFrame) -> tuple[DataFrame, int, int]:
-    """connected_components plus the active-edge count the caller can
-    use to skip merge machinery entirely: an entity is ACTIVE iff it
-    shares a merge key with another entity, which holds iff its
-    component has >= 2 members — so `n_active == 0` proves every
-    component is a singleton."""
-    all_nodes = edges.select("entity_key").dropDuplicates()
-
+def _active_components(edges: DataFrame) -> tuple[DataFrame | None, int, int]:
+    """Components of the ACTIVE entities only -> (labels(entity_key,
+    component) or None, iters, n_active_entities). An entity is active iff
+    it shares a merge key with another entity, which holds iff its
+    component has >= 2 members — so every entity without a label is a
+    singleton, and None (nothing active) proves all components are."""
     # Only keys shared by >= 2 entities can merge anything; everything else
     # is a singleton component and never enters the loop. On real corpora
     # this shrinks the iterated set by orders of magnitude (most entities
@@ -102,13 +114,9 @@ def _connected_components_ex(edges: DataFrame) -> tuple[DataFrame, int, int]:
     # sum(n) over the shared keys IS the semi-joined edge count, so one
     # aggregate answers both "any merge at all?" and the loop width —
     # without materializing the semi-joined edge set just to count it.
-    n_active = shared_keys.agg(F.sum("n")).collect()[0][0] or 0
-    if n_active == 0:
-        return (
-            all_nodes.select("entity_key", F.col("entity_key").alias("component")),
-            0,
-            0,
-        )
+    n_edges = shared_keys.agg(F.sum("n")).collect()[0][0] or 0
+    if n_edges == 0:
+        return None, 0, 0
     active = edges.join(shared_keys.select("merge_key"), "merge_key", "left_semi")
 
     # The loop operates on ENTITY-scale data (orders of magnitude smaller
@@ -119,7 +127,7 @@ def _connected_components_ex(edges: DataFrame) -> tuple[DataFrame, int, int]:
     # would race concurrent queries on a shared session).
     spark = edges.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cc_parts = max(8, min(session_parts, n_active // 100_000 + 1))
+    cc_parts = max(8, min(session_parts, n_edges // 100_000 + 1))
     e = (
         active.select("entity_key", "merge_key")
         .repartition(cc_parts, "entity_key")
@@ -134,13 +142,7 @@ def _connected_components_ex(edges: DataFrame) -> tuple[DataFrame, int, int]:
     # >1 edge, so gating on edges disabled the fast path too early.
     n_entities = labels.count()
     labels, iters = _cc_loop(e, labels, cc_parts, n_entities <= BROADCAST_LABELS_MAX)
-
-    active_labels = labels.select("entity_key", F.col("label").alias("component"))
-    # Singletons are their own component.
-    singleton_labels = all_nodes.join(
-        active_labels.select("entity_key"), "entity_key", "left_anti"
-    ).select("entity_key", F.col("entity_key").alias("component"))
-    return active_labels.unionByName(singleton_labels), iters, n_active
+    return labels.select("entity_key", F.col("label").alias("component")), iters, n_entities
 
 
 def _cc_loop(e: DataFrame, labels: DataFrame, cc_parts: int, broadcast_maps: bool):
@@ -201,10 +203,10 @@ def _cc_loop(e: DataFrame, labels: DataFrame, cc_parts: int, broadcast_maps: boo
     )
 
 
-def _singleton_projection(df: DataFrame) -> DataFrame:
-    """The identity 'merge' of a one-member component: same output
-    schema/exprs as the group-merge, no aggregation. `df` must carry the
-    agents columns plus `component`."""
+def _project(df: DataFrame, viaf_merged: F.Column, merge_source: F.Column) -> DataFrame:
+    """The canonical output row. `df` carries the agents columns plus
+    `component`; only the merge lineage differs between singletons and
+    merged components."""
     return df.select(
         F.lit(None).cast("long").alias("registry_id"),
         "entity_key",
@@ -221,8 +223,8 @@ def _singleton_projection(df: DataFrame) -> DataFrame:
         F.array_sort("name_normalized").alias("name_normalized"),
         F.array_sort("alt_forms").alias("alt_forms"),
         F.array_sort("fast").alias("fast"),
-        F.array().cast("array<string>").alias("viaf_merged"),
-        F.array().cast("array<struct<source:string,id:string>>").alias("merge_source"),
+        viaf_merged.alias("viaf_merged"),
+        merge_source.alias("merge_source"),
         "mention_count",
         "source_priority",
         "primary_source",
@@ -230,157 +232,92 @@ def _singleton_projection(df: DataFrame) -> DataFrame:
     )
 
 
-def _argmin_field(prio: F.Column, value: F.Column, name: str) -> F.Column:
-    """min(struct(prio, value)) ignoring rows where value IS NULL — the
-    'existing row wins, new row backfills' scalar rule of
-    /root/reference/lib/utils.js:307-313, made order-free."""
-    return F.min(F.when(value.isNotNull(), F.struct(prio.alias("p"), value.alias("v"))))[
-        "v"
-    ].alias(name)
-
-
-def canonicalize_agents(agents: DataFrame) -> tuple[DataFrame, int]:
-    """Merge agent rows whose components collide; returns (canonical
-    agents, cc_iterations). Input is `merge_entities` output."""
-    # The CC machinery below issues several driver actions (edge counts,
-    # convergence counts, the output checkpoint); `agents` sits on the
-    # far side of the fact-table merge shuffle, so materialize it ONCE —
-    # entity-scale — instead of re-running the merge per action.
-    agents = agents.localCheckpoint(eager=True)
-    edges = build_merge_edges(agents)
-    labels, iters, n_active = _connected_components_ex(edges)
-
-    if n_active == 0:
-        # Nothing shares a merge key with anything: EVERY component is a
-        # singleton (active <=> component size >= 2), so the group-merge
-        # below is the identity projection. Skip the label checkpoint,
-        # the size join, and the interpreted ObjectHashAggregate outright
-        # — on low-collision corpora this removes the bulk of the
-        # canonicalize stage's driver actions and shuffles.
-        out = _singleton_projection(
-            agents.withColumn("component", F.col("entity_key"))
-        ).localCheckpoint(eager=True)
-        return out, iters
-
-    # labels is entity-scale and fans out into sizes/joins/two branches —
-    # pin it once so the CC result is not re-derived per reference.
-    labels = labels.localCheckpoint()
-
-    # Singleton components (the overwhelming majority on real corpora) take
-    # a pure-projection fast path: the group-merge below runs interpreted
-    # (collect_set forces ObjectHashAggregate, which evaluates every
-    # aggregate expression per row without codegen), so keeping singletons
-    # out of it is a large constant-factor win at any scale.
-    comp_sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("_csize"))
-    # The label map is bounded by the entity count; below the CC loop's
-    # broadcast gate ship it broadcast so the agents join never plans a
-    # stats-blind sort-merge against the checkpointed frames.
-    n_labels = labels.count()
-    _maybe_b = F.broadcast if n_labels <= BROADCAST_LABELS_MAX else (lambda df: df)
-    lab2 = labels.join(_maybe_b(comp_sizes), "component")
-    joined = agents.join(_maybe_b(lab2), "entity_key").persist()
-
-    singles = _singleton_projection(joined.where(F.col("_csize") == 1))
-
-    # The heavy merge below is entity-scale; pre-partition it on the group
-    # key with a width sized to the (small) multi-member row count so the
-    # groupBy reuses the partitioning instead of a full-width exchange.
-    # (Derived from comp_sizes — labels-scale — so sizing it does not
-    # force the agents join to materialize early.)
-    n_multi = (
-        comp_sizes.where(F.col("_csize") > 1)
-        .agg(F.sum("_csize").alias("n"))
-        .collect()[0]["n"]
-        or 0
+def _merge_components(members: DataFrame, n_members: int) -> DataFrame:
+    """Group-merge the rows of multi-member components (`members` =
+    agents joined with their `component`) into one canonical row each."""
+    # Entity-scale: pre-partition on the group key at a width sized to the
+    # member count so the groupBy reuses the partitioning instead of a
+    # full-width exchange.
+    a = members.repartition(max(8, n_members // 100_000 + 1), "component").withColumn(
+        # Priority inside a component: controlled entities beat noViaf
+        # ones, then lower source_priority, then lexicographic key.
+        "prio",
+        F.struct(
+            F.when(F.col("is_controlled"), 0).otherwise(1).alias("ctl"),
+            F.col("source_priority").alias("sp"),
+            F.col("entity_key").alias("ek"),
+        ),
     )
-    agg_parts = max(8, n_multi // 100_000 + 1)
-    a = (
-        joined.where(F.col("_csize") > 1)
-        .drop("_csize")
-        .repartition(agg_parts, "component")
-    )
-    # Priority inside a component: controlled entities beat noViaf ones,
-    # then lower source_priority, then lexicographic key (determinism).
-    prio = F.struct(
-        F.when(F.col("is_controlled"), 0).otherwise(1).alias("ctl"),
-        F.col("source_priority").alias("sp"),
-        F.col("entity_key").alias("ek"),
-    )
-    a = a.withColumn("prio", prio)
-
-    def arr_union(col: str, cap: int = 256) -> F.Column:
-        return F.slice(
-            F.array_distinct(F.flatten(F.collect_list(col))), 1, cap
-        ).alias(col)
+    prio = F.col("prio")
 
     grouped = a.groupBy("component").agg(
         F.min("prio")["ek"].alias("entity_key"),
-        _argmin_field(F.col("prio"), F.col("name_controlled"), "name_controlled"),
         F.max("is_controlled").alias("is_controlled"),
-        _argmin_field(F.col("prio"), F.col("wikidata"), "wikidata"),
-        _argmin_field(F.col("prio"), F.col("lc_id"), "lc_id"),
-        _argmin_field(F.col("prio"), F.col("ulan"), "ulan"),
-        _argmin_field(F.col("prio"), F.col("dbpedia"), "dbpedia"),
-        _argmin_field(F.col("prio"), F.col("birth"), "birth"),
-        _argmin_field(F.col("prio"), F.col("death"), "death"),
-        _argmin_field(F.col("prio"), F.col("type"), "type"),
-        F.min(F.struct(F.col("prio").alias("p"), F.col("viaf").alias("v")))["v"].alias(
-            "canonical_viaf"
-        ),
-        arr_union("viaf"),
-        arr_union("name_normalized"),
-        F.slice(F.array_distinct(F.flatten(F.collect_list("alt_forms"))), 1, 128).alias(
-            "alt_forms"
-        ),
-        arr_union("fast", 64),
+        *[
+            argmin_by(prio, F.col(c)).alias(c)
+            for c in (
+                "name_controlled", "wikidata", "lc_id", "ulan", "dbpedia",
+                "birth", "death", "type", "primary_source",
+            )
+        ],
+        argmin_by(prio, F.col("viaf")).alias("canonical_viaf"),
+        capped_union("viaf", 256).alias("viaf"),
+        capped_union("name_normalized", 256).alias("name_normalized"),
+        capped_union("alt_forms", 128).alias("alt_forms"),
+        capped_union("fast", 64).alias("fast"),
         # member lineage (source, id) pairs — the reference's mergeSource
         # entry shape (/root/reference/lib/utils.js:290-297)
-        F.array_sort(
-            F.collect_set(
-                F.struct(
-                    F.col("primary_source").alias("source"),
-                    F.col("entity_key").alias("id"),
-                )
+        F.collect_set(
+            F.struct(
+                F.col("primary_source").alias("source"),
+                F.col("entity_key").alias("id"),
             )
         ).alias("all_members"),
         F.sum("mention_count").alias("mention_count"),
         F.min("source_priority").alias("source_priority"),
-        _argmin_field(F.col("prio"), F.col("primary_source"), "primary_source"),
-        F.count(F.lit(1)).alias("merged_row_count"),
     )
-
-    canonical = grouped.select(
-        F.lit(None).cast("long").alias("registry_id"),
-        "entity_key",
-        F.col("viaf"),
-        "is_controlled",
-        "name_controlled",
-        "wikidata",
-        "lc_id",
-        "ulan",
-        "dbpedia",
-        "birth",
-        "death",
-        "type",
-        F.array_sort("name_normalized").alias("name_normalized"),
-        F.array_sort("alt_forms").alias("alt_forms"),
-        F.array_sort("fast").alias("fast"),
+    return _project(
+        grouped,
         # viafMerged: ids contributed by non-canonical members
         # (/root/reference/lib/utils.js:290-297)
-        F.array_sort(F.array_except(F.col("viaf"), F.col("canonical_viaf"))).alias(
-            "viaf_merged"
-        ),
-        F.array_sort(
-            F.filter("all_members", lambda m: m["id"] != F.col("entity_key"))
-        ).alias("merge_source"),
-        "mention_count",
-        "source_priority",
-        "primary_source",
-        "component",
+        F.array_sort(F.array_except("viaf", "canonical_viaf")),
+        F.array_sort(F.filter("all_members", lambda m: m["id"] != F.col("entity_key"))),
     )
-    # Materialize (entity-scale) so `joined`'s cache can be released
-    # immediately and downstream fan-out reads the checkpoint, not the
-    # twice-branched aggregation plan.
-    out = singles.unionByName(canonical).localCheckpoint(eager=True)
-    joined.unpersist()
-    return out, iters
+
+
+def canonicalize_agents(agents: DataFrame) -> tuple[DataFrame, int]:
+    """Merge agent rows whose components collide; returns (canonical
+    agents, cc_iterations). Input is `merge_entities` output.
+
+    The CC active set is the only split: an agent outside it is a
+    singleton component and leaves through the identity projection (the
+    overwhelming majority on real corpora — the group-merge runs
+    interpreted, as collect_set forces ObjectHashAggregate, so keeping
+    singletons out of it is a large constant-factor win); an agent inside
+    it is a member of a multi-member component and is group-merged."""
+    # The CC machinery issues several driver actions (edge counts,
+    # convergence counts, the output checkpoint); `agents` sits on the
+    # far side of the fact-table merge shuffle, so materialize it ONCE —
+    # entity-scale — instead of re-running the merge per action.
+    agents = agents.localCheckpoint(eager=True)
+    labels, iters, n_active = _active_components(build_merge_edges(agents))
+
+    singles = agents
+    if labels is not None:
+        # The label map is bounded by the active-entity count; below the
+        # CC loop's broadcast gate ship it broadcast so neither split
+        # plans a stats-blind sort-merge against the checkpointed frames.
+        if n_active <= BROADCAST_LABELS_MAX:
+            labels = F.broadcast(labels)
+        singles = agents.join(labels.select("entity_key"), "entity_key", "left_anti")
+    empty = F.array()
+    out = _project(
+        singles.withColumn("component", F.col("entity_key")),
+        empty.cast("array<string>"),
+        empty.cast("array<struct<source:string,id:string>>"),
+    )
+    if labels is not None:
+        out = out.unionByName(_merge_components(agents.join(labels, "entity_key"), n_active))
+    # Materialize (entity-scale) so downstream fan-out reads the
+    # checkpoint, not the twice-branched aggregation plan.
+    return out.localCheckpoint(eager=True), iters

@@ -30,9 +30,8 @@ def enumerate_ids(
     order_col: str = "entity_key",
     id_col: str = "registry_id",
     offset: int = REGISTRY_ID_OFFSET,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     parted = df.drop(id_col).repartitionByRange(n, F.col(order_col)).withColumn(
         "_pid", F.spark_partition_id()
     )

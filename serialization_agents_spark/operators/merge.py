@@ -45,6 +45,21 @@ MAX_ALT_FORMS = 64
 MAX_NAME_FORMS = 128
 
 
+def capped_union(col: str, cap: int) -> Column:
+    """Aggregate: the sorted distinct union of the group's `col` arrays,
+    first `cap` elements kept. Sorting BEFORE the slice keeps the retained
+    subset independent of row arrival order when a cap binds, so re-runs
+    and resumes stay byte-identical (lineage checksums depend on it)."""
+    return F.slice(F.array_sort(F.array_distinct(F.flatten(F.collect_list(col)))), 1, cap)
+
+
+def argmin_by(prio: Column, value: Column) -> Column:
+    """Aggregate: `value` of the lowest-`prio` row whose value is not NULL
+    — the 'existing row wins, new row backfills' scalar rule of
+    /root/reference/lib/utils.js:307-313, made order-free."""
+    return F.min(F.when(value.isNotNull(), F.struct(prio.alias("p"), value.alias("v"))))["v"]
+
+
 def strip_spirit(col: Column) -> Column:
     """X4 — remove the '(Spirit)' qualifier (lib/utils_shadowcat.js:230)."""
     return F.regexp_replace(col, r"(?i)\s\(Spirit\)", "")
@@ -112,12 +127,6 @@ def merge_entities(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
 
     salted = facts.withColumn("salt", F.pmod(F.xxhash64("mention_id"), F.lit(n_salt)))
 
-    # Caps are applied to SORTED distinct arrays so the retained subset is
-    # deterministic when a head entity exceeds a cap — re-runs and resumes
-    # stay byte-identical (lineage checksums depend on it).
-    def _capped(col: str, cap: int) -> Column:
-        return F.slice(F.array_sort(F.array_distinct(F.flatten(F.collect_list(col)))), 1, cap)
-
     # the entity's primary source: lexicographic argmin by (priority,
     # source name) — order-free, exact under any fold split (used by the
     # canonicalizer's merge_source lineage, reference lib/utils.js:290-297)
@@ -142,8 +151,8 @@ def merge_entities(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
     agg = partial.groupBy("entity_key").agg(
         F.min("name_pref").alias("name_pref"),
         F.first("auth", ignorenulls=True).alias("auth"),
-        _capped("name_norms", MAX_NAME_FORMS).alias("name_normalized"),
-        _capped("alt_forms", MAX_ALT_FORMS).alias("alt_forms"),
+        capped_union("name_norms", MAX_NAME_FORMS).alias("name_normalized"),
+        capped_union("alt_forms", MAX_ALT_FORMS).alias("alt_forms"),
         F.sum("mention_count").alias("mention_count"),
         F.min("source_priority").alias("source_priority"),
         F.min("src_pref").alias("src_pref"),

@@ -31,6 +31,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serialization_agents_spark.operators.merge import argmin_by, capped_union
 from serialization_agents_spark.plans.pipeline import run_pipeline
 
 # agents-table layout: `bucket=` partitions of pmod(xxhash64(entity_key),
@@ -74,11 +75,6 @@ def incremental_merge_batch(
         F.col("source_priority").alias("sp"),
     )
 
-    def argmin_scalar(c: str) -> F.Column:
-        return F.min(
-            F.when(F.col(c).isNotNull(), F.struct(prio.alias("p"), F.col(c).alias("v")))
-        )["v"].alias(c)
-
     name_pref = F.min(
         F.when(
             F.col("name_controlled").isNotNull(),
@@ -88,32 +84,18 @@ def incremental_merge_batch(
             ),
         )
     )
-    # primary_source folds through the SAME (source_priority, source)
-    # lexicographic argmin the batch merge computes — combining partial
-    # argmins lexicographically IS the global argmin, so batch == fold.
-    src_pref = F.min(
-        F.when(
-            F.col("primary_source").isNotNull(),
-            F.struct(
-                F.col("source_priority").alias("p"),
-                F.col("primary_source").alias("v"),
-            ),
-        )
-    )
 
     agg = both.groupBy("entity_key").agg(
         F.first("registry_id", ignorenulls=True).alias("registry_id"),
         F.max("is_controlled").alias("is_controlled"),
         name_pref["v"].alias("name_controlled"),
         name_pref["p"].alias("name_pref_rank"),
-        src_pref["v"].alias("primary_source"),
-        *[argmin_scalar(c) for c in _SCALAR_COLS],
-        *[
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list(c)))), 1, 256
-            ).alias(c)
-            for c in _SET_COLS
-        ],
+        # primary_source folds through the SAME (source_priority, source)
+        # lexicographic argmin the batch merge computes — combining partial
+        # argmins lexicographically IS the global argmin, so batch == fold.
+        argmin_by(F.col("source_priority"), F.col("primary_source")).alias("primary_source"),
+        *[argmin_by(prio, F.col(c)).alias(c) for c in _SCALAR_COLS],
+        *[capped_union(c, 256).alias(c) for c in _SET_COLS],
         F.sum("mention_count").alias("mention_count"),
         F.min("source_priority").alias("source_priority"),
     )

@@ -13,11 +13,14 @@ from serialization_agents_spark.operators.canonicalize import (
 
 
 def _agents_df(spark, rows):
-    """rows: (entity_key, is_controlled, name_controlled, viaf, wikidata)"""
+    """rows: (entity_key, is_controlled, name_controlled, viaf, wikidata
+    [, alt-form names])"""
     data = [
         (None, ek, viaf, ctl, name, wd, None, None, None, None, None,
-         "personal", [], [], [], [], [], 1, 1, "web")
-        for (ek, ctl, name, viaf, wd) in rows
+         "personal", [],
+         [(n, "personal", "web", None, None, None) for alt in alts for n in alt],
+         [], [], [], 1, 1, "web")
+        for (ek, ctl, name, viaf, wd, *alts) in rows
     ]
     schema = (
         "registry_id long, entity_key string, viaf array<string>, "
@@ -46,7 +49,7 @@ def test_name_conflict_merge(spark):
         [
             ("viaf:1", True, "Smith, Jan", ["1"], None),
             ("viaf:2", True, "Smith, Jan", ["2"], "Q42"),
-            ("viaf:3", True, "Other, Person", ["3"], None),
+            ("viaf:3", True, "Other, Person", ["3", "0"], None, ["b", "a"]),
         ],
     )
     canonical, iters = canonicalize_agents(agents)
@@ -57,7 +60,29 @@ def test_name_conflict_merge(spark):
     assert merged["wikidata"] == "Q42"          # backfilled from viaf:2
     assert _ms(merged) == [("web", "viaf:2")]
     assert merged["viaf_merged"] == ["2"]       # ids from merged members
-    assert _ms(rows["viaf:3"]) == []
+    # the singleton beside a merge leaves as the identity projection
+    single = rows["viaf:3"]
+    assert single["component"] == "viaf:3"
+    assert single["viaf"] == ["0", "3"]
+    assert [a["name"] for a in single["alt_forms"]] == ["a", "b"]
+    assert single["viaf_merged"] == [] and _ms(single) == []
+
+
+def test_capped_unions_ignore_row_order(spark):
+    """When a union cap binds, the merged row keeps the smallest values
+    whichever order its members arrive in, and its viaf ids come out
+    sorted (the capped-array invariant of merge_entities)."""
+    names = {p: [f"{p}{i:02d}" for i in range(64)] for p in "zya"}
+    rows = [
+        ("viaf:a", True, "Same, Name", ["9", "5"], None, names["z"]),
+        ("viaf:b", True, "Same, Name", ["7"], None, names["y"]),
+        ("viaf:c", True, "Same, Name", ["1"], None, names["a"]),
+    ]
+    smallest = names["a"] + names["y"]  # alt_forms caps at 128
+    for order in (rows, rows[::-1]):
+        (merged,) = canonicalize_agents(_agents_df(spark, order))[0].collect()
+        assert [a["name"] for a in merged["alt_forms"]] == smallest
+        assert merged["viaf"] == ["1", "5", "7", "9"]
 
 
 def test_transitive_chain_via_shared_viaf_ids(spark):
@@ -101,10 +126,12 @@ def test_cc_converges_on_long_chain(spark):
     for i in range(40):
         edges.append((f"E{i}", f"K{i}"))
         edges.append((f"E{i + 1}", f"K{i}"))
+    edges.append(("S", "K_solo"))  # unshared key: its own component
     df = spark.createDataFrame(edges, "entity_key string, merge_key string")
     labels, iters = connected_components(df)
-    comps = {r["component"] for r in labels.collect()}
-    assert len(comps) == 1
+    comps = {r["entity_key"]: r["component"] for r in labels.collect()}
+    assert comps.pop("S") == "S"
+    assert len(comps) == 41 and set(comps.values()) == {"E0"}
     # hash-to-min + one pointer-jump per round: ~2.5 * log2(n) on a pure
     # chain (observed 14 for n=41), vs O(n)=40 without jumping.
     assert iters <= 16

@@ -27,5 +27,5 @@ def test_enumerate_unique_under_skewed_partitions(spark):
         (F.col("id") % 3).cast("string").alias("bucket"),
         F.concat(F.lit("k"), F.col("id")).alias("entity_key"),
     ).repartition(2, "bucket")
-    out = enumerate_ids(df, order_col="entity_key", num_partitions=5)
+    out = enumerate_ids(df, order_col="entity_key")
     assert out.select("registry_id").distinct().count() == 500
