@@ -70,10 +70,10 @@ def prepare_mention_facts(linked: DataFrame) -> DataFrame:
     the shuffle so the aggregation itself is pure built-ins.
 
     alt_form scores (X2/X3) are intentionally NOT computed here: a
-    per-mention Python stage over the 100 TB fact table would dominate the
-    job. `score_alt_forms` fills them after canonicalization, on one row
-    per (entity, distinct alt name) — which also matches the reference
-    more closely (scores are vs the final nameControlled,
+    per-mention scoring pass over the 100 TB fact table would dominate
+    the job. `score_alt_forms` fills them after canonicalization, in place
+    on each entity's deduplicated `alt_forms` array — which also matches
+    the reference more closely (scores are vs the final nameControlled,
     lib/utils_shadowcat.js:247).
     """
     # Name-precedence candidate for this row: (rank, value); min() over the
@@ -202,55 +202,37 @@ def merge_entities(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
 
 def score_alt_forms(agents: DataFrame) -> DataFrame:
     """Fill altForms poverlap/fuzzy (X2/X3) against the final controlled
-    name — the reference computes them at upsert time vs the agent's
-    nameControlled (/root/reference/lib/utils_shadowcat.js:247,401).
+    name — the reference scores each altForm where it stands on its agent
+    record, vs the agent's nameControlled
+    (/root/reference/lib/utils_shadowcat.js:247,401).
 
-    Runs on one row per (entity, distinct alt name) — entity-scale data,
-    NOT mention-scale — and entirely JVM-side (fuzzy_score_expr /
-    percent_overlap_expr). Trivial case (name == controlled)
-    short-circuits to the reference's literal 100 / 1.0.
+    One narrow projection, entirely JVM-side: a `transform` over each
+    row's `alt_forms` keeps every row and the array's element order. The
+    fuzzy walk (fuzzy_score_expr) takes cheap arguments only: the
+    controlled name is normalized once into the `_nc_norm` column and
+    each alt name once into a struct field by an inner `transform`, so
+    no normalize regex is inlined into the interpreted walk. Trivial case
+    (name == controlled) short-circuits to the reference's literal
+    100 / 1.0.
     """
-    has_alt = agents.where(F.size("alt_forms") > 0)
-    no_alt = agents.where(F.size("alt_forms") == 0)
+    nc = F.col("name_controlled")
+    normed = F.transform(
+        "alt_forms",
+        lambda a: F.struct(a.alias("af"), normalize_name_expr(a["name"]).alias("norm")),
+    )
 
-    # entity-scale width derived from the row count (same pattern as
-    # canonicalize's cc_parts — a fixed constant would cap this stage at
-    # scale); the input is checkpointed by canonicalize_agents, so the
-    # count action is cheap.
-    parts = max(8, has_alt.count() // 100_000 + 1)
-    af = has_alt.select(
-        "entity_key", "name_controlled", F.explode("alt_forms").alias("af"),
-        # pre-project the normalized scorer args: the exchange below makes
-        # them CONCRETE columns, so CollapseProject cannot inline the
-        # normalize regex into every step of the interpreted fuzzy walk
-        normalize_name_expr(F.col("name_controlled")).alias("_nc_norm"),
-        normalize_name_expr(F.col("af.name")).alias("_af_norm"),
-    ).repartition(parts, "entity_key")  # entity-scale width + projection barrier
-    same = F.col("af.name") == F.col("name_controlled")
-    scored = af.select(
-        "entity_key",
-        F.struct(
-            F.col("af.name").alias("name"),
-            F.col("af.type").alias("type"),
-            F.col("af.source").alias("source"),
-            F.col("af.id").alias("id"),
-            F.when(same, F.lit(100.0))
-            .otherwise(percent_overlap_expr(F.col("af.name"), F.col("name_controlled")))
-            .alias("poverlap"),
-            F.when(same, F.lit(1.0))
-            .otherwise(fuzzy_score_expr(F.col("_nc_norm"), F.col("_af_norm")))
-            .alias("fuzzy"),
-        ).alias("af"),
-    )
-    collected = scored.groupBy("entity_key").agg(
-        F.array_sort(F.collect_list("af")).alias("_alt_scored")
-    )
-    rescored = (
-        has_alt.join(collected, "entity_key", "left")
-        .withColumn(
-            "alt_forms",
-            F.coalesce("_alt_scored", F.col("alt_forms")),
+    def scored(x: Column) -> Column:
+        af, same = x["af"], x["af"]["name"] == nc
+        return af.withField(
+            "poverlap",
+            F.when(same, F.lit(100.0)).otherwise(percent_overlap_expr(af["name"], nc)),
+        ).withField(
+            "fuzzy",
+            F.when(same, F.lit(1.0)).otherwise(fuzzy_score_expr(F.col("_nc_norm"), x["norm"])),
         )
-        .drop("_alt_scored")
+
+    return (
+        agents.withColumn("_nc_norm", normalize_name_expr(nc))
+        .withColumn("alt_forms", F.transform(normed, scored))
+        .drop("_nc_norm")
     )
-    return no_alt.unionByName(rescored)

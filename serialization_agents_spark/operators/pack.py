@@ -11,21 +11,22 @@ Same shape as the reference's count-split enumeration pass
 offsets.
 
 Scale design (10^12 docs): a naive `sum() over (order by key)` global
-window funnels the whole corpus through ONE task. Instead the same
-two-phase scheme as operators/enumerate_ids.py: range-partition by the
-shuffle key, per-partition weighted cumsum (parallel windows), a
-driver-side O(num_partitions) cumsum of per-partition token totals, and
-a broadcast join of the offsets. The only serial work is the tiny
-offset fold; everything else is scan-speed Column arithmetic.
+window funnels the whole corpus through ONE task. Instead the weighted
+form of operators/enumerate_ids.py's count-split (`running_offsets`):
+range-partition by the shuffle key, per-partition weighted cumsum
+(parallel windows), and a driver-side O(num_partitions) cumsum of
+per-partition token totals that each row reads back by partition id.
+The only serial work is the tiny offset fold; everything else is
+scan-speed Column arithmetic.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from serialization_agents_spark.functions.text import token_count
+from serialization_agents_spark.operators.enumerate_ids import running_offsets
 
 
 def pack_key(id_col, seed: str = "pack"):
@@ -42,7 +43,6 @@ def shard_pack(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: str = "pack",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign each doc to a training shard of ~`budget` tokens.
 
@@ -51,38 +51,15 @@ def shard_pack(
     order. Every count is integer, so the assignment is bit-exact and
     independent of partitioning (pinned by tests).
     """
-    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         token_count(F.col(text_col)).cast("long").alias("n_tokens"),
         pack_key(F.col(id_col), seed).alias("_k"),
     )
-    parted = base.repartitionByRange(n, F.col("_k")).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    parted = parted.localCheckpoint()  # pin partitioning; sums must match
-
-    totals = (
-        parted.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).orderBy("_pid").collect()
-    )  # O(num_partitions) rows — the driver-side offset fold
-    offsets, acc = {}, 0
-    for row in totals:
-        offsets[row["_pid"]] = acc
-        acc += row["t"]
-    offset_df = docs.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid INT, _offset LONG"
-    )
-
-    w = Window.partitionBy("_pid").orderBy("_k", "doc_id")
-    cum = F.sum("n_tokens").over(w)  # inclusive per-partition cumsum
-    return (
-        parted.join(F.broadcast(offset_df), "_pid")
-        .withColumn("_before", F.col("_offset") + cum - F.col("n_tokens"))
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.floor(F.col("_before") / F.lit(int(budget))).cast("long").alias("shard_id"),
-        )
+    return running_offsets(base, ["_k", "doc_id"], F.col("n_tokens")).select(
+        "doc_id",
+        "n_tokens",
+        F.floor(F.col("_before") / F.lit(int(budget))).cast("long").alias("shard_id"),
     )
 
 

@@ -200,15 +200,9 @@ def run_pipeline(
 
     def build_canonical() -> DataFrame:
         canonical, res.cc_iterations = canonicalize_agents(res.agents)
-        scored = score_alt_forms(canonical)  # X2/X3 on entity-scale rows
-        if pin:
-            # enumerate_ids reads the scored rows twice (range-bound sample,
-            # then its eager checkpoint of the range shuffle)
-            scored = scored.persist()
-        out = enumerate_ids(scored, order_col="entity_key")
-        if pin:
-            scored.unpersist()  # the eager checkpoint now holds the rows
-        return out
+        # enumerate samples and range-checkpoints canonicalize's own eager
+        # checkpoint; X2/X3 scoring is a narrow projection after it
+        return score_alt_forms(enumerate_ids(canonical, order_col="entity_key"))
 
     def build_errors() -> DataFrame:
         # S15 — per-row failure audit (reference lib/utils.js:238 logError).

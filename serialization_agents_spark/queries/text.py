@@ -367,10 +367,11 @@ def corpus_epoch_order(spark, sf):
     """Deterministic per-epoch training order: rank docs by
     md5(epoch || ':' || doc_id) through the TWO-PHASE partition-
     offset enumerate (operators/enumerate_ids.py — range-partition
-    on the key, per-partition row_number, broadcast offsets; never
-    a single global window), so every run, resume, and executor
-    count replays the exact same shuffle order per epoch — the
-    reproducible-dataloader contract of an LLM training pipeline."""
+    on the key, per-partition running count, driver-side partition
+    offsets; never a single global window), so every run, resume,
+    and executor count replays the exact same shuffle order per
+    epoch — the reproducible-dataloader contract of an LLM training
+    pipeline."""
     docs = table(spark, sf, "documents").select("doc_id")
     epochs = []
     for ep in (0, 1):

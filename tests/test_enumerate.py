@@ -29,3 +29,13 @@ def test_enumerate_unique_under_skewed_partitions(spark):
     ).repartition(2, "bucket")
     out = enumerate_ids(df, order_col="entity_key")
     assert out.select("registry_id").distinct().count() == 500
+
+
+def test_enumerate_ties_get_distinct_ids(spark):
+    """Repeated order keys still get dense, unique ids: the running count
+    is a ROWS frame, so tied rows are counted one at a time."""
+    df = spark.range(0, 300).select(
+        (F.col("id") % 7).cast("string").alias("entity_key"), "id"
+    ).repartition(5)
+    ids = sorted(r["registry_id"] for r in enumerate_ids(df, order_col="entity_key").collect())
+    assert ids == list(range(REGISTRY_ID_OFFSET, REGISTRY_ID_OFFSET + 300))

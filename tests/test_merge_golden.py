@@ -102,3 +102,51 @@ def test_wehrli_merge(golden):
         == "Wehrli, A. G. (Swiss photographer, active early 20th century)"
     )
     assert r["ulan"] == 500066483
+
+
+def test_score_alt_forms_in_place(spark):
+    """X2/X3 are filled in place: every row survives (empty and NULL
+    arrays too), element order is kept, and each score equals the Python
+    reference over the same arguments the JVM walk sees."""
+    from serialization_agents_spark.functions.normalize import (
+        fuzzy_score_py,
+        normalize_name_py,
+        percent_overlap_py,
+    )
+    from serialization_agents_spark.operators.merge import score_alt_forms
+
+    def af(name):
+        return (name, "personal", "web", None, None, None)
+
+    rows = [
+        ("e0", "Plato", []),
+        ("e1", "Plato LC TEST", [af("Plato LC TEST")]),
+        ("e2", "Andrews, Ann, 1890-1986", [af("Andrews, A."), af("Ánn Andrews")]),
+        ("e3", "Plato", None),
+    ]
+    agents = spark.createDataFrame(
+        rows,
+        "entity_key string, name_controlled string, alt_forms array<struct<"
+        "name:string, type:string, source:string, id:string, "
+        "poverlap:double, fuzzy:double>>",
+    )
+    scored = score_alt_forms(agents)
+    assert scored.columns == agents.columns
+    got = {r["entity_key"]: r for r in scored.collect()}
+    assert set(got) == {"e0", "e1", "e2", "e3"}
+    assert got["e0"]["alt_forms"] == [] and got["e3"]["alt_forms"] is None
+    assert [(a["poverlap"], a["fuzzy"]) for a in got["e1"]["alt_forms"]] == [(100.0, 1.0)]
+    for key, nc, alts in rows[:3]:
+        out = got[key]["alt_forms"]
+        assert [a["name"] for a in out] == [a[0] for a in alts]  # order kept
+        for a in out:
+            assert (a["type"], a["source"], a["id"]) == ("personal", "web", None)
+            assert a["poverlap"] == percent_overlap_py(a["name"], nc)
+            assert a["fuzzy"] == fuzzy_score_py(
+                normalize_name_py(nc), normalize_name_py(a["name"])
+            )
+    # fuzzy_score_expr's cheap-argument contract: the normalize regex runs
+    # once for the controlled name and once per alt name, never inlined
+    # into the interpreted walk
+    plan = scored._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_replace") == 2

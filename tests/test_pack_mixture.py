@@ -44,9 +44,9 @@ def test_shard_pack_partitioning_invariant(spark):
     rows = [(i, " ".join(["t"] * (i * 13 % 20 + 1))) for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     one = {r.doc_id: r.shard_id
-           for r in shard_pack(docs.coalesce(1), budget=64, num_partitions=1).collect()}
+           for r in shard_pack(docs.coalesce(1), budget=64).collect()}
     many = {r.doc_id: r.shard_id
-            for r in shard_pack(docs.repartition(17), budget=64, num_partitions=9).collect()}
+            for r in shard_pack(docs.repartition(17), budget=64).collect()}
     assert one == many
 
 

@@ -221,13 +221,13 @@ def test_tfidf_no_double_scan_broadcast_only(spark):
 
 def test_shard_pack_no_global_window(spark):
     """corpus_shard_pack: the running cumsum must be per-partition
-    windows + broadcast offsets, never a global single-task window
-    (an empty-frame Window over the whole corpus)."""
+    windows + driver-side partition offsets, never a global single-task
+    window (an empty-frame Window over the whole corpus)."""
     plan = _plan(entry.queries()["corpus_shard_pack"](spark, SF))
     # per-partition window partitions by _pid; a global window would
     # show a Window with an empty partition spec over a single Exchange
     assert "Window" in plan and "_pid" in plan
-    assert "BroadcastHashJoin" in plan  # offsets come back broadcast
+    assert "Join" not in plan  # offsets are read by partition id, not joined
     assert "SortMergeJoin" not in plan
 
 
