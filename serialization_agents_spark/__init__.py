@@ -22,7 +22,7 @@ This engine re-expresses those semantics over columnar tables
 - ``operators.similarity``  — embedding cosine top-k (brute force + LSH)
 - ``operators.multimodal``  — binary media column plumbing (decode stubbed)
 - ``functions.*``           — normalization, fuzzy scoring, text analysis
-- ``plans.pipeline``        — end-to-end runner with lineage + resume
+- ``plans.pipeline``        — end-to-end runner with per-stage lineage rows + resume
 
 Everything here is public-API PySpark; no RDDs, no per-row Python UDFs in
 hot paths (vectorized pandas/Arrow UDFs only).

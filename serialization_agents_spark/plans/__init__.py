@@ -1,1 +1,2 @@
-"""End-to-end pipeline plans: staged runner, lineage, checkpoint/resume."""
+"""End-to-end pipeline plans: staged runner with per-stage lineage rows,
+checkpoint/resume, error side table."""

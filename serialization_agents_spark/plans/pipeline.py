@@ -19,7 +19,7 @@ One stage rule: a stage is declared only when this run computes it.
 When `out_dir` is given, a stage whose parquet `_SUCCESS` exists is READ
 BACK and its operator is never called — a resume runs none of linking's,
 CC's or enumerate's driver actions for a finished stage; any other stage
-is built and written with its lineage. The `_errors` side table follows
+is built and written with its lineage row. The `_errors` side table follows
 the same rule. This is the Spark translation of the reference's
 re-queue-on-restart worker protocol
 (/root/reference/lib/shadowcat_serialize_viaf_agents.js:78-84,128-137).
@@ -46,7 +46,7 @@ from serialization_agents_spark.operators.linking import (
 from serialization_agents_spark.operators.mentions import detect_mentions
 from serialization_agents_spark.operators.merge import merge_entities, score_alt_forms
 from serialization_agents_spark.operators.triples import materialize_triples
-from serialization_agents_spark.plans.lineage import stage_metrics
+from serialization_agents_spark.schemas import LINEAGE_METRICS
 from serialization_agents_spark.sources.bucketed import read_bucketed, write_bucketed
 
 
@@ -67,8 +67,9 @@ class PipelineResult:
     cc_iterations: int = 0  # CC iterations THIS run performed
     stages_resumed: list[str] = field(default_factory=list)
     stages_computed: list[str] = field(default_factory=list)
-    # A7/X13 — per-stage observe() counters (the Spark-native analogue of
-    # the reference's IPC progress counters,
+    # A7/X13 — per-stage observe() counters, `row_count` and
+    # `key_checksum` (the Spark-native analogue of the reference's IPC
+    # progress counters,
     # /root/reference/lib/shadowcat_serialize_viaf_agents.js:63-77).
     # Filled for COMPUTED stages once the stage's write action runs;
     # resumed stages are read back, not re-counted.
@@ -136,18 +137,23 @@ def run_pipeline(
     pin = cache and out_dir is None
     res = PipelineResult()
 
-    def stage(name: str, key_col: str | None, build: Callable[[], DataFrame]) -> DataFrame:
+    def stage(name: str, key: tuple[str, ...], build: Callable[[], DataFrame]) -> DataFrame:
         """The one read-back-or-build rule. A stage complete under
         `out_dir` is read back and `build` is never called. Otherwise
         `build()` runs under job group `<run_id>:<name>`; in memory the
         frames later stages re-read are pinned (`linked` feeds both the
         merge and the provenance triples), with `out_dir` the stage is
-        written with an `observe()` row counter (A7 — zero-cost, riding
-        the write action) and its `_metrics` lineage. `key_col=None`
+        written with an `observe()` counter riding the write action (A7):
+        `row_count` and the order-independent `key_checksum =
+        bit_xor(xxhash64(*key))`. Its one LINEAGE_METRICS row then goes
+        to `<out_dir>/_metrics/stage=<name>` by dynamic partition
+        overwrite, right after the stage's own write: a recomputed stage
+        replaces its row, and a driver killed between stages leaves a
+        row for every stage whose `_SUCCESS` exists. An empty `key`
         marks a side table: written, but neither counted nor listed."""
         path = os.path.join(out_dir, name) if out_dir is not None else None
         bucketed = name == "agents" and agents_table is not None
-        listed = key_col is not None
+        listed = bool(key)
         if path is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
             if listed:
                 res.stages_resumed.append(name)
@@ -171,16 +177,28 @@ def run_pipeline(
                 df.write.mode("overwrite").parquet(path)
                 return spark.read.parquet(path)
             obs = Observation(f"{run_id}:{name}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
+            df = df.observe(
+                obs,
+                F.count(F.lit(1)).alias("row_count"),
+                F.bit_xor(F.xxhash64(*key)).alias("key_checksum"),
+            )
             if bucketed:
                 write_bucketed(df, agents_table, path, ["entity_key"])
                 out = read_bucketed(spark, agents_table)
             else:
                 df.write.mode("overwrite").parquet(path)
                 out = spark.read.parquet(path)
-            res.observations[name] = obs  # filled: the write action ran above
-            stage_metrics(out, run_id, name, key_col).write.mode("append").parquet(
-                os.path.join(out_dir, "_metrics")
+            res.observations[name] = obs
+            # get blocks until the listener delivers: read it only now,
+            # after the write action has returned
+            got = obs.get
+            row = [(run_id, name, got["row_count"], got["key_checksum"])]
+            (
+                spark.createDataFrame(row, LINEAGE_METRICS)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("stage")
+                .parquet(os.path.join(out_dir, "_metrics"))
             )
         res.stages_computed.append(name)
         return out
@@ -214,26 +232,28 @@ def run_pipeline(
         )
         return pipeline_errors(res.pages, res.mentions, dead, blacklist)
 
-    res.pages = stage("extract", "url", lambda: with_extracted_text(pages))
+    res.pages = stage("extract", ("url",), lambda: with_extracted_text(pages))
     if until == "extract":
         return res
     # P4 subjects ride the same single page scan as the agent spans
     res.mentions = stage(
-        "mentions", "mention_id", lambda: detect_mentions(res.pages, include_subjects=True)
+        "mentions", ("mention_id",),
+        lambda: detect_mentions(res.pages, include_subjects=True),
     )
     if until == "mentions":
         return res
-    res.linked = stage("linked", "mention_id", build_linked)
+    res.linked = stage("linked", ("mention_id",), build_linked)
     if until == "linked":
         return res
-    res.agents = stage("agents", "entity_key", lambda: merge_entities(res.linked))
+    res.agents = stage("agents", ("entity_key",), lambda: merge_entities(res.linked))
     if until == "agents":
         return res
-    res.canonical = stage("canonical", "entity_key", build_canonical)
+    res.canonical = stage("canonical", ("entity_key",), build_canonical)
     if until == "canonical":
         return res
     res.triples = stage(
-        "triples", "subj", lambda: materialize_triples(res.canonical, res.linked)
+        "triples", ("subj", "pred", "obj"),
+        lambda: materialize_triples(res.canonical, res.linked),
     )
-    res.errors = stage("_errors", None, build_errors)
+    res.errors = stage("_errors", (), build_errors)
     return res

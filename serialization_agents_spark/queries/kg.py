@@ -362,7 +362,8 @@ def kg_lineage(spark, sf):
     (lib/shadowcat_serialize_viaf_agents.js:63-77). The checksum is
     an order-independent SUM over md5-prefix ints (md5, not
     xxhash64, so DuckDB can derive the identical value); the
-    pipeline's per-partition variant lives in plans/lineage.py."""
+    pipeline's own per-stage rows ride each stage write's observe()
+    in plans/pipeline.py."""
     res = kg_canonical(spark, sf)
     mentions, linked, agents = res.mentions, res.linked, res.agents
     triples = materialize_triples(res.canonical, linked)

@@ -17,20 +17,23 @@ physical plan at whatever executor count spark-submit provides — the
 N-vs-4N criterion needs zero code changes between cluster sizes.
 
 Resume is free: re-submitting with the same --out-dir skips every stage
-whose _SUCCESS marker exists (per-partition lineage rows in
-<out>/_metrics carry counts + checksums for the audit trail).
+whose _SUCCESS marker exists (one lineage row per stage in
+<out>/_metrics carries its count + checksum for the audit trail).
 
 Exit contract: prints one JSON summary line on success (stage rows,
 resume status, cc iterations) and exits non-zero on any failure, so a
-workflow scheduler can gate downstream jobs on it. `cc_iterations`
-counts the iterations THIS run performed, so it is 0 when the
-`canonical` stage was resumed.
+workflow scheduler can gate downstream jobs on it. The stage rows are
+read from <out>/_metrics, written as each stage was, never recounted;
+a stage past --until reports None. `cc_iterations` counts the
+iterations THIS run performed, so it is 0 when the `canonical` stage
+was resumed.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -80,6 +83,7 @@ def main(argv: list[str] | None = None) -> int:
     args = build_arg_parser().parse_args(argv)
 
     from serialization_agents_spark.plans.pipeline import run_pipeline
+    from serialization_agents_spark.schemas import LINEAGE_METRICS
     from serialization_agents_spark.session import get_spark
     from serialization_agents_spark.sources.pages import (
         read_authority,
@@ -113,15 +117,23 @@ def main(argv: list[str] | None = None) -> int:
         agents_table=args.agents_table,
         until=args.until,
     )
+    rows = dict(
+        spark.read.schema(LINEAGE_METRICS)
+        .parquet(os.path.join(args.out_dir, "_metrics"))
+        .select("stage", "row_count")
+        .collect()
+    )
+
+    def n_rows(stage: str, df) -> int | None:
+        return rows.get(stage) if df is not None else None
+
     summary = {
         "run_id": args.run_id,
         "out_dir": args.out_dir,
         "until": args.until,
-        "n_triples": res.triples.count() if res.triples is not None else None,
-        "n_entities": (
-            res.canonical.count() if res.canonical is not None else None
-        ),
-        "n_agents": res.agents.count() if res.agents is not None else None,
+        "n_triples": n_rows("triples", res.triples),
+        "n_entities": n_rows("canonical", res.canonical),
+        "n_agents": n_rows("agents", res.agents),
         "cc_iterations": res.cc_iterations,
         "stages_computed": res.stages_computed,
         "stages_resumed": res.stages_resumed,

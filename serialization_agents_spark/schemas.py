@@ -152,15 +152,16 @@ TRIPLES = StructType(
     ]
 )
 
-# Per-stage × per-partition lineage rows enabling resume-from-checkpoint
+# One lineage row per written stage, enabling resume-from-checkpoint
 # (SURVEY.md §4.4 — replaces the reference's IPC counters + error log,
 # /root/reference/lib/shadowcat_serialize_viaf_agents.js:63-77).
+# Both values ride the stage's write as one observe(); `_metrics` is
+# partitioned by `stage`, so a recomputed stage replaces its row.
 LINEAGE_METRICS = StructType(
     [
         StructField("run_id", StringType(), False),
         StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
         StructField("row_count", LongType(), False),
-        StructField("key_checksum", LongType(), True),  # sum(xxhash64(key))
+        StructField("key_checksum", LongType(), True),  # bit_xor(xxhash64(key))
     ]
 )

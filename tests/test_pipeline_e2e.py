@@ -15,11 +15,30 @@ import pytest
 from pyspark.sql import functions as F
 
 from serialization_agents_spark import oracle, synth
-from serialization_agents_spark.plans.lineage import global_checksum
 from serialization_agents_spark.plans.pipeline import run_pipeline
 
 N_PAGES = 400
 N_AUTH = 120
+
+# the lineage key of each listed stage: unique per row, so bit_xor never
+# cancels two rows
+STAGE_KEYS = {
+    "extract": ("url",),
+    "mentions": ("mention_id",),
+    "linked": ("mention_id",),
+    "agents": ("entity_key",),
+    "canonical": ("entity_key",),
+    "triples": ("subj", "pred", "obj"),
+}
+
+
+def global_checksum(df, *key: str) -> tuple[int, int]:
+    """(row_count, order-independent checksum) recomputed over a whole
+    frame: the reference a stage's `_metrics` row must equal."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*key)).alias("c")
+    ).collect()[0]
+    return row["n"], row["c"] or 0
 
 
 @pytest.fixture(scope="module")
@@ -147,6 +166,23 @@ def test_in_memory_run_leaves_no_storage(spark, corpus):
     assert not leaked, f"in-memory run left storage pinned: {leaked}"
 
 
+def _assert_one_metrics_row_per_stage(spark, out: str) -> dict[str, str]:
+    """`<out>/_metrics` holds exactly one row per stage, equal to the
+    count and checksum recomputed from the stage's parquet. Returns each
+    stage's run_id."""
+    import os
+
+    from serialization_agents_spark.plans import pipeline
+
+    rows = spark.read.parquet(os.path.join(out, "_metrics")).collect()
+    assert sorted(r["stage"] for r in rows) == sorted(pipeline._STAGE_ORDER)
+    for r in rows:
+        stage_df = spark.read.parquet(os.path.join(out, r["stage"]))
+        got = (r["row_count"], r["key_checksum"])
+        assert got == global_checksum(stage_df, *STAGE_KEYS[r["stage"]]), r["stage"]
+    return {r["stage"]: r["run_id"] for r in rows}
+
+
 def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     import os
 
@@ -158,11 +194,14 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     full = run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
     assert full.stages_computed and not full.stages_resumed
     # A7 — observe() counters piggyback each computed stage's write and
-    # must equal the materialized row counts (the reference's progress
-    # counters, lib/shadowcat_serialize_viaf_agents.js:63-77)
+    # must equal the materialized row counts and key checksums (the
+    # reference's progress counters, lib/shadowcat_serialize_viaf_agents.js:63-77)
     assert set(full.observations) == set(full.stages_computed)
     for stage, df in [("mentions", full.mentions), ("triples", full.triples)]:
-        assert full.observations[stage].get["row_count"] == df.count(), stage
+        got = full.observations[stage].get
+        want_stage = global_checksum(df, *STAGE_KEYS[stage])
+        assert (got["row_count"], got["key_checksum"]) == want_stage, stage
+    assert set(_assert_one_metrics_row_per_stage(spark, out).values()) == {"run0"}
     want = global_checksum(
         full.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
     )
@@ -191,13 +230,18 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     for stage in ["agents", "canonical", "triples"]:
         shutil.rmtree(f"{out}/{stage}", ignore_errors=True)
 
-    resumed = run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
+    resumed = run_pipeline(
+        spark, pages, authority, redirects, blacklist, out_dir=out, run_id="resume"
+    )
     assert set(resumed.stages_resumed) >= {"extract", "mentions", "linked"}
     assert set(resumed.stages_computed) == {"agents", "canonical", "triples"}
     got = global_checksum(
         resumed.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
     )
     assert got == want
+    # still one row per stage: the recomputed stages' rows were replaced
+    run_ids = _assert_one_metrics_row_per_stage(spark, out)
+    assert {s for s, r in run_ids.items() if r == "resume"} == set(resumed.stages_computed)
 
 
 def test_stage_jobs_carry_run_job_group(spark, corpus, tmp_path):

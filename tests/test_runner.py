@@ -121,3 +121,58 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     )
     assert summary2["n_triples"] == summary["n_triples"]
     assert "triples" in summary2["stages_resumed"]
+
+
+def test_runner_reports_metrics_rows_without_recounting(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """In-process: the summary's stage rows come from `<out>/_metrics`
+    (computed and resumed stages alike), the runner itself runs no
+    `DataFrame.count`, and a stage past --until reports None even though
+    an earlier run left its row."""
+    from serialization_agents_spark import runner
+    from serialization_agents_spark.plans import pipeline
+
+    pages_dir = str(tmp_path / "pages")
+    auth_dir = str(tmp_path / "authority")
+    synth.synth_pages(spark, n_pages=300, n_auth=60, partitions=4).write.parquet(
+        pages_dir
+    )
+    synth.synth_authority(spark, n_auth=60).write.parquet(auth_dir)
+    out_dir = str(tmp_path / "out")
+    real_run_pipeline = pipeline.run_pipeline
+
+    def no_count(self):
+        raise AssertionError("the runner counted a frame")
+
+    def run(*extra: str) -> dict:
+        # get_spark reuses the fixture session and re-applies its config
+        split_bytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        try:
+            with monkeypatch.context() as m:
+
+                def run_pipeline(*args, **kwargs):
+                    res = real_run_pipeline(*args, **kwargs)
+                    # the concrete frame class: it overrides DataFrame.count
+                    m.setattr(type(res.pages), "count", no_count)
+                    return res
+
+                m.setattr(pipeline, "run_pipeline", run_pipeline)
+                assert runner.main(
+                    ["--pages", pages_dir, "--authority", auth_dir,
+                     "--out-dir", out_dir, "--master", "local[4]",
+                     "--shuffle-partitions", "4", *extra]
+                ) == 0
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    full = run()
+    for key, stage in [("n_triples", "triples"), ("n_entities", "canonical"),
+                       ("n_agents", "agents")]:
+        assert full[key] == spark.read.parquet(os.path.join(out_dir, stage)).count(), key
+
+    until = run("--until", "agents")
+    assert until["stages_resumed"] == ["extract", "mentions", "linked", "agents"]
+    assert until["n_triples"] is None and until["n_entities"] is None
+    assert until["n_agents"] == full["n_agents"]
