@@ -136,15 +136,19 @@ def fuzzy_score_py(target: str | None, query: str | None, fuzziness: float = 0.5
     """Exact reimplementation of the string_score algorithm the reference
     calls as `target.score(query, 0.5)` (/root/reference/lib/utils.js:56).
 
-    Returns 1.0 for identical strings, 0.0 for empty query; otherwise a
-    char-walk score with consecutive/acronym/same-case bonuses and a
-    fuzzy-miss penalty divisor.
+    Returns 1.0 for identical strings, 0.0 for an empty query or an empty
+    target; otherwise a char-walk score with consecutive/acronym/same-case
+    bonuses and a fuzzy-miss penalty divisor. An empty target is where
+    this departs from the reference: its JS divides by the target's
+    length 0 and returns NaN. Non-Latin names normalize to '' (the fold
+    keeps a-z0-9 only), so a NaN/raising score there would poison the
+    argmax of every block they sit in.
     """
     if target is None or query is None:
         return 0.0
     if target == query:
         return 1.0
-    if query == "":
+    if query == "" or target == "":
         return 0.0
 
     l_target = target.lower()
@@ -176,62 +180,88 @@ def fuzzy_score_py(target: str | None, query: str | None, fuzziness: float = 0.5
     return final
 
 
+def _bind(value: Column, body) -> Column:
+    """`body(v)` with `value` evaluated ONCE: a lambda over a one-element
+    array. Spark interprets higher-order functions with no common
+    subexpression elimination, so a column a lambda body references k
+    times is otherwise evaluated k times."""
+    return F.transform(F.array(value), body)[0]
+
+
 def fuzzy_score_expr(target: Column, query: Column) -> Column:
-    """string_score as a PURE JVM expression — F.aggregate over query
-    positions with a (running, start_at, fuzzies) struct accumulator,
-    exactly the fuzzy_score_py char-walk (parity-swept in
-    tests/test_normalize.py).
+    """string_score as a PURE JVM expression — one F.aggregate walk over
+    the query positions with a (running, start_at, fuzzies) struct
+    accumulator, exactly the fuzzy_score_py char-walk, bit for bit
+    (parity-swept in tests/test_normalize.py: the arithmetic keeps
+    fuzzy_score_py's order, so the doubles are identical).
 
     This is the production path: it keeps the linking cascade free of
     Python workers entirely (worker init is seconds per executor slot
     here and the scorer sits on the J4 hot path at 100 TB).
 
-    ARG CONTRACT: pass CHEAP column references (concrete columns or
-    struct fields), never expression trees. Higher-order functions are
-    interpreted (no codegen, no common-subexpression elimination), and
-    the walk references target/query ~4x PER STEP — an inlined
-    regexp/normalize argument re-executes ~80x per row. Pre-project
-    expensive args behind an exchange (see merge.score_alt_forms), or
-    better, compute block-constant scores on the dimension side
-    (see linking's name_best).
+    Bind-once kernel: `target`, `query` and their lower-cased forms are
+    bound once per call, each step's `position` once per step, and the
+    score is computed in the walk's `finish` lambda — so the plan holds
+    ONE walk and one `position` (asserted by tests/test_normalize.py).
+    Without the bindings every reference to the walk or to a lowered
+    string inside the interpreted lambdas re-evaluates it.
+
+    ARG CONTRACT: each argument is evaluated a bounded number of times
+    (twice: as itself and lower-cased), so an expression argument costs
+    at most twice its own evaluation per call. Callers that score many
+    candidates against the same string still normalize it once into a
+    column first (merge.score_alt_forms' `_nc_norm`), and block-constant
+    scores belong on the dimension side (linking's name_best).
     """
-    t, q = target, query
-    lt, lq = F.lower(t), F.lower(q)
 
-    def step(a, i):
-        # pos = 1-based find of query char i in lt from offset a.s (0 = miss);
-        # consecutive-match <=> pos == a.s + 1; 0-based hit idx = pos - 1.
-        pos = F.position(F.substr(lq, i, F.lit(1)), lt, a["s"] + 1)
-        char_score = (
-            F.when(pos == a["s"] + 1, F.lit(0.7)).otherwise(
-                F.lit(0.1)
-                + F.when(F.substr(t, pos - 1, F.lit(1)) == " ", 0.8).otherwise(0.0)
-            )
-            + F.when(F.substr(t, pos, F.lit(1)) == F.substr(q, i, F.lit(1)), 0.1)
-            .otherwise(0.0)
+    def walk(b: Column) -> Column:
+        t, q, lt, lq = b["t"], b["q"], b["lt"], b["lq"]
+
+        def step(a, i):
+            # pos = 1-based find of query char i in lt from offset a.s (0 =
+            # miss); consecutive-match <=> pos == a.s + 1; 0-based hit idx =
+            # pos - 1.
+            def advance(pos):
+                char_score = (
+                    F.when(pos == a["s"] + 1, F.lit(0.7)).otherwise(
+                        F.lit(0.1)
+                        + F.when(F.substr(t, pos - 1, F.lit(1)) == " ", 0.8).otherwise(0.0)
+                    )
+                    + F.when(F.substr(t, pos, F.lit(1)) == F.substr(q, i, F.lit(1)), 0.1)
+                    .otherwise(0.0)
+                )
+                return F.struct(
+                    F.when(pos == 0, a["r"]).otherwise(a["r"] + char_score).alias("r"),
+                    F.when(pos == 0, a["s"]).otherwise(pos).alias("s"),
+                    F.when(pos == 0, a["f"] + 0.5).otherwise(a["f"]).alias("f"),
+                )
+
+            return _bind(F.position(F.substr(lq, i, F.lit(1)), lt, a["s"] + 1), advance)
+
+        def finish(acc):
+            final = 0.5 * (acc["r"] / F.length(t) + acc["r"] / F.length(q)) / acc["f"]
+            return F.when(
+                (F.substring(lq, 1, 1) == F.substring(lt, 1, 1)) & (final < 0.85),
+                final + 0.15,
+            ).otherwise(final)
+
+        scored = F.aggregate(
+            F.sequence(F.lit(1), F.length(q)),
+            F.struct(F.lit(0.0).alias("r"), F.lit(0).alias("s"), F.lit(1.0).alias("f")),
+            step,
+            finish,
         )
-        return F.struct(
-            F.when(pos == 0, a["r"]).otherwise(a["r"] + char_score).alias("r"),
-            F.when(pos == 0, a["s"]).otherwise(pos).alias("s"),
-            F.when(pos == 0, a["f"] + 0.5).otherwise(a["f"]).alias("f"),
+        return (
+            F.when(t.isNull() | q.isNull(), F.lit(0.0))
+            .when(t == q, F.lit(1.0))
+            .when((F.length(q) == 0) | (F.length(t) == 0), F.lit(0.0))
+            .otherwise(scored)
         )
 
-    acc = F.aggregate(
-        F.sequence(F.lit(1), F.length(q)),
-        F.struct(F.lit(0.0).alias("r"), F.lit(0).alias("s"), F.lit(1.0).alias("f")),
-        step,
+    bound = F.struct(
+        target.alias("t"), query.alias("q"), F.lower(target).alias("lt"), F.lower(query).alias("lq")
     )
-    final = 0.5 * (acc["r"] / F.length(t) + acc["r"] / F.length(q)) / acc["f"]
-    scored = F.when(
-        (F.substring(lq, 1, 1) == F.substring(lt, 1, 1)) & (final < 0.85),
-        final + 0.15,
-    ).otherwise(final)
-    return (
-        F.when(t.isNull() | q.isNull(), F.lit(0.0))
-        .when(t == q, F.lit(1.0))
-        .when(F.length(q) == 0, F.lit(0.0))
-        .otherwise(scored)
-    )
+    return _bind(bound, walk)
 
 
 # ---------------------------------------------------------------------------

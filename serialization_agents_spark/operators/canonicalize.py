@@ -25,6 +25,9 @@ Each iteration is two shuffles on (key, entity); `localCheckpoint()`
 truncates lineage so plans stay O(1) per iteration (SURVEY.md §4.2.2;
 cf. the BTS/large-star-small-star literature in PAPERS.md). Convergence
 takes O(log n) iterations on pathological chains, 1-2 on real data.
+Below the broadcast gate (BROADCAST_LABELS_MAX active edges) the loop
+does not run at all: the active edges are collected once and a driver
+union-find labels them in one pass, which counts as one iteration.
 
 Only the ACTIVE set — entities sharing a merge key with another entity —
 enters the loop. An entity is active iff its component has >= 2
@@ -35,6 +38,7 @@ agents with one are group-merged per component.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,6 +46,7 @@ from serialization_agents_spark.functions.normalize import normalize_name_expr
 from serialization_agents_spark.operators.merge import argmin_by, capped_union
 
 MAX_CC_ITERATIONS = 25
+_LABELS_ARROW = pa.schema([("entity_key", pa.string()), ("component", pa.string())])
 
 
 def build_merge_edges(agents: DataFrame) -> DataFrame:
@@ -65,10 +70,11 @@ def build_merge_edges(agents: DataFrame) -> DataFrame:
     return name_edges.unionByName(viaf_edges)
 
 
-# Below this active-entity count (the size of the label map actually
-# shipped per iteration) the per-iteration label maps are broadcast
-# (hash-to-min with zero join shuffles); above it the loop falls back to
-# repartitioned hash joins at the same derived width.
+# Up to this many active edges the components are found on the driver
+# (one collect + union-find). Above it the hash-to-min loop runs, with its
+# label maps broadcast while the active-entity count (the rows actually
+# shipped per iteration) is below it too, and repartitioned hash joins at
+# the same derived width beyond that.
 BROADCAST_LABELS_MAX = 1_000_000
 
 
@@ -80,7 +86,9 @@ def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     revisions used xxhash64 ids; at 10^12 entities 64-bit birthday
     collisions would spuriously merge ~1e4 components, so the STRING key
     stays the identifier end-to-end). Every entity outside the active set
-    is its own component.
+    is its own component. `iters` is 0 when no merge key is shared, 1 for
+    the driver union-find below the broadcast gate, and the hash-to-min
+    round count above it.
     """
     active, iters, _ = _active_components(edges)
     nodes = edges.select("entity_key").dropDuplicates()
@@ -118,6 +126,19 @@ def _active_components(edges: DataFrame) -> tuple[DataFrame | None, int, int]:
     if n_edges == 0:
         return None, 0, 0
     active = edges.join(shared_keys.select("merge_key"), "merge_key", "left_semi")
+    spark = edges.sparkSession
+    if n_edges <= BROADCAST_LABELS_MAX:
+        # n_edges bounds the rows this collect brings back: below the gate
+        # the whole active set fits the driver, and one union-find pass
+        # replaces every loop round (and its count) with a single action.
+        keys, components = _union_find(active.select("entity_key", "merge_key").collect())
+        # an Arrow table becomes a LocalRelation: the labels stay in the
+        # plan, so broadcasting them starts no Python worker (a list of
+        # rows would become a Python RDD, re-run by every job reading it)
+        labels = spark.createDataFrame(
+            pa.table({"entity_key": keys, "component": components}, schema=_LABELS_ARROW)
+        )
+        return labels, 1, len(keys)
 
     # The loop operates on ENTITY-scale data (orders of magnitude smaller
     # than the corpus), so every exchange below is an EXPLICIT repartition
@@ -125,7 +146,6 @@ def _active_components(edges: DataFrame) -> tuple[DataFrame | None, int, int]:
     # corpus-sized spark.sql.shuffle.partitions (which made the loop
     # slower on more cores), and never a session-conf mutation (which
     # would race concurrent queries on a shared session).
-    spark = edges.sparkSession
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cc_parts = max(8, min(session_parts, n_edges // 100_000 + 1))
     e = (
@@ -143,6 +163,35 @@ def _active_components(edges: DataFrame) -> tuple[DataFrame | None, int, int]:
     n_entities = labels.count()
     labels, iters = _cc_loop(e, labels, cc_parts, n_entities <= BROADCAST_LABELS_MAX)
     return labels.select("entity_key", F.col("label").alias("component")), iters, n_entities
+
+
+def _union_find(edges: list) -> tuple[list[str], list[str]]:
+    """(entity_key, merge_key) edge rows -> (entity keys, their components)
+    for every entity on them, by union-find with path halving over the
+    sorted entity keys. A union always points the higher root at the
+    lower, so each root is its set's lowest index: the component is the
+    lexicographic-min entity_key, the same label hash-to-min converges to
+    (Python's code-point order is Spark's UTF-8 byte order). A NULL
+    entity_key joins nothing, as in the loop's equi-joins."""
+    keys = sorted({ek for ek, _ in edges if ek is not None})
+    index = {k: i for i, k in enumerate(keys)}
+    parent = list(range(len(keys)))
+
+    def find(i: int) -> int:
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    first: dict[str, int] = {}  # merge_key -> an entity already on it
+    for ek, mk in edges:
+        if ek is None:
+            continue
+        i = index[ek]
+        a, b = find(i), find(first.setdefault(mk, i))
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return keys, [keys[find(i)] for i in range(len(keys))]
 
 
 def _cc_loop(e: DataFrame, labels: DataFrame, cc_parts: int, broadcast_maps: bool):

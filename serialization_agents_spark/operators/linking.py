@@ -22,7 +22,7 @@ Reference semantics being reproduced:
    on the normalized-name BLOCKING key (exactly the reference's
    `nameNormalized ==` block, lib/utils.js:44-52), then the per-mention
    argmax of the string_score fuzzy similarity picks the winner
-   (lib/utils.js:53-61) via a window `row_number() == 1`.
+   (lib/utils.js:53-61), computed once per block (see J4 below).
 5. **Blacklist filter (F6)** — junk names dropped by broadcast anti-join
    (lib/tms_serialize_objects_agents.js:211).
 
@@ -117,9 +117,9 @@ def link_mentions(
     Plan shape (verify with .explain): scan -> [broadcast anti-join]
     -> [broadcast left join redirects] -> [broadcast left join viaf-key]
     -> [broadcast left join lc-key] -> [broadcast left join name-block
-    + window top-1] -> project. Zero fact-table shuffles besides the
-    name-block window, which AQE coalesces (candidates are a tiny
-    fraction of mentions).
+    argmax] -> project. Zero fact-table shuffles: the one shuffle groups
+    the authority's name blocks, at the session's default parallelism so
+    every core scores blocks.
     """
     m, dead = resolve_redirects(drop_blacklisted(mentions, blacklist), redirects)
 
@@ -182,8 +182,14 @@ def link_mentions(
         F.lit(None).cast(best_t),
         lambda acc, sc: F.when(acc.isNull() | (sc["s"] > acc["s"]), sc).otherwise(acc),
     )
+    # Score the blocks on every core: AQE coalesces this small shuffle to
+    # ONE partition, which left a single task scoring every multi-candidate
+    # block while the other cores idled. AQE keeps a repartition with an
+    # explicit count, and the groupBy reuses its hash partitioning.
+    width = authority.sparkSession.sparkContext.defaultParallelism
     name_best = (
-        exploded.groupBy("name_norm")
+        exploded.repartition(width, "name_norm")
+        .groupBy("name_norm")
         .agg(F.array_sort(F.collect_list("auth_n")).alias("cands"))
         .select(
             "name_norm",

@@ -11,7 +11,8 @@ order (SURVEY.md §4.3).
 
 Shuffle budget (verify with .explain): extract/mentions are narrow;
 linking joins are broadcast; merge = 2 shuffles (salted partial + final);
-CC = 2 shuffles x iterations over the (small) entity set; enumerate = 1
+CC = one collect + a driver union-find below its broadcast gate, 2
+shuffles x iterations over the (small) entity set above it; enumerate = 1
 range shuffle of entities; triples narrow + 1 join for merged-key remap.
 The 100 TB fact table is shuffled exactly ONCE (the merge).
 
@@ -32,8 +33,12 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from serialization_agents_spark.operators.canonicalize import canonicalize_agents
 from serialization_agents_spark.operators.enumerate_ids import enumerate_ids
@@ -74,6 +79,27 @@ class PipelineResult:
     # Filled for COMPUTED stages once the stage's write action runs;
     # resumed stages are read back, not re-counted.
     observations: dict[str, Observation] = field(default_factory=dict)
+
+
+# `stage` is the partition directory's name, not a column in the file
+_LINEAGE_ARROW = to_arrow_schema(
+    StructType([f for f in LINEAGE_METRICS.fields if f.name != "stage"])
+)
+
+
+def _write_lineage_row(stage_dir: str, row: dict) -> None:
+    """Write a stage's one LINEAGE_METRICS row as `<stage_dir>/part-0.parquet`
+    from the driver, with no Spark job: a hidden temp file renamed into
+    place (atomic on POSIX, like the `_SUCCESS` rule), then every other
+    file in the directory removed — only an out_dir whose `_metrics` was
+    written by Spark has any."""
+    os.makedirs(stage_dir, exist_ok=True)
+    tmp = os.path.join(stage_dir, ".part-0.parquet.tmp")
+    pq.write_table(pa.Table.from_pylist([row], schema=_LINEAGE_ARROW), tmp)
+    os.replace(tmp, os.path.join(stage_dir, "part-0.parquet"))
+    for f in os.listdir(stage_dir):
+        if f != "part-0.parquet":
+            os.remove(os.path.join(stage_dir, f))
 
 
 @contextmanager
@@ -146,11 +172,12 @@ def run_pipeline(
         written with an `observe()` counter riding the write action (A7):
         `row_count` and the order-independent `key_checksum =
         bit_xor(xxhash64(*key))`. Its one LINEAGE_METRICS row then goes
-        to `<out_dir>/_metrics/stage=<name>` by dynamic partition
-        overwrite, right after the stage's own write: a recomputed stage
-        replaces its row, and a driver killed between stages leaves a
-        row for every stage whose `_SUCCESS` exists. An empty `key`
-        marks a side table: written, but neither counted nor listed."""
+        to `<out_dir>/_metrics/stage=<name>/part-0.parquet`, written by
+        the driver (no Spark job) right after the stage's own write: a
+        recomputed stage replaces its row, and a driver killed between
+        stages leaves a row for every stage whose `_SUCCESS` exists. An
+        empty `key` marks a side table: written, but neither counted nor
+        listed."""
         path = os.path.join(out_dir, name) if out_dir is not None else None
         bucketed = name == "agents" and agents_table is not None
         listed = bool(key)
@@ -192,13 +219,10 @@ def run_pipeline(
             # get blocks until the listener delivers: read it only now,
             # after the write action has returned
             got = obs.get
-            row = [(run_id, name, got["row_count"], got["key_checksum"])]
-            (
-                spark.createDataFrame(row, LINEAGE_METRICS)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("stage")
-                .parquet(os.path.join(out_dir, "_metrics"))
+            _write_lineage_row(
+                os.path.join(out_dir, "_metrics", f"stage={name}"),
+                {"run_id": run_id, "row_count": got["row_count"],
+                 "key_checksum": got["key_checksum"]},
             )
         res.stages_computed.append(name)
         return out

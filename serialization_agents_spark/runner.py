@@ -25,8 +25,10 @@ resume status, cc iterations) and exits non-zero on any failure, so a
 workflow scheduler can gate downstream jobs on it. The stage rows are
 read from <out>/_metrics, written as each stage was, never recounted;
 a stage past --until reports None. `cc_iterations` counts the
-iterations THIS run performed, so it is 0 when the `canonical` stage
-was resumed.
+iterations THIS run performed: 0 when the `canonical` stage was resumed
+or no merge key is shared, 1 for the driver union-find that runs up to
+BROADCAST_LABELS_MAX active edges (operators/canonicalize.py), the
+hash-to-min round count above that.
 """
 
 from __future__ import annotations

@@ -156,7 +156,8 @@ TRIPLES = StructType(
 # (SURVEY.md §4.4 — replaces the reference's IPC counters + error log,
 # /root/reference/lib/shadowcat_serialize_viaf_agents.js:63-77).
 # Both values ride the stage's write as one observe(); `_metrics` is
-# partitioned by `stage`, so a recomputed stage replaces its row.
+# partitioned by `stage` (one `stage=<name>/part-0.parquet` each, written
+# by the driver), so a recomputed stage replaces its row.
 LINEAGE_METRICS = StructType(
     [
         StructField("run_id", StringType(), False),

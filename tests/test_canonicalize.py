@@ -139,9 +139,12 @@ def test_cc_converges_on_long_chain(spark):
 
 def test_cc_iteration_cap_fails_loudly(spark, monkeypatch):
     """A cap hit while labels are still changing raises instead of
-    returning unconverged components; the cap is read per call."""
+    returning unconverged components; the cap is read per call. The
+    hash-to-min loop runs above the broadcast gate only, so the gate is
+    lowered to reach it."""
     from serialization_agents_spark.operators import canonicalize
 
+    monkeypatch.setattr(canonicalize, "BROADCAST_LABELS_MAX", 0)
     edges = spark.createDataFrame(
         [("E0", "K0"), ("E1", "K0"), ("E1", "K1"), ("E2", "K1")],
         "entity_key string, merge_key string",
@@ -151,6 +154,39 @@ def test_cc_iteration_cap_fails_loudly(spark, monkeypatch):
     monkeypatch.setattr(canonicalize, "MAX_CC_ITERATIONS", 1)
     with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
         connected_components(edges)
+
+
+def test_cc_long_chain_above_gate_matches_driver_union_find(spark, monkeypatch):
+    """Both sides of the broadcast gate give the same labels: the driver
+    union-find (one pass) and the hash-to-min loop (O(log n) rounds) on
+    the pathological chain plus a random multigraph with non-ASCII keys,
+    whose component must be the lexicographic-min key in Spark's order."""
+    import random
+
+    from serialization_agents_spark.operators import canonicalize
+
+    rng = random.Random(5)
+    edges = [(f"E{i:02d}", f"K{i}") for i in range(40)]
+    edges += [(f"E{i + 1:02d}", f"K{i}") for i in range(40)]
+    edges += [
+        (f"R{rng.randint(0, 80):02d}" + ("é" if rng.random() < 0.2 else ""),
+         f"M{rng.randint(0, 60)}")
+        for _ in range(120)
+    ]
+    df = spark.createDataFrame(edges, "entity_key string, merge_key string")
+
+    driver, driver_iters = connected_components(df)
+    monkeypatch.setattr(canonicalize, "BROADCAST_LABELS_MAX", 0)
+    looped, loop_iters = connected_components(df)
+    assert driver_iters == 1 and 2 <= loop_iters <= 16
+    assert sorted(driver.collect()) == sorted(looped.collect())
+    comps = {r["entity_key"]: r["component"] for r in driver.collect()}
+    assert {comps[f"E{i:02d}"] for i in range(41)} == {"E00"}
+    members: dict[str, list[str]] = {}
+    for ek, comp in comps.items():
+        members.setdefault(comp, []).append(ek)
+    for comp, eks in members.items():
+        assert comp == min(eks, key=lambda k: k.encode()), eks
 
 
 def test_zero_collisions_are_identity_singletons(spark):

@@ -4,7 +4,7 @@ name-block + fuzzy top-1 (J4), blacklist (F6), dead-viaf side output (S11)."""
 from __future__ import annotations
 
 from serialization_agents_spark import schemas, synth
-from serialization_agents_spark.functions.normalize import normalize_name_py
+from serialization_agents_spark.functions.normalize import fuzzy_score_py, normalize_name_py
 from serialization_agents_spark.operators.linking import link_mentions
 
 
@@ -56,6 +56,57 @@ def test_name_block_top1(spark):
     row = linked.collect()[0]
     assert row["entity_key"].startswith("viaf:")
     assert row["fuzzy"] is not None
+
+
+def _adf(spark, rows):
+    """Authority clusters from (viaf_id, lc_term, blocking key): one viaf
+    id each, and the key as the only normalized form."""
+    full = [
+        {"viaf_id": v, "viaf_all": [v], "lc_term": term, "normalized": [key]}
+        for v, term, key in rows
+    ]
+    return spark.createDataFrame(
+        [tuple(r.get(f) for f in schemas.AUTHORITY.fieldNames()) for r in full],
+        schemas.AUTHORITY,
+    )
+
+
+def test_name_block_winner_is_fuzzy_argmax_first_wins(spark):
+    """A three-candidate block links to the fuzzy_score_py argmax, and a
+    tied block to its lowest viaf_id (the reference's `score > bestScore`
+    first-wins rule, lib/utils.js:53-61), whatever the authority's row
+    order."""
+    block = [("303", "Smith, John"), ("301", "Smith, J. (John)"), ("302", "John Smith")]
+    tied = [("402", "Doe, Jane"), ("401", "Doe, Jane")]
+    authority = _adf(
+        spark,
+        [(v, t, "smith john") for v, t in block] + [(v, t, "doe jane") for v, t in tied],
+    )
+    mentions = _mdf(spark, [("u://1", "Smith John", None), ("u://2", "Doe Jane", None)])
+    linked, _ = link_mentions(mentions, authority)
+    rows = {r["url"]: r for r in linked.collect()}
+
+    scores = {v: fuzzy_score_py("smith john", term.lower()) for v, term in block}
+    best = max(scores.values())
+    (winner,) = [v for v, sc in scores.items() if sc == best]
+    assert winner == "303"  # not the first candidate in viaf_id order
+    assert rows["u://1"]["entity_key"] == f"viaf:{winner}"
+    assert rows["u://1"]["fuzzy"] == best
+    assert rows["u://2"]["entity_key"] == "viaf:401"
+    assert rows["u://2"]["fuzzy"] == fuzzy_score_py("doe jane", "doe, jane")
+
+
+def test_non_latin_clusters_do_not_break_linking(spark):
+    """孔子 and 老子 both normalize to '', so they share a two-candidate
+    block whose target is empty: scoring it must not raise, or every
+    mention of the run fails with it."""
+    authority = _adf(
+        spark,
+        [(v, t, normalize_name_py(t)) for v, t in [("501", "孔子"), ("502", "老子"), ("503", "Plato")]],
+    )
+    mentions = _mdf(spark, [("u://1", "Plato", None)])
+    linked, _ = link_mentions(mentions, authority)
+    assert [r["entity_key"] for r in linked.collect()] == ["viaf:503"]
 
 
 def test_unknown_name_gets_deterministic_noviaf_key(spark):

@@ -138,6 +138,39 @@ def test_fuzzy_expr_parity_sweep(spark):
     for row in df.collect():
         want = fuzzy_score_py(row["t"], row["q"])
         assert abs(row["s"] - want) < 1e-9, (row["t"], row["q"], row["s"], want)
+        # bit-identical: the kernel keeps the Python arithmetic order, and
+        # the lineage checksums hash these doubles
+        assert row["s"] == want, (row["t"], row["q"], row["s"], want)
+
+
+def test_fuzzy_expr_binds_one_walk(spark):
+    """The bind-once kernel: the optimized plan holds ONE walk and ONE
+    position search, because Spark interprets lambdas with no common
+    subexpression elimination and every extra reference re-runs them."""
+    from serialization_agents_spark.functions.normalize import fuzzy_score_expr
+
+    df = spark.createDataFrame([("plato", "Plato")], "t string, q string").select(
+        fuzzy_score_expr(F.col("t"), F.col("q")).alias("s")
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 1, plan
+    assert plan.count("position(") == 1, plan
+    assert df.collect()[0]["s"] == fuzzy_score_py("plato", "Plato")
+
+
+def test_fuzzy_empty_target_scores_zero(spark):
+    """An empty target scores 0.0 in both implementations (the reference's
+    JS divides by the length 0 and returns NaN): non-Latin names normalize
+    to '', and a raising score would fail every block of the argmax."""
+    from serialization_agents_spark.functions.normalize import fuzzy_score_expr
+
+    assert normalize_name_py("孔子") == ""
+    assert fuzzy_score_py("", "x") == 0.0
+    assert fuzzy_score_py("", "") == 1.0  # identical strings still win first
+    df = spark.createDataFrame([("", "x"), ("", "")], "t string, q string").select(
+        fuzzy_score_expr(F.col("t"), F.col("q")).alias("s")
+    )
+    assert [r["s"] for r in df.collect()] == [0.0, 1.0]
 
 
 def test_fuzzy_duckdb_oracle_parity_sweep():

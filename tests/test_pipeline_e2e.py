@@ -166,16 +166,16 @@ def test_in_memory_run_leaves_no_storage(spark, corpus):
     assert not leaked, f"in-memory run left storage pinned: {leaked}"
 
 
-def _assert_one_metrics_row_per_stage(spark, out: str) -> dict[str, str]:
-    """`<out>/_metrics` holds exactly one row per stage, equal to the
-    count and checksum recomputed from the stage's parquet. Returns each
-    stage's run_id."""
+def _assert_one_metrics_row_per_stage(spark, out: str, stages=None) -> dict[str, str]:
+    """`<out>/_metrics` holds exactly one row per stage (every listed stage
+    unless `stages` names fewer), equal to the count and checksum
+    recomputed from the stage's parquet. Returns each stage's run_id."""
     import os
 
     from serialization_agents_spark.plans import pipeline
 
     rows = spark.read.parquet(os.path.join(out, "_metrics")).collect()
-    assert sorted(r["stage"] for r in rows) == sorted(pipeline._STAGE_ORDER)
+    assert sorted(r["stage"] for r in rows) == sorted(stages or pipeline._STAGE_ORDER)
     for r in rows:
         stage_df = spark.read.parquet(os.path.join(out, r["stage"]))
         got = (r["row_count"], r["key_checksum"])
@@ -242,6 +242,46 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     # still one row per stage: the recomputed stages' rows were replaced
     run_ids = _assert_one_metrics_row_per_stage(spark, out)
     assert {s for s, r in run_ids.items() if r == "resume"} == set(resumed.stages_computed)
+
+
+def test_crash_between_stages_keeps_written_stage_rows(spark, corpus, tmp_path, monkeypatch):
+    """A driver that dies in canonicalize leaves exactly one `_metrics` row
+    for each stage written before it; the next run fills in the rest, one
+    row per stage, each `stage=<name>/part-0.parquet` alone in its
+    directory — a file that an older, Spark-written `_metrics` left in a
+    recomputed stage's directory is removed."""
+    import os
+
+    from serialization_agents_spark.plans import pipeline
+
+    pages, authority, redirects, blacklist = corpus
+    out = str(tmp_path / "crash")
+    written = ["extract", "mentions", "linked", "agents"]
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("driver died in canonicalize")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "canonicalize_agents", crash)
+        with pytest.raises(RuntimeError, match="driver died in canonicalize"):
+            run_pipeline(spark, pages, authority, redirects, blacklist, out_dir=out)
+    assert set(_assert_one_metrics_row_per_stage(spark, out, written).values()) == {"run0"}
+
+    stale = os.path.join(out, "_metrics", "stage=canonical")
+    spark.createDataFrame(
+        [("old", 0, 0)], "run_id string, row_count long, key_checksum long"
+    ).coalesce(1).write.parquet(stale)
+    again = run_pipeline(
+        spark, pages, authority, redirects, blacklist, out_dir=out, run_id="again"
+    )
+    assert again.stages_resumed == written
+    assert again.stages_computed == ["canonical", "triples"]
+    run_ids = _assert_one_metrics_row_per_stage(spark, out)
+    assert {s for s, r in run_ids.items() if r == "again"} == {"canonical", "triples"}
+    metrics = os.path.join(out, "_metrics")
+    assert sorted(os.listdir(metrics)) == sorted(f"stage={s}" for s in pipeline._STAGE_ORDER)
+    for d in os.listdir(metrics):
+        assert os.listdir(os.path.join(metrics, d)) == ["part-0.parquet"], d
 
 
 def test_stage_jobs_carry_run_job_group(spark, corpus, tmp_path):
