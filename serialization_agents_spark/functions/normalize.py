@@ -132,54 +132,6 @@ NORMALIZE_SQL = (
 # ---------------------------------------------------------------------------
 # X3 — string_score fuzzy similarity (public algorithm, Joshaven Potter)
 # ---------------------------------------------------------------------------
-def fuzzy_score_py(target: str | None, query: str | None, fuzziness: float = 0.5) -> float:
-    """Exact reimplementation of the string_score algorithm the reference
-    calls as `target.score(query, 0.5)` (/root/reference/lib/utils.js:56).
-
-    Returns 1.0 for identical strings, 0.0 for an empty query or an empty
-    target; otherwise a char-walk score with consecutive/acronym/same-case
-    bonuses and a fuzzy-miss penalty divisor. An empty target is where
-    this departs from the reference: its JS divides by the target's
-    length 0 and returns NaN. Non-Latin names normalize to '' (the fold
-    keeps a-z0-9 only), so a NaN/raising score there would poison the
-    argmax of every block they sit in.
-    """
-    if target is None or query is None:
-        return 0.0
-    if target == query:
-        return 1.0
-    if query == "" or target == "":
-        return 0.0
-
-    l_target = target.lower()
-    l_query = query.lower()
-    running = 0.0
-    start_at = 0
-    fuzzies = 1.0
-    fuzzy_factor = 1.0 - fuzziness
-
-    for i, qc in enumerate(l_query):
-        idx = l_target.find(qc, start_at)
-        if idx == -1:
-            fuzzies += fuzzy_factor
-        else:
-            if start_at == idx:
-                char_score = 0.7  # consecutive / start-of-string bonus
-            else:
-                char_score = 0.1
-                if target[idx - 1] == " ":
-                    char_score += 0.8  # acronym bonus
-            if target[idx] == query[i]:
-                char_score += 0.1  # same-case bonus
-            running += char_score
-            start_at = idx + 1
-
-    final = 0.5 * (running / len(target) + running / len(query)) / fuzzies
-    if l_query[0] == l_target[0] and final < 0.85:
-        final += 0.15
-    return final
-
-
 def _bind(value: Column, body) -> Column:
     """`body(v)` with `value` evaluated ONCE: a lambda over a one-element
     array. Spark interprets higher-order functions with no common
@@ -191,9 +143,10 @@ def _bind(value: Column, body) -> Column:
 def fuzzy_score_expr(target: Column, query: Column) -> Column:
     """string_score as a PURE JVM expression — one F.aggregate walk over
     the query positions with a (running, start_at, fuzzies) struct
-    accumulator, exactly the fuzzy_score_py char-walk, bit for bit
-    (parity-swept in tests/test_normalize.py: the arithmetic keeps
-    fuzzy_score_py's order, so the doubles are identical).
+    accumulator, exactly the char-walk of the reference fuzzy_score_py
+    (tests/references.py), bit for bit (parity-swept in
+    tests/test_normalize.py: the arithmetic keeps the reference's order,
+    so the doubles are identical).
 
     This is the production path: it keeps the linking cascade free of
     Python workers entirely (worker init is seconds per executor slot
@@ -267,22 +220,10 @@ def fuzzy_score_expr(target: Column, query: Column) -> Column:
 # ---------------------------------------------------------------------------
 # X2 — percentOverlap
 # ---------------------------------------------------------------------------
-def percent_overlap_py(a: str | None, b: str | None) -> float:
-    """Token-overlap percentage; 100.0 for identical strings (matching the
-    reference's trivial case, /root/reference/lib/utils_shadowcat.js:401)."""
-    if a is None or b is None:
-        return 0.0
-    if a == b:
-        return 100.0
-    ta, tb = set(a.split()), set(b.split())
-    if not ta or not tb:
-        return 0.0
-    return 100.0 * len(ta & tb) / max(len(ta), len(tb))
-
-
 def percent_overlap_expr(a: Column, b: Column) -> Column:
-    """percentOverlap as pure Column expressions (JVM path; percent_overlap_py
-    is the reference definition)."""
+    """percentOverlap as pure Column expressions (JVM path;
+    percent_overlap_py in tests/references.py is the reference
+    definition)."""
 
     def toks(c: Column) -> Column:
         # array_remove('') matches Python str.split()'s empty-run handling

@@ -1,4 +1,4 @@
-"""Benchmark decontamination: flag / drop corpus documents that share
+"""Benchmark decontamination: flag corpus documents that share
 word n-grams with an evaluation benchmark (the standard train/test
 leakage gate of an LLM training-data pipeline; no analogue in the
 reference — its inputs are catalog records, serialization-agents
@@ -16,9 +16,6 @@ Scale notes (100 TB corpus, benchmark suites ~10^6 grams):
   64-bit collision against a benchmark gram — negligible, and the gate
   is conservative (a false positive only drops one training doc).
   Default False so the DuckDB oracle replays string-equality exactly.
-- `decontaminate` anti-joins flagged ids back: broadcastable whenever
-  the contamination rate is sane; plain shuffled anti-join otherwise
-  (Spark/AQE picks at runtime — we only hint when we KNOW it is small).
 """
 
 from __future__ import annotations
@@ -84,28 +81,4 @@ def contamination_report(
         doc_grams.join(broadcast(grams), "gram")
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("n_hits"))
-    )
-
-
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SHINGLE_K,
-    min_hits: int = 1,
-    hash_grams: bool = True,
-) -> DataFrame:
-    """Corpus minus documents with >= min_hits benchmark n-grams.
-
-    `min_hits` > 1 tolerates incidental single-gram collisions (common
-    short phrases) — the usual production dial. Returns the surviving
-    corpus rows unchanged.
-    """
-    flagged = contamination_report(
-        corpus, benchmark, text_col=text_col, id_col=id_col, k=k,
-        hash_grams=hash_grams,
-    ).where(F.col("n_hits") >= min_hits).select("doc_id")
-    return corpus.join(
-        flagged, corpus[id_col] == flagged["doc_id"], "left_anti"
     )

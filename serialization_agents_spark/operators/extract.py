@@ -14,44 +14,23 @@ extractor)". The extraction CONTRACT (canonical, byte-stable):
 5. collapse all whitespace runs to one space and trim.
 
 ``extract_text_expr`` is the production path: pure Column expressions
-(whole-stage codegen, no Python at all). ``extract_text_py`` is the
-byte-stable reference it is asserted identical to in tests.
+(whole-stage codegen, no Python at all). ``extract_text_py`` in
+``tests/references.py`` is the byte-stable reference it is asserted
+identical to.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_BLOCK_RE = re.compile(
-    r"(?is)<head\b.*?</head>|<script\b.*?</script>|<style\b.*?</style>"
-    r"|<nav\b.*?</nav>|<header\b.*?</header>|<footer\b.*?</footer>"
-    r"|<aside\b.*?</aside>|<div class=\"ad\".*?</div>"
-)
-_TAG_RE = re.compile(r"(?s)<[^>]*>")
-# ASCII whitespace only, to match Java's default \s exactly (byte-stability).
-_WS_RE = re.compile(r"[ \t\n\r\f\x0b]+")
 _ENTITIES = [
     ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"),
     ("&nbsp;", " "), ("&copy;", "©"), ("&amp;", "&"),  # &amp; LAST
 ]
 
 
-def extract_text_py(html: bytes | str | None) -> str | None:
-    """Canonical byte-stable extractor (oracle reference implementation)."""
-    if html is None:
-        return None
-    s = html.decode("utf-8", errors="replace") if isinstance(html, (bytes, bytearray)) else html
-    s = _BLOCK_RE.sub(" ", s)
-    s = _TAG_RE.sub(" ", s)
-    for ent, ch in _ENTITIES:
-        s = s.replace(ent, ch)
-    return _WS_RE.sub(" ", s).strip(" \t\n\r\f\x0b")
-
-
-# The same block/tag regexes, Java-regex flavored for JVM execution.
+# The contract's block regex, Java-regex flavored for JVM execution.
 _BLOCK_RE_JAVA = (
     r"(?is)<head\b.*?</head>|<script\b.*?</script>|<style\b.*?</style>"
     r"|<nav\b.*?</nav>|<header\b.*?</header>|<footer\b.*?</footer>"

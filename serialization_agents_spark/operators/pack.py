@@ -61,13 +61,3 @@ def shard_pack(
         "n_tokens",
         F.floor(F.col("_before") / F.lit(int(budget))).cast("long").alias("shard_id"),
     )
-
-
-def shard_stats(packed: DataFrame) -> DataFrame:
-    """Per-shard summary of a shard_pack assignment: (shard_id, n_docs,
-    n_tokens). Every shard except the last holds >= budget - max_doc + 1
-    and < budget + max_doc tokens by construction."""
-    return packed.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-    )

@@ -164,101 +164,6 @@ def _adjacent_pairs(toks):
     )
 
 
-def bpe_learn(
-    docs: DataFrame,
-    n_merges: int = 5,
-    text_col: str = "text",
-    joiner: str = "▁",
-) -> list[tuple[str, str, int]]:
-    """Learn `n_merges` BPE merges over the whitespace-pre-tokenized
-    corpus: each iteration picks the globally most frequent adjacent
-    pair (ties: lexicographic (left, right) asc — deterministic under
-    any partitioning) and rewrites every document's token array with
-    the pair fused as `left + joiner + right`. Returns the learned
-    merge table [(left, right, pair_freq), ...] in merge order.
-
-    This is the CC-loop pattern applied to tokenizer induction: the
-    driver holds only the argmax row per iteration (a bounded 1-row
-    collect — the loop CONTROL, not the data); the corpus-side rewrite
-    is a pure-JVM `F.aggregate` left fold over each token array (fuse
-    greedily left-to-right, exactly like the pure-Python reference in
-    tests). Each iteration costs one narrow map + one pair-count
-    shuffle; lineage is truncated per iteration with localCheckpoint.
-
-    Oracle note: not SQL-certifiable — DuckDB 1.0's list_reduce bleeds
-    accumulator state across rows when lambda CASE branches diverge
-    (see the repo verify notes), so this operator is pinned by the
-    pure-Python parity pytest instead of a driver gate row.
-    """
-    cur = docs.select(tokens(F.col(text_col)).alias("w")).where(F.size("w") >= 2)
-    cur = cur.localCheckpoint(eager=True)
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = (
-            # guard: a doc can shrink below 2 tokens after a merge, and
-            # sequence(0, size-2) would run DESCENDING into ANSI
-            # out-of-bounds element_at; the NULL array explodes to nothing
-            cur.select(
-                F.explode(
-                    F.when(F.size("w") >= 2, _adjacent_pairs(F.col("w")))
-                ).alias("p")
-            )
-            .groupBy("p.tok_left", "p.tok_right")
-            .agg(F.count(F.lit(1)).alias("pair_freq"))
-            .orderBy(
-                F.col("pair_freq").desc(),
-                F.col("tok_left").asc(),
-                F.col("tok_right").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, freq = top[0]["tok_left"], top[0]["tok_right"], top[0]["pair_freq"]
-        merges.append((left, right, freq))
-        fused = left + joiner + right
-        # Greedy left-to-right fold with a struct accumulator (done
-        # tokens + the pending last token, so no tail surgery / negative
-        # indexing is ever needed): if the pending token is `left` and
-        # the incoming one is `right`, fuse them into the pending slot;
-        # otherwise flush pending and stage the incoming token.
-        zero = F.struct(
-            F.expr("CAST(array() AS ARRAY<STRING>)").alias("done"),
-            F.lit(None).cast("string").alias("pending"),
-        )
-
-        def _step(acc, t):
-            return (
-                F.when(
-                    acc["pending"].isNull(),
-                    F.struct(acc["done"].alias("done"), t.alias("pending")),
-                )
-                .when(
-                    (acc["pending"] == F.lit(left)) & (t == F.lit(right)),
-                    F.struct(
-                        acc["done"].alias("done"), F.lit(fused).alias("pending")
-                    ),
-                )
-                .otherwise(
-                    F.struct(
-                        F.concat(acc["done"], F.array(acc["pending"])).alias("done"),
-                        t.alias("pending"),
-                    )
-                )
-            )
-
-        def _finish(acc):
-            return F.when(
-                acc["pending"].isNull(), acc["done"]
-            ).otherwise(F.concat(acc["done"], F.array(acc["pending"])))
-
-        cur = cur.select(
-            F.aggregate(F.col("w"), zero, _step, _finish).alias("w")
-        ).localCheckpoint(eager=False)
-    return merges
-
-
 def inverted_index(
     docs: DataFrame,
     text_col: str = "text",

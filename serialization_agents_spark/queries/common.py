@@ -61,9 +61,10 @@ _KG_CACHE: dict[tuple[str, str], PipelineResult] = {}
 _SCRATCH: dict[tuple[str, str], ExitStack] = {}
 
 
-def kg_customer_count(sf_dir: str) -> int:
-    """Plan-build-time scalar read from the parquet footers: no Spark job."""
-    return ds.dataset(f"{sf_dir}/customer.parquet").count_rows()
+def footer_row_count(sf_dir: str, name: str) -> int:
+    """Plan-build-time row count of a table, read from its parquet
+    footers: no Spark job."""
+    return ds.dataset(f"{sf_dir}/{name}.parquet").count_rows()
 
 
 # ---------------------------------------------------------------------------
@@ -86,7 +87,7 @@ def kg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group test file would otherwise pin it all to ONE task
     docs = spread(table(spark, sf_dir, "documents").select("doc_id"))
     cust = table(spark, sf_dir, "customer")
-    n = kg_customer_count(sf_dir)
+    n = footer_row_count(sf_dir, "customer")
     d = F.col("doc_id")
     base = (
         # the (d%7)*11 term decouples ck1's parity/mod-3 class from d's, so
@@ -431,7 +432,7 @@ QUAL_EXPR = (
 
 
 def string_score_walk(cols: str) -> str:
-    """The string_score char-walk (functions/normalize.py:fuzzy_score_py
+    """The string_score char-walk (`fuzzy_score_py` in tests/references.py
     — the public algorithm the reference calls at lib/utils.js:56) as a
     RECURSIVE CTE `walk` over `pq(<cols>, t, q)`, carrying the
     (i, r=running, s=start_at, f=fuzzies) state per row; score the

@@ -426,13 +426,10 @@ FROM perpage GROUP BY 1, 2
 """
 )
 def kg_windowed_metrics(spark, sf):
-    """Streaming surface under the driver gate: the watermarked
-    windowed-metrics plan (streaming/windowed.py) run over the batch
-    kg pages — same plan body either way (its docstring contract);
-    the stream-mode late-drop semantics are pinned by
-    tests/test_streaming_windowed.py. Window bounds exported as
-    epoch SECONDS (integers hash identically cross-engine;
-    timestamps don't)."""
+    """Tumbling crawl-time windows under the driver gate: the
+    windowed-metrics plan (streaming/windowed.py) over the kg pages.
+    Window bounds exported as epoch SECONDS (integers hash identically
+    cross-engine; timestamps don't)."""
     m = windowed_page_metrics(kg_pages(spark, sf), window="10 minutes")
     return m.select(
         F.unix_seconds("window_start").alias("window_start_s"),

@@ -277,9 +277,9 @@ def o10_session_window(spark, sf):
     streaming/windowed.py session_metrics) over the events table —
     the merging-window state shape, certified on batch input against
     a DuckDB gaps-and-islands replay (new session iff
-    ts - prev > gap, boundary merges; session_end = last_ts + gap). The streaming
-    run of the SAME plan (append mode, watermark late-drop, session
-    fusion) is pinned by tests/test_streaming_windowed.py."""
+    ts - prev > gap, boundary merges; session_end = last_ts + gap).
+    Session fusion and the inclusive boundary are pinned by
+    tests/test_streaming_windowed.py."""
     s = session_metrics(table(spark, sf, "events"), gap="30 minutes")
     return s.select(
         "user_id",

@@ -23,7 +23,7 @@ from serialization_agents_spark.operators.variants import (
 from serialization_agents_spark.parallel import spread
 from serialization_agents_spark.queries.common import (
     STRING_SCORE_FINAL,
-    kg_customer_count,
+    footer_row_count,
     registry,
     string_score_walk,
     table,
@@ -260,7 +260,7 @@ def j4_fuzzy_scores(spark, sf):
     per customer (near-exact + decoy), mirrored in DuckDB by a
     recursive-CTE transcription of the same walk."""
     cust = table(spark, sf, "customer")
-    n = kg_customer_count(sf)
+    n = footer_row_count(sf, "customer")
     k = F.col("c_custkey")
     pairs = cust.select(
         k.alias("mention_key"),

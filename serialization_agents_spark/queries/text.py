@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark.functions import text as T
 from serialization_agents_spark.operators.curate import quality_gate
-from serialization_agents_spark.operators.enumerate_ids import enumerate_ids
+from serialization_agents_spark.operators.enumerate_ids import running_offsets
 from serialization_agents_spark.operators.pack import shard_pack
 from serialization_agents_spark.operators.retrieval import bm25_topk
 from serialization_agents_spark.operators.sample import mixture_sample, sample_corpus
@@ -24,6 +24,7 @@ from serialization_agents_spark.queries.common import (
     NTOK,
     QUAL_EXPR,
     TOKS,
+    footer_row_count,
     qual_cte,
     registry,
     table,
@@ -353,8 +354,8 @@ def corpus_mixture(spark, sf):
     )
 
 
-# Epoch shuffle order: rank over md5(epoch:doc) per epoch, 1-based to
-# match enumerate's offset=0 (+ row_number) arithmetic.
+# Epoch shuffle order: rank over md5(epoch:doc) per epoch, 1-based like
+# row_number.
 @query(
     "SELECT doc_id, epoch, ord FROM ("
     "SELECT doc_id, e.epoch, row_number() OVER ("
@@ -365,25 +366,26 @@ def corpus_mixture(spark, sf):
 )
 def corpus_epoch_order(spark, sf):
     """Deterministic per-epoch training order: rank docs by
-    md5(epoch || ':' || doc_id) through the TWO-PHASE partition-
-    offset enumerate (operators/enumerate_ids.py — range-partition
-    on the key, per-partition running count, driver-side partition
-    offsets; never a single global window), so every run, resume,
-    and executor count replays the exact same shuffle order per
-    epoch — the reproducible-dataloader contract of an LLM training
-    pipeline."""
-    docs = table(spark, sf, "documents").select("doc_id")
-    epochs = []
-    for ep in (0, 1):
-        keyed = docs.select(
-            "doc_id", F.lit(ep).alias("epoch"),
-            F.md5(F.concat_ws(":", F.lit(str(ep)), F.col("doc_id"))).alias("_k"),
+    md5(epoch || ':' || doc_id) through ONE partition-offset pass over
+    both epochs (operators/enumerate_ids.py::running_offsets — range-
+    partition on (epoch, key), per-partition running count, driver-side
+    partition offsets; never a single global window). Epoch e's rows
+    start e * n_docs into that order, so subtracting it restarts the
+    rank per epoch. Every run, resume, and executor count replays the
+    exact same shuffle order per epoch — the reproducible-dataloader
+    contract of an LLM training pipeline."""
+    n_docs = footer_row_count(sf, "documents")
+    keyed = (
+        table(spark, sf, "documents")
+        .select("doc_id", F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch"))
+        .withColumn(
+            "_k", F.md5(F.concat_ws(":", F.col("epoch").cast("string"), F.col("doc_id")))
         )
-        epochs.append(
-            enumerate_ids(keyed, order_col="_k", id_col="ord", offset=1)
-            .select("doc_id", "epoch", F.col("ord").cast("long").alias("ord"))
-        )
-    return epochs[0].unionByName(epochs[1])
+    )
+    return running_offsets(keyed, ["epoch", "_k"], F.lit(1)).select(
+        "doc_id", "epoch",
+        (F.col("_before") - F.col("epoch") * F.lit(n_docs) + 1).cast("long").alias("ord"),
+    )
 
 
 # BM25: idf coarsened to 4dp before any multiply (ln is the one

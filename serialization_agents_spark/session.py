@@ -31,21 +31,31 @@ def get_spark(
     calls ``.master()``, so the value spark-submit injected via
     ``spark.master`` wins instead of being overridden by the local
     default.
+
+    A live session is reused as it is, with only the confs the caller
+    passed (``shuffle_partitions``, ``extra_conf``) applied to it: the
+    defaults below never overwrite what its owner set.
     """
+    explicit = {}
+    if shuffle_partitions is not None:
+        explicit["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    explicit.update(extra_conf or {})
+    if SparkSession.getActiveSession() is not None:
+        return SparkSession.builder.config(map=explicit).getOrCreate()
+
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+    shuffle_default = os.environ.get(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS
+    )
 
     builder = SparkSession.builder.appName(app_name)
     if master != "inherit":
         builder = builder.master(master)
     builder = (
         builder
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(shuffle_default))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -58,10 +68,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(map=explicit)
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

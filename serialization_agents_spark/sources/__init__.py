@@ -4,7 +4,6 @@ from serialization_agents_spark.sources.pages import (  # noqa: F401
     read_pages,
     read_pages_stream,
     read_redirects,
-    write_pages_partitioned,
 )
 from serialization_agents_spark.sources.bucketed import (  # noqa: F401
     read_bucketed,

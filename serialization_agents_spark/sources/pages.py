@@ -11,14 +11,14 @@ These helpers pin three things every scan at that scale depends on:
    NAME_BLACKLIST), so drift in the underlying files fails loudly at
    plan time, not 3 stages later, and json/csv readers never pay
    inference scans over 100 TB.
-2. **Partition layout** — `write_pages_partitioned` lays the corpus out
-   by crawl date (`warc_ts` day), the natural ingestion key; date-ranged
-   jobs then prune partitions at the source (verify: PartitionFilters in
-   `.explain`), which is the difference between scanning a day and
-   scanning the archive.
+2. **Partition layout** — a corpus laid out by crawl date
+   (`crawl_date=` dirs of the `warc_ts` day, the natural ingestion key)
+   is read with `dates=`, so date-ranged jobs prune partitions at the
+   source (verify: PartitionFilters in `.explain`), which is the
+   difference between scanning a day and scanning the archive.
 3. **Streaming parity** — `read_pages_stream` is the same schema over
-   `readStream` (used by streaming/incremental.py), so batch and
-   incremental jobs cannot diverge on input interpretation.
+   `readStream` (used by streaming/stateful.py), so batch and
+   streaming jobs cannot diverge on input interpretation.
 """
 
 from __future__ import annotations
@@ -51,11 +51,12 @@ def read_pages(
 
     parquet: schema asserted column-by-column (pushdown + pruning intact);
     json/csv: schema SUPPLIED (no inference pass). csv cannot carry raw
-    binary html; it is read as a base64 string column and decoded —
-    the interchange convention used by `write_pages_partitioned`.
+    binary html; it is read as a base64 string column `html_b64` and
+    decoded (the interchange convention for json and csv alike; csv
+    columns are positional, in the order of the supplied schema).
 
     `dates=(start, end)` (inclusive, 'YYYY-MM-DD') filters on the
-    `crawl_date` PARTITION column laid down by write_pages_partitioned —
+    `crawl_date` PARTITION column of a corpus laid out by crawl day —
     the filter prunes at the source listing (PartitionFilters in
     `.explain`), which a predicate on `warc_ts` cannot do.
     """
@@ -85,8 +86,8 @@ def read_pages(
         raise ValueError(f"unknown pages format {fmt!r}; one of {PAGE_FORMATS}")
     if dates is not None:
         # crawl_date is a discovered partition column (appended by Spark
-        # beyond the supplied schema) when the layout came from
-        # write_pages_partitioned; prunes at the source listing.
+        # beyond the supplied schema) of a crawl-day layout; prunes at the
+        # source listing.
         if "crawl_date" not in df.columns:
             raise ValueError(f"pages at {path} are not date-partitioned")
         df = df.where(F.col("crawl_date").between(*dates))
@@ -97,36 +98,11 @@ def read_pages(
     )
 
 
-def write_pages_partitioned(
-    pages: DataFrame, path: str, fmt: str = "parquet"
-) -> None:
-    """Write the corpus partitioned by crawl day (`crawl_date=` dirs) so
-    date-ranged reads prune at the source listing."""
-    out = pages.withColumn("crawl_date", F.to_date("warc_ts"))
-    if fmt == "parquet":
-        out.write.mode("overwrite").partitionBy("crawl_date").parquet(path)
-    elif fmt in ("json", "csv"):
-        # column order pinned to read_pages' supplied schema — csv maps
-        # columns POSITIONALLY (json by name), so writer and reader must
-        # agree on order, not just names
-        txt = out.withColumn("html_b64", F.base64("html")).select(
-            "url", "warc_ts", "html_b64", "text", "lang", "crawl_date"
-        )
-        writer = txt.write.mode("overwrite").partitionBy("crawl_date")
-        if fmt == "json":
-            writer.json(path)
-        else:
-            # escape='"' = standard doubled-quote CSV, matching read_pages
-            writer.option("header", "true").option("escape", '"').csv(path)
-    else:
-        raise ValueError(f"unknown pages format {fmt!r}; one of {PAGE_FORMATS}")
-
-
 def read_pages_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 16
 ) -> DataFrame:
     """The streaming twin of read_pages (parquet only): same schema, file
-    -discovery micro-batches (used by streaming/incremental.py)."""
+    -discovery micro-batches (used by streaming/stateful.py)."""
     return (
         spark.readStream.schema(schemas.PAGES)
         .option("maxFilesPerTrigger", max_files_per_trigger)

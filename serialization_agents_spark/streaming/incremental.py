@@ -1,9 +1,11 @@
-"""Incremental KG maintenance via Structured Streaming micro-batches.
+"""Incremental KG maintenance: fold batches of new pages into a
+persisted agents table.
 
 Why this is correct without reprocessing history: the batch engine
 replaced the reference's ORDER-DEPENDENT upserts with a commutative,
 associative merge algebra (operators/merge.py, SURVEY.md §4.3). A
-commutative fold can be applied incrementally: for each micro-batch,
+commutative fold can be applied incrementally: for each batch of new
+pages (the kg_incremental_fold query runs this sequence),
 
     1. run the batch pipeline through its agents stage over the new
        pages (`run_pipeline(until="agents", cache=False)`): detect + link
@@ -32,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.operators.merge import argmin_by, capped_union
-from serialization_agents_spark.plans.pipeline import run_pipeline
 
 # agents-table layout: `bucket=` partitions of pmod(xxhash64(entity_key),
 # N_BUCKETS) — fixed, or existing tables stop being readable
@@ -125,7 +126,7 @@ def fold_batch_into_agents(
       its keys land in, so the per-batch fold reads/rewrites
       O(|batch| / |agents| * N_BUCKETS) of the table, not all of it;
     - replay guard: the last applied batch id is persisted next to the
-      table (`_last_batch`); a foreachBatch replay after a crash
+      table (`_last_batch`); a replayed batch after a crash
       short-circuits instead of double-folding mention counts (parquet
       overwrite has no sink commit log of its own);
     - crash-consistent staging: the folded buckets are staged under a
@@ -181,39 +182,3 @@ def fold_batch_into_agents(
     _commit_batch_id(agents_dir, batch_id)
     shutil.rmtree(staging_root, ignore_errors=True)
     return True
-
-
-def stream_pages_to_agents(
-    spark: SparkSession,
-    pages_dir: str,
-    authority: DataFrame,
-    agents_dir: str,
-    checkpoint_dir: str,
-    redirects: DataFrame | None = None,
-    blacklist: DataFrame | None = None,
-    trigger_available_now: bool = True,
-):
-    """readStream(new page parquet files) -> the batch pipeline through
-    the agents stage -> fold into the persisted bucket-partitioned agents
-    table (fold_batch_into_agents carries the per-batch exactly-once +
-    partial-rewrite semantics)."""
-    from serialization_agents_spark.sources.pages import read_pages_stream
-
-    stream = read_pages_stream(spark, pages_dir, max_files_per_trigger=16)
-
-    def process_batch(batch_pages: DataFrame, batch_id: int) -> None:
-        if batch_pages.isEmpty():
-            return
-        res = run_pipeline(
-            spark, batch_pages, authority, redirects, blacklist,
-            until="agents", cache=False,
-        )
-        fold_batch_into_agents(spark, agents_dir, res.agents, batch_id)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,8 +1,6 @@
-"""Stream-stream join — the last Structured Streaming state shape the
-engine exposes (next to tumbling windows, merging session windows,
-applyInPandasWithState totals, watermark dedup, and the incremental
-fold): two unbounded inputs joined on an equi-key plus an event-time
-range, with BOTH sides watermarked so Spark can bound the join state
+"""Stream-stream join — the engine's second Structured Streaming state
+shape, next to the applyInPandasWithState totals (stateful.py): two
+unbounded inputs joined on an equi-key plus an event-time range, with BOTH sides watermarked so Spark can bound the join state
 and age rows out.
 
 Semantics (inner join, append mode):

@@ -1,23 +1,15 @@
-"""Watermarked windowed aggregation over the page stream.
+"""Crawl-time windowed metrics: tumbling windows over the page corpus
+and merging session windows over events.
 
 The reference's serializers report progress per batch over a bounded
 collection; a continuous crawl needs TIME-WINDOWED operational metrics
-(pages/mentions per crawl-time window) with a bounded-state guarantee:
-the watermark lets Spark finalize and emit a window once event time has
-passed `window_end + watermark`, drop later-arriving rows for it, and
-purge its state — without a watermark, windowed state grows forever on
-an unbounded crawl.
-
-Semantics (append mode):
-- rows land in the tumbling `warc_ts` window they belong to;
-- a window is emitted exactly once, when the watermark passes its end;
-- rows arriving more than `watermark` after their window closed are
-  DROPPED (asserted in tests/test_streaming_windowed.py) — the trade
-  every streaming pipeline makes between completeness and state size.
+(pages/mentions per crawl-time window). Both plans here use Spark's
+native window functions (F.window, F.session_window) over batch input,
+certified by the kg_windowed_metrics and o10_session_window oracles.
 
 The aggregation body is pure Column expressions (mention counting via
 regexp_extract_all size — the same span regexes the batch detector
-uses), so the stream stays JVM-side end to end.
+uses), so the plan stays JVM-side end to end.
 """
 
 from __future__ import annotations
@@ -37,18 +29,9 @@ def _span_count(html_s: F.Column, pattern: str) -> F.Column:
     return F.size(F.regexp_extract_all(html_s, F.lit(pattern), F.lit(0)))
 
 
-def windowed_page_metrics(
-    pages: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """pages (stream OR batch) -> one row per (window, lang):
-    (window_start, window_end, lang, n_pages, n_mentions, n_subjects).
-
-    On a streaming input the watermark bounds state and defines the
-    late-drop contract; on a batch input the same plan just aggregates
-    (used by tests to pin stream == batch on on-time data).
-    """
+def windowed_page_metrics(pages: DataFrame, window: str = "10 minutes") -> DataFrame:
+    """pages -> one row per (tumbling `warc_ts` window, lang):
+    (window_start, window_end, lang, n_pages, n_mentions, n_subjects)."""
     html_s = F.col("html").cast("string")
     mentions = (
         _span_count(html_s, MARKUP_VIAF_RE)
@@ -60,8 +43,6 @@ def windowed_page_metrics(
         "warc_ts", "lang",
         mentions.alias("_m"), subjects.alias("_s"),
     )
-    if per_page.isStreaming:
-        per_page = per_page.withWatermark("warc_ts", watermark)
     agg = per_page.groupBy(F.window("warc_ts", window), "lang").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum("_m").alias("n_mentions"),
@@ -74,51 +55,17 @@ def windowed_page_metrics(
     )
 
 
-def stream_windowed_metrics_to_parquet(
-    spark,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-):
-    """readStream(pages) -> watermarked windowed metrics -> parquet, in
-    APPEND mode: each window row is written exactly once, after the
-    watermark finalizes it. Returns the started query (availableNow)."""
-    from serialization_agents_spark.sources.pages import read_pages_stream
-
-    stream = read_pages_stream(spark, pages_dir)
-    metrics = windowed_page_metrics(stream, window, watermark)
-    return (
-        metrics.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
-
-
-def session_metrics(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """events (stream OR batch) -> one row per merged session:
+def session_metrics(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+    """events -> one row per merged session:
     (user_id, session_start, session_end, n_events, value_cents).
 
     Uses Spark's native merging session windows (F.session_window): a
     session extends while the next event arrives before last_ts + gap,
     and session_end = last_ts + gap. This is the MERGING-window state
     shape (two sessions can fuse when a bridging event arrives) — a
-    different streaming state machine from the tumbling windows above
+    different window state machine from the tumbling windows above
     and from the hand-rolled lag/cumsum sessionize (o4), which it must
-    agree with on batch input.
-
-    On a streaming input the watermark bounds session state and defines
-    the late-drop contract (append mode emits a session once the
-    watermark passes its end — tail sessions stay in state until then);
-    on a batch input the same plan just aggregates.
+    agree with.
 
     value_cents sums integer cents, never raw doubles (cross-engine
     float sums differ by reduction order).
@@ -128,8 +75,6 @@ def session_metrics(
         F.col("ts").cast("timestamp").alias("ts"),
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
     )
-    if ev.isStreaming:
-        ev = ev.withWatermark("ts", watermark)
     return (
         ev.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
         .agg(
@@ -143,36 +88,4 @@ def session_metrics(
             "n_events",
             "value_cents",
         )
-    )
-
-
-SESSION_EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double"
-)
-
-
-def stream_session_metrics_to_parquet(
-    spark,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-):
-    """readStream(events) -> merging session windows -> parquet, APPEND
-    mode: a session row is written exactly once, when the watermark
-    passes its end (sessions can still FUSE while unemitted). Returns
-    the started availableNow query."""
-    stream = (
-        spark.readStream.schema(SESSION_EVENTS_SCHEMA)
-        .parquet(events_dir)
-    )
-    metrics = session_metrics(stream, gap, watermark)
-    return (
-        metrics.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
     )

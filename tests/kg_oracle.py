@@ -6,8 +6,8 @@ triples (gate: P/R >= 0.95, BASELINE.json north_rule). Keep this file
 boring and obviously-correct: dicts, loops, union-find.
 
 Semantics mirrored 1:1 from the operators (which in turn cite the
-reference): extraction contract (operators/extract.py), markup mention
-regexes (operators/mentions.py), redirect chase + viaf/name linking with
+reference): markup mention regexes over the raw html
+(operators/mentions.py), redirect chase + viaf/name linking with
 string_score top-1 (operators/linking.py), priority merge
 (operators/merge.py), connected-components closure + scalar backfill
 (operators/canonicalize.py), triple materialization (operators/triples.py).
@@ -19,11 +19,8 @@ import hashlib
 import re
 from collections import defaultdict
 
-from serialization_agents_spark.functions.normalize import (
-    fuzzy_score_py,
-    normalize_name_py,
-)
-from serialization_agents_spark.operators.extract import extract_text_py
+from references import fuzzy_score_py
+from serialization_agents_spark.functions.normalize import normalize_name_py
 
 MARKUP_VIAF_RE = re.compile(r'<span class="agent" data-viaf="([^"]*)">([^<]+)</span>')
 MARKUP_LCNAF_RE = re.compile(r'<span class="agent" data-lcnaf="([^"]*)">([^<]+)</span>')

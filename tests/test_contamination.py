@@ -1,5 +1,5 @@
-"""Benchmark-decontamination operator: hit semantics, min_hits dial,
-string-vs-xxhash64 gram-key parity, and the broadcast-only plan shape.
+"""Benchmark-decontamination operator: hit semantics, string-vs-xxhash64
+gram-key parity, and the broadcast-only plan shape.
 """
 
 from __future__ import annotations
@@ -7,10 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
-from serialization_agents_spark.operators.contamination import (
-    contamination_report,
-    decontaminate,
-)
+from serialization_agents_spark.operators.contamination import contamination_report
 from serialization_agents_spark.operators.vocab import bpe_pair_stats
 
 
@@ -38,13 +35,6 @@ def test_contamination_report_hits(spark):
     }
     # benchmark grams: {the quick brown, quick brown fox, brown fox jumps}
     assert got == {1: 3, 3: 1, 4: 3}
-
-
-def test_decontaminate_min_hits(spark):
-    strict = decontaminate(_corpus(spark), _benchmark(spark), min_hits=1)
-    assert {r["doc_id"] for r in strict.collect()} == {2, 5}
-    lenient = decontaminate(_corpus(spark), _benchmark(spark), min_hits=2)
-    assert {r["doc_id"] for r in lenient.collect()} == {2, 3, 5}
 
 
 def test_hash_grams_mode_matches_string_mode(spark):

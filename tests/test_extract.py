@@ -6,11 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from references import extract_text_py
 from serialization_agents_spark import synth
-from serialization_agents_spark.operators.extract import (
-    extract_text_expr,
-    extract_text_py,
-)
+from serialization_agents_spark.operators.extract import extract_text_expr
 
 CASES = [
     b"<html><head><title>T</title><script>x()</script></head>"

@@ -3,8 +3,9 @@ name-block + fuzzy top-1 (J4), blacklist (F6), dead-viaf side output (S11)."""
 
 from __future__ import annotations
 
+from references import fuzzy_score_py
 from serialization_agents_spark import schemas, synth
-from serialization_agents_spark.functions.normalize import fuzzy_score_py, normalize_name_py
+from serialization_agents_spark.functions.normalize import normalize_name_py
 from serialization_agents_spark.operators.linking import link_mentions
 
 

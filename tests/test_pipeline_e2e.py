@@ -14,7 +14,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from serialization_agents_spark import oracle, synth
+import kg_oracle
+from serialization_agents_spark import synth
 from serialization_agents_spark.plans.pipeline import run_pipeline
 
 N_PAGES = 400
@@ -116,7 +117,7 @@ def test_triples_match_oracle(spark, corpus):
     auth_rows = [r.asDict() for r in authority.collect()]
     red_rows = [r.asDict() for r in redirects.collect()]
     bl = [r["name"] for r in blacklist.collect()]
-    _, oracle_triples = oracle.run_oracle(pages_rows, auth_rows, red_rows, bl)
+    _, oracle_triples = kg_oracle.run_oracle(pages_rows, auth_rows, red_rows, bl)
 
     precision, recall = _pr(spark_triples, oracle_triples)
     only_spark = list(spark_triples - oracle_triples)[:5]

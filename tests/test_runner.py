@@ -146,25 +146,20 @@ def test_runner_reports_metrics_rows_without_recounting(
         raise AssertionError("the runner counted a frame")
 
     def run(*extra: str) -> dict:
-        # get_spark reuses the fixture session and re-applies its config
-        split_bytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        try:
-            with monkeypatch.context() as m:
+        with monkeypatch.context() as m:
 
-                def run_pipeline(*args, **kwargs):
-                    res = real_run_pipeline(*args, **kwargs)
-                    # the concrete frame class: it overrides DataFrame.count
-                    m.setattr(type(res.pages), "count", no_count)
-                    return res
+            def run_pipeline(*args, **kwargs):
+                res = real_run_pipeline(*args, **kwargs)
+                # the concrete frame class: it overrides DataFrame.count
+                m.setattr(type(res.pages), "count", no_count)
+                return res
 
-                m.setattr(pipeline, "run_pipeline", run_pipeline)
-                assert runner.main(
-                    ["--pages", pages_dir, "--authority", auth_dir,
-                     "--out-dir", out_dir, "--master", "local[4]",
-                     "--shuffle-partitions", "4", *extra]
-                ) == 0
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
+            m.setattr(pipeline, "run_pipeline", run_pipeline)
+            assert runner.main(
+                ["--pages", pages_dir, "--authority", auth_dir,
+                 "--out-dir", out_dir, "--master", "local[4]",
+                 "--shuffle-partitions", "4", *extra]
+            ) == 0
         return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     full = run()
@@ -176,3 +171,19 @@ def test_runner_reports_metrics_rows_without_recounting(
     assert until["stages_resumed"] == ["extract", "mentions", "linked", "agents"]
     assert until["n_triples"] is None and until["n_entities"] is None
     assert until["n_agents"] == full["n_agents"]
+
+
+def test_get_spark_reuses_a_live_session_without_resetting_it(spark):
+    """On a live session get_spark applies only the confs its caller
+    passed: a bare call leaves the owner's settings alone."""
+    from serialization_agents_spark.session import get_spark
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+    before = tuple(spark.conf.get(k) for k in keys)
+    assert get_spark() is spark
+    assert tuple(spark.conf.get(k) for k in keys) == before
+    try:
+        assert get_spark(shuffle_partitions=7) is spark
+        assert tuple(spark.conf.get(k) for k in keys) == ("7", before[1])
+    finally:
+        spark.conf.set(keys[0], before[0])

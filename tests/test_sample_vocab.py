@@ -125,78 +125,6 @@ def test_bpe_pair_stats_conservation(spark):
     assert total == 3 + 1
 
 
-def _py_bpe(texts, n_merges, joiner="▁"):
-    """Pure-Python reference for bpe_learn: same tokenization, same
-    global-argmax + lexicographic tie rule, same greedy fold."""
-    import re
-    from collections import Counter
-
-    seqs = []
-    for t in texts:
-        w = re.split(r"\s+", t.strip().lower())
-        if len(w) >= 2:
-            seqs.append(w)
-    merges = []
-    for _ in range(n_merges):
-        counts = Counter()
-        for s in seqs:
-            for a, b in zip(s, s[1:]):
-                counts[(a, b)] += 1
-        if not counts:
-            break
-        (l, r), freq = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((l, r, freq))
-        fused = l + joiner + r
-        nxt = []
-        for s in seqs:
-            out, pending = [], None
-            for t in s:
-                if pending is None:
-                    pending = t
-                elif pending == l and t == r:
-                    pending = fused
-                else:
-                    out.append(pending)
-                    pending = t
-            if pending is not None:
-                out.append(pending)
-            nxt.append(out)
-        seqs = nxt
-    return merges
-
-
-def test_bpe_learn_matches_python_reference(spark):
-    from serialization_agents_spark.operators.vocab import bpe_learn
-
-    texts = [
-        "a b c a b c a b",   # (a,b) dominates, then (a<joiner>b, c) chains
-        "x y x y x y",
-        "b c b c",
-        "lone",
-        "",
-        "A B c",             # lowercasing folds into the (a,b) mass
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = bpe_learn(docs, n_merges=4)
-    want = _py_bpe(texts, 4)
-    assert got == want
-    # the learned table chains: some merge must consume a fused token
-    assert any("▁" in l or "▁" in r for l, r, _ in got)
-
-
-def test_bpe_learn_stops_when_corpus_exhausts(spark):
-    from serialization_agents_spark.operators.vocab import bpe_learn
-
-    docs = spark.createDataFrame([(0, "p q")], "doc_id long, text string")
-    got = bpe_learn(docs, n_merges=5)
-    # one merge collapses the only doc to a single token; then no pairs
-    assert got == [("p", "q", 1)]
-
-
 def test_inverted_index_hand_computed(spark):
     from serialization_agents_spark.operators.vocab import inverted_index
 

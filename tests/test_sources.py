@@ -17,8 +17,28 @@ from serialization_agents_spark.sources import (
     read_pages,
     read_redirects,
     write_bucketed,
-    write_pages_partitioned,
 )
+
+
+def write_pages_partitioned(pages, path: str, fmt: str = "parquet") -> None:
+    """Write the corpus partitioned by crawl day (`crawl_date=` dirs), in
+    the layout and text-format interchange `read_pages` reads."""
+    out = pages.withColumn("crawl_date", F.to_date("warc_ts"))
+    if fmt == "parquet":
+        out.write.mode("overwrite").partitionBy("crawl_date").parquet(path)
+        return
+    # column order pinned to read_pages' supplied schema — csv maps
+    # columns POSITIONALLY (json by name), so writer and reader must
+    # agree on order, not just names
+    txt = out.withColumn("html_b64", F.base64("html")).select(
+        "url", "warc_ts", "html_b64", "text", "lang", "crawl_date"
+    )
+    writer = txt.write.mode("overwrite").partitionBy("crawl_date")
+    if fmt == "json":
+        writer.json(path)
+    else:
+        # escape='"' = standard doubled-quote CSV, matching read_pages
+        writer.option("header", "true").option("escape", '"').csv(path)
 
 
 def _plan(df) -> str:

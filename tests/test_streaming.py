@@ -1,9 +1,7 @@
-"""Incremental fold: batch(all pages) == fold(page batches), and the
-Structured Streaming wrapper drains a directory with availableNow."""
+"""Incremental fold: batch(all pages) == fold(page batches), bucketed
+partial rewrites, replay safety and the fold's tie-break rules."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 
@@ -14,13 +12,12 @@ from serialization_agents_spark.operators.mentions import detect_mentions
 from serialization_agents_spark.operators.merge import merge_entities
 from serialization_agents_spark.streaming.incremental import (
     incremental_merge_batch,
-    stream_pages_to_agents,
 )
 
 
 def _agents_for(spark, pages, authority):
     # include_subjects=True matches run_pipeline, which both the batch
-    # build and the streaming fold run — the reference must scan the
+    # build and the incremental fold run — the reference must scan the
     # same span kinds.
     px = with_extracted_text(pages)
     linked, _ = link_mentions(
@@ -229,22 +226,3 @@ def test_fold_tie_breaks_and_null_arrays(spark):
         assert got["e3"]["name_normalized"] == ["x"]
         assert got["e4"]["name_controlled"] == "Solo"
         assert got["e5"]["name_controlled"] == "New"
-
-
-def test_stream_drains_directory(spark, tmp_path):
-    pages = synth.synth_pages(spark, n_pages=200, n_auth=50)
-    authority = synth.synth_authority(spark, n_auth=50)
-    pages_dir = str(tmp_path / "pages")
-    agents_dir = str(tmp_path / "agents")
-    ckpt = str(tmp_path / "ckpt")
-    pages.write.mode("overwrite").parquet(pages_dir)
-
-    q = stream_pages_to_agents(spark, pages_dir, authority, agents_dir, ckpt)
-    q.awaitTermination(300)
-
-    out = spark.read.parquet(agents_dir)
-    want = _agents_for(spark, pages, authority)
-    assert out.count() == want.count()
-    got_names = {r["entity_key"]: r["name_controlled"] for r in out.collect()}
-    want_names = {r["entity_key"]: r["name_controlled"] for r in want.collect()}
-    assert got_names == want_names

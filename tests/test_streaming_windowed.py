@@ -1,72 +1,9 @@
-"""Watermarked windowed metrics: append-mode finalization, late-data
-drop, and stream == batch on on-time rows."""
+"""Merging session windows: a bridging event fuses two sessions, and the
+gap boundary merges inclusively."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
-
-from serialization_agents_spark.streaming.windowed import (
-    stream_windowed_metrics_to_parquet,
-    windowed_page_metrics,
-)
-
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-HTML = b'<p><span class="agent">Ann Andrews</span></p>'
-
-
-def _rows(ts_list, tag):
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    return [
-        (f"u://{tag}/{i}", base + dt.timedelta(minutes=m), HTML, None, "en")
-        for i, m in enumerate(ts_list)
-    ]
-
-
-def test_windowed_metrics_finalize_and_drop_late_rows(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "metrics")
-    ckpt = str(tmp_path / "ckpt")
-
-    # run 1: W[600:610) x3, W[610:620) x2, plus an advancer at minute 660
-    # -> watermark 660-30=630: the two 10:00-windows finalize, the
-    # advancer's own window stays open.
-    run1 = _rows([601, 602, 603], "w1") + _rows([612, 615], "w2") + _rows([660], "adv")
-    spark.createDataFrame(run1, PAGES_SCHEMA).write.mode("overwrite").parquet(pages_dir)
-    q = stream_windowed_metrics_to_parquet(spark, pages_dir, out_dir, ckpt)
-    q.awaitTermination(300)
-
-    got1 = {
-        (r["window_start"].minute + 60 * r["window_start"].hour): r["n_pages"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got1 == {600: 3, 610: 2}
-
-    # run 2: a LATE row for the finalized 600-window (must be dropped)
-    # plus an advancer at 705 -> watermark 675: the 660-window finalizes
-    # WITHOUT the late row; the finalized 600-window is never re-emitted.
-    run2 = _rows([605], "late") + _rows([705], "adv2")
-    spark.createDataFrame(run2, PAGES_SCHEMA).write.mode("append").parquet(pages_dir)
-    q = stream_windowed_metrics_to_parquet(spark, pages_dir, out_dir, ckpt)
-    q.awaitTermination(300)
-
-    out = spark.read.parquet(out_dir).collect()
-    got2 = {
-        (r["window_start"].minute + 60 * r["window_start"].hour): r["n_pages"]
-        for r in out
-    }
-    assert got2 == {600: 3, 610: 2, 660: 1}  # late row dropped everywhere
-    assert all(r["n_mentions"] == r["n_pages"] for r in out)  # 1 span/page
-
-    # stream == batch on the on-time rows of finalized windows
-    on_time = spark.createDataFrame(run1, PAGES_SCHEMA)
-    batch = {
-        (r["window_start"].minute + 60 * r["window_start"].hour): r["n_pages"]
-        for r in windowed_page_metrics(on_time).collect()
-    }
-    assert {k: batch[k] for k in got2} == got2
-
 
 EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -103,48 +40,3 @@ def test_session_window_batch_fusion_and_boundary(spark):
         )
     )
     assert session_metrics(past).count() == 2
-
-
-def test_session_window_stream_append_and_late_drop(spark, tmp_path):
-    from serialization_agents_spark.streaming.windowed import (
-        session_metrics,
-        stream_session_metrics_to_parquet,
-    )
-
-    events_dir = str(tmp_path / "events")
-    out_dir = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-
-    # run 1: u1 sessions [0,10] (end 40) and [100] (end 130); u9
-    # advancer at 600 pushes the watermark to 540 -> both u1 sessions
-    # finalize, the advancer's own session (end 630) stays in state.
-    run1 = [_ev(0, 0, 1), _ev(1, 10, 1), _ev(2, 100, 1), _ev(3, 600, 9)]
-    spark.createDataFrame(run1, EV_SCHEMA).write.mode("append").parquet(events_dir)
-    q = stream_session_metrics_to_parquet(spark, events_dir, out_dir, ckpt)
-    assert q.awaitTermination(300) and q.exception() is None
-
-    got1 = {
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = session_metrics(spark.createDataFrame(run1, EV_SCHEMA))
-    ontime = {  # batch sessions whose end <= watermark (minute 540)
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in batch.collect()
-        if r["session_end"] <= dt.datetime(2024, 1, 1, 9, 0, 0)
-    }
-    assert got1 == ontime and len(got1) == 2
-
-    # run 2: a LATE u1 event at minute 5 (session end 35 << watermark
-    # 540) must be dropped; a new advancer at 1500 (watermark 1440)
-    # flushes the u9 session from run 1.
-    run2 = [_ev(4, 5, 1), _ev(5, 1500, 9)]
-    spark.createDataFrame(run2, EV_SCHEMA).write.mode("append").parquet(events_dir)
-    q = stream_session_metrics_to_parquet(spark, events_dir, out_dir, ckpt)
-    assert q.awaitTermination(300) and q.exception() is None
-
-    rows = spark.read.parquet(out_dir).collect()
-    u1 = sorted(r["session_start"] for r in rows if r["user_id"] == 1)
-    assert len(u1) == 2  # the late event created NO third u1 session
-    u9 = [r for r in rows if r["user_id"] == 9]
-    assert [r["n_events"] for r in u9] == [1]  # run-1 advancer emitted
