@@ -1,8 +1,7 @@
 """As-of join: for every left row, the single most recent right row at
-or before (backward) / the earliest at or after (forward) its
-timestamp, per key — the point-in-time lookup Spark lacks as a builtin
-(no analogue in the reference either; its joins are key-equality point
-lookups, serialization-agents lib/utils.js).
+or before its timestamp, per key — the point-in-time lookup Spark lacks
+as a builtin (no analogue in the reference either; its joins are
+key-equality point lookups, serialization-agents lib/utils.js).
 
 Implemented as the union-window pattern, NOT a range join:
 
@@ -31,7 +30,7 @@ Scale notes (10^12 events):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -42,25 +41,15 @@ def asof_join(
     on: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
-    direction: str = "backward",
-    tolerance: int | None = None,
     tiebreak: str | None = None,
     prefix: str = "asof_",
 ) -> DataFrame:
-    """Left rows plus `asof_<col>` columns from the matched right row
-    (NULL when no right row qualifies).
+    """Left rows plus `asof_<col>` columns from the latest right row with
+    right_ts <= left_ts (NULL when no right row qualifies).
 
-    direction='backward': latest right row with right_ts <= left_ts.
-    direction='forward':  earliest right row with right_ts >= left_ts.
-    `tolerance` (same units as the ts columns, which must be numeric —
-    cast timestamps to epoch micros first): a backward match older than
-    left_ts - tolerance (resp. forward match beyond left_ts +
-    tolerance) is nulled out.
     `tiebreak`: right column ordering equal-timestamp right rows; the
-    greatest (backward) / least (forward) wins. Defaults to right_ts.
+    greatest wins. Defaults to right_ts.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
     tiebreak = tiebreak or right_ts
 
     right_payload = [c for c in right.columns if c != on]
@@ -90,31 +79,14 @@ def asof_join(
     )
     u = l_side.unionByName(r_side)
 
-    if direction == "backward":
-        order = [F.col("_ts").asc(), F.col("_side").asc(), F.col("_tie").asc_nulls_last()]
-    else:
-        # traverse from the future backwards; right rows at an equal ts
-        # still precede left rows, and the LEAST tiebreak must be the
-        # last right row seen before the left row.
-        order = [F.col("_ts").desc(), F.col("_side").asc(), F.col("_tie").desc_nulls_last()]
     w = (
         Window.partitionBy("_k")
-        .orderBy(*order)
+        .orderBy(F.col("_ts").asc(), F.col("_side").asc(), F.col("_tie").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = u.withColumn("_m", F.last("_r", ignorenulls=True).over(w)).where(
         F.col("_side") == 1
     )
-
-    m_ts: Column = F.col(f"_m.{right_ts}")
-    if tolerance is not None:
-        if direction == "backward":
-            ok = m_ts >= F.col("_ts") - F.lit(tolerance)
-        else:
-            ok = m_ts <= F.col("_ts") + F.lit(tolerance)
-        matched = matched.withColumn(
-            "_m", F.when(ok, F.col("_m"))
-        )
 
     out_cols = [F.col(f"_l.{c}").alias(c) for c in left.columns] + [
         F.col(f"_m.{c}").alias(f"{prefix}{c}") for c in right_payload

@@ -10,12 +10,6 @@ Scale notes (100 TB corpus, benchmark suites ~10^6 grams):
   corpus side explodes into n-grams (narrow, no shuffle) and probes the
   broadcast hash table — the whole flag pass is shuffle-free until the
   final per-doc aggregation, ONE hash agg on doc_id.
-- `hash_grams=True` joins on xxhash64 of the gram instead of the gram
-  string: the broadcast table shrinks ~10x (8-byte keys vs ~40-byte
-  strings) and probe equality is long-vs-long. False positives need a
-  64-bit collision against a benchmark gram — negligible, and the gate
-  is conservative (a false positive only drops one training doc).
-  Default False so the DuckDB oracle replays string-equality exactly.
 """
 
 from __future__ import annotations
@@ -32,16 +26,12 @@ def benchmark_ngrams(
     benchmark: DataFrame,
     text_col: str = "text",
     k: int = SHINGLE_K,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Distinct word k-grams of the benchmark suite — the (small)
     lookup side of the contamination join."""
-    grams = benchmark.select(
+    return benchmark.select(
         F.explode(shingles(F.col(text_col), k)).alias("gram")
     ).distinct()
-    if hash_grams:
-        grams = grams.select(F.xxhash64("gram").alias("gram"))
-    return grams
 
 
 def contamination_report(
@@ -50,14 +40,13 @@ def contamination_report(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = SHINGLE_K,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """One row per contaminated corpus doc: (doc_id, n_hits) where
     n_hits counts the doc's distinct k-grams that appear anywhere in
     the benchmark. Corpus grams explode narrowly and probe the
     broadcast benchmark set; the only shuffle is the final doc_id agg.
     """
-    grams = benchmark_ngrams(benchmark, text_col=text_col, k=k, hash_grams=hash_grams)
+    grams = benchmark_ngrams(benchmark, text_col=text_col, k=k)
     # the gram explode + hash probe is the narrow hot loop — fan an
     # under-parallel corpus scan out before paying it, and materialize
     # the token array so the gram lambda does not re-split per position
@@ -75,8 +64,6 @@ def contamination_report(
         "doc_id",
         F.explode(shingles_from_tokens(F.col("_toks"), k)).alias("gram"),
     )
-    if hash_grams:
-        doc_grams = doc_grams.select("doc_id", F.xxhash64("gram").alias("gram"))
     return (
         doc_grams.join(broadcast(grams), "gram")
         .groupBy("doc_id")

@@ -10,7 +10,7 @@ dedup so dropped docs never pay later stages):
 2. language gate    — keep target language (marker-n-gram lang_id)
 3. quality gate     — Gopher/C4 heuristic quality score >= threshold
 4. repetition gate  — duplicate-3-gram fraction <= threshold
-5. chunk dedup      — CCNet keep-first paragraph/chunk dedup ACROSS the
+5. chunk dedup      — CCNet keep-first word-window chunk dedup ACROSS the
                       surviving docs (boilerplate shared by survivors is
                       kept once, in the lowest-(doc_id, idx) occurrence)
 
@@ -43,15 +43,13 @@ def curate_corpus(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lang: str | None = "en",
     min_quality: float = 0.5,
     max_dup3: float = 0.5,
     chunk_words: int = 12,
-    paragraph_delim: str | None = None,
 ) -> DataFrame:
     """Run the full cascade; returns one row per input document:
     (id, status, lang_pred, quality, dup_3gram_fraction, total_chunks,
-    kept_chunks). `lang=None` disables the language gate.
+    kept_chunks). The language gate keeps English ('en').
     """
     text = F.col(text_col)
     rep = T.repetition_features(text)
@@ -78,10 +76,9 @@ def curate_corpus(
         "left",
     )
 
-    lang_ok = F.lit(True) if lang is None else (F.col("lang_pred") == F.lit(lang))
     status = (
         F.when(F.col("__keeper").isNull(), F.lit("duplicate"))
-        .when(~lang_ok, F.lit("lang"))
+        .when(F.col("lang_pred") != F.lit("en"), F.lit("lang"))
         .when(F.col("quality") < F.lit(min_quality), F.lit("quality"))
         .when(F.col("dup_3gram_fraction") > F.lit(max_dup3), F.lit("repetition"))
         .otherwise(F.lit("kept"))
@@ -97,7 +94,6 @@ def curate_corpus(
         text_col=text_col,
         id_col=id_col,
         chunk_words=chunk_words,
-        paragraph_delim=paragraph_delim,
         # the cascade's earlier exchanges already distribute survivors;
         # the fan-out probe would re-plan the whole cascade subtree
         fan_out=False,

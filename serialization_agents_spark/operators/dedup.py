@@ -17,13 +17,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
 
 from serialization_agents_spark.parallel import spread
 
 N_HASHES = 16
 BAND_SIZE = 4  # 4 bands x 4 rows: s-curve threshold ~ (1/4)^(1/4) ~ 0.7
 SHINGLE_K = 3
+WINNOW_W = 4  # gram hashes per winnowing window
+WINNOW_MAX_BUCKET = 4096  # docs per fingerprint before winnow_pairs drops it
 
 
 def _tokens(text: Column) -> Column:
@@ -147,41 +148,15 @@ def minhash_candidate_pairs(
     id_col: str = "doc_id",
     n_hashes: int = N_HASHES,
     band_size: int = BAND_SIZE,
-    max_bucket: int | None = None,
     hash_fn: str = "md5",
 ) -> DataFrame:
     """LSH bucket-join: docs sharing any band key become a candidate pair.
     Shuffle is keyed by band value — never a cross join.
 
-    `max_bucket` caps the bucket size (None = uncapped, the exact-oracle
-    default). Use minhash_candidate_pairs_capped at scale — it also
-    returns the dropped-bucket accounting."""
-    pairs, _dropped = minhash_candidate_pairs_capped(
-        df, text_col, id_col, n_hashes, band_size, max_bucket, hash_fn
-    )
-    return pairs
-
-
-def minhash_candidate_pairs_capped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-    max_bucket: int | None = 256,
-    hash_fn: str = "md5",
-) -> tuple[DataFrame, DataFrame]:
-    """LSH candidate pairs with a degenerate-bucket cap.
-
-    A band bucket of k docs yields k(k-1)/2 pairs; boilerplate-identical
-    or empty documents can land a whole corpus slice in ONE bucket and
-    go quadratic at scale. Standard practice is to drop (or sample)
-    buckets over a threshold and account for the drop — near-identical
-    docs in a dropped bucket are still caught by exact dedup on the
-    content hash (operators/dedup.py:exact_duplicates).
-
-    Returns (pairs, dropped_buckets(band, bucket_size)); accounting
-    for the dropped buckets is the caller's.
+    Buckets are uncapped, as the DuckDB oracle replays them: a band
+    bucket of k docs yields k(k-1)/2 pairs, so k identical documents
+    cost quadratic pairs here; exact_duplicates finds the same groups
+    in one shuffle on the content hash.
     """
     sigs = minhash_signatures(df, text_col, id_col, n_hashes, band_size, hash_fn)
     n_bands = n_hashes // band_size
@@ -194,41 +169,26 @@ def minhash_candidate_pairs_capped(
         F.col(id_col),
         F.explode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias("band"),
     )
-
-    if max_bucket is not None:
-        sizes = bands.groupBy("band").agg(F.count(F.lit(1)).alias("bucket_size"))
-        dropped = sizes.where(F.col("bucket_size") > max_bucket)
-        # anti-join keeps the fact flow one broadcastable dimension away
-        # from the uncapped plan (dropped buckets are few by construction)
-        bands = bands.join(broadcast(dropped.select("band")), "band", "left_anti")
-    else:
-        dropped = (
-            bands.select("band").limit(0).withColumn("bucket_size", F.lit(0).cast("long"))
-        )
-
     a = bands.select(F.col("band"), F.col(id_col).alias("id_a"))
     b = bands.select(F.col("band"), F.col(id_col).alias("id_b"))
-    pairs = (
+    return (
         a.join(b, "band")
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates()
     )
-    return pairs, dropped
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    pairs: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs (default: LSH candidates).
-    Verification stage of the near-dup pipeline; only candidate pairs are
-    scored, so cost is O(candidates), not O(n^2)."""
-    if pairs is None:
-        pairs = minhash_candidate_pairs(df, text_col, id_col)
+    """Exact n-gram Jaccard for the LSH candidate pairs. Verification
+    stage of the near-dup pipeline; only candidate pairs are scored, so
+    cost is O(candidates), not O(n^2)."""
+    pairs = minhash_candidate_pairs(df, text_col, id_col)
     sh = df.select(F.col(id_col), shingles(F.col(text_col)).alias("sh"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
@@ -283,20 +243,16 @@ def chunk_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     chunk_words: int = 12,
-    paragraph_delim: str | None = None,
     fan_out: bool = True,
 ) -> DataFrame:
-    """Paragraph/chunk-level exact dedup (the CCNet recipe, Wenzek et al.
-    2020 — public): split every document into units, hash each unit, keep
-    only the globally FIRST occurrence of each distinct unit (ordered by
-    (id, position)), and reassemble the surviving text per document.
-    Boilerplate paragraphs (nav bars, cookie banners, footers) repeat
-    across millions of pages and vanish here while unique prose survives.
-
-    `paragraph_delim` (a split regex, e.g. r"\\n{2,}") selects real
-    paragraph mode for corpora with layout; corpora without newlines
-    (or token streams) use fixed `chunk_words` windows over the
-    whitespace tokens — same algebra, same dedup semantics.
+    """Chunk-level exact dedup (the CCNet recipe, Wenzek et al. 2020 —
+    public): split every document into fixed `chunk_words` windows over
+    its whitespace tokens, hash each unit, keep only the globally FIRST
+    occurrence of each distinct unit (ordered by (id, position)), and
+    reassemble the surviving text per document. Boilerplate (nav bars,
+    cookie banners, footers) repeats across millions of pages and
+    vanishes here while unique prose survives. Word windows stand in
+    for CCNet's newline paragraphs: the corpus text carries no layout.
 
     Scale shape: one narrow explode (each doc yields its own chunks), ONE
     shuffle on the chunk hash for the keep-first window (hash groups are
@@ -315,25 +271,17 @@ def chunk_dedup(
     df = df.select(F.col(id_col), F.col(text_col))
     if fan_out:
         df = spread(df)
-    if paragraph_delim is not None:
-        chunks = F.filter(
-            F.transform(
-                F.split(F.col(text_col), paragraph_delim), lambda p: F.trim(p)
+    toks = _tokens(F.col(text_col))
+    n_chunks = F.ceil(F.size(toks) / F.lit(float(chunk_words))).cast("int")
+    chunks = F.when(
+        F.size(toks) > 0,
+        F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.array_join(
+                F.slice(toks, i * chunk_words + 1, chunk_words), " "
             ),
-            lambda p: p != "",
-        )
-    else:
-        toks = _tokens(F.col(text_col))
-        n_chunks = F.ceil(F.size(toks) / F.lit(float(chunk_words))).cast("int")
-        chunks = F.when(
-            F.size(toks) > 0,
-            F.transform(
-                F.sequence(F.lit(0), n_chunks - 1),
-                lambda i: F.array_join(
-                    F.slice(toks, i * chunk_words + 1, chunk_words), " "
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
     exploded = (
         df.select(F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk"))
@@ -498,19 +446,18 @@ def repeated_span_stats(
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = 10,
-    w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
     MOSS algorithm): hash every k-token gram, then keep the MINIMUM
-    hash of each window of `w` consecutive gram hashes. Guarantee: any
-    span shared by two documents of length >= k + w - 1 tokens shares
-    at least one fingerprint, at ~2/(w+1) sampling density — the
-    content-defined sampler that makes span-level dedup affordable
-    where repeated_span_stats' stride-1 enumeration is the exact but
-    row-heavy path.
+    hash of each window of w = WINNOW_W (4) consecutive gram hashes.
+    Guarantee: any span shared by two documents of length >= k + w - 1
+    tokens shares at least one fingerprint, at ~2/(w+1) sampling
+    density — the content-defined sampler that makes span-level dedup
+    affordable where repeated_span_stats' stride-1 enumeration is the
+    exact but row-heavy path.
 
     hash_fn='md5' keeps hex-string hashes so a SQL oracle reproduces
     fingerprints bit-for-bit (lexicographic min); 'xxhash64' is the
@@ -531,7 +478,7 @@ def winnow_fingerprints(
     # stage at sf1.0. The gram build and hash then FUSE into a single
     # transform (no intermediate gram-string array materialized).
     toked = (
-        docs.where(F.size(toks) >= k + w - 1)
+        docs.where(F.size(toks) >= k + WINNOW_W - 1)
         .select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
         .localCheckpoint(eager=False)
     )
@@ -545,7 +492,7 @@ def winnow_fingerprints(
     # ENTIRE hs transform — O(len^2 * k) hash calls per doc, measured
     # 60x slower at sf0.1. One linear hash pass, then O(len * w) mins.
     hashed = toked.select("doc_id", hs.alias("_hs")).localCheckpoint(eager=False)
-    # Sliding-window min via two doubling zip_with passes (w = 4):
+    # Sliding-window min via two doubling zip_with passes (WINNOW_W = 4):
     #   a[j] = min(hs[j], hs[j+1]);  b[j] = min(a[j], a[j+2])
     #         = min(hs[j..j+3])  for j <= L-4
     # — two linear array passes instead of one slice + array_min
@@ -554,22 +501,14 @@ def winnow_fingerprints(
     # partial-window junk; the final slice keeps exactly the L-w+1 full
     # windows. Same mins, same values (least == array_min over the same
     # 4 elements, longs and md5 hex strings alike).
-    if w != 4:  # generic fallback for non-default windows
-        fps = F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(F.col("_hs")) - w),
-                lambda j: F.array_min(F.slice(F.col("_hs"), j + 1, w)),
-            )
-        )
-    else:
-        hs_c = F.col("_hs")
-        a = F.zip_with(
-            hs_c, F.slice(hs_c, 2, F.size(hs_c) - 1), lambda x, y: F.least(x, y)
-        )
-        b = F.zip_with(
-            a, F.slice(a, 3, F.size(hs_c) - 2), lambda x, y: F.least(x, y)
-        )
-        fps = F.array_distinct(F.slice(b, 1, F.size(hs_c) - (w - 1)))
+    hs_c = F.col("_hs")
+    a = F.zip_with(
+        hs_c, F.slice(hs_c, 2, F.size(hs_c) - 1), lambda x, y: F.least(x, y)
+    )
+    b = F.zip_with(
+        a, F.slice(a, 3, F.size(hs_c) - 2), lambda x, y: F.least(x, y)
+    )
+    fps = F.array_distinct(F.slice(b, 1, F.size(hs_c) - (WINNOW_W - 1)))
     # (doc_id, fp) is globally DISTINCT by construction: `hashed` has one
     # row per doc and fps is array_distinct per row — a cross-row
     # .distinct() here would re-shuffle every fingerprint to prove a
@@ -581,34 +520,26 @@ def winnow_fingerprints(
 def winnow_pairs(
     docs: DataFrame,
     k: int = 10,
-    w: int = 4,
     min_shared: int = 1,
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5",
-    max_bucket: int | None = 4096,
 ) -> tuple[DataFrame, DataFrame]:
     """Document pairs sharing >= min_shared winnowing fingerprints:
     (id_a, id_b, n_shared). The fingerprint is the blocking key — a
-    within-fingerprint self-join, never all-pairs — with the same
-    bucket-cap + drop-audit contract as minhash_candidate_pairs_capped
-    (boilerplate fingerprints are the hot keys at 100 TB; capped
-    buckets are reported, not silently joined).
+    within-fingerprint self-join, never all-pairs. A fingerprint shared
+    by more than WINNOW_MAX_BUCKET docs is dropped (boilerplate
+    fingerprints are the hot keys at 100 TB) and returned, not
+    silently joined; logging the drop is the caller's.
 
     Returns (pairs, dropped_fingerprints(fp, bucket_size)).
     """
     fps = winnow_fingerprints(
-        docs, k=k, w=w, text_col=text_col, id_col=id_col, hash_fn=hash_fn
+        docs, k=k, text_col=text_col, id_col=id_col, hash_fn=hash_fn
     ).localCheckpoint(eager=False)  # feeds bucket sizes + both join sides
     sizes = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("bucket_size"))
-    if max_bucket is not None:
-        dropped = sizes.where(F.col("bucket_size") > max_bucket)
-        keep = fps.join(
-            F.broadcast(dropped.select("fp")), "fp", "left_anti"
-        )
-    else:
-        dropped = sizes.where(F.lit(False))
-        keep = fps
+    dropped = sizes.where(F.col("bucket_size") > WINNOW_MAX_BUCKET)
+    keep = fps.join(F.broadcast(dropped.select("fp")), "fp", "left_anti")
     a = keep.select(F.col("fp"), F.col("doc_id").alias("id_a"))
     b = keep.select(F.col("fp"), F.col("doc_id").alias("id_b"))
     pairs = (

@@ -205,13 +205,13 @@ def label_propagation(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """(node, label) after `iterations` SYNCHRONOUS label-propagation
     steps — the community-detection sibling of `pagerank`, deterministic
     by construction where classic async LPA is run-order-dependent:
-    every node updates from the same previous-round labels, weights are
-    integers (sum order cannot perturb), and ties break to the SMALLEST
+    every node updates from the same previous-round labels, edge weights
+    (the `w` column) are integers (sum order cannot perturb), and ties
+    break to the SMALLEST
     label. label_0(v) = v; label_{t+1}(v) = argmax_l sum of incident
     edge weights whose far end carries l at round t (isolated nodes
     keep their label).
@@ -223,13 +223,10 @@ def label_propagation(
     isolated nodes. Per-iteration localCheckpoint truncates the lineage
     exactly like the CC and PageRank loops.
     """
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
     half = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
+        F.col(src_col).alias("src"),
+        F.col(dst_col).alias("dst"),
+        F.col("w").cast("long").alias("w"),
     ).where(F.col("src") != F.col("dst"))
     und = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")

@@ -5,41 +5,22 @@ decode / feature-extract / resize / frame-sample run as Arrow-batched
 pandas UDFs over ``mapInPandas`` so each task streams record batches
 without materializing whole partitions.
 
-The actual codecs (PIL/ffmpeg/librosa) are NOT in this container, so the
-decode kernels are STUBBED by default: with ``fake=True`` a
-deterministic fake decoder (derived from the bytes' md5) exercises the
-full Spark-side path — schema, batching, partitioning — which is what
-the tests cover. The module PROBES for PIL at import: in an environment
-that has it, ``fake=False`` lights up the real image decode/resize
-kernels with no code changes (guarded tests skip when PIL is absent);
-audio/video stay gated on librosa/ffmpeg the same way.
+The codecs (PIL/ffmpeg/librosa/soundfile) are not dependencies of this
+package, so every kernel runs a deterministic stand-in decoder derived
+from the bytes' md5. It exercises the full Spark-side path — schema,
+batching, partitioning — and the DuckDB oracles in queries/media.py
+replay it exactly. A real codec slots into the same kernels with the
+identical (schema, fan-out, batching) shape.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # opportunistic codec probe — sandbox default is absent
-    from PIL import Image as _PILImage
-
-    _HAVE_PIL = True
-except ImportError:
-    _PILImage = None
-    _HAVE_PIL = False
-
-try:  # same probe pattern for audio (soundfile wraps libsndfile)
-    import soundfile as _soundfile
-
-    _HAVE_SOUNDFILE = True
-except ImportError:
-    _soundfile = None
-    _HAVE_SOUNDFILE = False
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, content binary, "
@@ -54,8 +35,7 @@ IMAGE_FEATURES_SCHEMA = (
 
 def _fake_decode(content: bytes, n_features: int = 8) -> tuple[int, int, int, list[float]]:
     """Deterministic stand-in for a real image decode: dimensions and a
-    feature vector derived from the content digest. Replaces PIL, which
-    is unavailable here; the Spark-side plumbing is identical."""
+    feature vector derived from the content digest, in place of PIL."""
     d = hashlib.md5(content or b"").digest()
     width = 16 + d[0] % 240
     height = 16 + d[1] % 240
@@ -63,33 +43,11 @@ def _fake_decode(content: bytes, n_features: int = 8) -> tuple[int, int, int, li
     return width, height, 3, feats
 
 
-def _real_decode(content: bytes, n_features: int = 8) -> tuple[int, int, int, list[float]]:
-    """PIL-backed decode (active when the import probe found PIL and the
-    caller passes fake=False): dimensions + a 2x4-grid mean-intensity
-    feature vector — same signature/shape as `_fake_decode`."""
-    img = _PILImage.open(io.BytesIO(content)).convert("RGB")
-    w, h = img.size
-    thumb = img.resize((4, 2))
-    px = list(thumb.getdata())  # 8 RGB tuples, row-major
-    feats = [round(sum(p) / (3 * 255.0), 6) for p in px[:n_features]]
-    return w, h, 3, feats
-
-
-def decode_image_batches(fake: bool = True, batch_limit: int = 1024):
+def decode_image_batches(batch_limit: int = 1024):
     """Returns a mapInPandas kernel: Iterator[pd.DataFrame] -> Iterator[...].
 
-    `fake=False` uses the PIL kernel when the import probe found PIL
-    (undecodable rows degrade to decode_ok=False, never a task failure);
-    without PIL it raises so a misconfigured cluster fails loudly at
-    plan time instead of emitting fake features.
+    Undecodable rows degrade to decode_ok=False, never a task failure.
     """
-    if not fake and not _HAVE_PIL:
-        raise NotImplementedError(
-            "real image decoding requires PIL/torchvision; not present in "
-            "this environment (import probe) — pass fake=True to exercise "
-            "the pipeline with the deterministic stub decoder"
-        )
-    decode = _fake_decode if fake else _real_decode
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -99,7 +57,7 @@ def decode_image_batches(fake: bool = True, batch_limit: int = 1024):
                 rows = []
                 for mid, content in zip(chunk["media_id"], chunk["content"]):
                     try:
-                        w, h, c, feats = decode(bytes(content or b""))
+                        w, h, c, feats = _fake_decode(bytes(content or b""))
                         rows.append((mid, w, h, c, feats, True))
                     except Exception:
                         rows.append((mid, None, None, None, None, False))
@@ -114,7 +72,7 @@ def decode_image_batches(fake: bool = True, batch_limit: int = 1024):
     return kernel
 
 
-def extract_image_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_image_features(media: DataFrame) -> DataFrame:
     """media(media_id, kind, content, meta) -> IMAGE_FEATURES rows.
 
     Narrow op: mapInPandas streams Arrow batches; no shuffle. Filter
@@ -122,7 +80,7 @@ def extract_image_features(media: DataFrame, fake: bool = True) -> DataFrame:
     bytes cross the JVM->Arrow boundary.
     """
     images = media.where(F.col("kind") == "image").select("media_id", "content")
-    return images.mapInPandas(decode_image_batches(fake=fake), IMAGE_FEATURES_SCHEMA)
+    return images.mapInPandas(decode_image_batches(), IMAGE_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -146,38 +104,10 @@ def _fake_audio_decode(content: bytes, n_features: int = 8) -> tuple[int, list[f
     return duration_ms, feats
 
 
-def _real_audio_decode(content: bytes, n_features: int = 8) -> tuple[int, list[float]]:
-    """soundfile-backed decode (active when the import probe found
-    soundfile and the caller passes fake=False): true duration plus a
-    mean-|amplitude| summary over n_features equal time segments — same
-    (duration_ms, feats) signature as `_fake_audio_decode`."""
-    import numpy as np
-
-    samples, sr = _soundfile.read(io.BytesIO(content), dtype="float32")
-    if samples.ndim > 1:  # downmix channels
-        samples = samples.mean(axis=1)
-    duration_ms = int(len(samples) * 1000 / sr)
-    segs = np.array_split(np.abs(samples), n_features)
-    feats = [round(float(s.mean()) if len(s) else 0.0, 6) for s in segs]
-    return duration_ms, feats
-
-
-def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """media -> AUDIO_FEATURES rows (narrow mapInPandas; `kind` filter
     pushed down before the Python stage, sample_rate carried from meta).
-
-    `fake=False` uses the soundfile kernel when the import probe found it
-    (undecodable rows degrade to decode_ok=False, never a task failure);
-    without soundfile it raises so a misconfigured cluster fails loudly
-    at plan time instead of emitting fake features — the same probe
-    contract as the image paths."""
-    if not fake and not _HAVE_SOUNDFILE:
-        raise NotImplementedError(
-            "real audio decoding requires soundfile/librosa, not present "
-            "in this environment (import probe) — pass fake=True to "
-            "exercise the pipeline with the deterministic stub decoder"
-        )
-    decode = _fake_audio_decode if fake else _real_audio_decode
+    Undecodable rows degrade to decode_ok=False, never a task failure."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -186,7 +116,7 @@ def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 pdf["media_id"], pdf["content"], pdf["sample_rate"]
             ):
                 try:
-                    dur, feats = decode(bytes(content or b""))
+                    dur, feats = _fake_audio_decode(bytes(content or b""))
                     rows.append((mid, sr, dur, feats, True))
                 except Exception:
                     rows.append((mid, sr, None, None, False))
@@ -202,17 +132,11 @@ def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
 
 def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 16, fake: bool = True
+    media: DataFrame, every_ms: int = 1000, max_frames: int = 16
 ) -> DataFrame:
-    """UDTF-shaped fan-out: one row per sampled frame. The fake decoder
-    derives a deterministic duration from the digest and emits md5-chained
-    frame payloads; a real deployment swaps in ffmpeg keyframe extraction
-    with the identical (schema, fan-out, batching) shape."""
-    if not fake:
-        raise NotImplementedError(
-            "real frame sampling requires ffmpeg, not present in this "
-            "environment; pass fake=True to exercise the pipeline"
-        )
+    """UDTF-shaped fan-out: one row per sampled frame. The stand-in
+    decoder derives a deterministic duration from the digest and emits
+    md5-chained frame payloads, in place of ffmpeg keyframe extraction."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -233,28 +157,16 @@ def sample_video_frames(
 
 
 def resize_images(
-    media: DataFrame, width: int = 64, height: int = 64, fake: bool = True
+    media: DataFrame, width: int = 64, height: int = 64
 ) -> DataFrame:
-    """Image resize kernel (PIL when the import probe found it and
-    fake=False); the fake path emits a digest-derived payload of
-    deterministic size so the Spark-side shape — narrow map, binary out,
-    metadata columns — is real either way. Unresizable rows degrade to a
-    NULL payload with resize_ok=False, never a task failure."""
-    if not fake and not _HAVE_PIL:
-        raise NotImplementedError(
-            "real resizing requires PIL; not present in this environment "
-            "(import probe) — pass fake=True to exercise the pipeline"
-        )
+    """Image resize kernel: in place of PIL, it emits a digest-derived
+    payload of width*height bytes, so the Spark-side shape — narrow map,
+    binary out, metadata columns — is real. Unresizable rows degrade to
+    a NULL payload with resize_ok=False, never a task failure."""
 
-    def _resize_real(content: bytes) -> bytes:
-        img = _PILImage.open(io.BytesIO(content)).convert("RGB")
-        return img.resize((width, height)).tobytes()  # raw RGB, w*h*3 bytes
-
-    def _resize_fake(content: bytes) -> bytes:
+    def resize(content: bytes) -> bytes:
         seed = hashlib.md5(content + f"{width}x{height}".encode()).digest()
         return (seed * ((width * height) // len(seed) + 1))[: width * height]
-
-    resize = _resize_fake if fake else _resize_real
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

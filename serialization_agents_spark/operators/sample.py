@@ -66,34 +66,29 @@ def sample_corpus(
 
 def mixture_sample(
     df: DataFrame,
-    alpha: float = 0.5,
     stratum_col: str = "source",
     id_col: str = "doc_id",
     seed: str = "mix",
 ) -> DataFrame:
     """Temperature-based mixture rebalancing: DERIVE per-domain keep
     rates from the observed domain counts instead of taking them as
-    config. The target share of domain d is count_d^alpha / sum_e
-    count_e^alpha (alpha < 1 flattens the head and upweights the tail —
-    the standard unigram-temperature mixing rule); the keep rate is
+    config. The target share of domain d is count_d^0.5 / sum_e
+    count_e^0.5 (the exponent < 1 flattens the head and upweights the
+    tail — the standard unigram-temperature mixing rule); the keep rate is
     min(1, share_d * total / count_d), i.e. downsample-only: head
     domains are cut to their target share, tail domains keep everything
     (upsampling is an epoch-count concern, not a filter's).
 
-    Cross-engine exactness: count^alpha is a float, and float SUMS are
+    Cross-engine exactness: count^0.5 is a float, and float SUMS are
     order-dependent, so the weight is floored to integer micro-units
-    (floor(count^alpha * 1e6)) BEFORE the sum — the denominator is then
+    (floor(sqrt(count) * 1e6)) BEFORE the sum — the denominator is then
     an exact integer and the rate is two IEEE divisions and a multiply
     on identical operands, bit-identical in any engine. All JVM-side:
     the per-domain table is a tiny agg cross-joined back (broadcast).
     """
-    # sqrt is IEEE correctly-rounded everywhere; pow is only ~1-ulp, so
-    # alpha=0.5 (the default) routes through sqrt for bit-exact parity
-    # with any oracle engine. Other alphas keep pow: the micro-unit
-    # floor then carries a 1-ulp cross-engine risk at integer edges.
-    base = F.col("__cnt").cast("double")
-    powered = F.sqrt(base) if float(alpha) == 0.5 else F.pow(base, F.lit(float(alpha)))
-    w_units = F.floor(powered * F.lit(1e6)).cast("long")
+    # sqrt, not pow(x, 0.5): sqrt is IEEE correctly-rounded everywhere,
+    # pow only ~1-ulp, so the micro-unit floor is bit-exact in any engine
+    w_units = F.floor(F.sqrt(F.col("__cnt").cast("double")) * F.lit(1e6)).cast("long")
     dims = (
         df.groupBy(stratum_col)
         .agg(F.count(F.lit(1)).alias("__cnt"))

@@ -16,8 +16,8 @@
   their best `n_probes` cells. Deterministic LCG centroids; ``kmeans_lloyd``
   runs quantized Lloyd iterations over the same init.
 - ``embedding_neardup_pairs`` — the dedup-family face of this module:
-  sign-LSH blocked self-join + exact cosine ≥ threshold, with the same
-  degenerate-bucket cap + drop-accounting as the MinHash pipeline.
+  sign-LSH blocked self-join + exact cosine ≥ threshold, with a
+  degenerate-bucket cap that returns the dropped buckets.
 
 At 100 TB / billions of vectors the brute force is only for re-ranking
 within buckets/cells; LSH and IVF are the scale paths.
@@ -55,10 +55,10 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int | None = 4,
 ) -> DataFrame:
     """Brute-force cosine top-k: every query row against every corpus row.
-    queries must be small (it is broadcast); corpus side streams."""
+    queries must be small (it is broadcast); corpus side streams. Cosine
+    is rounded to 4dp before the ranking, for oracle parity."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -70,9 +70,7 @@ def cosine_topk(
     scored = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = cosine(F.col("qv"), F.col("cv"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
+    sim = F.round(cosine(F.col("qv"), F.col("cv")), 4)
     scored = scored.select("query_id", "neighbor_id", sim.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -526,6 +524,9 @@ def kmeans_lloyd(
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-duplicate pairs (dedup-family member)
 # ---------------------------------------------------------------------------
+NEARDUP_MAX_BUCKET = 4096  # vectors per LSH bucket before it is dropped
+
+
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.35,
@@ -534,7 +535,6 @@ def embedding_neardup_pairs(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket: int | None = 4096,
 ) -> tuple[DataFrame, DataFrame]:
     """Near-duplicate (id_a, id_b, cosine) pairs: sign-LSH blocking
     (self-join within buckets, never all-pairs) + exact cosine >=
@@ -543,9 +543,9 @@ def embedding_neardup_pairs(
 
     Scale: bucket count is 2^n_planes — grow n_planes with the corpus so
     per-bucket membership stays bounded; degenerate buckets (all-zero or
-    boilerplate embeddings) are dropped over `max_bucket` with the same
-    drop-accounting contract as minhash_candidate_pairs_capped (route
-    the second return into the S15 audit table).
+    boilerplate embeddings) over NEARDUP_MAX_BUCKET vectors are dropped
+    and returned, not silently joined; logging the drop is the
+    caller's.
 
     Returns (pairs, dropped_buckets(bucket, bucket_size)).
     """
@@ -559,17 +559,9 @@ def embedding_neardup_pairs(
         "vid long, cv array<double>, bucket string",
     )
 
-    if max_bucket is not None:
-        sizes = sigs.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
-        dropped = sizes.where(F.col("bucket_size") > max_bucket)
-        from pyspark.sql.functions import broadcast
-
-        sigs = sigs.join(broadcast(dropped.select("bucket")), "bucket", "left_anti")
-    else:
-        dropped = (
-            sigs.select("bucket").limit(0)
-            .withColumn("bucket_size", F.lit(0).cast("long"))
-        )
+    sizes = sigs.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
+    dropped = sizes.where(F.col("bucket_size") > NEARDUP_MAX_BUCKET)
+    sigs = sigs.join(F.broadcast(dropped.select("bucket")), "bucket", "left_anti")
 
     # one grouped shuffle keyed by bucket (each vector crosses ONCE),
     # then a blocked in-kernel GEMM per bucket — never a pair join that
@@ -605,8 +597,9 @@ def _bucket_gram_kernel(dim: int, threshold: float):
     an ulp of the 4dp grid (5e-5 + fuzz): every pair the Spark filter
     could keep is emitted; extras are dropped by the same filter.
 
-    Memory is bounded: groups are capped at `max_bucket` rows upstream,
-    and the score matrix is computed in 1024-row blocks (~32 MB each).
+    Memory is bounded: groups are capped at NEARDUP_MAX_BUCKET rows
+    upstream, and the score matrix is computed in 1024-row blocks
+    (~32 MB each).
     """
     import numpy as np
 

@@ -32,28 +32,21 @@ def vocab_stats(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_doc_freq: int = 1,
 ) -> DataFrame:
     """Per-term (term_freq, doc_freq) over the corpus.
 
     Returns one row per distinct whitespace token with columns
     `term`, `term_freq` (total occurrences), `doc_freq` (distinct
-    documents). Empty-string tokens (blank docs) are dropped. Terms
-    below `min_doc_freq` documents are filtered after the aggregate —
-    the standard vocabulary cut, applied post-shuffle so the aggregate
-    itself stays a single pass.
+    documents). Empty-string tokens (blank docs) are dropped.
     """
     exploded = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(tokens(F.col(text_col))).alias("term"),
     ).where(F.col("term") != "")
-    agg = exploded.groupBy("term").agg(
+    return exploded.groupBy("term").agg(
         F.count(F.lit(1)).alias("term_freq"),
         F.countDistinct("doc_id").alias("doc_freq"),
     )
-    if min_doc_freq > 1:
-        agg = agg.where(F.col("doc_freq") >= min_doc_freq)
-    return agg
 
 
 def tfidf_topk(
@@ -61,7 +54,6 @@ def tfidf_topk(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_doc_freq: int = 1,
 ) -> DataFrame:
     """Per-document top-k terms by tf-idf: (doc_id, term, score, rank).
 
@@ -79,9 +71,8 @@ def tfidf_topk(
     (term, doc_id) for nothing) — an AGGREGATE, not a term-window,
     because hot stopword terms make a window group O(corpus) on one
     reducer while the agg's map-side combine flattens them. The
-    doc_freq side joins back broadcast (after the min_doc_freq cut a
-    web-scale vocabulary is ~10^7 rows — broadcastable; raise the cut,
-    not the join strategy, when it is not); final top-k is one
+    doc_freq side joins back broadcast (a web-scale vocabulary is
+    ~10^7 rows — broadcastable); final top-k is one
     row_number window on doc_id. N comes from one count() — at scale,
     table statistics."""
     from pyspark.sql.window import Window
@@ -97,8 +88,6 @@ def tfidf_topk(
     )
     n_docs = docs.count()
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    if min_doc_freq > 1:
-        dfreq = dfreq.where(F.col("doc_freq") >= min_doc_freq)
     idf = F.round(F.log(F.lit(float(n_docs)) / F.col("doc_freq")), 4)
     scored = tf.join(F.broadcast(dfreq), "term").select(
         "doc_id",
@@ -118,7 +107,6 @@ def tfidf_topk(
 def bpe_pair_stats(
     docs: DataFrame,
     text_col: str = "text",
-    min_pair_freq: int = 1,
 ) -> DataFrame:
     """Adjacent-token-pair frequencies — the merge-candidate table of
     one BPE induction iteration over a whitespace-pre-tokenized corpus.
@@ -140,7 +128,7 @@ def bpe_pair_stats(
         F.size(toks) >= 2,
         _adjacent_pairs(toks),
     )
-    agg = (
+    return (
         docs.select(F.explode(pair_arr).alias("p"))
         .groupBy(
             F.col("p.tok_left").alias("tok_left"),
@@ -148,9 +136,6 @@ def bpe_pair_stats(
         )
         .agg(F.count(F.lit(1)).alias("pair_freq"))
     )
-    if min_pair_freq > 1:
-        agg = agg.where(F.col("pair_freq") >= min_pair_freq)
-    return agg
 
 
 def _adjacent_pairs(toks):
@@ -258,8 +243,7 @@ def ngram_counts(
 
 
 def perplexity_buckets(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       exact_quantiles: bool = True) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """CCNet-style language-model quality buckets: score every document
     by its average negative log-probability under the corpus's own
     add-one-smoothed unigram LM, then split the corpus at the exact
@@ -278,15 +262,10 @@ def perplexity_buckets(docs: DataFrame, text_col: str = "text",
     side only; AQE skew-join splits them), one per-doc agg, and a
     single-row quantile agg broadcast back — never a global sort or
     single-partition window. Docs with zero non-empty tokens carry no
-    LM evidence and are excluded (the explode drops them).
-
-    exact_quantiles=True (the cross-engine-replayable default) uses
-    `percentile`, whose ObjectHashAggregate buffers every doc's score
-    in one final task — exact, but O(n_docs) driver-side-style memory.
-    At 10^10+ docs pass False: `percentile_approx` (t-digest, bounded
-    sketch, mergeable map-side) moves the thresholds by at most the
-    sketch error, which only reassigns docs within noise of the
-    quartile boundary — the standard CCNet-scale trade.
+    LM evidence and are excluded (the explode drops them). The
+    quartiles come from exact `percentile`, whose ObjectHashAggregate
+    buffers every doc's score in one final task — O(n_docs) memory in
+    that task, the price of cross-engine-replayable thresholds.
     """
     tok = (
         spread(docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
@@ -334,9 +313,8 @@ def perplexity_buckets(docs: DataFrame, text_col: str = "text",
         )
         .localCheckpoint(eager=False)  # feeds the quantile AND the output
     )
-    pct_fn = "percentile" if exact_quantiles else "percentile_approx"
     q = scored.agg(
-        F.expr(f"{pct_fn}(avg_nll_e4, array(0.25D, 0.75D))").alias("q")
+        F.expr("percentile(avg_nll_e4, array(0.25D, 0.75D))").alias("q")
     ).select(F.col("q")[0].alias("p25"), F.col("q")[1].alias("p75"))
     return scored.crossJoin(F.broadcast(q)).select(
         "doc_id", "n_tokens", "avg_nll_e4",

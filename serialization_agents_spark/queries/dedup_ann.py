@@ -513,7 +513,7 @@ def ann_rp_top3(spark, sf):
 
 # DuckDB transcription of similarity.embedding_neardup_pairs: the first
 # 4 LSH planes (offset 0), sign-bit buckets over ALL vectors,
-# within-bucket self-join, exact cosine >= 0.35. The max_bucket cap never
+# within-bucket self-join, exact cosine >= 0.35. The NEARDUP_MAX_BUCKET cap never
 # triggers at these SFs, so the oracle omits it.
 @query(f"""
 WITH RECURSIVE {_lcg_vectors_cte(4, 64, 0, "p", "planes")},

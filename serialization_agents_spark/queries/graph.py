@@ -130,7 +130,7 @@ def kg_label_prop(spark, sf):
     join+vote+argmax loop against a DuckDB unrolled-CTE replay.
     Integer weights + min-label ties, so no run-order can perturb
     it (operators/graph.py label_propagation)."""
-    return label_propagation(_block_graph(spark, sf), iterations=3, weight_col="w")
+    return label_propagation(_block_graph(spark, sf), iterations=3)
 
 
 # least() skips NULLs identically in both engines.

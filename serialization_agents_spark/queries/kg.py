@@ -430,7 +430,7 @@ def kg_windowed_metrics(spark, sf):
     windowed-metrics plan (streaming/windowed.py) over the kg pages.
     Window bounds exported as epoch SECONDS (integers hash identically
     cross-engine; timestamps don't)."""
-    m = windowed_page_metrics(kg_pages(spark, sf), window="10 minutes")
+    m = windowed_page_metrics(kg_pages(spark, sf))
     return m.select(
         F.unix_seconds("window_start").alias("window_start_s"),
         F.unix_seconds("window_end").alias("window_end_s"),

@@ -48,7 +48,7 @@ FROM (SELECT media_id, md5(sha256('media' || media_id)) AS h
 )
 def multimodal_image_features(spark, sf):
     media = synth_media(spark, n=200)
-    return extract_image_features(media, fake=True).select(
+    return extract_image_features(media).select(
         "media_id", "width", "height", "channels", "decode_ok"
     )
 

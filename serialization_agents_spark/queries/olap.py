@@ -280,7 +280,7 @@ def o10_session_window(spark, sf):
     ts - prev > gap, boundary merges; session_end = last_ts + gap).
     Session fusion and the inclusive boundary are pinned by
     tests/test_streaming_windowed.py."""
-    s = session_metrics(table(spark, sf, "events"), gap="30 minutes")
+    s = session_metrics(table(spark, sf, "events"))
     return s.select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),

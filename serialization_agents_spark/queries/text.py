@@ -349,7 +349,7 @@ def corpus_mixture(spark, sf):
     micro-unit weights so the float arithmetic is bit-identical in
     any engine (operators/sample.py mixture_sample)."""
     docs = table(spark, sf, "documents").select("doc_id", "lang")
-    return mixture_sample(docs, alpha=0.5, stratum_col="lang").select(
+    return mixture_sample(docs, stratum_col="lang").select(
         "doc_id", "lang", "mix_rate"
     )
 

@@ -17,12 +17,11 @@ o9_interval_join) — tests pin stream == batch on on-time data.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double"
 )
 WINDOWS_SCHEMA = "win_id long, user_id long, win_start timestamp, win_end timestamp"
+WATERMARK = "1 hour"  # event-time lateness each side tolerates
 
 
 def stream_interval_join_to_parquet(
@@ -31,7 +30,6 @@ def stream_interval_join_to_parquet(
     windows_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
 ):
     """readStream(events) x readStream(windows) inner-joined on
     user_id AND win_start <= ts < win_end, both sides watermarked.
@@ -39,11 +37,11 @@ def stream_interval_join_to_parquet(
     (event_id, win_id, user_id, ts) to parquet."""
     ev = (
         spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
     )
     win = (
         spark.readStream.schema(WINDOWS_SCHEMA).parquet(windows_dir)
-        .withWatermark("win_start", watermark)
+        .withWatermark("win_start", WATERMARK)
     )
     joined = ev.join(
         win,

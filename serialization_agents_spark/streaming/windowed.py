@@ -24,13 +24,16 @@ from serialization_agents_spark.operators.mentions import (
     MARKUP_VIAF_RE,
 )
 
+PAGE_WINDOW = "10 minutes"  # tumbling crawl-time window of windowed_page_metrics
+SESSION_GAP = "30 minutes"  # inactivity gap that closes a session
+
 
 def _span_count(html_s: F.Column, pattern: str) -> F.Column:
     return F.size(F.regexp_extract_all(html_s, F.lit(pattern), F.lit(0)))
 
 
-def windowed_page_metrics(pages: DataFrame, window: str = "10 minutes") -> DataFrame:
-    """pages -> one row per (tumbling `warc_ts` window, lang):
+def windowed_page_metrics(pages: DataFrame) -> DataFrame:
+    """pages -> one row per (tumbling PAGE_WINDOW `warc_ts` window, lang):
     (window_start, window_end, lang, n_pages, n_mentions, n_subjects)."""
     html_s = F.col("html").cast("string")
     mentions = (
@@ -43,7 +46,7 @@ def windowed_page_metrics(pages: DataFrame, window: str = "10 minutes") -> DataF
         "warc_ts", "lang",
         mentions.alias("_m"), subjects.alias("_s"),
     )
-    agg = per_page.groupBy(F.window("warc_ts", window), "lang").agg(
+    agg = per_page.groupBy(F.window("warc_ts", PAGE_WINDOW), "lang").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum("_m").alias("n_mentions"),
         F.sum("_s").alias("n_subjects"),
@@ -55,17 +58,17 @@ def windowed_page_metrics(pages: DataFrame, window: str = "10 minutes") -> DataF
     )
 
 
-def session_metrics(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_metrics(events: DataFrame) -> DataFrame:
     """events -> one row per merged session:
     (user_id, session_start, session_end, n_events, value_cents).
 
     Uses Spark's native merging session windows (F.session_window): a
-    session extends while the next event arrives before last_ts + gap,
-    and session_end = last_ts + gap. This is the MERGING-window state
-    shape (two sessions can fuse when a bridging event arrives) — a
-    different window state machine from the tumbling windows above
-    and from the hand-rolled lag/cumsum sessionize (o4), which it must
-    agree with.
+    session extends while the next event arrives before last_ts +
+    SESSION_GAP, and session_end = last_ts + SESSION_GAP. This is the
+    MERGING-window state shape (two sessions can fuse when a bridging
+    event arrives) — a different window state machine from the tumbling
+    windows above and from the hand-rolled lag/cumsum sessionize (o4),
+    which it must agree with.
 
     value_cents sums integer cents, never raw doubles (cross-engine
     float sums differ by reduction order).
@@ -76,7 +79,7 @@ def session_metrics(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
     )
     return (
-        ev.groupBy("user_id", F.session_window("ts", gap).alias("sw"))
+        ev.groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("sw"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("cents").alias("value_cents"),

@@ -1,6 +1,6 @@
-"""As-of join semantics: backward/forward, at-or-equal timestamps,
-equal-ts tie resolution, tolerance, no-match NULLs, partitioning
-invariance, and the one-shuffle plan shape."""
+"""As-of join semantics: at-or-equal timestamps, equal-ts tie
+resolution, no-match NULLs, partitioning invariance, and the
+one-shuffle plan shape."""
 
 from __future__ import annotations
 
@@ -43,34 +43,6 @@ def test_backward_with_equal_ts_and_ties(spark):
     assert out[2]["asof_rid"] == 903 and out[2]["asof_ts"] == 200
     assert out[3]["asof_rid"] is None  # only future right rows
     assert out[4]["asof_rid"] is None  # no right rows at all
-
-
-def test_forward(spark):
-    out = {
-        r["lid"]: r
-        for r in asof_join(
-            _left(spark), _right(spark), on="user", left_ts="ts",
-            right_ts="ts", direction="forward", tiebreak="rid",
-        ).collect()
-    }
-    # earliest at-or-after; equal-ts tie resolves to the LEAST tiebreak
-    assert out[1]["asof_rid"] == 901 and out[1]["asof_ts"] == 100
-    assert out[2]["asof_rid"] is None  # nothing at/after 205
-    assert out[3]["asof_rid"] == 904 and out[3]["asof_ts"] == 60
-
-
-def test_tolerance(spark):
-    out = {
-        r["lid"]: r
-        for r in asof_join(
-            _left(spark), _right(spark), on="user", left_ts="ts",
-            right_ts="ts", tiebreak="rid", tolerance=4,
-        ).collect()
-    }
-    # lid=2 at 205: match at 200 is within 5 > tolerance 4 -> nulled
-    assert out[2]["asof_rid"] is None
-    # lid=1 at 100: match at 100 is within tolerance
-    assert out[1]["asof_rid"] == 902
 
 
 def test_partitioning_invariance(spark):

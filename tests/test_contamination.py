@@ -1,5 +1,5 @@
-"""Benchmark-decontamination operator: hit semantics, string-vs-xxhash64
-gram-key parity, and the broadcast-only plan shape.
+"""Benchmark-decontamination operator: hit semantics and the
+broadcast-only plan shape.
 """
 
 from __future__ import annotations
@@ -37,15 +37,6 @@ def test_contamination_report_hits(spark):
     assert got == {1: 3, 3: 1, 4: 3}
 
 
-def test_hash_grams_mode_matches_string_mode(spark):
-    """The xxhash64 production key gives the same flagged set and hit
-    counts as the oracle-replayable string key."""
-    s = contamination_report(_corpus(spark), _benchmark(spark), hash_grams=False)
-    h = contamination_report(_corpus(spark), _benchmark(spark), hash_grams=True)
-    key = lambda r: r["doc_id"]  # noqa: E731
-    assert sorted(s.collect(), key=key) == sorted(h.collect(), key=key)
-
-
 def test_contamination_is_broadcast_only(spark):
     """The gram probe must be a broadcast hash join — a sort-merge join
     here would shuffle the exploded corpus (x tokens-per-doc rows)."""
@@ -69,10 +60,3 @@ def test_bpe_pair_stats(spark):
     # doc1: (a,b) (b,a) (a,b) (b,c); doc2: (a,b); docs 3/4: nothing
     assert got == {("a", "b"): 3, ("b", "a"): 1, ("b", "c"): 1}
 
-
-def test_bpe_pair_stats_min_freq(spark):
-    docs = spark.createDataFrame([(1, "a b a b c")], "doc_id long, text string")
-    got = bpe_pair_stats(docs, min_pair_freq=2).collect()
-    assert [(r["tok_left"], r["tok_right"], r["pair_freq"]) for r in got] == [
-        ("a", "b", 2)
-    ]

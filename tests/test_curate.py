@@ -39,15 +39,6 @@ def test_curate_gate_precedence_and_chunk_stage(spark):
     assert out[5]["kept_chunks"] < out[5]["total_chunks"]
 
 
-def test_curate_lang_gate_disabled(spark):
-    docs = spark.createDataFrame(
-        [(2, "der hund ist nicht mit der katze und das ist ein problem von den")],
-        "doc_id long, text string",
-    )
-    out = curate_corpus(docs, lang=None, min_quality=0.5, max_dup3=0.3).collect()
-    assert out[0]["status"] == "kept"
-
-
 def test_quality_gate_per_stratum_median(spark):
     from pyspark.sql import functions as F
 

@@ -3,26 +3,7 @@ Jaccard verification, SimHash locality."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from serialization_agents_spark.operators import dedup as D
-
-
-def test_lsh_bucket_cap_prevents_quadratic_blowup(spark):
-    """1000 identical docs share every band -> uncapped would be ~500k
-    pairs x 4 bands; the cap drops the degenerate buckets, reports them,
-    and the job stays linear (SURVEY.md §4.4: caps never drop silently)."""
-    import time
-
-    docs = spark.range(1000).select(
-        F.col("id").alias("doc_id"), F.lit("same boilerplate text here").alias("text")
-    )
-    t0 = time.time()
-    pairs, dropped = D.minhash_candidate_pairs_capped(docs, max_bucket=64)
-    assert pairs.count() == 0  # every bucket degenerate -> all dropped
-    rows = dropped.collect()
-    assert [r["bucket_size"] for r in rows] == [1000] * 4  # one per band
-    assert time.time() - t0 < 120
 
 
 def test_xxhash64_minhash_finds_same_near_dups(spark):
@@ -44,18 +25,6 @@ def test_xxhash64_minhash_finds_same_near_dups(spark):
     }
     assert strong <= xx_pairs  # every strong near-dup recovered
     assert strong <= truth
-
-
-def test_lsh_cap_keeps_normal_buckets(spark):
-    """Distinct-text docs keep their candidate pairs under the cap."""
-    docs = spark.range(40).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("unique words for doc number "), F.col("id")).alias("text"),
-    )
-    capped, dropped = D.minhash_candidate_pairs_capped(docs, max_bucket=64)
-    uncapped, _ = D.minhash_candidate_pairs_capped(docs, max_bucket=None)
-    assert dropped.count() == 0
-    assert sorted(map(tuple, capped.collect())) == sorted(map(tuple, uncapped.collect()))
 
 
 def _docs(spark):
@@ -105,29 +74,6 @@ def test_simhash_locality(spark):
 
     assert sk[0] == sk[1]  # identical text -> identical sketch
     assert hamming(sk[0], sk[2]) < hamming(sk[0], sk[3])  # near < far
-
-
-def test_chunk_dedup_paragraph_mode(spark):
-    """Real paragraph mode: the shared boilerplate paragraph survives only
-    in the lowest-(doc_id, idx) occurrence; unique prose always survives."""
-    boiler = "accept cookies to continue"
-    rows = [
-        (0, f"unique first article\n\n{boiler}\n\nmore original prose"),
-        (1, f"{boiler}\n\nsecond article body"),
-        (2, "third article with nothing shared"),
-        (3, "   "),  # whitespace-only: no chunks, no output row
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {
-        r["doc_id"]: r
-        for r in D.chunk_dedup(docs, paragraph_delim=r"\n{2,}").collect()
-    }
-    assert set(out) == {0, 1, 2}
-    assert out[0]["total_chunks"] == 3 and out[0]["kept_chunks"] == 3
-    assert out[1]["total_chunks"] == 2 and out[1]["kept_chunks"] == 1
-    assert out[1]["dedup_text"] == "second article body"
-    assert out[2]["kept_chunks"] == 1
-    assert boiler in out[0]["dedup_text"]  # first occurrence kept
 
 
 def test_chunk_dedup_word_window_mode(spark):
@@ -297,12 +243,13 @@ def test_winnow_guarantee_shared_span(spark):
     assert dropped.count() == 0
 
 
-def test_winnow_bucket_cap_drops_boilerplate_fp(spark):
+def test_winnow_bucket_cap_drops_boilerplate_fp(spark, monkeypatch):
+    monkeypatch.setattr(D, "WINNOW_MAX_BUCKET", 5)
     text = " ".join(f"c{i}" for i in range(13))
     docs = spark.createDataFrame(
         [(i, text) for i in range(6)], "doc_id long, text string"
     )
-    pairs, dropped = D.winnow_pairs(docs, max_bucket=5)
+    pairs, dropped = D.winnow_pairs(docs)
     assert pairs.count() == 0            # every fp bucket has 6 > 5 docs
     d = dropped.collect()
     assert d and all(r["bucket_size"] == 6 for r in d)

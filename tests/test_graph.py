@@ -186,7 +186,7 @@ def test_label_propagation_two_triangles_with_bridge(spark):
              (2, 10, 1)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
     got = {r.node: r.label
-           for r in label_propagation(df, iterations=3, weight_col="w").collect()}
+           for r in label_propagation(df, iterations=3).collect()}
     assert got == _py_lpa(edges, 3)
     # the bridge must not merge the triangles: exactly two communities
     assert len(set(got.values())) == 2
@@ -202,7 +202,7 @@ def test_label_propagation_weights_beat_degree(spark):
     edges = [(5, 1, 1), (5, 2, 1), (5, 9, 3)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
     got = {r.node: r.label
-           for r in label_propagation(df, iterations=1, weight_col="w").collect()}
+           for r in label_propagation(df, iterations=1).collect()}
     assert got[5] == 9
     assert got == _py_lpa(edges, 1)
 
@@ -213,11 +213,11 @@ def test_label_propagation_partitioning_invariant(spark):
     edges = [(i % 40, (i * 7 + 1) % 40, i % 3 + 1) for i in range(300)]
     a = label_propagation(
         spark.createDataFrame(edges, "src long, dst long, w long").coalesce(1),
-        iterations=3, weight_col="w",
+        iterations=3,
     )
     b = label_propagation(
         spark.createDataFrame(edges, "src long, dst long, w long").repartition(13),
-        iterations=3, weight_col="w",
+        iterations=3,
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert {r[0]: r[1] for r in a.collect()} == _py_lpa(edges, 3)

@@ -81,7 +81,7 @@ def test_shard_stats_token_bounds(spark):
 def test_mixture_uniform_strata_keeps_everything(spark):
     rows = [(i, ["a", "b", "c", "d"][i % 4]) for i in range(400)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = mixture_sample(docs, alpha=0.5, stratum_col="lang").collect()
+    kept = mixture_sample(docs, stratum_col="lang").collect()
     assert len(kept) == 400  # balanced strata -> every rate exactly 1.0
     assert all(r.mix_rate == 1.0 for r in kept)
 
@@ -90,7 +90,7 @@ def test_mixture_skewed_strata_rates_and_keepset(spark):
     # 300 head + 50 tail: head gets cut toward sqrt-share, tail capped at 1
     rows = [(i, "head" if i < 300 else "tail") for i in range(350)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = mixture_sample(docs, alpha=0.5, stratum_col="lang").collect()
+    kept = mixture_sample(docs, stratum_col="lang").collect()
 
     counts = {"head": 300, "tail": 50}
     wu = {k: math.floor(math.sqrt(v) * 1e6) for k, v in counts.items()}

@@ -11,6 +11,10 @@ own body. A re-export in an `__init__.py` is not a use. Python source held
 in a string constant (the worker script `tools/cluster_scaling.py` runs
 in a fresh process) is scanned like a file. `@query` functions are
 reached through the `queries()` registry and are exempt.
+
+The same holds for options: a defaulted parameter that its function
+branches on must take two values across the non-test calls, or the
+branch it never selects runs only in tests.
 """
 
 from __future__ import annotations
@@ -99,4 +103,136 @@ def test_every_public_definition_has_a_non_test_user():
     assert not unused, (
         "public definitions used only by tests (move them under tests/ or "
         "delete them):\n" + "\n".join(unused)
+    )
+
+
+_VARIES = "varies"
+_FUNCTION = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaulted(fn: ast.AST) -> dict[str, ast.expr]:
+    """Parameter name -> default expression, for each defaulted parameter."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _branched_on(fn: ast.AST) -> set[str]:
+    """Names read in the test of an `if`, `while` or conditional expression."""
+    return {
+        n.id
+        for node in ast.walk(fn) if isinstance(node, (ast.If, ast.While, ast.IfExp))
+        for n in ast.walk(node.test) if isinstance(n, ast.Name)
+    }
+
+
+def _calls(tree: ast.AST) -> list[tuple[ast.Call, ast.AST | None]]:
+    """(call, innermost enclosing function definition or None) for each call."""
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                out.append((child, fn))
+            visit(child, child if isinstance(child, _FUNCTION) else fn)
+
+    visit(tree, None)
+    return out
+
+
+def _passed(call: ast.Call, fn: ast.AST, param: str) -> ast.expr | None:
+    """The expression `call` passes for `fn`'s `param`; None if it omits
+    it; the call itself if `*args`/`**kwargs` hide whether it does."""
+    for k in call.keywords:
+        if k.arg == param:
+            return k.value
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return call
+    positional = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+    if positional[:1] in (["self"], ["cls"]) and isinstance(call.func, ast.Attribute):
+        positional = positional[1:]
+    if param in positional and positional.index(param) < len(call.args):
+        return call.args[positional.index(param)]
+    return None
+
+
+def test_every_branching_option_has_two_values_in_use():
+    """A defaulted parameter that its function branches on must take at
+    least two values across the non-test calls, or one that varies.
+
+    Each call contributes one entry: the literal it passes (or the default
+    when it omits the parameter); for a bare name that is a defaulted
+    parameter of the enclosing function, that parameter's own values; for
+    an ALL_CAPS constant, that constant; for any other expression,
+    "varies". A single value means the other branch runs only in tests.
+    `@query` functions and the `__spark_entry__.__all__` names are called
+    by the external driver and are exempt.
+    """
+    trees = {path: ast.parse(path.read_text()) for path in _user_files()}
+    entry_all = next(
+        ast.literal_eval(node.value)
+        for node in trees[REPO / "__spark_entry__.py"].body
+        if isinstance(node, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+    )
+    defs = {}  # name -> [(file, function definition)]
+    for path, tree in trees.items():
+        if path.relative_to(REPO).parts[0] != "perfbench":
+            for node in ast.walk(tree):
+                if isinstance(node, _FUNCTION):
+                    defs.setdefault(node.name, []).append((path, node))
+    unique = {name: ds[0] for name, ds in defs.items() if len(ds) == 1}
+    calls = {}  # name -> [(call, enclosing function)]
+    for tree in trees.values():
+        for sub in [tree, *_embedded_sources(tree)]:
+            for call, encl in _calls(sub):
+                f = call.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in unique:
+                    calls.setdefault(name, []).append((call, encl))
+
+    memo = {}
+
+    def values(name, param):
+        if name not in unique or name in entry_all or _is_query(unique[name][1]):
+            return {_VARIES}
+        if (name, param) not in memo:
+            memo[name, param] = set()  # a cycle adds nothing
+            fn = unique[name][1]
+            memo[name, param] = set().union(*(
+                value(_defaulted(fn)[param], None) if expr is None else value(expr, encl)
+                for call, encl in calls.get(name, ())
+                for expr in [_passed(call, fn, param)]
+            ))
+        return memo[name, param]
+
+    def value(expr, encl):
+        try:
+            return {repr(ast.literal_eval(expr))}
+        except (ValueError, TypeError, SyntaxError):
+            pass
+        if isinstance(expr, ast.Name):
+            if encl is not None and expr.id in _defaulted(encl):
+                return values(encl.name, expr.id)
+            if expr.id.isupper():
+                return {expr.id}
+        if isinstance(expr, ast.Attribute) and expr.attr.isupper():
+            return {expr.attr}
+        return {_VARIES}
+
+    single = [
+        f"{'.'.join(path.relative_to(REPO).with_suffix('').parts)}.{name}({param}): "
+        + (", ".join(sorted(vals)) or "no call")
+        for name, (path, fn) in sorted(unique.items())
+        for param in sorted(_branched_on(fn) & set(_defaulted(fn)))
+        for vals in [values(name, param)]
+        if len(vals) < 2 and _VARIES not in vals
+    ]
+    assert not single, (
+        "options whose every non-test caller passes one value (delete the "
+        "branch the value never selects, and the option):\n" + "\n".join(single)
     )

@@ -77,14 +77,6 @@ def test_vocab_stats_conservation(spark):
     assert sum(r.term_freq for r in rows.values()) == 8
 
 
-def test_vocab_stats_min_doc_freq(spark):
-    docs = spark.createDataFrame(
-        [(0, "a b"), (1, "a c")], "doc_id long, text string"
-    )
-    terms = {r.term for r in vocab_stats(docs, min_doc_freq=2).collect()}
-    assert terms == {"a"}
-
-
 def test_tfidf_topk_ranking_and_ties(spark):
     from serialization_agents_spark.operators.vocab import tfidf_topk
 

@@ -52,10 +52,27 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entrymod.queries()
+    try:
+        failures = compare_all(spark, con, sf_dir, only)
+    finally:
+        # the staged queries' scratch dirs and catalog tables
+        entrymod.kg_cache_clear()
+
+    print()
+    if failures:
+        print(f"{len(failures)} FAILURES:")
+        for n, m in failures:
+            print(" -", n, ":", m[:200])
+        sys.exit(1)
+    print("ALL ORACLES MATCH")
+
+
+def compare_all(spark, con, sf_dir, only):
+    """Run each selected query on both engines; returns (name, reason)
+    for every mismatch."""
     oracles = entrymod.oracle_sql()
     failures = []
-    for name, fn in qs.items():
+    for name, fn in entrymod.queries().items():
         if only and not name.startswith(only):
             continue
         try:
@@ -99,14 +116,7 @@ def main():
                 print("   duck :", b)
             continue
         print(f"[OK] {name}: {len(sv)} rows")
-
-    print()
-    if failures:
-        print(f"{len(failures)} FAILURES:")
-        for n, m in failures:
-            print(" -", n, ":", m[:200])
-        sys.exit(1)
-    print("ALL ORACLES MATCH")
+    return failures
 
 
 if __name__ == "__main__":
