@@ -23,8 +23,8 @@ Scale notes (10^12 events):
   default is correct and spill-safe (ExternalSorter).
 - `side` breaks ts ties so equality means "at or before" exactly:
   right rows sort before left rows at the same timestamp. Ties among
-  right rows at the same (key, ts) resolve by `tiebreak` ascending —
-  the LAST one wins (max tiebreak), deterministic under any
+  right rows at the same (key, ts) resolve by `view_id` ascending —
+  the LAST one wins (max view_id), deterministic under any
   partitioning.
 """
 
@@ -35,29 +35,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    tiebreak: str | None = None,
-    prefix: str = "asof_",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """Left rows plus `asof_<col>` columns from the latest right row with
-    right_ts <= left_ts (NULL when no right row qualifies).
-
-    `tiebreak`: right column ordering equal-timestamp right rows; the
-    greatest wins. Defaults to right_ts.
+    right.tsu <= left.tsu (NULL when no right row qualifies).
+    Equal-timestamp right rows are ordered by `view_id`; the greatest
+    wins.
     """
-    tiebreak = tiebreak or right_ts
-
     right_payload = [c for c in right.columns if c != on]
     l_side = left.select(
         F.col(on).alias("_k"),
-        F.col(left_ts).alias("_ts"),
+        F.col("tsu").alias("_ts"),
         F.lit(1).alias("_side"),
-        F.lit(None).cast(right.schema[tiebreak].dataType).alias("_tie"),
+        F.lit(None).cast(right.schema["view_id"].dataType).alias("_tie"),
         F.struct(*[F.col(c) for c in left.columns]).alias("_l"),
         F.lit(None)
         .cast(
@@ -71,9 +60,9 @@ def asof_join(
     )
     r_side = right.select(
         F.col(on).alias("_k"),
-        F.col(right_ts).alias("_ts"),
+        F.col("tsu").alias("_ts"),
         F.lit(0).alias("_side"),
-        F.col(tiebreak).alias("_tie"),
+        F.col("view_id").alias("_tie"),
         F.lit(None).cast(l_side.schema["_l"].dataType).alias("_l"),
         F.struct(*[F.col(c) for c in right_payload]).alias("_r"),
     )
@@ -89,6 +78,6 @@ def asof_join(
     )
 
     out_cols = [F.col(f"_l.{c}").alias(c) for c in left.columns] + [
-        F.col(f"_m.{c}").alias(f"{prefix}{c}") for c in right_payload
+        F.col(f"_m.{c}").alias(f"asof_{c}") for c in right_payload
     ]
     return matched.select(*out_cols)

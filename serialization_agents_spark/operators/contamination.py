@@ -18,35 +18,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from serialization_agents_spark.operators.dedup import SHINGLE_K, shingles
+from serialization_agents_spark.operators.dedup import shingles
 from serialization_agents_spark.parallel import spread
 
 
-def benchmark_ngrams(
-    benchmark: DataFrame,
-    text_col: str = "text",
-    k: int = SHINGLE_K,
-) -> DataFrame:
-    """Distinct word k-grams of the benchmark suite — the (small)
-    lookup side of the contamination join."""
-    return benchmark.select(
-        F.explode(shingles(F.col(text_col), k)).alias("gram")
-    ).distinct()
+def benchmark_ngrams(benchmark: DataFrame) -> DataFrame:
+    """Distinct word SHINGLE_K-grams of the benchmark suite — the
+    (small) lookup side of the contamination join."""
+    return benchmark.select(F.explode(shingles(F.col("text"))).alias("gram")).distinct()
 
 
-def contamination_report(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = SHINGLE_K,
-) -> DataFrame:
+def contamination_report(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """One row per contaminated corpus doc: (doc_id, n_hits) where
-    n_hits counts the doc's distinct k-grams that appear anywhere in
-    the benchmark. Corpus grams explode narrowly and probe the
+    n_hits counts the doc's distinct SHINGLE_K-grams that appear
+    anywhere in the benchmark. Corpus grams explode narrowly and probe the
     broadcast benchmark set; the only shuffle is the final doc_id agg.
     """
-    grams = benchmark_ngrams(benchmark, text_col=text_col, k=k)
+    grams = benchmark_ngrams(benchmark)
     # the gram explode + hash probe is the narrow hot loop — fan an
     # under-parallel corpus scan out before paying it, and materialize
     # the token array so the gram lambda does not re-split per position
@@ -56,13 +44,13 @@ def contamination_report(
     )
 
     toked = (
-        spread(corpus.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
-        .select("doc_id", _tokens(F.col(text_col)).alias("_toks"))
+        spread(corpus.select(F.col("doc_id"), F.col("text")))
+        .select("doc_id", _tokens(F.col("text")).alias("_toks"))
         .localCheckpoint(eager=False)
     )
     doc_grams = toked.select(
         "doc_id",
-        F.explode(shingles_from_tokens(F.col("_toks"), k)).alias("gram"),
+        F.explode(shingles_from_tokens(F.col("_toks"))).alias("gram"),
     )
     return (
         doc_grams.join(broadcast(grams), "gram")

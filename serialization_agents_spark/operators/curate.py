@@ -38,23 +38,19 @@ from pyspark.sql import functions as F
 from serialization_agents_spark.functions import text as T
 from serialization_agents_spark.operators.dedup import chunk_dedup
 
+MIN_QUALITY = 0.75  # quality gate: keep quality >= this
+MAX_DUP3 = 0.01  # repetition gate: keep dup_3gram_fraction <= this
 
-def curate_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.5,
-    max_dup3: float = 0.5,
-    chunk_words: int = 12,
-) -> DataFrame:
+
+def curate_corpus(docs: DataFrame) -> DataFrame:
     """Run the full cascade; returns one row per input document:
-    (id, status, lang_pred, quality, dup_3gram_fraction, total_chunks,
-    kept_chunks). The language gate keeps English ('en').
+    (doc_id, status, lang_pred, quality, dup_3gram_fraction,
+    total_chunks, kept_chunks). The language gate keeps English ('en').
     """
-    text = F.col(text_col)
+    text = F.col("text")
     rep = T.repetition_features(text)
     feats = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         text.alias("__text"),
         T.lang_id(text).alias("lang_pred"),
         T.quality_score(text).alias("quality"),
@@ -63,46 +59,43 @@ def curate_corpus(
 
     # stage 1: exact dedup — keeper is the min id per content hash
     keepers = (
-        docs.select(F.md5(text).alias("h"), F.col(id_col))
+        docs.select(F.md5(text).alias("h"), F.col("doc_id"))
         .groupBy("h")
-        .agg(F.min(id_col).alias("keeper_id"))
+        .agg(F.min("doc_id").alias("keeper_id"))
         .select("keeper_id")
     )
     feats = feats.join(
-        keepers.withColumnRenamed("keeper_id", id_col).withColumn(
+        keepers.withColumnRenamed("keeper_id", "doc_id").withColumn(
             "__keeper", F.lit(True)
         ),
-        id_col,
+        "doc_id",
         "left",
     )
 
     status = (
         F.when(F.col("__keeper").isNull(), F.lit("duplicate"))
         .when(F.col("lang_pred") != F.lit("en"), F.lit("lang"))
-        .when(F.col("quality") < F.lit(min_quality), F.lit("quality"))
-        .when(F.col("dup_3gram_fraction") > F.lit(max_dup3), F.lit("repetition"))
+        .when(F.col("quality") < F.lit(MIN_QUALITY), F.lit("quality"))
+        .when(F.col("dup_3gram_fraction") > F.lit(MAX_DUP3), F.lit("repetition"))
         .otherwise(F.lit("kept"))
     )
     gated = feats.withColumn("status", status)
 
     # stage 5: chunk dedup across survivors only
     survivors = gated.where(F.col("status") == "kept").select(
-        F.col(id_col), F.col("__text").alias(text_col)
+        F.col("doc_id"), F.col("__text").alias("text")
     )
     chunk_stats = chunk_dedup(
         survivors,
-        text_col=text_col,
-        id_col=id_col,
-        chunk_words=chunk_words,
         # the cascade's earlier exchanges already distribute survivors;
         # the fan-out probe would re-plan the whole cascade subtree
         fan_out=False,
-    ).select(id_col, "total_chunks", "kept_chunks")
+    ).select("doc_id", "total_chunks", "kept_chunks")
 
     return (
-        gated.join(chunk_stats, id_col, "left")
+        gated.join(chunk_stats, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "status",
             "lang_pred",
             "quality",
@@ -113,15 +106,9 @@ def curate_corpus(
     )
 
 
-def quality_gate(
-    docs: DataFrame,
-    p: float = 0.5,
-    stratum_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def quality_gate(docs: DataFrame) -> DataFrame:
     """RELATIVE quality curation: keep a document iff its quality score
-    beats its stratum's p-quantile — "top half per language" instead of
+    beats its language stratum's median — "top half per language" instead of
     curate_corpus's absolute gates. Absolute thresholds drift as the
     crawl mix shifts; the relative gate self-calibrates per stratum.
 
@@ -131,20 +118,20 @@ def quality_gate(
     which lands each stratum on one reducer) broadcast-joined back.
 
     Exactness: quality_score is 4dp-rounded, so integer 1e-4 units are
-    exact; with p=0.5 the quantile interpolation is (a+b)*0.5 on
+    exact; the median's interpolation is (a+b)*0.5 on
     integers — exact binary in any engine, no rounding games.
     """
     from serialization_agents_spark.functions.text import quality_score
 
     scored = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(stratum_col).alias("stratum"),
-        F.round(quality_score(F.col(text_col)) * F.lit(10000.0), 0)
+        F.col("doc_id"),
+        F.col("lang").alias("stratum"),
+        F.round(quality_score(F.col("text")) * F.lit(10000.0), 0)
         .cast("long")
         .alias("q_units"),
     )
     thr = scored.groupBy("stratum").agg(
-        F.expr(f"percentile(q_units, {float(p)!r}D)").alias("q_thr")
+        F.expr("percentile(q_units, 0.5D)").alias("q_thr")
     )
     return (
         scored.join(F.broadcast(thr), "stratum")

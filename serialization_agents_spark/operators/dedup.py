@@ -22,7 +22,11 @@ from serialization_agents_spark.parallel import spread
 
 N_HASHES = 16
 BAND_SIZE = 4  # 4 bands x 4 rows: s-curve threshold ~ (1/4)^(1/4) ~ 0.7
+N_BANDS = N_HASHES // BAND_SIZE
 SHINGLE_K = 3
+SIMHASH_BITS = 32
+CHUNK_WORDS = 12  # tokens per chunk_dedup unit
+SPAN_K = 10  # tokens per repeated-span window and per winnowing gram
 WINNOW_W = 4  # gram hashes per winnowing window
 WINNOW_MAX_BUCKET = 4096  # docs per fingerprint before winnow_pairs drops it
 
@@ -31,7 +35,7 @@ def _tokens(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
+def shingles_from_tokens(toks: Column) -> Column:
     """Distinct word k-gram shingles over an ALREADY-TOKENIZED column.
 
     Prefer this over `shingles` when the caller can materialize the
@@ -40,38 +44,31 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
     inlined split() re-tokenizes once per gram position."""
     return F.array_distinct(
         F.when(
-            F.size(toks) >= k,
+            F.size(toks) >= SHINGLE_K,
             F.transform(
-                F.sequence(F.lit(0), F.size(toks) - k),
-                lambda i: F.array_join(F.slice(toks, i + 1, k), " "),
+                F.sequence(F.lit(0), F.size(toks) - SHINGLE_K),
+                lambda i: F.array_join(F.slice(toks, i + 1, SHINGLE_K), " "),
             ),
         ).otherwise(F.array(F.array_join(toks, " ")))
     )
 
 
-def shingles(text: Column, k: int = SHINGLE_K) -> Column:
+def shingles(text: Column) -> Column:
     """Distinct word k-gram shingles of a text column (JVM-side)."""
-    return shingles_from_tokens(_tokens(text), k)
+    return shingles_from_tokens(_tokens(text))
 
 
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct content with the
     surviving (min) id and the duplicate count."""
     return (
-        df.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        df.select(F.md5(F.col("text")).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keeper_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-    hash_fn: str = "md5",
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, hash_fn: str = "md5") -> DataFrame:
     """Per-doc MinHash signature + LSH band keys.
 
     h_i(doc) = min over shingles of hash(i, shingle); band key b_j =
@@ -86,15 +83,15 @@ def minhash_signatures(
     """
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    # n_hashes hash passes per shingle are the dominant narrow cost —
+    # N_HASHES hash passes per shingle are the dominant narrow cost —
     # fan an under-parallel scan out BEFORE paying them (and project to
     # the two columns the signature needs so the fan-out shuffles only
     # those bytes).
-    df = spread(df.select(F.col(id_col), F.col(text_col)))
+    df = spread(df.select(F.col("doc_id"), F.col("text")))
     # materialize tokens before the shingle transform (see
     # shingles_from_tokens: an inlined split re-tokenizes per position)
     toked = df.select(
-        F.col(id_col), _tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), _tokens(F.col("text")).alias("_toks")
     ).localCheckpoint(eager=False)
     sh = shingles_from_tokens(F.col("_toks")).alias("sh")
 
@@ -107,49 +104,43 @@ def minhash_signatures(
     # Explode the (distinct) shingles to rows and hash in PROJECTED,
     # whole-stage-codegen'd columns, then take the per-doc min of each
     # hash family with a map-side partial aggregation — one array
-    # traversal total instead of n_hashes interpreted
+    # traversal total instead of N_HASHES interpreted
     # array_min(transform(...)) passes per row (higher-order functions
     # never enter codegen). min(long)/min(string) over the exploded rows
     # equals array_min over the array: same values, same lexicographic
     # string order. The null guard keeps null-text parity with the HOF
     # path (null shingle -> null hash -> null signature; xxhash64 would
     # otherwise hash a null away and produce a non-null signature).
-    # NOTE: assumes id_col is unique per row (it is a doc id everywhere
-    # in this repo) — duplicate ids would merge signatures.
-    sh_rows = toked.select(F.col(id_col), sh).select(
-        F.col(id_col), F.explode_outer("sh").alias("_sh")
+    # NOTE: assumes doc_id is unique per row — duplicate ids would
+    # merge signatures.
+    sh_rows = toked.select(F.col("doc_id"), sh).select(
+        F.col("doc_id"), F.explode_outer("sh").alias("_sh")
     )
     hash_cols = [
         F.when(F.col("_sh").isNotNull(), _mh(i)(F.col("_sh"))).alias(f"h{i}")
-        for i in range(n_hashes)
+        for i in range(N_HASHES)
     ]
     with_sig = (
-        sh_rows.select(F.col(id_col), *hash_cols)
-        .groupBy(id_col)
-        .agg(*[F.min(f"h{i}").alias(f"mh{i}") for i in range(n_hashes)])
+        sh_rows.select(F.col("doc_id"), *hash_cols)
+        .groupBy("doc_id")
+        .agg(*[F.min(f"h{i}").alias(f"mh{i}") for i in range(N_HASHES)])
     )
-    n_bands = n_hashes // band_size
 
     def _band(b: int) -> F.Column:
-        members = [F.col(f"mh{b * band_size + r}") for r in range(band_size)]
+        members = [F.col(f"mh{b * BAND_SIZE + r}") for r in range(BAND_SIZE)]
         if hash_fn == "xxhash64":
             return F.xxhash64(F.lit(b), *members).alias(f"band{b}")
         return F.md5(
             F.concat_ws("|", F.lit(str(b)), *[m.cast("string") for m in members])
         ).alias(f"band{b}")
 
-    band_cols = [_band(b) for b in range(n_bands)]
-    return with_sig.select(F.col(id_col), *[F.col(f"mh{i}") for i in range(n_hashes)], *band_cols)
+    band_cols = [_band(b) for b in range(N_BANDS)]
+    return with_sig.select(
+        F.col("doc_id"), *[F.col(f"mh{i}") for i in range(N_HASHES)], *band_cols
+    )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-    hash_fn: str = "md5",
-) -> DataFrame:
+def minhash_candidate_pairs(df: DataFrame, hash_fn: str = "md5") -> DataFrame:
     """LSH bucket-join: docs sharing any band key become a candidate pair.
     Shuffle is keyed by band value — never a cross join.
 
@@ -158,19 +149,18 @@ def minhash_candidate_pairs(
     cost quadratic pairs here; exact_duplicates finds the same groups
     in one shuffle on the content hash.
     """
-    sigs = minhash_signatures(df, text_col, id_col, n_hashes, band_size, hash_fn)
-    n_bands = n_hashes // band_size
+    sigs = minhash_signatures(df, hash_fn)
     # (id, band) needs no cross-row dedup: signatures carry one row per
     # doc and every band value hashes its band INDEX in, so a doc's
     # bands are distinct by construction (and the terminal pair-level
     # dropDuplicates guards the result regardless) — the old
     # .dropDuplicates() here cost a full Exchange of the band set.
     bands = sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias("band"),
+        F.col("doc_id"),
+        F.explode(F.array(*[F.col(f"band{b}") for b in range(N_BANDS)])).alias("band"),
     )
-    a = bands.select(F.col("band"), F.col(id_col).alias("id_a"))
-    b = bands.select(F.col("band"), F.col(id_col).alias("id_b"))
+    a = bands.select(F.col("band"), F.col("doc_id").alias("id_a"))
+    b = bands.select(F.col("band"), F.col("doc_id").alias("id_b"))
     return (
         a.join(b, "band")
         .where(F.col("id_a") < F.col("id_b"))
@@ -179,19 +169,14 @@ def minhash_candidate_pairs(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.0,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Exact n-gram Jaccard for the LSH candidate pairs. Verification
     stage of the near-dup pipeline; only candidate pairs are scored, so
     cost is O(candidates), not O(n^2)."""
-    pairs = minhash_candidate_pairs(df, text_col, id_col)
-    sh = df.select(F.col(id_col), shingles(F.col(text_col)).alias("sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    pairs = minhash_candidate_pairs(df)
+    sh = df.select(F.col("doc_id"), shingles(F.col("text")).alias("sh"))
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     scored = (
         pairs.join(a, "id_a")
         .join(b, "id_b")
@@ -204,49 +189,43 @@ def ngram_jaccard_pairs(
             ).alias("jaccard"),
         )
     )
-    return scored.where(F.col("jaccard") >= threshold)
+    return scored.where(F.col("jaccard") >= 0.0)
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 32
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash sketch: per-token md5-derived bit pattern, majority vote per
     bit. Narrow per-row computation (explode + two groupBys on id).
 
-    32 bits (not 64) so the per-bit integer stays exact in cross-engine
-    comparisons; near-dup lookup groups on the sketch or prefix bands.
+    SIMHASH_BITS is 32 (not 64) so the per-bit integer stays exact in
+    cross-engine comparisons; near-dup lookup groups on the sketch or
+    prefix bands.
     """
-    toks = spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.explode(F.array_distinct(_tokens(F.col(text_col)))).alias("tok")
+    toks = spread(df.select(F.col("doc_id"), F.col("text"))).select(
+        F.col("doc_id"), F.explode(F.array_distinct(_tokens(F.col("text")))).alias("tok")
     )
     # token hash: first 8 hex chars of md5 -> 32-bit int
     toks = toks.withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
+    bits = range(SIMHASH_BITS)
     bit_votes = toks.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[
             (F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{b}")
-            for b in range(bits)
+            for b in bits
         ],
-    ).groupBy(id_col).agg(*[F.sum(f"b{b}").alias(f"b{b}") for b in range(bits)])
+    ).groupBy("doc_id").agg(*[F.sum(f"b{b}").alias(f"b{b}") for b in bits])
     sketch = bit_votes.select(
-        F.col(id_col),
+        F.col("doc_id"),
         sum(
-            [F.when(F.col(f"b{b}") > 0, F.lit(2**b)).otherwise(F.lit(0)) for b in range(bits)],
+            [F.when(F.col(f"b{b}") > 0, F.lit(2**b)).otherwise(F.lit(0)) for b in bits],
             F.lit(0),
         ).cast("long").alias("simhash"),
     )
     return sketch
 
 
-def chunk_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_words: int = 12,
-    fan_out: bool = True,
-) -> DataFrame:
+def chunk_dedup(df: DataFrame, fan_out: bool = True) -> DataFrame:
     """Chunk-level exact dedup (the CCNet recipe, Wenzek et al. 2020 —
-    public): split every document into fixed `chunk_words` windows over
+    public): split every document into fixed CHUNK_WORDS windows over
     its whitespace tokens, hash each unit, keep only the globally FIRST
     occurrence of each distinct unit (ordered by (id, position)), and
     reassemble the surviving text per document. Boilerplate (nav bars,
@@ -268,30 +247,30 @@ def chunk_dedup(
     # upstream exchange (e.g. the curate cascade's survivor frame): the
     # spread probe would re-plan the caller's whole subtree just to learn
     # the repartition is a no-op.
-    df = df.select(F.col(id_col), F.col(text_col))
+    df = df.select(F.col("doc_id"), F.col("text"))
     if fan_out:
         df = spread(df)
-    toks = _tokens(F.col(text_col))
-    n_chunks = F.ceil(F.size(toks) / F.lit(float(chunk_words))).cast("int")
+    toks = _tokens(F.col("text"))
+    n_chunks = F.ceil(F.size(toks) / F.lit(float(CHUNK_WORDS))).cast("int")
     chunks = F.when(
         F.size(toks) > 0,
         F.transform(
             F.sequence(F.lit(0), n_chunks - 1),
             lambda i: F.array_join(
-                F.slice(toks, i * chunk_words + 1, chunk_words), " "
+                F.slice(toks, i * CHUNK_WORDS + 1, CHUNK_WORDS), " "
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
     exploded = (
-        df.select(F.col(id_col), F.posexplode(chunks).alias("chunk_idx", "chunk"))
+        df.select(F.col("doc_id"), F.posexplode(chunks).alias("chunk_idx", "chunk"))
         .where(F.col("chunk") != "")
         .withColumn("chunk_hash", F.md5("chunk"))
     )
-    w = Window.partitionBy("chunk_hash").orderBy(F.col(id_col), F.col("chunk_idx"))
+    w = Window.partitionBy("chunk_hash").orderBy(F.col("doc_id"), F.col("chunk_idx"))
     ranked = exploded.withColumn("rn", F.row_number().over(w))
     return (
-        ranked.groupBy(id_col)
+        ranked.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("total_chunks"),
             F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).alias("kept_chunks"),
@@ -313,12 +292,7 @@ def chunk_dedup(
     )
 
 
-def neardup_clusters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5",
-) -> DataFrame:
+def neardup_clusters(df: DataFrame) -> DataFrame:
     """Near-duplicate CLUSTERS: MinHash-LSH candidate pairs closed under
     transitivity via the pipeline's connected-components operator, so a
     chain a~b~c dedupes to ONE representative even when (a, c) never
@@ -346,7 +320,7 @@ def neardup_clusters(
         connected_components,
     )
 
-    pairs = minhash_candidate_pairs(df, text_col, id_col, hash_fn=hash_fn)
+    pairs = minhash_candidate_pairs(df)
     pad = lambda c: F.lpad(F.col(c).cast("string"), 12, "0")  # noqa: E731
     pair_key = F.concat(F.lit("pair:"), pad("id_a"), F.lit(":"), pad("id_b"))
     edges = (
@@ -357,64 +331,53 @@ def neardup_clusters(
     )
     labels, _iters = connected_components(edges)
     return labels.select(
-        F.col("entity_key").cast("long").alias(id_col),
+        F.col("entity_key").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("cluster_rep"),
     )
 
 
-def repeated_span_stats(
-    docs: DataFrame,
-    k: int = 10,
-    stride: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def repeated_span_stats(docs: DataFrame) -> DataFrame:
     """Cross-document repeated-span statistics — the cheap relative of
     suffix-array ExactSubstr dedup (Lee et al., 'Deduplicating Training
-    Data Makes Language Models Better'): every k-token window (stride 1
-    = every position, exact for ANY shared span of >= k tokens, any
-    alignment), where non-overlapping chunk dedup (chunk_dedup) only
-    catches chunk-aligned repeats. `stride > 1` is a cost knob that
-    trades recall for rows: with BOTH sides sampled at stride s, only
-    offset differences divisible by s are caught — keep s = 1 unless a
-    winnowing-style content-defined sampler replaces it. A window
-    occurrence is 'duplicated' when its text appears in >= 2 DISTINCT
-    documents; within-doc repetition is the repetition_features gate's
-    job, not this one's.
+    Data Makes Language Models Better'): every SPAN_K-token window at
+    every position, exact for ANY shared span of >= SPAN_K tokens at any
+    alignment, where non-overlapping chunk dedup (chunk_dedup) only
+    catches chunk-aligned repeats. A window occurrence is 'duplicated'
+    when its text appears in >= 2 DISTINCT documents; within-doc
+    repetition is the repetition_features gate's job, not this one's.
 
     Returns (doc_id, n_windows, dup_windows, dup_fraction) per doc with
-    at least one full window (shorter docs carry no k-token evidence).
+    at least one full window (shorter docs carry no SPAN_K-token evidence).
 
-    Scale shape: one narrow window transform + explode (stride bounds
-    the blow-up at len/stride rows per doc), one distinct + hash agg on
-    the window text (map-side combine absorbs boilerplate heads), one
+    Scale shape: one narrow window transform + explode (one row per
+    token position), one distinct + hash agg on the window key
+    (map-side combine absorbs boilerplate heads), one
     equi-join back (hot boilerplate keys are probe-side skew; AQE
     splits them), one per-doc agg. dup_fraction divides two identical
     integers in both engines — no float drift.
     """
-    docs = spread(docs.select(F.col(id_col), F.col(text_col)))
-    toks = _tokens(F.col(text_col))
+    docs = spread(docs.select(F.col("doc_id"), F.col("text")))
+    toks = _tokens(F.col("text"))
     # Materialize tokens once (interpreted HOF lambdas re-evaluate an
     # inlined split() per window position), then build each window gram
-    # and hash it to a 64-bit key IN THE SAME transform: the dup
-    # decision only needs equality, so the shuffles (distinct, dup agg,
-    # probe join) carry 8-byte longs instead of ~60-char window strings
-    # — ~8x fewer shuffle bytes, long-vs-long comparisons. The window
-    # TEXT never leaves the map side. (The DuckDB oracle still groups
-    # by the string; the certification run is what proves the hash key
-    # introduces no collision on gate data — a 64-bit collision among
-    # ~10^6 distinct windows has probability ~1e-7.)
+    # and hash it to a 128-bit key (two independent xxhash64s) IN THE
+    # SAME transform: the dup decision only needs equality, so the
+    # shuffles (distinct, dup agg, probe join) carry 16-byte keys
+    # instead of ~60-char window strings. The window TEXT never leaves
+    # the map side; at 4e9 distinct windows a 128-bit collision has
+    # probability ~2e-20 (the DuckDB oracle groups by the string).
     toked = (
-        docs.where(F.size(toks) >= k)
-        .select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        docs.where(F.size(toks) >= SPAN_K)
+        .select("doc_id", toks.alias("_toks"))
         .localCheckpoint(eager=False)
     )
-    n_wins = F.floor((F.size(F.col("_toks")) - k) / stride) + 1
+
+    def _win_key(i):
+        w = F.array_join(F.slice(F.col("_toks"), i + 1, SPAN_K), " ")
+        return F.struct(F.xxhash64(w), F.xxhash64(F.lit(1), w))
+
     win_hashes = F.transform(
-        F.sequence(F.lit(0), (n_wins - 1).cast("int")),
-        lambda i: F.xxhash64(
-            F.array_join(F.slice(F.col("_toks"), i * stride + 1, k), " ")
-        ),
+        F.sequence(F.lit(0), F.size(F.col("_toks")) - SPAN_K), _win_key
     )
     occ = toked.select(
         "doc_id", F.explode(win_hashes).alias("win")
@@ -443,21 +406,15 @@ def repeated_span_stats(
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, hash_fn: str = "md5") -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm): hash every k-token gram, then keep the MINIMUM
-    hash of each window of w = WINNOW_W (4) consecutive gram hashes.
-    Guarantee: any span shared by two documents of length >= k + w - 1
-    tokens shares at least one fingerprint, at ~2/(w+1) sampling
-    density — the content-defined sampler that makes span-level dedup
-    affordable where repeated_span_stats' stride-1 enumeration is the
-    exact but row-heavy path.
+    MOSS algorithm): hash every k = SPAN_K token gram, then keep the
+    MINIMUM hash of each window of w = WINNOW_W (4) consecutive gram
+    hashes. Guarantee: any span shared by two documents of length
+    >= k + w - 1 tokens shares at least one fingerprint, at ~2/(w+1)
+    sampling density — the content-defined sampler that makes
+    span-level dedup affordable where repeated_span_stats' every-position
+    enumeration is the exact but row-heavy path.
 
     hash_fn='md5' keeps hex-string hashes so a SQL oracle reproduces
     fingerprints bit-for-bit (lexicographic min); 'xxhash64' is the
@@ -469,8 +426,8 @@ def winnow_fingerprints(
     """
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    docs = spread(docs.select(F.col(id_col), F.col(text_col)))
-    toks = _tokens(F.col(text_col))
+    docs = spread(docs.select(F.col("doc_id"), F.col("text")))
+    toks = _tokens(F.col("text"))
     # Materialize the token array ONCE before the gram pass: expressions
     # inside an interpreted HOF lambda are re-evaluated per element (no
     # codegen, no common-subexpression elimination), so an inlined
@@ -478,14 +435,14 @@ def winnow_fingerprints(
     # stage at sf1.0. The gram build and hash then FUSE into a single
     # transform (no intermediate gram-string array materialized).
     toked = (
-        docs.where(F.size(toks) >= k + WINNOW_W - 1)
-        .select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        docs.where(F.size(toks) >= SPAN_K + WINNOW_W - 1)
+        .select("doc_id", toks.alias("_toks"))
         .localCheckpoint(eager=False)
     )
     _hash = F.xxhash64 if hash_fn == "xxhash64" else F.md5
     hs = F.transform(
-        F.sequence(F.lit(0), F.size(F.col("_toks")) - k),
-        lambda i: _hash(F.array_join(F.slice(F.col("_toks"), i + 1, k), " ")),
+        F.sequence(F.lit(0), F.size(F.col("_toks")) - SPAN_K),
+        lambda i: _hash(F.array_join(F.slice(F.col("_toks"), i + 1, SPAN_K), " ")),
     )
     # MATERIALIZE the gram-hash array before the window pass too:
     # without this checkpoint the per-window lambda re-evaluates the
@@ -518,14 +475,9 @@ def winnow_fingerprints(
 
 
 def winnow_pairs(
-    docs: DataFrame,
-    k: int = 10,
-    min_shared: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_fn: str = "md5",
+    docs: DataFrame, hash_fn: str = "md5"
 ) -> tuple[DataFrame, DataFrame]:
-    """Document pairs sharing >= min_shared winnowing fingerprints:
+    """Document pairs sharing >= 1 winnowing fingerprint:
     (id_a, id_b, n_shared). The fingerprint is the blocking key — a
     within-fingerprint self-join, never all-pairs. A fingerprint shared
     by more than WINNOW_MAX_BUCKET docs is dropped (boilerplate
@@ -534,9 +486,9 @@ def winnow_pairs(
 
     Returns (pairs, dropped_fingerprints(fp, bucket_size)).
     """
-    fps = winnow_fingerprints(
-        docs, k=k, text_col=text_col, id_col=id_col, hash_fn=hash_fn
-    ).localCheckpoint(eager=False)  # feeds bucket sizes + both join sides
+    fps = winnow_fingerprints(docs, hash_fn).localCheckpoint(
+        eager=False
+    )  # feeds bucket sizes + both join sides
     sizes = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("bucket_size"))
     dropped = sizes.where(F.col("bucket_size") > WINNOW_MAX_BUCKET)
     keep = fps.join(F.broadcast(dropped.select("fp")), "fp", "left_anti")
@@ -547,6 +499,6 @@ def winnow_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 1)
     )
     return pairs, dropped.select("fp", "bucket_size")

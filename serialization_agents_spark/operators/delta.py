@@ -39,26 +39,21 @@ from pyspark.sql import functions as F
 CHANGE_KINDS = ("added", "removed", "changed")
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_col: str = "doc_id",
-    fingerprint_col: str = "fingerprint",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Keyed diff of two snapshot frames.
 
-    Both inputs must carry `key_col` (unique per snapshot) and
-    `fingerprint_col` (content hash). Returns (key, change,
+    Both inputs must carry `doc_id` (unique per snapshot) and
+    `fingerprint` (content hash). Returns (doc_id, change,
     old_fingerprint, new_fingerprint) with change in CHANGE_KINDS;
     unchanged keys are filtered out before the result leaves the join.
     """
     o = old.select(
-        F.col(key_col).alias("k"),
-        F.col(fingerprint_col).alias("old_fingerprint"),
+        F.col("doc_id").alias("k"),
+        F.col("fingerprint").alias("old_fingerprint"),
     )
     n = new.select(
-        F.col(key_col).alias("k"),
-        F.col(fingerprint_col).alias("new_fingerprint"),
+        F.col("doc_id").alias("k"),
+        F.col("fingerprint").alias("new_fingerprint"),
     )
     joined = o.join(n, on="k", how="full")
     return (
@@ -73,7 +68,7 @@ def snapshot_diff(
         )
         .where(F.col("change").isNotNull())
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("doc_id"),
             "change",
             "old_fingerprint",
             "new_fingerprint",

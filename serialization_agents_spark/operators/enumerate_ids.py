@@ -55,14 +55,9 @@ def running_offsets(df: DataFrame, order: list[str], weight: Column) -> DataFram
     ).drop("_pid")
 
 
-def enumerate_ids(
-    df: DataFrame,
-    order_col: str = "entity_key",
-    id_col: str = "registry_id",
-    offset: int = REGISTRY_ID_OFFSET,
-) -> DataFrame:
+def enumerate_ids(df: DataFrame) -> DataFrame:
     return (
-        running_offsets(df.drop(id_col), [order_col], F.lit(1))
-        .withColumn(id_col, F.col("_before") + F.lit(offset))
+        running_offsets(df.drop("registry_id"), ["entity_key"], F.lit(1))
+        .withColumn("registry_id", F.col("_before") + F.lit(REGISTRY_ID_OFFSET))
         .drop("_before")
     )

@@ -33,15 +33,14 @@ from pyspark.sql import functions as F
 
 SCALE = 1_000_000
 BASE = 150_000  # 0.15 * SCALE
+ITERATIONS = 3  # pagerank and label_propagation rounds
+BFS_MAX_HOPS = 4
+COOCCURRENCE_CAP = 16  # entity keys kept per document
 
 
-def cooccurrence_edges(
-    mentions: DataFrame,
-    doc_col: str = "url",
-    key_col: str = "entity_key",
-    cap: int = 16,
-) -> DataFrame:
-    """(a, b, co_pages) relatedness edges: entity pairs co-mentioned in
+def cooccurrence_edges(mentions: DataFrame) -> DataFrame:
+    """(a, b, co_pages) relatedness edges: entity pairs (`entity_key`)
+    co-mentioned in
     the same document, counted by document.
 
     This materializes the co-mention edge set the triples table implies
@@ -51,7 +50,7 @@ def cooccurrence_edges(
 
     Scale design (10^12 docs):
     - One shuffle groups mentions by document; the per-document agent
-      set is sorted and CAPPED at `cap` (keeping the `cap` smallest
+      set is sorted and CAPPED at COOCCURRENCE_CAP (keeping the smallest
       keys — deterministic, engine-independent). Listy hub pages would
       otherwise emit O(k^2) pairs; the cap bounds any document at
       C(cap, 2) pairs, so the explode stays linear in documents.
@@ -61,10 +60,10 @@ def cooccurrence_edges(
       pairs (skewed heads) partial-aggregate map-side before it.
     """
     per_doc = (
-        mentions.select(F.col(doc_col).alias("doc"), F.col(key_col).alias("k"))
+        mentions.select(F.col("url").alias("doc"), F.col("entity_key").alias("k"))
         .distinct()
         .groupBy("doc")
-        .agg(F.slice(F.sort_array(F.collect_set("k")), 1, cap).alias("ks"))
+        .agg(F.slice(F.sort_array(F.collect_set("k")), 1, COOCCURRENCE_CAP).alias("ks"))
         .where(F.size("ks") >= 2)
     )
     return (
@@ -76,20 +75,16 @@ def cooccurrence_edges(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """(node, rank) after `iterations` fixed-point PageRank steps.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """(node, rank) after ITERATIONS fixed-point PageRank steps over
+    (src, dst) edges.
 
     `edges` is deduplicated first so out-degrees match the edge set.
     Nodes = distinct(src) UNION distinct(dst); initial rank = SCALE.
     rank'(n) = BASE + 17 * sum_{(m,n) in E} (rank(m) DIV deg(m)) DIV 20.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         .repartition("src")
     )
@@ -101,7 +96,7 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = nodes.select("node", F.lit(SCALE).cast("long").alias("rank"))
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         contrib = (
             e.join(deg, "src")
             .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -121,12 +116,8 @@ def pagerank(
     return ranks
 
 
-def triangle_counts(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-) -> DataFrame:
-    """Per-node triangle counts over an undirected edge list — the
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node triangle counts over an undirected (a, b) edge list — the
     local-clustering signal a KG uses to separate tight entity
     communities from hub noise (a third classic iterative/graph op next
     to CC and pagerank; absent from the reference, which stops at flat
@@ -152,8 +143,8 @@ def triangle_counts(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
+            F.least(F.col("a"), F.col("b")).alias("u"),
+            F.greatest(F.col("a"), F.col("b")).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
@@ -200,17 +191,12 @@ def triangle_counts(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """(node, label) after `iterations` SYNCHRONOUS label-propagation
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(node, label) after ITERATIONS SYNCHRONOUS label-propagation
     steps — the community-detection sibling of `pagerank`, deterministic
     by construction where classic async LPA is run-order-dependent:
-    every node updates from the same previous-round labels, edge weights
-    (the `w` column) are integers (sum order cannot perturb), and ties
+    every node updates from the same previous-round labels, (src, dst)
+    edge weights (the `w` column) are integers (sum order cannot perturb), and ties
     break to the SMALLEST
     label. label_0(v) = v; label_{t+1}(v) = argmax_l sum of incident
     edge weights whose far end carries l at round t (isolated nodes
@@ -224,9 +210,7 @@ def label_propagation(
     exactly like the CC and PageRank loops.
     """
     half = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col("w").cast("long").alias("w"),
+        "src", "dst", F.col("w").cast("long").alias("w")
     ).where(F.col("src") != F.col("dst"))
     und = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
@@ -238,7 +222,7 @@ def label_propagation(
         und.select(F.col("src").alias("node")).distinct()
     )  # symmetrized: every endpoint appears as src
     labels = nodes.select("node", F.col("node").cast("long").alias("label"))
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         votes = (
             und.join(labels.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src", "label")
@@ -259,15 +243,9 @@ def label_propagation(
     return labels
 
 
-def bfs_distances(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """(node, dist) = shortest hop count from any source node within
-    `max_hops` synchronous BFS rounds — the multi-source reachability
+def bfs_distances(edges: DataFrame, sources: DataFrame) -> DataFrame:
+    """(node, dist) = shortest hop count over (src, dst) edges from any
+    source node within BFS_MAX_HOPS synchronous rounds — the multi-source reachability
     sibling of `pagerank`/`label_propagation`, exact by construction
     (min over integers; no run order can perturb it). Unreached nodes
     are omitted. `sources` is a one-column (node) frame.
@@ -275,12 +253,10 @@ def bfs_distances(
     Scale shape per round: ONE join of the symmetrized edge list
     against the current frontier-bearing distance map, one (node)
     min-agg with map-side combine, one left join back; lineage is
-    truncated per round like the CC/PageRank/LPA loops. max_hops bounds
+    truncated per round like the CC/PageRank/LPA loops. BFS_MAX_HOPS bounds
     the rounds, so the plan never depends on graph diameter discovery.
     """
-    half = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).where(F.col("src") != F.col("dst"))
+    half = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     und = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).repartition("dst")  # frontier join keys on dst (see label_propagation)
@@ -291,7 +267,7 @@ def bfs_distances(
         .withColumn("dist", F.lit(0).cast("long")),
         "node", "left",
     )
-    for _ in range(max_hops):
+    for _ in range(BFS_MAX_HOPS):
         reach = (
             und.join(
                 dist.where(F.col("dist").isNotNull())
@@ -309,56 +285,45 @@ def bfs_distances(
     return dist.where(F.col("dist").isNotNull())
 
 
-def negative_edge_samples(
-    edges: DataFrame,
-    ids: DataFrame,
-    n_nodes: int,
-    salt: int = 2654435761,
-    a_col: str = "a",
-    b_col: str = "b",
-    key_col: str = "entity_key",
-    idx_col: str = "idx",
-) -> DataFrame:
+def negative_edge_samples(edges: DataFrame, ids: DataFrame, n_nodes: int) -> DataFrame:
     """Deterministic corrupt-tail negative sampling for KG-embedding
     training (the TransE-style negatives a link-prediction trainer
     needs, generated as a dataset operator rather than at train time):
     for every positive edge (a, b), propose b_neg = node at index
-    ((idx_a * salt + idx_b) mod n_nodes) + 1 — a pure integer function
+    ((idx_a * 2654435761 + idx_b) mod n_nodes) + 1 — a pure integer function
     of the edge, so every engine, run, and partitioning produces the
     SAME negatives — then drop degenerate proposals (b_neg in {a, b})
     and false negatives (pairs that are real edges, checked on the
     (least, greatest) canonical ordering via one anti-join).
 
-    `ids` is a (key_col, idx_col) frame with idx contiguous 1..n_nodes
+    `ids` is an (entity_key, idx) frame with idx contiguous 1..n_nodes
     (enumerate_ids output shifted); `n_nodes` its count. Three hash
     joins against the entity-scale id map + one anti-join against the
     edges — no RNG state, no driver-side sampling.
     """
-    ia = ids.select(F.col(key_col).alias(a_col), F.col(idx_col).alias("_ia"))
-    ib = ids.select(F.col(key_col).alias(b_col), F.col(idx_col).alias("_ib"))
-    bn = ids.select(
-        F.col(key_col).alias("b_neg"), F.col(idx_col).alias("_neg_idx")
-    )
+    ia = ids.select(F.col("entity_key").alias("a"), F.col("idx").alias("_ia"))
+    ib = ids.select(F.col("entity_key").alias("b"), F.col("idx").alias("_ib"))
+    bn = ids.select(F.col("entity_key").alias("b_neg"), F.col("idx").alias("_neg_idx"))
     cand = (
-        edges.join(ia, a_col)
-        .join(ib, b_col)
+        edges.join(ia, "a")
+        .join(ib, "b")
         .withColumn(
             "_neg_idx",
-            (F.col("_ia") * F.lit(salt) + F.col("_ib")) % F.lit(n_nodes) + 1,
+            (F.col("_ia") * F.lit(2654435761) + F.col("_ib")) % F.lit(n_nodes) + 1,
         )
         .join(bn, "_neg_idx")
-        .where((F.col("b_neg") != F.col(a_col)) & (F.col("b_neg") != F.col(b_col)))
+        .where((F.col("b_neg") != F.col("a")) & (F.col("b_neg") != F.col("b")))
     )
     # canonicalize the STORED edges too: a non-canonical input edge
     # (b, a) must still veto the proposal (a, b) — without this, the
     # reverse of a stored edge could leak out as a "negative" (latent
     # only: every current caller passes canonical a < b edges)
     true_pairs = edges.select(
-        F.least(a_col, b_col).alias("_p1"), F.greatest(a_col, b_col).alias("_p2")
+        F.least("a", "b").alias("_p1"), F.greatest("a", "b").alias("_p2")
     )
     return (
-        cand.withColumn("_p1", F.least(a_col, "b_neg"))
-        .withColumn("_p2", F.greatest(a_col, "b_neg"))
+        cand.withColumn("_p1", F.least("a", "b_neg"))
+        .withColumn("_p2", F.greatest("a", "b_neg"))
         .join(true_pairs, ["_p1", "_p2"], "left_anti")
-        .select(a_col, b_col, "b_neg")
+        .select("a", "b", "b_neg")
     )

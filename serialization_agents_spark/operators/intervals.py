@@ -36,22 +36,19 @@ def interval_join(
     points: DataFrame,
     intervals: DataFrame,
     key: str,
-    ts_col: str = "ts",
-    start_col: str = "start",
-    end_col: str = "end",
     chunk: int = 604800,
 ) -> DataFrame:
     """Inner-join every point row to every interval row of the same
-    `key` with start <= ts < end (half-open, the standard validity
-    convention). Returns points columns + intervals columns (minus the
-    duplicated key). ts/start/end must be integer-valued (epoch seconds
-    or micros — any unit, as long as `chunk` is in the same unit); the
-    caller converts timestamps (e.g. F.unix_micros) so the arithmetic
-    is exact in any engine.
+    `key` with start_us <= ts_us < end_us (half-open, the standard
+    validity convention). Returns points columns + intervals columns
+    (minus the duplicated key). ts_us/start_us/end_us must be
+    integer-valued (epoch micros, or any unit, as long as `chunk` is in
+    the same unit); the caller converts timestamps (e.g. F.unix_micros)
+    so the arithmetic is exact in any engine.
     """
-    p_ts = F.col(ts_col).cast("long")
-    i_start = F.col(start_col).cast("long")
-    i_end = F.col(end_col).cast("long")
+    p_ts = F.col("ts_us").cast("long")
+    i_start = F.col("start_us").cast("long")
+    i_end = F.col("end_us").cast("long")
 
     p = points.withColumn("_chunk", F.floor(p_ts / chunk))
     # a half-open interval [s, e) overlaps chunks floor(s/c)..floor((e-1)/c);

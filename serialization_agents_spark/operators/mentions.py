@@ -45,15 +45,13 @@ MARKUP_SUBJECT_NAME_RE = r'<span class="subject" data-type="name">([^<]+)</span>
 PROSE_RE = r"by ((?:[A-Z][\w.'-]*)(?: [A-Z0-9][\w.'-]*)*) (?:reviewed|wrote|edited)"
 LCNAF_URI_ID_RE = r"/names/([^/\"]+)$"
 
+# (source, source_priority) of the markup spans; the merge keeps the
+# smallest priority's scalars, so agent spans beat promoted subjects.
+WEB_SOURCE, WEB_PRIORITY = "web", 1
+SUBJECT_SOURCE, SUBJECT_PRIORITY = "web_subject", 2
 
-def detect_mentions(
-    pages: DataFrame,
-    source: str = "web",
-    source_priority: int = 1,
-    include_subjects: bool = False,
-    subject_source: str = "web_subject",
-    subject_priority: int = 2,
-) -> DataFrame:
+
+def detect_mentions(pages: DataFrame, include_subjects: bool = False) -> DataFrame:
     """pages(url, html, text, ...) -> MENTIONS-schema rows.
 
     Reference parity: F2 (drop records with no mentions,
@@ -84,7 +82,7 @@ def detect_mentions(
             F.regexp_extract_all(html_s, F.lit(MARKUP_VIAF_RE), F.lit(1)).alias("viaf"),
         ),
         lambda m: _span(
-            m["name"], F.nullif(m["viaf"], F.lit("")), null_s, source, source_priority
+            m["name"], F.nullif(m["viaf"], F.lit("")), null_s, WEB_SOURCE, WEB_PRIORITY
         ),
     )
     # P3 — LCNAF URI -> id, the reference's `split('/names/')[1]`
@@ -98,19 +96,19 @@ def detect_mentions(
             m["name"],
             null_s,
             F.nullif(F.regexp_extract(m["uri"], LCNAF_URI_ID_RE, 1), F.lit("")),
-            source, source_priority,
+            WEB_SOURCE, WEB_PRIORITY,
         ),
     )
     plain = F.transform(
         F.regexp_extract_all(html_s, F.lit(MARKUP_PLAIN_RE), F.lit(1)),
-        lambda s: _span(s, null_s, null_s, source, source_priority),
+        lambda s: _span(s, null_s, null_s, WEB_SOURCE, WEB_PRIORITY),
     )
     kinds = [hinted, lc_hinted, plain]
     if include_subjects:
         kinds.append(
             F.transform(
                 F.regexp_extract_all(html_s, F.lit(MARKUP_SUBJECT_NAME_RE), F.lit(1)),
-                lambda s: _span(s, null_s, null_s, subject_source, subject_priority),
+                lambda s: _span(s, null_s, null_s, SUBJECT_SOURCE, SUBJECT_PRIORITY),
             )
         )
 
@@ -133,9 +131,7 @@ def detect_mentions(
     ).where(F.length("name_norm") > 0)
 
 
-def promote_subject_mentions(
-    pages: DataFrame, source: str = "web_subject", source_priority: int = 2
-) -> DataFrame:
+def promote_subject_mentions(pages: DataFrame) -> DataFrame:
     """P4 — promote name-typed subjects into the mentions stream.
 
     The reference pushes `subjects` entries with `type === 'name'` into the
@@ -163,16 +159,14 @@ def promote_subject_mentions(
             normalize_name_expr(F.col("name_raw")).alias("name_norm"),
             F.lit(None).cast("string").alias("viaf_hint"),
             F.lit(None).cast("string").alias("lc_hint"),
-            F.lit(source).alias("source"),
-            F.lit(source_priority).cast("int").alias("source_priority"),
+            F.lit(SUBJECT_SOURCE).alias("source"),
+            F.lit(SUBJECT_PRIORITY).cast("int").alias("source_priority"),
         )
         .where(F.length("name_norm") > 0)
     )
 
 
-def detect_mentions_prose(
-    pages_with_text: DataFrame, source: str = "web_prose", source_priority: int = 2
-) -> DataFrame:
+def detect_mentions_prose(pages_with_text: DataFrame) -> DataFrame:
     """NER-style prose detection over the extracted `text` column only —
     for corpora with no agent markup at all."""
     return (
@@ -191,25 +185,21 @@ def detect_mentions_prose(
             normalize_name_expr(F.col("name_raw")).alias("name_norm"),
             F.lit(None).cast("string").alias("viaf_hint"),
             F.lit(None).cast("string").alias("lc_hint"),
-            F.lit(source).alias("source"),
-            F.lit(source_priority).cast("int").alias("source_priority"),
+            F.lit("web_prose").alias("source"),
+            F.lit(2).cast("int").alias("source_priority"),
         )
         .where(F.length("name_norm") > 0)
     )
 
 
 def detect_mentions_gazetteer(
-    pages_with_text: DataFrame,
-    authority: DataFrame,
-    max_shingle: int = 4,
-    source: str = "web_gazetteer",
-    source_priority: int = 3,
+    pages_with_text: DataFrame, authority: DataFrame
 ) -> DataFrame:
-    """Shingle-blocking gazetteer matcher: explode page text into 1..k-token
+    """Shingle-blocking gazetteer matcher: explode page text into 1..2-token
     normalized shingles, hash-join against the authority's normalized name
     forms (broadcast — the dimension is small relative to the corpus).
 
-    Scale note: the explode fans each page out ~tokens×k ways but stays a
+    Scale note: the explode fans each page out ~tokens×2 ways but stays a
     narrow op followed by ONE broadcast join; no shuffle of the fact table.
     """
     def _shingler(length: int):
@@ -232,7 +222,7 @@ def detect_mentions_gazetteer(
                             _shingler(L),
                         ),
                     ).otherwise(F.array().cast("array<string>"))
-                    for L in range(1, max_shingle + 1)
+                    for L in range(1, 3)
                 ])
             )
         ).alias("pos", "shingle"),
@@ -248,6 +238,6 @@ def detect_mentions_gazetteer(
         F.col("shingle").alias("name_norm"),
         F.col("viaf_id").alias("viaf_hint"),
         F.lit(None).cast("string").alias("lc_hint"),
-        F.lit(source).alias("source"),
-        F.lit(source_priority).cast("int").alias("source_priority"),
+        F.lit("web_gazetteer").alias("source"),
+        F.lit(3).cast("int").alias("source_priority"),
     )

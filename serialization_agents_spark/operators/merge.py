@@ -120,12 +120,12 @@ def prepare_mention_facts(linked: DataFrame) -> DataFrame:
     )
 
 
-def merge_entities(linked: DataFrame, n_salt: int = N_SALT) -> DataFrame:
+def merge_entities(linked: DataFrame) -> DataFrame:
     """linked mentions -> one canonical agent row per entity_key (AGENTS
     schema minus registry_id / merge-lineage, which later stages fill)."""
     facts = prepare_mention_facts(linked)
 
-    salted = facts.withColumn("salt", F.pmod(F.xxhash64("mention_id"), F.lit(n_salt)))
+    salted = facts.withColumn("salt", F.pmod(F.xxhash64("mention_id"), F.lit(N_SALT)))
 
     # the entity's primary source: lexicographic argmin by (priority,
     # source name) — order-free, exact under any fold split (used by the

@@ -27,23 +27,30 @@ MEDIA_SCHEMA = (
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
 )
 
+N_MEDIA = 200  # rows of synth_media
+N_FEATURES = 8  # stand-in feature vector length
+BATCH_LIMIT = 1024  # rows per decoded chunk of an Arrow batch
+FRAME_EVERY_MS = 1000  # video frame sampling interval
+RESIZE_WIDTH = 64
+RESIZE_HEIGHT = 64
+
 IMAGE_FEATURES_SCHEMA = (
     "media_id long, width int, height int, channels int, "
     "feature array<float>, decode_ok boolean"
 )
 
 
-def _fake_decode(content: bytes, n_features: int = 8) -> tuple[int, int, int, list[float]]:
+def _fake_decode(content: bytes) -> tuple[int, int, int, list[float]]:
     """Deterministic stand-in for a real image decode: dimensions and a
     feature vector derived from the content digest, in place of PIL."""
     d = hashlib.md5(content or b"").digest()
     width = 16 + d[0] % 240
     height = 16 + d[1] % 240
-    feats = [round(b / 255.0, 6) for b in d[2 : 2 + n_features]]
+    feats = [round(b / 255.0, 6) for b in d[2 : 2 + N_FEATURES]]
     return width, height, 3, feats
 
 
-def decode_image_batches(batch_limit: int = 1024):
+def decode_image_batches():
     """Returns a mapInPandas kernel: Iterator[pd.DataFrame] -> Iterator[...].
 
     Undecodable rows degrade to decode_ok=False, never a task failure.
@@ -52,8 +59,8 @@ def decode_image_batches(batch_limit: int = 1024):
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # bound memory: re-chunk oversized Arrow batches
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
+            for start in range(0, len(pdf), BATCH_LIMIT):
+                chunk = pdf.iloc[start : start + BATCH_LIMIT]
                 rows = []
                 for mid, content in zip(chunk["media_id"], chunk["content"]):
                     try:
@@ -95,12 +102,12 @@ RESIZED_SCHEMA = (
 )
 
 
-def _fake_audio_decode(content: bytes, n_features: int = 8) -> tuple[int, list[float]]:
+def _fake_audio_decode(content: bytes) -> tuple[int, list[float]]:
     """Deterministic stand-in for librosa/ffmpeg: a duration and a
     spectrogram-summary vector derived from the content digest."""
     d = hashlib.md5(b"audio:" + (content or b"")).digest()
     duration_ms = 500 + int.from_bytes(d[:2], "big") % 60_000
-    feats = [round(b / 255.0, 6) for b in d[2 : 2 + n_features]]
+    feats = [round(b / 255.0, 6) for b in d[2 : 2 + N_FEATURES]]
     return duration_ms, feats
 
 
@@ -131,10 +138,9 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     return audio.mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
 
 
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, max_frames: int = 16
-) -> DataFrame:
-    """UDTF-shaped fan-out: one row per sampled frame. The stand-in
+def sample_video_frames(media: DataFrame) -> DataFrame:
+    """UDTF-shaped fan-out: one row per sampled frame, at most 16 per
+    video. The stand-in
     decoder derives a deterministic duration from the digest and emits
     md5-chained frame payloads, in place of ffmpeg keyframe extraction."""
 
@@ -144,10 +150,10 @@ def sample_video_frames(
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 b = bytes(content or b"")
                 duration_ms, _ = _fake_audio_decode(b)
-                n = min(max_frames, max(1, duration_ms // every_ms))
+                n = min(16, max(1, duration_ms // FRAME_EVERY_MS))
                 for i in range(n):
                     frame = hashlib.md5(b + i.to_bytes(4, "big")).digest()
-                    rows.append((mid, i, i * every_ms, frame))
+                    rows.append((mid, i, i * FRAME_EVERY_MS, frame))
             yield pd.DataFrame(
                 rows, columns=["media_id", "frame_idx", "ts_ms", "frame"]
             )
@@ -156,13 +162,15 @@ def sample_video_frames(
     return videos.mapInPandas(kernel, FRAME_SCHEMA)
 
 
-def resize_images(
-    media: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """Image resize kernel: in place of PIL, it emits a digest-derived
-    payload of width*height bytes, so the Spark-side shape — narrow map,
-    binary out, metadata columns — is real. Unresizable rows degrade to
-    a NULL payload with resize_ok=False, never a task failure."""
+    payload of RESIZE_WIDTH * RESIZE_HEIGHT bytes, so the Spark-side
+    shape — narrow map, binary out, metadata columns — is real.
+    Unresizable rows degrade to a NULL payload with resize_ok=False,
+    never a task failure."""
+
+    # bound on the driver: the kernel runs in Python workers
+    width, height = RESIZE_WIDTH, RESIZE_HEIGHT
 
     def resize(content: bytes) -> bytes:
         seed = hashlib.md5(content + f"{width}x{height}".encode()).digest()
@@ -185,9 +193,9 @@ def resize_images(
     return images.mapInPandas(kernel, RESIZED_SCHEMA)
 
 
-def synth_media(spark, n: int = 100) -> DataFrame:
+def synth_media(spark) -> DataFrame:
     """Deterministic fake media table (binary payload = md5-chained bytes)."""
-    df = spark.range(n)
+    df = spark.range(N_MEDIA)
     payload = F.sha2(F.concat(F.lit("media"), F.col("id").cast("string")), 256)
     kind = (
         F.when(F.col("id") % 3 == 0, "audio")

@@ -29,35 +29,32 @@ from serialization_agents_spark.functions.text import token_count
 from serialization_agents_spark.operators.enumerate_ids import running_offsets
 
 
-def pack_key(id_col, seed: str = "pack"):
-    """Deterministic shuffle key: md5(seed:id) — reproducible across
-    runs, partitionings, and executor counts (md5 so a DuckDB oracle
-    replays the exact layout; swaps to xxhash64 at production scale
-    like the MinHash prod flag)."""
-    return F.md5(F.concat(F.lit(seed), F.lit(":"), id_col.cast("string")))
+PACK_BUDGET = 4096  # tokens per training shard
 
 
-def shard_pack(
-    docs: DataFrame,
-    budget: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: str = "pack",
-) -> DataFrame:
-    """Assign each doc to a training shard of ~`budget` tokens.
+def pack_key(id_col):
+    """Deterministic shuffle key: md5('pack:' || id) — reproducible
+    across runs, partitionings, and executor counts (md5 so a DuckDB
+    oracle replays the exact layout; swaps to xxhash64 at production
+    scale like the MinHash prod flag)."""
+    return F.md5(F.concat(F.lit("pack"), F.lit(":"), id_col.cast("string")))
+
+
+def shard_pack(docs: DataFrame) -> DataFrame:
+    """Assign each doc to a training shard of ~PACK_BUDGET tokens.
 
     Returns (doc_id, n_tokens, shard_id) where shard_id is
-    floor(tokens_before_this_doc / budget) along the md5-shuffled
+    floor(tokens_before_this_doc / PACK_BUDGET) along the md5-shuffled
     order. Every count is integer, so the assignment is bit-exact and
     independent of partitioning (pinned by tests).
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
-        pack_key(F.col(id_col), seed).alias("_k"),
+        F.col("doc_id"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
+        pack_key(F.col("doc_id")).alias("_k"),
     )
     return running_offsets(base, ["_k", "doc_id"], F.col("n_tokens")).select(
         "doc_id",
         "n_tokens",
-        F.floor(F.col("_before") / F.lit(int(budget))).cast("long").alias("shard_id"),
+        F.floor(F.col("_before") / F.lit(PACK_BUDGET)).cast("long").alias("shard_id"),
     )

@@ -27,27 +27,23 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark.functions.text import token_count, tokens
 
+K1 = 1.2
+B = 0.75
+TOPK = 25
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k documents for `query_terms` by BM25 (Robertson idf with
+
+def bm25_topk(docs: DataFrame, query_terms: list[str]) -> DataFrame:
+    """Top-TOPK documents for `query_terms` by BM25 (Robertson idf with
     the +1 floor: ln((N - df + 0.5)/(df + 0.5) + 1)).
 
     Returns (doc_id, n_matched, score_e4) — score in integer 1e-4
-    units — ordered by score desc, doc_id asc, limited to k.
+    units — ordered by score desc, doc_id asc, limited to TOPK.
     """
     terms = sorted(set(query_terms))
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        tokens(F.col(text_col)).alias("_toks"),
-        token_count(F.col(text_col)).cast("long").alias("dl"),
+        F.col("doc_id"),
+        tokens(F.col("text")).alias("_toks"),
+        token_count(F.col("text")).cast("long").alias("dl"),
     ).localCheckpoint(eager=False)  # one scan feeds stats, tf, and dl
 
     stats = base.agg(
@@ -73,13 +69,13 @@ def bm25_topk(
     # identical parenthesization as the oracle SQL — every op IEEE-exact
     # on identical operands once idf is coarsened
     term_score = idf4 * (
-        (F.col("tf").cast("double") * F.lit(float(k1) + 1.0))
+        (F.col("tf").cast("double") * F.lit(K1 + 1.0))
         / (
             F.col("tf").cast("double")
-            + F.lit(float(k1))
+            + F.lit(K1)
             * (
-                F.lit(1.0 - float(b))
-                + F.lit(float(b)) * (F.col("dl").cast("double") / F.lit(avgdl))
+                F.lit(1.0 - B)
+                + F.lit(B) * (F.col("dl").cast("double") / F.lit(avgdl))
             )
         )
     )
@@ -94,5 +90,5 @@ def bm25_topk(
             F.sum("_u").alias("score_e4"),
         )
         .orderBy(F.col("score_e4").desc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(TOPK)
     )

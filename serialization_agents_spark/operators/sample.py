@@ -27,7 +27,7 @@ from pyspark.sql.functions import broadcast
 HASH_SPACE = float(1 << 32)
 
 
-def uniform_hash(id_col: Column, seed: str = "sample") -> Column:
+def uniform_hash(id_col: Column, seed: str) -> Column:
     """Deterministic uniform deviate in [0, 1) keyed by (seed, id)."""
     h = F.conv(
         F.substring(F.md5(F.concat(F.lit(seed), F.lit(":"), id_col.cast("string"))), 1, 8),
@@ -37,41 +37,30 @@ def uniform_hash(id_col: Column, seed: str = "sample") -> Column:
     return h / F.lit(HASH_SPACE)
 
 
-def sample_corpus(
-    df: DataFrame,
-    rates: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    default_rate: float = 0.0,
-    seed: str = "sample",
-) -> DataFrame:
-    """Keep each row iff its (seed, id)-hash deviate < its stratum's rate.
+def sample_corpus(df: DataFrame, rates: dict[str, float]) -> DataFrame:
+    """Keep each row iff its ('sample', doc_id)-hash deviate < its
+    `lang` stratum's rate.
 
     `rates` maps stratum value -> keep probability; unlisted strata get
-    `default_rate`. Returns the input rows (all columns) plus the sampling
-    deviate `u` rounded to 6 dp for auditability.
+    0.1. Returns the input rows (all columns) plus the sampling deviate
+    `u` rounded to 6 dp for auditability.
     """
     spark = df.sparkSession
     rate_rows = [(k, float(v)) for k, v in sorted(rates.items())]
-    rate_df = spark.createDataFrame(rate_rows, f"{stratum_col} string, __rate double")
-    u = uniform_hash(F.col(id_col), seed)
+    rate_df = spark.createDataFrame(rate_rows, "lang string, __rate double")
+    u = uniform_hash(F.col("doc_id"), "sample")
     return (
-        df.join(broadcast(rate_df), stratum_col, "left")
-        .withColumn("__rate", F.coalesce("__rate", F.lit(float(default_rate))))
+        df.join(broadcast(rate_df), "lang", "left")
+        .withColumn("__rate", F.coalesce("__rate", F.lit(0.1)))
         .withColumn("u", F.round(u, 6))
         .where(u < F.col("__rate"))
         .drop("__rate")
     )
 
 
-def mixture_sample(
-    df: DataFrame,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "mix",
-) -> DataFrame:
-    """Temperature-based mixture rebalancing: DERIVE per-domain keep
-    rates from the observed domain counts instead of taking them as
+def mixture_sample(df: DataFrame) -> DataFrame:
+    """Temperature-based mixture rebalancing: DERIVE per-domain (`lang`)
+    keep rates from the observed domain counts instead of taking them as
     config. The target share of domain d is count_d^0.5 / sum_e
     count_e^0.5 (the exponent < 1 flattens the head and upweights the
     tail — the standard unigram-temperature mixing rule); the keep rate is
@@ -90,7 +79,7 @@ def mixture_sample(
     # pow only ~1-ulp, so the micro-unit floor is bit-exact in any engine
     w_units = F.floor(F.sqrt(F.col("__cnt").cast("double")) * F.lit(1e6)).cast("long")
     dims = (
-        df.groupBy(stratum_col)
+        df.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("__cnt"))
         .withColumn("__w", w_units)
     )
@@ -103,11 +92,11 @@ def mixture_sample(
         * (F.col("__total").cast("double") / F.col("__cnt").cast("double")),
     )
     rate_df = dims.crossJoin(broadcast(totals)).select(
-        stratum_col, rate.alias("__mix_rate")
+        "lang", rate.alias("__mix_rate")
     )
-    u = uniform_hash(F.col(id_col), seed)
+    u = uniform_hash(F.col("doc_id"), "mix")
     return (
-        df.join(broadcast(rate_df), stratum_col)
+        df.join(broadcast(rate_df), "lang")
         .where(u < F.col("__mix_rate"))
         .withColumn("mix_rate", F.round("__mix_rate", 6))
         .drop("__mix_rate")

@@ -13,7 +13,7 @@
 
 - ``ivf_topk``          — IVF-flat: corpus vectors live in exactly ONE
   argmax-dot centroid cell (narrow map + one hash join); queries probe
-  their best `n_probes` cells. Deterministic LCG centroids; ``kmeans_lloyd``
+  their best IVF_PROBES cells. Deterministic LCG centroids; ``kmeans_lloyd``
   runs quantized Lloyd iterations over the same init.
 - ``embedding_neardup_pairs`` — the dedup-family face of this module:
   sign-LSH blocked self-join + exact cosine ≥ threshold, with a
@@ -34,6 +34,19 @@ from pyspark.sql.window import Window
 
 from serialization_agents_spark.parallel import spread
 
+# Every operator reads (vec_id, embedding) rows of DIM floats.
+DIM = 64
+SEED = 42  # of every LCG plane / centroid family
+TOPK = 3  # neighbors per query
+LSH_PLANES = 8
+IVF_CELLS = 16
+IVF_PROBES = 4  # cells a query scans
+KMEANS_CELLS = 8
+KMEANS_ITERS = 2
+RP_DIM = 16  # random-projection output width
+NEARDUP_PLANES = 4
+NEARDUP_THRESHOLD = 0.35  # min cosine of a near-duplicate pair
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -49,23 +62,17 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k: every query row against every corpus row.
+def cosine_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Brute-force cosine top-TOPK: every query row against every corpus row.
     queries must be small (it is broadcast); corpus side streams. Cosine
     is rounded to 4dp before the ranking, for oracle parity."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     )
     c = spread(embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ))
     scored = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
@@ -75,7 +82,7 @@ def cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select(
             "query_id", "neighbor_id", "cosine",
             F.col("rank").cast("long").alias("rank"),  # BIGINT parity w/ SQL engines
@@ -215,17 +222,9 @@ def _score_pairs(
 
 
 def lsh_bucket_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probes: int = 0,
+    embeddings: DataFrame, queries: DataFrame, n_probes: int = 0
 ) -> DataFrame:
-    """Random-hyperplane LSH: bucket = sign-bit signature over n_planes.
+    """Random-hyperplane LSH: bucket = sign-bit signature over LSH_PLANES.
     Query and corpus rows meet in a hash join on the bucket key, then
     exact cosine re-ranks within the bucket.
 
@@ -241,7 +240,7 @@ def lsh_bucket_topk(
     side is small and stays on expressions (its per-plane margins also
     drive the multi-probe bit ranking).
     """
-    planes = [_hyperplane(dim, seed, p) for p in range(n_planes)]
+    planes = [_hyperplane(DIM, SEED, p) for p in range(LSH_PLANES)]
 
     def dots(vec: Column) -> Column:
         return F.array(
@@ -254,16 +253,16 @@ def lsh_bucket_topk(
         )
 
     c = spread(embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )).mapInPandas(
         _bucket_kernel(planes, "neighbor_id", "cv"),
         "neighbor_id long, cv array<double>, bucket string",
     )
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).withColumn("_d", dots(F.col("qv")))
     base_sig = sig_from_dots(F.col("_d"))
     if n_probes > 0:
@@ -272,7 +271,7 @@ def lsh_bucket_topk(
         ranked = F.slice(
             F.array_sort(
                 F.transform(
-                    F.sequence(F.lit(0), F.lit(n_planes - 1)),
+                    F.sequence(F.lit(0), F.lit(LSH_PLANES - 1)),
                     lambda i: F.struct(
                         F.abs(F.element_at(F.col("_d"), i + 1)).alias("m"),
                         i.alias("i"),
@@ -286,7 +285,7 @@ def lsh_bucket_topk(
             return F.concat(
                 F.substr(sig, F.lit(1), i),
                 F.when(F.substr(sig, i + 1, F.lit(1)) == "1", "0").otherwise("1"),
-                F.substr(sig, i + 2, F.lit(n_planes)),
+                F.substr(sig, i + 2, F.lit(LSH_PLANES)),
             )
 
         probes = F.transform(ranked, lambda s: _flip(base_sig, s["i"]))
@@ -298,17 +297,17 @@ def lsh_bucket_topk(
 
     cand = c.join(q, "bucket").where(F.col("neighbor_id") != F.col("query_id"))
     scored = _score_pairs(
-        cand, "query_id", "neighbor_id", "qv", "cv", dim
+        cand, "query_id", "neighbor_id", "qv", "cv", DIM
     ).dropDuplicates(["query_id", "neighbor_id"])
     # multi-probe: a pair can meet in several probed buckets -> dedup
-    return _topk(scored, k)
+    return _topk(scored)
 
 
-def _topk(scored: DataFrame, k: int) -> DataFrame:
+def _topk(scored: DataFrame) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select(
             "query_id", "neighbor_id", "cosine",
             F.col("rank").cast("long").alias("rank"),
@@ -322,11 +321,11 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 IVF_CENTROID_BASE = 1000  # LCG index offset decoupling centroids from LSH planes
 
 
-def ivf_centroids(n_centroids: int, dim: int = 64, seed: int = 42) -> list[list[float]]:
+def ivf_centroids(n_centroids: int) -> list[list[float]]:
     """Deterministic centroids from the same LCG family as the LSH planes
     (offset so the two never coincide). The driver oracle transcribes the
     identical recurrence; `kmeans_lloyd` starts from these."""
-    return [_hyperplane(dim, seed, IVF_CENTROID_BASE + c) for c in range(n_centroids)]
+    return [_hyperplane(DIM, SEED, IVF_CENTROID_BASE + c) for c in range(n_centroids)]
 
 
 def _cell_kernel(centroids: list[list[float]], id_out: str, vec_out: str):
@@ -352,29 +351,20 @@ def _cell_kernel(centroids: list[list[float]], id_out: str, vec_out: str):
     return kernel
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probes: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-flat: each corpus vector is assigned to its single best
-    (argmax dot) centroid cell — a NARROW map (numpy matmul per Arrow
-    batch) — and each query probes its `n_probes` best cells.
+    (argmax dot) of IVF_CELLS centroid cells — a NARROW map (numpy
+    matmul per Arrow batch) — and each query probes its IVF_PROBES best
+    cells.
     Exact cosine re-ranks inside the probed cells, so one hash join on
     `cell` is the only shuffle and recall follows the probe count. A
     corpus row lives in exactly one cell, so no pair-dedup is needed.
 
-    At scale: n_centroids grows ~sqrt(corpus) (cells stay bounded), the
+    At scale: IVF_CELLS grows ~sqrt(corpus) (cells stay bounded), the
     centroid table stays a broadcast literal, and cell assignment is
     still one narrow matmul pass — the standard IVF layout.
     """
-    cents = ivf_centroids(n_centroids, dim, seed)
+    cents = ivf_centroids(IVF_CELLS)
 
     def cell_structs(vec: Column) -> list[Column]:
         # (-dot, idx) structs: array_min/array_sort give argmax-by-dot
@@ -388,29 +378,29 @@ def ivf_topk(
         ]
 
     c = spread(embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )).mapInPandas(
         _cell_kernel(cents, "neighbor_id", "cv"),
         "neighbor_id long, cv array<double>, cell int",
     )
 
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
     ).withColumn(
         "cell",
         F.explode(
             F.transform(
-                F.slice(F.array_sort(F.array(*cell_structs(F.col("qv")))), 1, n_probes),
+                F.slice(F.array_sort(F.array(*cell_structs(F.col("qv")))), 1, IVF_PROBES),
                 lambda s: s["c"],
             )
         ),
     )
 
     cand = c.join(q, "cell").where(F.col("neighbor_id") != F.col("query_id"))
-    scored = _score_pairs(cand, "query_id", "neighbor_id", "qv", "cv", dim)
-    return _topk(scored, k)
+    scored = _score_pairs(cand, "query_id", "neighbor_id", "qv", "cv", DIM)
+    return _topk(scored)
 
 
 def _cell_sum_kernel(centroids: list[list[float]], vec_in: str):
@@ -452,17 +442,10 @@ def _cell_sum_kernel(centroids: list[list[float]], vec_in: str):
     return kernel
 
 
-def kmeans_lloyd(
-    embeddings: DataFrame,
-    n_centroids: int = 8,
-    n_iters: int = 2,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Quantized Lloyd k-means, cross-engine reproducible: deterministic
-    LCG init (`ivf_centroids`), then `n_iters` rounds of Arrow argmax-dot
+def kmeans_lloyd(embeddings: DataFrame) -> DataFrame:
+    """Quantized Lloyd k-means over KMEANS_CELLS cells, cross-engine
+    reproducible: deterministic LCG init (`ivf_centroids`), then
+    KMEANS_ITERS rounds of Arrow argmax-dot
     assignment (ties to the LOWEST cell) -> per-(cell, pos) mean rounded
     HALF_UP to 4dp IN SPARK (F.round, never Python's banker's round), so
     every iteration after the first runs on bit-identical centroid inputs
@@ -474,17 +457,17 @@ def kmeans_lloyd(
     the final centroid table plus the last assignment's membership
     counts. The distributed work is the per-iteration assignment scan and
     the (cells x dim)-row mean shuffle; only the tiny centroid table
-    (n_centroids x dim, bounded by construction like the IVF centroid
+    (KMEANS_CELLS x DIM, bounded by construction like the IVF centroid
     broadcast) is collected per round.
     """
     spark = embeddings.sparkSession
-    cents = ivf_centroids(n_centroids, dim, seed)
+    cents = ivf_centroids(KMEANS_CELLS)
     counts: dict[int, int] = {}
     emb = spread(embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ))
-    for _ in range(n_iters):
+    for _ in range(KMEANS_ITERS):
         # assignment AND per-cell partial sums in one Arrow pass: the
         # kernel emits (cell, pos, s, n) batch subtotals — cells x dim
         # rows per batch — so vectors never ship back out of Python and
@@ -513,8 +496,8 @@ def kmeans_lloyd(
         cents = new
     rows = [  # + 0.0 folds IEEE -0.0 to +0.0 (DuckDB round keeps the sign)
         (c, p, float(cents[c][p]) + 0.0, int(counts.get(c, 0)))
-        for c in range(n_centroids)
-        for p in range(dim)
+        for c in range(KMEANS_CELLS)
+        for p in range(DIM)
     ]
     return spark.createDataFrame(
         rows, "cell long, pos long, c_val double, n_members long"
@@ -527,21 +510,13 @@ def kmeans_lloyd(
 NEARDUP_MAX_BUCKET = 4096  # vectors per LSH bucket before it is dropped
 
 
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    n_planes: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
+def embedding_neardup_pairs(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Near-duplicate (id_a, id_b, cosine) pairs: sign-LSH blocking
     (self-join within buckets, never all-pairs) + exact cosine >=
-    threshold — the embedding-space member of the dedup family, same
-    shape as MinHash-LSH -> n-gram-Jaccard verify.
+    NEARDUP_THRESHOLD — the embedding-space member of the dedup family,
+    same shape as MinHash-LSH -> n-gram-Jaccard verify.
 
-    Scale: bucket count is 2^n_planes — grow n_planes with the corpus so
+    Scale: bucket count is 2^NEARDUP_PLANES — grow it with the corpus so
     per-bucket membership stays bounded; degenerate buckets (all-zero or
     boilerplate embeddings) over NEARDUP_MAX_BUCKET vectors are dropped
     and returned, not silently joined; logging the drop is the
@@ -549,10 +524,10 @@ def embedding_neardup_pairs(
 
     Returns (pairs, dropped_buckets(bucket, bucket_size)).
     """
-    planes = [_hyperplane(dim, seed, p) for p in range(n_planes)]
+    planes = [_hyperplane(DIM, SEED, p) for p in range(NEARDUP_PLANES)]
     v = spread(embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     ))
     sigs = v.mapInPandas(
         _bucket_kernel(planes, "vid", "cv"),
@@ -571,13 +546,13 @@ def embedding_neardup_pairs(
         sigs.where(F.col("bucket").isNotNull())
         .groupBy("bucket")
         .applyInPandas(
-            _bucket_gram_kernel(dim, threshold),
+            _bucket_gram_kernel(DIM, NEARDUP_THRESHOLD),
             "id_a long, id_b long, cosine_raw double",
         )
     )
     pairs = scored.select(
         "id_a", "id_b", F.round("cosine_raw", 4).alias("cosine")
-    ).where(F.col("cosine") >= threshold)
+    ).where(F.col("cosine") >= NEARDUP_THRESHOLD)
     return pairs, dropped
 
 
@@ -643,12 +618,7 @@ def _bucket_gram_kernel(dim: int, threshold: float):
     return kernel
 
 
-def sq8_codes(
-    embeddings: DataFrame,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[float], list[float]]:
+def sq8_codes(embeddings: DataFrame) -> tuple[DataFrame, list[float], list[float]]:
     """Scalar quantization to uint8 codes (the SQ8 of FAISS-style ANN):
     per-dimension global [min, max] linear grid, code_i = round(
     (x_i - min_i) * 255 / (max_i - min_i)) — 4x smaller vectors, and
@@ -665,9 +635,9 @@ def sq8_codes(
     """
     v = spread(
         embeddings.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ).where(F.size(vec_col) == dim)
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").cast("array<double>").alias("cv"),
+        ).where(F.size("embedding") == DIM)
     )
     ext = (
         v.select(F.posexplode("cv").alias("pos", "x"))
@@ -675,8 +645,8 @@ def sq8_codes(
         .agg(F.min("x").alias("lo"), F.max("x").alias("hi"))
         .collect()
     )
-    mins = [0.0] * dim
-    maxs = [0.0] * dim
+    mins = [0.0] * DIM
+    maxs = [0.0] * DIM
     for r in ext:
         mins[r["pos"]], maxs[r["pos"]] = r["lo"], r["hi"]
     lo = F.array(*[F.lit(float(m)) for m in mins])
@@ -692,30 +662,23 @@ def sq8_codes(
     return v.select("vid", code.alias("code")), mins, maxs
 
 
-def sq8_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k neighbors by integer dot product over SQ8 codes:
+def sq8_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-TOPK neighbors by integer dot product over SQ8 codes:
     (query_id, neighbor_id, dot_q, rank). The quantization grid comes
     from the CORPUS side only (queries are coded with the same grid, as
     a production index would). Scoring is exact BIGINT — ties break on
     neighbor_id. Same broadcast-bounded shape as cosine_topk; at scale
     the 4x code compression is the point (memory-bound brute force).
     """
-    codes, mins, maxs = sq8_codes(embeddings, dim, id_col, vec_col)
+    codes, mins, maxs = sq8_codes(embeddings)
     lo = F.array(*[F.lit(float(m)) for m in mins])
     span = F.array(
         *[F.lit(float(h - m) if h > m else 1.0) for m, h in zip(mins, maxs)]
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    ).where(F.size(vec_col) == dim)
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+    ).where(F.size("embedding") == DIM)
     qcode = qv.select(
         "query_id",
         F.transform(
@@ -740,7 +703,7 @@ def sq8_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select(
             "query_id", "neighbor_id", "dot_q",
             F.col("rank").cast("long").alias("rank"),  # BIGINT parity
@@ -752,19 +715,12 @@ RP_BASE = 2000  # LCG offset for the JL projection family (decoupled
 # from LSH planes at 0 and IVF centroids at 1000)
 
 
-def rp_project(
-    embeddings: DataFrame,
-    out_dim: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Johnson-Lindenstrauss random projection to `out_dim` dims: one
+def rp_project(embeddings: DataFrame) -> DataFrame:
+    """Johnson-Lindenstrauss random projection to RP_DIM dims: one
     numpy matmul per Arrow batch against a deterministic LCG plane
     matrix (the same family as the LSH/IVF vectors, offset RP_BASE, so
     a SQL oracle replays the projection exactly). 4x dimensionality
-    reduction with distance preservation ~ O(sqrt(log n / out_dim))
+    reduction with distance preservation ~ O(sqrt(log n / RP_DIM))
     distortion — the float-compression member of the ANN family next to
     LSH (bits), IVF (cells), and SQ8 (int8). NULL/ragged vectors
     project to NULL (dropped by downstream joins).
@@ -773,8 +729,9 @@ def rp_project(
     """
     import numpy as np
 
+    dim = DIM  # bound on the driver: the kernel runs in Python workers
     P = np.asarray(
-        [_hyperplane(dim, seed, RP_BASE + j) for j in range(out_dim)],
+        [_hyperplane(dim, SEED, RP_BASE + j) for j in range(RP_DIM)],
         dtype=np.float64,
     )
 
@@ -789,27 +746,18 @@ def rp_project(
             yield pd.DataFrame({"vid": pdf["vid"].values, "rv": rows})
 
     return spread(embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").cast("array<double>").alias("cv"),
     )).mapInPandas(kernel, "vid long, rv array<double>")
 
 
-def rp_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    out_dim: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by cosine in the PROJECTED space (query_id, neighbor_id,
+def rp_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-TOPK by cosine in the PROJECTED space (query_id, neighbor_id,
     cosine_rp, rank) — brute force over 4x-smaller vectors; at scale the
     projection feeds the same LSH/IVF blocking as the full vectors,
-    with memory and bandwidth cut by dim/out_dim."""
-    c = rp_project(embeddings, out_dim, dim, seed, id_col, vec_col)
-    q = rp_project(queries, out_dim, dim, seed, id_col, vec_col)
+    with memory and bandwidth cut by DIM/RP_DIM."""
+    c = rp_project(embeddings)
+    q = rp_project(queries)
     scored = (
         F.broadcast(
             q.select(F.col("vid").alias("query_id"), F.col("rv").alias("qv"))
@@ -826,7 +774,7 @@ def rp_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select(
             "query_id", "neighbor_id", "cosine_rp",
             F.col("rank").cast("long").alias("rank"),

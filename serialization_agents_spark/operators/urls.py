@@ -36,6 +36,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+# domain_filter's gate: pages per domain and average tokens per page.
+MIN_PAGES = 2
+MIN_AVG_TOKENS = 35
+
 # Query params that never change page identity (analytics/click ids).
 TRACKING_PARAMS = r"utm_[a-z0-9_]+|fbclid|gclid|msclkid|mc_eid|ref"
 
@@ -104,11 +108,7 @@ def registered_domain(canon: Column) -> Column:
     return F.regexp_extract(host, r"([^.]+\.[^.]+)$", 1)
 
 
-def dedup_latest_capture(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-) -> DataFrame:
+def dedup_latest_capture(pages: DataFrame) -> DataFrame:
     """Keep the LATEST capture per canonical URL.
 
     Ties on `warc_ts` break toward the lexicographically smallest raw
@@ -122,9 +122,9 @@ def dedup_latest_capture(
     """
     from pyspark.sql.window import Window
 
-    canon = pages.withColumn("canon_url", canonical_url(F.col(url_col)))
+    canon = pages.withColumn("canon_url", canonical_url(F.col("url")))
     w = Window.partitionBy("canon_url").orderBy(
-        F.col(ts_col).desc(), F.col(url_col).asc()
+        F.col("warc_ts").desc(), F.col("url").asc()
     )
     return (
         canon.withColumn("rn", F.row_number().over(w))
@@ -137,11 +137,7 @@ def dedup_latest_capture(
     )
 
 
-def domain_stats(
-    pages: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def domain_stats(pages: DataFrame) -> DataFrame:
     """Per-registered-domain aggregates over the corpus.
 
     Returns one row per domain: page count, distinct canonical URLs,
@@ -149,13 +145,13 @@ def domain_stats(
     to a domain-level curation gate. Integer-only output so the DuckDB
     oracle hash is exact.
     """
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    canon = canonical_url(F.col(url_col))
+    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    canon = canonical_url(F.col("url"))
     return (
         pages.select(
             registered_domain(canon).alias("domain"),
             canon.alias("canon_url"),
-            F.when(F.trim(F.col(text_col)) == "", F.lit(0))
+            F.when(F.trim(F.col("text")) == "", F.lit(0))
             .otherwise(F.size(toks))
             .alias("n_tokens"),
             F.col("warc_ts").cast("long").alias("ts_epoch"),
@@ -170,16 +166,10 @@ def domain_stats(
     )
 
 
-def domain_filter(
-    pages: DataFrame,
-    min_pages: int = 2,
-    min_avg_tokens: int = 10,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def domain_filter(pages: DataFrame) -> DataFrame:
     """Domain-level corpus gate: keep pages whose registered domain has
-    at least `min_pages` pages AND an average token count of at least
-    `min_avg_tokens` (integer-division average, so both engines agree
+    at least MIN_PAGES pages AND an average token count of at least
+    MIN_AVG_TOKENS (integer-division average, so both engines agree
     exactly).
 
     The stats side is one aggregate over the corpus (one shuffle on
@@ -188,12 +178,12 @@ def domain_filter(
     dimension is ~10^8 rows; a production run would bucket it instead of
     broadcasting, which changes only the hint, not the algebra.
     """
-    stats = domain_stats(pages, url_col=url_col, text_col=text_col)
+    stats = domain_stats(pages)
     good = stats.where(
-        (F.col("n_pages") >= min_pages)
-        & (F.expr("total_tokens DIV n_pages") >= min_avg_tokens)
+        (F.col("n_pages") >= MIN_PAGES)
+        & (F.expr("total_tokens DIV n_pages") >= MIN_AVG_TOKENS)
     ).select("domain")
-    canon = canonical_url(F.col(url_col))
+    canon = canonical_url(F.col("url"))
     return pages.withColumn(
         "domain", registered_domain(canon)
     ).join(broadcast(good), "domain", "inner")

@@ -41,10 +41,9 @@ _AUTH_COLS = [
 ]
 
 
-def clean_agent_dates(
-    df: DataFrame, start_col: str = "date_start", end_col: str = "date_end"
-) -> DataFrame:
-    """X7 — lib/tms_serialize_objects_agents.js:167-172.
+def clean_agent_dates(df: DataFrame) -> DataFrame:
+    """X7 — lib/tms_serialize_objects_agents.js:167-172, over
+    `date_start` / `date_end`.
 
     parseInt semantics: a numeric PREFIX parses ('1950ca' -> 1950,
     ' +1950' -> 1950); only a fully non-numeric or absent value fails.
@@ -54,16 +53,16 @@ def clean_agent_dates(
     `undefined` — `undefined + 100` is NaN, which never equals end.
     """
     _lead_int = r"^\s*([+-]?[0-9]+)"
-    s_raw = F.regexp_extract(F.col(start_col).cast("string"), _lead_int, 1).try_cast(
+    s_raw = F.regexp_extract(F.col("date_start").cast("string"), _lead_int, 1).try_cast(
         "long"
     )
-    e_raw = F.regexp_extract(F.col(end_col).cast("string"), _lead_int, 1).try_cast(
+    e_raw = F.regexp_extract(F.col("date_end").cast("string"), _lead_int, 1).try_cast(
         "long"
     )
     s = F.when(s_raw == 0, F.lit(None).cast("long")).otherwise(s_raw)
     # start value the JS +100 check sees: 0 for present-but-falsy starts,
     # NULL (-> never-equal) for source-NULL starts.
-    s_for_check = F.when(F.col(start_col).isNotNull(), F.coalesce(s_raw, F.lit(0)))
+    s_for_check = F.when(F.col("date_start").isNotNull(), F.coalesce(s_raw, F.lit(0)))
     e = F.when(
         (e_raw == 0) | (s_for_check + 100 == e_raw),
         F.lit(None).cast("long"),
@@ -71,26 +70,20 @@ def clean_agent_dates(
     # single projection: BOTH outputs read the RAW columns (a chained
     # withColumn would resolve the end-check's start reference against
     # the already-cleaned start, losing the falsy-coercion quirk).
-    others = [c for c in df.columns if c not in (start_col, end_col)]
-    return df.select(*others, s.alias(start_col), e.alias(end_col)).select(
+    others = [c for c in df.columns if c not in ("date_start", "date_end")]
+    return df.select(*others, s.alias("date_start"), e.alias("date_end")).select(
         *df.columns
     )
 
 
-def build_check_names(
-    df: DataFrame,
-    name_alpha: str = "name_alpha",
-    name_display: str = "name_display",
-    start_col: str = "date_start",
-    end_col: str = "date_end",
-) -> DataFrame:
+def build_check_names(df: DataFrame) -> DataFrame:
     """X8 — ordered candidate variants, empty-skipped, order-preserving
     dedupe (lib/tms_serialize_objects_agents.js:174-190). Run AFTER
     clean_agent_dates."""
-    na = F.trim(F.col(name_alpha))
-    nd = F.trim(F.col(name_display))
-    s = F.col(start_col)
-    e = F.col(end_col)
+    na = F.trim(F.col("name_alpha"))
+    nd = F.trim(F.col("name_display"))
+    s = F.col("date_start")
+    e = F.col("date_end")
     v1 = F.when(
         s.isNotNull() & e.isNotNull() & (na != ""),
         F.concat(na, F.lit(", "), s.cast("string"), F.lit("-"), e.cast("string")),
@@ -107,9 +100,7 @@ def build_check_names(
     return df.withColumn("check_names", F.array_distinct(variants))
 
 
-def match_by_check_names(
-    agents: DataFrame, authority: DataFrame, id_col: str = "agent_id"
-) -> DataFrame:
+def match_by_check_names(agents: DataFrame, authority: DataFrame) -> DataFrame:
     """J5 — flat-map the checkNames through the normalized-name lookup;
     first variant with a hit wins (lib/utils_tms.js:83-116).
 
@@ -120,7 +111,7 @@ def match_by_check_names(
     coalesces (hits are a small fraction of variants).
     """
     exploded = agents.select(
-        id_col, F.posexplode("check_names").alias("pos", "cand_name")
+        "agent_id", F.posexplode("check_names").alias("pos", "cand_name")
     ).withColumn("name_norm", normalize_name_expr(F.col("cand_name")))
     keys = (
         authority.select(
@@ -135,15 +126,15 @@ def match_by_check_names(
     # auth payload — same winner as the old row_number window, but as a
     # partial-aggregating hash agg with no per-partition sort.
     best = (
-        hits.groupBy(id_col)
+        hits.groupBy("agent_id")
         .agg(F.min(F.struct(F.col("pos"), F.col("auth_hit"))).alias("_b"))
         .select(
-            id_col,
+            "agent_id",
             (F.col("_b")["pos"] + 1).alias("matched_variant"),
             F.col("_b")["auth_hit"].alias("auth_hit"),
         )
     )
-    return agents.join(best, id_col, "left")
+    return agents.join(best, "agent_id", "left")
 
 
 def build_agent_from_variant_match(matched: DataFrame) -> DataFrame:

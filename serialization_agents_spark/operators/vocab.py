@@ -27,12 +27,12 @@ from pyspark.sql.window import Window
 
 from serialization_agents_spark.functions.text import tokens
 
+TFIDF_K = 3  # top terms per document
+MAX_POSTINGS = 16  # doc ids per posting-list head
+NGRAM_N = 3
 
-def vocab_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+
+def vocab_stats(docs: DataFrame) -> DataFrame:
     """Per-term (term_freq, doc_freq) over the corpus.
 
     Returns one row per distinct whitespace token with columns
@@ -40,8 +40,8 @@ def vocab_stats(
     documents). Empty-string tokens (blank docs) are dropped.
     """
     exploded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).where(F.col("term") != "")
     return exploded.groupBy("term").agg(
         F.count(F.lit(1)).alias("term_freq"),
@@ -49,13 +49,8 @@ def vocab_stats(
     )
 
 
-def tfidf_topk(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document top-k terms by tf-idf: (doc_id, term, score, rank).
+def tfidf_topk(docs: DataFrame) -> DataFrame:
+    """Per-document top-TFIDF_K terms by tf-idf: (doc_id, term, score, rank).
 
     idf = ln(N/df) rounded to 4dp BEFORE the tf multiply, and the
     product rounded to 4dp again — ranking and output both use the
@@ -78,8 +73,8 @@ def tfidf_topk(
     from pyspark.sql.window import Window
 
     exploded = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).where(F.col("term") != "")
     tf = (
         exploded.groupBy("doc_id", "term")
@@ -99,15 +94,12 @@ def tfidf_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_K)
         .select("doc_id", "term", "score", "rank")
     )
 
 
-def bpe_pair_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_pair_stats(docs: DataFrame) -> DataFrame:
     """Adjacent-token-pair frequencies — the merge-candidate table of
     one BPE induction iteration over a whitespace-pre-tokenized corpus.
 
@@ -123,7 +115,7 @@ def bpe_pair_stats(
     induction tractable (the alternative — driver-side counting — is
     exactly the collect() anti-pattern).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     pair_arr = F.when(
         F.size(toks) >= 2,
         _adjacent_pairs(toks),
@@ -149,15 +141,10 @@ def _adjacent_pairs(toks):
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_postings: int = 16,
-) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Per-term posting-list head: (term, term_freq, doc_freq,
     truncated, postings_head) where postings_head is the
-    `max_postings` SMALLEST doc ids as a comma-joined string — the
+    MAX_POSTINGS SMALLEST doc ids as a comma-joined string — the
     segment-index shape a search/retrieval layer builds over a corpus
     (full postings stay doc-partitioned on disk; the head + doc_freq
     is the driver-safe summary).
@@ -166,12 +153,12 @@ def inverted_index(
     corpus, so no stage may materialize one in memory. The (term, doc)
     pre-aggregation bounds duplicate work; the head is selected by a
     sort-based row_number window (spills, never holds a term's list),
-    and the only collect_list runs AFTER the rn <= max_postings filter
-    — it can never see more than `max_postings` rows per term.
+    and the only collect_list runs AFTER the rn <= MAX_POSTINGS filter
+    — it can never see more than MAX_POSTINGS rows per term.
     """
     e = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).where(F.col("term") != "")
     # the (term, doc) pre-aggregate feeds BOTH the stats agg and the
     # head window; without materialization Catalyst plans the corpus
@@ -189,7 +176,7 @@ def inverted_index(
     w = Window.partitionBy("term").orderBy("doc_id")
     heads = (
         perdoc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_postings)
+        .where(F.col("rn") <= MAX_POSTINGS)
         .groupBy("term")
         .agg(
             F.array_join(
@@ -205,20 +192,16 @@ def inverted_index(
         "term",
         "term_freq",
         "doc_freq",
-        (F.col("doc_freq") > max_postings).alias("truncated"),
+        (F.col("doc_freq") > MAX_POSTINGS).alias("truncated"),
         "postings_head",
     )
 
 
-def ngram_counts(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
+def ngram_counts(docs: DataFrame) -> DataFrame:
     """Token n-gram count table (the KenLM-style corpus statistic):
-    (ngram, n_occurrences) over every length-n token window, thresholded
-    at `min_count` AFTER the aggregate (the standard LM count cut).
+    (ngram, n_occurrences) over every length-NGRAM_N token window,
+    thresholded at 2 occurrences AFTER the aggregate (the standard LM
+    count cut).
 
     One narrow per-row transform + ONE hash agg on the gram; map-side
     partial combine absorbs the Zipf head before the shuffle. Docs
@@ -226,24 +209,23 @@ def ngram_counts(
     keeps ANSI `sequence` from running descending on short docs; the
     explode drops the resulting NULLs).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     grams = F.when(
-        F.size(toks) >= n,
+        F.size(toks) >= NGRAM_N,
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+            F.sequence(F.lit(0), F.size(toks) - NGRAM_N),
+            lambda i: F.array_join(F.slice(toks, i + 1, NGRAM_N), " "),
         ),
     )
     return (
         docs.select(F.explode(grams).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .where(F.col("n_occurrences") >= min_count)
+        .where(F.col("n_occurrences") >= 2)
     )
 
 
-def perplexity_buckets(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def perplexity_buckets(docs: DataFrame) -> DataFrame:
     """CCNet-style language-model quality buckets: score every document
     by its average negative log-probability under the corpus's own
     add-one-smoothed unigram LM, then split the corpus at the exact
@@ -268,8 +250,8 @@ def perplexity_buckets(docs: DataFrame, text_col: str = "text",
     that task, the price of cross-engine-replayable thresholds.
     """
     tok = (
-        spread(docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)))
-        .select("doc_id", F.explode(tokens(F.col(text_col))).alias("term"))
+        spread(docs.select(F.col("doc_id"), F.col("text")))
+        .select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .where(F.col("term") != "")
     )
     # Reduce to per-(doc, term) occurrence counts FIRST: nll is a sum of

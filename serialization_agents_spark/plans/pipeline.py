@@ -210,7 +210,7 @@ def run_pipeline(
                 F.bit_xor(F.xxhash64(*key)).alias("key_checksum"),
             )
             if bucketed:
-                write_bucketed(df, agents_table, path, ["entity_key"])
+                write_bucketed(df, agents_table, path)
                 out = read_bucketed(spark, agents_table)
             else:
                 df.write.mode("overwrite").parquet(path)
@@ -244,7 +244,7 @@ def run_pipeline(
         canonical, res.cc_iterations = canonicalize_agents(res.agents)
         # enumerate samples and range-checkpoints canonicalize's own eager
         # checkpoint; X2/X3 scoring is a narrow projection after it
-        return score_alt_forms(enumerate_ids(canonical, order_col="entity_key"))
+        return score_alt_forms(enumerate_ids(canonical))
 
     def build_errors() -> DataFrame:
         # S15 — per-row failure audit (reference lib/utils.js:238 logError).

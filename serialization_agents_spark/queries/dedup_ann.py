@@ -371,19 +371,19 @@ _COS = _DUCK_COS.format(a="a.embedding::DOUBLE[]", b="b.embedding::DOUBLE[]")
 )
 def ann_cosine_top3(spark, sf):
     corpus, queries_df = _ann_split(spark, sf)
-    return S.cosine_topk(corpus, queries_df, k=3)
+    return S.cosine_topk(corpus, queries_df)
 
 
 @query(_ann_lsh_sql(n_probes=0))
 def ann_lsh_top3(spark, sf):
     corpus, queries_df = _ann_split(spark, sf)
-    return S.lsh_bucket_topk(corpus, queries_df, k=3)
+    return S.lsh_bucket_topk(corpus, queries_df)
 
 
 @query(_ann_lsh_sql(n_probes=3))
 def ann_lsh_multiprobe_top3(spark, sf):
     corpus, queries_df = _ann_split(spark, sf)
-    return S.lsh_bucket_topk(corpus, queries_df, k=3, n_probes=3)
+    return S.lsh_bucket_topk(corpus, queries_df, n_probes=3)
 
 
 # DuckDB transcription of similarity.ivf_topk: 16 LCG centroids (offset
@@ -424,7 +424,7 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 """)
 def ann_ivf_top3(spark, sf):
     corpus, queries_df = _ann_split(spark, sf)
-    return S.ivf_topk(corpus, queries_df, k=3)
+    return S.ivf_topk(corpus, queries_df)
 
 
 @query(_kmeans_sql())
@@ -472,7 +472,7 @@ def ann_sq8_top3(spark, sf):
     ranking is bit-reproducible cross-engine with no float rounding
     games (operators/similarity.py sq8_codes / sq8_topk)."""
     corpus, queries_df = _ann_split(spark, sf)
-    return S.sq8_topk(corpus, queries_df, k=3)
+    return S.sq8_topk(corpus, queries_df)
 
 
 # JL projection: LCG plane family at offset RP_BASE=2000, list(d ORDER
@@ -508,7 +508,7 @@ def ann_rp_top3(spark, sf):
     cells, and SQ8 int8 (operators/similarity.py rp_project /
     rp_topk)."""
     corpus, queries_df = _ann_split(spark, sf)
-    return S.rp_topk(corpus, queries_df, k=3)
+    return S.rp_topk(corpus, queries_df)
 
 
 # DuckDB transcription of similarity.embedding_neardup_pairs: the first

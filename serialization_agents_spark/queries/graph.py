@@ -90,7 +90,7 @@ def kg_pagerank(spark, sf):
     e2 = docs.select(
         (d % 101).alias("src"), ((d * d * 13 + 5) % 101).alias("dst")
     )
-    return pagerank(e1.union(e2), iterations=3).select(
+    return pagerank(e1.union(e2)).select(
         "node", F.col("rank").alias("rank_fp")
     )
 
@@ -130,7 +130,7 @@ def kg_label_prop(spark, sf):
     join+vote+argmax loop against a DuckDB unrolled-CTE replay.
     Integer weights + min-label ties, so no run-order can perturb
     it (operators/graph.py label_propagation)."""
-    return label_propagation(_block_graph(spark, sf), iterations=3)
+    return label_propagation(_block_graph(spark, sf))
 
 
 # least() skips NULLs identically in both engines.
@@ -165,7 +165,7 @@ def kg_bfs_hops(spark, sf):
     perturbed by run order; unreached nodes are omitted
     (operators/graph.py bfs_distances)."""
     srcs = spark.range(0, 80, 29).select(F.col("id").alias("node"))
-    return bfs_distances(_block_graph(spark, sf).drop("w"), srcs, max_hops=4)
+    return bfs_distances(_block_graph(spark, sf).drop("w"), srcs)
 
 
 # Pairwise ER metrics over the pipeline CTEs: the naive blocking key is
@@ -280,7 +280,7 @@ def kg_negative_samples(spark, sf):
     enumerated registry order, degenerate and false negatives
     dropped. Pure integer sampling: same negatives in any engine."""
     res = kg_canonical(spark, sf)
-    edges = cooccurrence_edges(res.linked, doc_col="url", key_col="entity_key")
+    edges = cooccurrence_edges(res.linked)
     ids = res.canonical.select(
         "entity_key", (F.col("registry_id") - 9999999).alias("idx")
     )
@@ -305,7 +305,7 @@ def kg_cooccurrence(spark, sf):
     pipeline's persisted `linked` frame, like the other kg_*
     consumers."""
     linked = kg_canonical(spark, sf).linked
-    return cooccurrence_edges(linked, doc_col="url", key_col="entity_key")
+    return cooccurrence_edges(linked)
 
 
 # Triangle counts replay the degree-oriented enumeration with DuckDB
@@ -348,7 +348,7 @@ def kg_triangles(spark, sf):
     triangle_counts) so celebrity hubs never explode the wedge join;
     the oracle replays the identical (degree, key) total order."""
     linked = kg_canonical(spark, sf).linked
-    edges = cooccurrence_edges(linked, doc_col="url", key_col="entity_key")
-    return triangle_counts(edges, src="a", dst="b").select(
+    edges = cooccurrence_edges(linked)
+    return triangle_counts(edges).select(
         F.col("node").alias("entity_key"), "n_triangles"
     )

@@ -156,7 +156,7 @@ def kg_mentions_gazetteer(spark, sf):
         k.cast("string").alias("viaf_id"),
         F.array(normalize_name_expr(F.col("c_name"))).alias("normalized"),
     )
-    hits = detect_mentions_gazetteer(pages, gaz, max_shingle=2)
+    hits = detect_mentions_gazetteer(pages, gaz)
     return hits.select("url", "name_norm", "viaf_hint").distinct()
 
 
@@ -491,9 +491,7 @@ def kg_stateful_totals(spark, sf):
     prev = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "4")
     try:
-        q = stream_running_totals_to_parquet(
-            spark, pages_dir, out_dir, ckpt, max_files_per_trigger=2
-        )
+        q = stream_running_totals_to_parquet(spark, pages_dir, out_dir, ckpt)
     finally:
         spark.conf.set(conf_key, prev)
     await_query(q, "kg_stateful_totals")

@@ -47,7 +47,7 @@ FROM (SELECT media_id, md5(sha256('media' || media_id)) AS h
 """
 )
 def multimodal_image_features(spark, sf):
-    media = synth_media(spark, n=200)
+    media = synth_media(spark)
     return extract_image_features(media).select(
         "media_id", "width", "height", "channels", "decode_ok"
     )
@@ -65,7 +65,7 @@ FROM (SELECT media_id, md5('audio:' || sha256('media' || media_id)) AS h
 """
 )
 def multimodal_audio_features(spark, sf):
-    media = synth_media(spark, n=200)
+    media = synth_media(spark)
     return extract_audio_features(media).select(
         "media_id", "sample_rate", "duration_ms", "decode_ok"
     )
@@ -87,8 +87,8 @@ FROM frames
 """
 )
 def multimodal_frame_sample(spark, sf):
-    media = synth_media(spark, n=200)
-    return sample_video_frames(media, every_ms=1000, max_frames=16).select(
+    media = synth_media(spark)
+    return sample_video_frames(media).select(
         "media_id", "frame_idx", "ts_ms"
     )
 
@@ -106,8 +106,8 @@ def multimodal_resize(spark, sf):
     """Resize kernel under the hash gate: the fake payload is a pure
     function of (content, target size), so its bytes are certified
     via md5-over-hex (DuckDB's md5 is VARCHAR-only)."""
-    media = synth_media(spark, n=200)
-    out = resize_images(media, width=64, height=64)
+    media = synth_media(spark)
+    out = resize_images(media)
     return out.select(
         "media_id", "width", "height",
         F.md5(F.lower(F.hex("content"))).alias("content_md5"),

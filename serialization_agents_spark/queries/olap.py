@@ -249,9 +249,7 @@ def o9_interval_join(spark, sf):
         ((start_s + (ok % 6 + 1) * 1800) * 1000000).cast("long").alias("end_us"),
     )
     joined = interval_join(
-        ev, iv, key="user_id", ts_col="ts_us",
-        start_col="start_us", end_col="end_us",
-        chunk=3600 * 1000000,
+        ev, iv, key="user_id", chunk=3600 * 1000000,
     )
     return joined.groupBy("o_orderkey").agg(
         F.count(F.lit(1)).alias("n_events"),

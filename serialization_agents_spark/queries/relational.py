@@ -118,7 +118,7 @@ def o2_latest_event_per_user(spark, sf):
 )
 def o3_enumerate_customers(spark, sf):
     cust = table(spark, sf, "customer").select(F.col("c_name").alias("entity_key"))
-    return enumerate_ids(cust, order_col="entity_key").select(
+    return enumerate_ids(cust).select(
         "entity_key", "registry_id"
     )
 

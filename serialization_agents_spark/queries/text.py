@@ -244,7 +244,7 @@ def text_inverted_index(spark, sf):
     term/doc frequencies — the retrieval-layer segment index. The
     head is window-bounded so stop-word terms never materialize
     their full posting list (operators/vocab.py inverted_index)."""
-    return inverted_index(table(spark, sf, "documents"), max_postings=16)
+    return inverted_index(table(spark, sf, "documents"))
 
 
 # Trigram LM counts: the same w[i..i+2] windowing as the minhash shingle
@@ -261,7 +261,7 @@ def text_inverted_index(spark, sf):
 def text_ngram_counts(spark, sf):
     """Token trigram LM count table thresholded at 2 occurrences —
     one narrow transform + one hash agg with map-side combine."""
-    return ngram_counts(table(spark, sf, "documents"), n=3, min_count=2)
+    return ngram_counts(table(spark, sf, "documents"))
 
 
 # CCNet-style LM buckets: integer micro-nll per token (round before the
@@ -316,9 +316,7 @@ def corpus_sample(spark, sf):
     resume, which is what makes 100 TB mixture sampling reproducible.
     The DuckDB oracle replays the identical md5 keep-set."""
     docs = table(spark, sf, "documents").select("doc_id", "lang")
-    return sample_corpus(
-        docs, rates={"en": 0.5, "de": 1.0, "zh": 0.25}, default_rate=0.1
-    )
+    return sample_corpus(docs, rates={"en": 0.5, "de": 1.0, "zh": 0.25})
 
 
 # Temperature mixture: weights floored to integer micro-units BEFORE
@@ -349,7 +347,7 @@ def corpus_mixture(spark, sf):
     micro-unit weights so the float arithmetic is bit-identical in
     any engine (operators/sample.py mixture_sample)."""
     docs = table(spark, sf, "documents").select("doc_id", "lang")
-    return mixture_sample(docs, stratum_col="lang").select(
+    return mixture_sample(docs).select(
         "doc_id", "lang", "mix_rate"
     )
 
@@ -416,7 +414,7 @@ def text_bm25_topk(spark, sf):
     term, two common) — integer 1e-4 score units so the per-doc sum
     is order-free; top-k via orderBy+limit (TakeOrdered heap, never
     a global window) (operators/retrieval.py bm25_topk)."""
-    return bm25_topk(table(spark, sf, "documents"), ["dup", "merge", "vector"], k=25)
+    return bm25_topk(table(spark, sf, "documents"), ["dup", "merge", "vector"])
 
 
 # Relative quality gate: integer 1e-4 quality units (the score is
@@ -436,7 +434,7 @@ def text_quality_gate(spark, sf):
     median quality — ONE percentile aggregate broadcast back, never
     a percent_rank window (a stratum is one reducer's group at
     10^12 docs) (operators/curate.py quality_gate)."""
-    return quality_gate(table(spark, sf, "documents"), p=0.5)
+    return quality_gate(table(spark, sf, "documents"))
 
 
 # Shard packing: exclusive prefix-sum of integer token counts along the
@@ -456,4 +454,4 @@ def corpus_shard_pack(spark, sf):
     deterministic md5-shuffled order and cut 4096-token shards by
     running cumsum — the two-phase partition-offset scheme, no
     global single-task window (operators/pack.py shard_pack)."""
-    return shard_pack(table(spark, sf, "documents"), budget=4096)
+    return shard_pack(table(spark, sf, "documents"))

@@ -95,10 +95,7 @@ def o5_asof_join(spark, sf):
     views = ev.where(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"), "user_id", "tsu"
     )
-    j = asof_join(
-        purchases, views, on="user_id", left_ts="tsu", right_ts="tsu",
-        tiebreak="view_id",
-    )
+    j = asof_join(purchases, views, on="user_id")
     return j.select(
         "event_id",
         "user_id",
@@ -146,7 +143,7 @@ def text_tfidf_topk(spark, sf):
     """Per-doc top-3 tf-idf terms. idf is 4dp-rounded before the
     multiply so ranking can't hinge on a sub-ulp libm difference
     between engines; ties break on term."""
-    return tfidf_topk(table(spark, sf, "documents"), k=3)
+    return tfidf_topk(table(spark, sf, "documents"))
 
 
 @query(
@@ -214,9 +211,7 @@ def url_domain_filter(spark, sf):
     stats side aggregates once and broadcasts back — the per-page
     verdict is a broadcast hash join, never a second corpus
     shuffle."""
-    return domain_filter(
-        url_captures(spark, sf), min_pages=2, min_avg_tokens=35
-    ).select("doc_id", "domain")
+    return domain_filter(url_captures(spark, sf)).select("doc_id", "domain")
 
 
 # Gate thresholds compare the 4-dp-rounded values on both sides.
@@ -269,6 +264,4 @@ def webtext_curate(spark, sf):
     quality AND repetition branches both fire at the sf0.01 gate;
     the exact-dup branch only fires where the corpus has dups
     (sf0.1+) and is pytest-covered on crafted docs."""
-    return curate_corpus(
-        table(spark, sf, "documents"), min_quality=0.75, max_dup3=0.01
-    )
+    return curate_corpus(table(spark, sf, "documents"))

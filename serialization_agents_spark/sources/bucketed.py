@@ -23,24 +23,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+N_BUCKETS = 64
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str] | None = None,
-    n_buckets: int = 64,
-) -> None:
+
+def write_bucketed(df: DataFrame, table: str, path: str) -> None:
     """Write `df` as an external parquet table bucketed (and sorted) on
-    `bucket_cols` (default: entity_key). Downstream equi-joins and
-    aggregations on those columns shuffle nothing."""
-    cols = bucket_cols or ["entity_key"]
+    `entity_key`. Downstream equi-joins and aggregations on that column
+    shuffle nothing."""
     (
         df.write.mode("overwrite")
         .format("parquet")
         .option("path", path)
-        .bucketBy(n_buckets, *cols)
-        .sortBy(*cols)
+        .bucketBy(N_BUCKETS, "entity_key")
+        .sortBy("entity_key")
         .saveAsTable(table)
     )
 

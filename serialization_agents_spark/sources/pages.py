@@ -98,14 +98,12 @@ def read_pages(
     )
 
 
-def read_pages_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 16
-) -> DataFrame:
+def read_pages_stream(spark: SparkSession, path: str) -> DataFrame:
     """The streaming twin of read_pages (parquet only): same schema, file
-    -discovery micro-batches (used by streaming/stateful.py)."""
+    -discovery micro-batches of 2 files (used by streaming/stateful.py)."""
     return (
         spark.readStream.schema(schemas.PAGES)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(path)
     )
 

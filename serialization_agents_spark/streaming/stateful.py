@@ -55,26 +55,21 @@ def running_mention_totals(mentions: DataFrame) -> DataFrame:
 
 
 def stream_running_totals_to_parquet(
-    spark, pages_dir: str, out_dir: str, checkpoint_dir: str,
-    max_files_per_trigger: int = 16,
+    spark, pages_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """readStream(pages) -> detect_mentions -> stateful running totals ->
     per-batch snapshot rows appended to parquet (update-mode rows carry
     the LATEST total per changed key; totals are monotone, so readers
     take max(total) per key). Returns the started availableNow query.
 
-    `max_files_per_trigger` sets the micro-batch size; callers that only
-    need cross-batch state exercised (not throughput) should write few
-    input files and size this for exactly 2-3 batches — each micro-batch
-    pays a full Python-worker + state-store round."""
+    Each micro-batch reads 2 files (read_pages_stream) and pays a full
+    Python-worker + state-store round, so callers write few input files."""
     from pyspark.sql import functions as F
 
     from serialization_agents_spark.operators.mentions import detect_mentions
     from serialization_agents_spark.sources.pages import read_pages_stream
 
-    stream = read_pages_stream(
-        spark, pages_dir, max_files_per_trigger=max_files_per_trigger
-    )
+    stream = read_pages_stream(spark, pages_dir)
     totals = running_mention_totals(detect_mentions(stream, include_subjects=True))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

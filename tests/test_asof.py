@@ -14,7 +14,7 @@ from serialization_agents_spark.operators.asof import asof_join
 def _left(spark):
     return spark.createDataFrame(
         [(1, "u1", 100), (2, "u1", 205), (3, "u2", 50), (4, "u3", 10)],
-        "lid long, user string, ts long",
+        "lid long, user string, tsu long",
     )
 
 
@@ -27,32 +27,27 @@ def _right(spark):
             ("u1", 200, 903),  # latest before lid=2
             ("u2", 60, 904),   # after lid=3 -> no backward match
         ],
-        "user string, ts long, rid long",
+        "user string, tsu long, view_id long",
     )
 
 
 def test_backward_with_equal_ts_and_ties(spark):
     out = {
         r["lid"]: r
-        for r in asof_join(
-            _left(spark), _right(spark), on="user", left_ts="ts",
-            right_ts="ts", tiebreak="rid",
-        ).collect()
+        for r in asof_join(_left(spark), _right(spark), on="user").collect()
     }
-    assert out[1]["asof_rid"] == 902 and out[1]["asof_ts"] == 100
-    assert out[2]["asof_rid"] == 903 and out[2]["asof_ts"] == 200
-    assert out[3]["asof_rid"] is None  # only future right rows
-    assert out[4]["asof_rid"] is None  # no right rows at all
+    assert out[1]["asof_view_id"] == 902 and out[1]["asof_tsu"] == 100
+    assert out[2]["asof_view_id"] == 903 and out[2]["asof_tsu"] == 200
+    assert out[3]["asof_view_id"] is None  # only future right rows
+    assert out[4]["asof_view_id"] is None  # no right rows at all
 
 
 def test_partitioning_invariance(spark):
     a = asof_join(
-        _left(spark).repartition(5), _right(spark).repartition(3),
-        on="user", left_ts="ts", right_ts="ts", tiebreak="rid",
+        _left(spark).repartition(5), _right(spark).repartition(3), on="user"
     ).collect()
     b = asof_join(
-        _left(spark).coalesce(1), _right(spark).coalesce(1),
-        on="user", left_ts="ts", right_ts="ts", tiebreak="rid",
+        _left(spark).coalesce(1), _right(spark).coalesce(1), on="user"
     ).collect()
     key = lambda r: r["lid"]  # noqa: E731
     assert sorted(a, key=key) == sorted(b, key=key)
@@ -62,10 +57,7 @@ def test_asof_is_one_shuffle_no_join(spark):
     """The union-window form: exactly ONE Exchange (on the key), zero
     join nodes — the property that keeps it viable at 10^12 events
     where a range join would explode candidates per key."""
-    df = asof_join(
-        _left(spark), _right(spark), on="user", left_ts="ts",
-        right_ts="ts", tiebreak="rid",
-    )
+    df = asof_join(_left(spark), _right(spark), on="user")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -11,7 +11,11 @@ GOOD = (
 )
 
 
-def test_curate_gate_precedence_and_chunk_stage(spark):
+def test_curate_gate_precedence_and_chunk_stage(spark, monkeypatch):
+    from serialization_agents_spark.operators import curate
+
+    monkeypatch.setattr(curate, "MIN_QUALITY", 0.5)
+    monkeypatch.setattr(curate, "MAX_DUP3", 0.3)
     rows = [
         (0, GOOD),                                  # kept (keeper of the dup pair)
         (1, GOOD),                                  # duplicate of 0
@@ -25,7 +29,7 @@ def test_curate_gate_precedence_and_chunk_stage(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: r
-        for r in curate_corpus(docs, min_quality=0.5, max_dup3=0.3).collect()
+        for r in curate_corpus(docs).collect()
     }
     assert {k: v["status"] for k, v in out.items()} == {
         0: "kept", 1: "duplicate", 2: "lang", 3: "quality",
@@ -73,7 +77,7 @@ def test_quality_gate_per_stratum_median(spark):
     med = {k: statistics.median(v) for k, v in by_stratum.items()}
     want = {i for i, (lang, u) in units.items() if u > med[lang]}
 
-    got = {r.doc_id: r for r in quality_gate(docs, p=0.5).collect()}
+    got = {r.doc_id: r for r in quality_gate(docs).collect()}
     assert set(got) == want and len(want) > 0
     for r in got.values():
         assert r.q_thr == med[r.stratum]

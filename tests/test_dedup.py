@@ -115,7 +115,7 @@ def test_neardup_clusters_close_transitive_chains(spark):
     assert 3 not in clusters  # unrelated doc joins no cluster
 
 
-def test_chunk_dedup_conserves_distinct_chunks(spark):
+def test_chunk_dedup_conserves_distinct_chunks(spark, monkeypatch):
     """Global invariant on a seeded random corpus: exactly ONE survivor
     per distinct chunk (sum of kept == number of distinct chunks), every
     doc accounted for, and each reassembly is a subsequence of the doc's
@@ -129,7 +129,8 @@ def test_chunk_dedup_conserves_distinct_chunks(spark):
         for i in range(60)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in D.chunk_dedup(docs, chunk_words=5).collect()}
+    monkeypatch.setattr(D, "CHUNK_WORDS", 5)
+    out = {r["doc_id"]: r for r in D.chunk_dedup(docs).collect()}
 
     # recompute chunks driver-side
     def chunks(text):
@@ -186,14 +187,6 @@ def test_repeated_spans_fraction_arithmetic(spark):
         assert r["n_windows"] == 16  # 25 - 10 + 1
         assert r["dup_windows"] == 16
         assert r["dup_fraction"] == 1.0
-
-
-def test_repeated_spans_stride_knob_bounds_rows(spark):
-    # stride > 1 samples fewer windows (recall tradeoff, documented)
-    text = " ".join(f"w{i}" for i in range(25))
-    docs = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    r = D.repeated_span_stats(docs, stride=5).collect()[0]
-    assert r["n_windows"] == 4  # floor((25-10)/5)+1
 
 
 def _py_winnow(text, k=10, w=4):

@@ -38,13 +38,6 @@ def test_snapshot_diff_identical_snapshots_is_empty(spark):
     assert snapshot_diff(snap, snap.select("*")).count() == 0
 
 
-def test_snapshot_diff_custom_key_and_fingerprint_cols(spark):
-    old = spark.createDataFrame([("u1", "h1")], "url STRING, h STRING")
-    new = spark.createDataFrame([("u1", "h2")], "url STRING, h STRING")
-    rows = snapshot_diff(old, new, key_col="url", fingerprint_col="h").collect()
-    assert [(r["url"], r["change"]) for r in rows] == [("u1", "changed")]
-
-
 def test_snapshot_diff_projects_before_join(spark):
     """Wide payload columns must not ride the join: the plan's join node
     sees only (key, fingerprint)."""
@@ -81,15 +74,16 @@ def test_recrawl_maintenance_via_diff_then_fold(spark):
     authority = synth.synth_authority(spark, n_auth=80)
 
     fp = F.md5(F.lower(F.hex("html"))).alias("fingerprint")
-    diff = snapshot_diff(
-        pages1.select("url", fp), pages2.select("url", fp), key_col="url"
-    )
+    key = F.col("url").alias("doc_id")
+    diff = snapshot_diff(pages1.select(key, fp), pages2.select(key, fp))
     assert diff.where(F.col("change") != "added").count() == 0
     n_added = diff.count()
     assert 0 < n_added < pages2.count()
 
     delta_pages = pages2.join(
-        diff.where(F.col("change") == "added").select("url"), "url", "semi"
+        diff.where(F.col("change") == "added").select(F.col("doc_id").alias("url")),
+        "url",
+        "semi",
     )
     assert delta_pages.count() == n_added
 

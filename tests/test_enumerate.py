@@ -15,7 +15,7 @@ def test_enumerate_dense_and_ordered(spark):
     df = spark.range(0, 1000).select(
         F.format_string("k%04d", F.col("id")).alias("entity_key")
     ).repartition(7)
-    out = enumerate_ids(df, order_col="entity_key").collect()
+    out = enumerate_ids(df).collect()
     by_key = sorted(out, key=lambda r: r["entity_key"])
     ids = [r["registry_id"] for r in by_key]
     # dense sequence starting at the reference's +10,000,000 offset
@@ -27,7 +27,7 @@ def test_enumerate_unique_under_skewed_partitions(spark):
         (F.col("id") % 3).cast("string").alias("bucket"),
         F.concat(F.lit("k"), F.col("id")).alias("entity_key"),
     ).repartition(2, "bucket")
-    out = enumerate_ids(df, order_col="entity_key")
+    out = enumerate_ids(df)
     assert out.select("registry_id").distinct().count() == 500
 
 
@@ -37,5 +37,5 @@ def test_enumerate_ties_get_distinct_ids(spark):
     df = spark.range(0, 300).select(
         (F.col("id") % 7).cast("string").alias("entity_key"), "id"
     ).repartition(5)
-    ids = sorted(r["registry_id"] for r in enumerate_ids(df, order_col="entity_key").collect())
+    ids = sorted(r["registry_id"] for r in enumerate_ids(df).collect())
     assert ids == list(range(REGISTRY_ID_OFFSET, REGISTRY_ID_OFFSET + 300))

@@ -4,6 +4,7 @@ repartitioning, and multi-edge dedup."""
 
 from __future__ import annotations
 
+from serialization_agents_spark.operators import graph as G
 from serialization_agents_spark.operators.graph import BASE, SCALE, pagerank
 
 
@@ -11,13 +12,14 @@ def _ranks(df):
     return {r["node"]: r["rank"] for r in df.collect()}
 
 
-def test_two_node_cycle_is_fixed_point(spark):
+def test_two_node_cycle_is_fixed_point(spark, monkeypatch):
     """a<->b: every node keeps rank == SCALE forever (BASE + 17/20 of a
     full SCALE contribution is SCALE again) — the conservation
     invariant of the damping arithmetic."""
     e = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
     for iters in (1, 4):
-        got = _ranks(pagerank(e, iterations=iters))
+        monkeypatch.setattr(G, "ITERATIONS", iters)
+        got = _ranks(pagerank(e))
         assert got == {"a": SCALE, "b": SCALE}
         assert BASE + SCALE * 17 // 20 == SCALE
 
@@ -26,23 +28,21 @@ def test_star_three_iterations_hand_computed(spark):
     e = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("b", "a")], "src string, dst string"
     )
-    assert _ranks(pagerank(e, iterations=3)) == {
+    assert _ranks(pagerank(e)) == {
         "a": 638750,
         "b": 421468,
         "c": 421468,
     }
 
 
-def test_duplicate_edges_are_deduped(spark):
+def test_duplicate_edges_are_deduped(spark, monkeypatch):
+    monkeypatch.setattr(G, "ITERATIONS", 2)
     e = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("b", "a")], "src string, dst string"
     )
-    dup = _ranks(pagerank(e, iterations=2))
+    dup = _ranks(pagerank(e))
     clean = _ranks(
-        pagerank(
-            spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string"),
-            iterations=2,
-        )
+        pagerank(spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string"))
     )
     assert dup == clean
 
@@ -50,8 +50,8 @@ def test_duplicate_edges_are_deduped(spark):
 def test_partitioning_invariance(spark):
     rows = [(i % 11, (i * 3 + 1) % 11) for i in range(60)]
     e = spark.createDataFrame(rows, "src long, dst long")
-    a = _ranks(pagerank(e.repartition(7), iterations=3))
-    b = _ranks(pagerank(e.coalesce(1), iterations=3))
+    a = _ranks(pagerank(e.repartition(7)))
+    b = _ranks(pagerank(e.coalesce(1)))
     assert a == b
 
 
@@ -85,12 +85,13 @@ def test_cooccurrence_dedupes_repeat_mentions(spark):
     assert _pairs(cooccurrence_edges(m)) == {("x", "y"): 1}
 
 
-def test_cooccurrence_cap_bounds_hub_pages(spark):
+def test_cooccurrence_cap_bounds_hub_pages(spark, monkeypatch):
     """A 10-entity hub page at cap=4 keeps only the 4 smallest keys —
     C(4,2)=6 pairs, never the quadratic blowup."""
+    monkeypatch.setattr(G, "COOCCURRENCE_CAP", 4)
     rows = [("hub", f"e{i:02d}") for i in range(10)] + [("p", "e00"), ("p", "e01")]
     m = spark.createDataFrame(rows, "url string, entity_key string")
-    got = _pairs(cooccurrence_edges(m, cap=4))
+    got = _pairs(cooccurrence_edges(m))
     assert len(got) == 6
     assert got[("e00", "e01")] == 2  # hub + p
     assert all(a < b <= "e03" for a, b in got)
@@ -186,7 +187,7 @@ def test_label_propagation_two_triangles_with_bridge(spark):
              (2, 10, 1)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
     got = {r.node: r.label
-           for r in label_propagation(df, iterations=3).collect()}
+           for r in label_propagation(df).collect()}
     assert got == _py_lpa(edges, 3)
     # the bridge must not merge the triangles: exactly two communities
     assert len(set(got.values())) == 2
@@ -194,15 +195,16 @@ def test_label_propagation_two_triangles_with_bridge(spark):
     assert got[10] == got[11] == got[12]
 
 
-def test_label_propagation_weights_beat_degree(spark):
+def test_label_propagation_weights_beat_degree(spark, monkeypatch):
     from serialization_agents_spark.operators.graph import label_propagation
 
+    monkeypatch.setattr(G, "ITERATIONS", 1)
     # node 5 has two unit-weight neighbors labeled 1,2 and ONE heavy
     # neighbor labeled 9: the heavy edge must win the vote
     edges = [(5, 1, 1), (5, 2, 1), (5, 9, 3)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
     got = {r.node: r.label
-           for r in label_propagation(df, iterations=1).collect()}
+           for r in label_propagation(df).collect()}
     assert got[5] == 9
     assert got == _py_lpa(edges, 1)
 
@@ -212,12 +214,10 @@ def test_label_propagation_partitioning_invariant(spark):
 
     edges = [(i % 40, (i * 7 + 1) % 40, i % 3 + 1) for i in range(300)]
     a = label_propagation(
-        spark.createDataFrame(edges, "src long, dst long, w long").coalesce(1),
-        iterations=3,
+        spark.createDataFrame(edges, "src long, dst long, w long").coalesce(1)
     )
     b = label_propagation(
-        spark.createDataFrame(edges, "src long, dst long, w long").repartition(13),
-        iterations=3,
+        spark.createDataFrame(edges, "src long, dst long, w long").repartition(13)
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert {r[0]: r[1] for r in a.collect()} == _py_lpa(edges, 3)
@@ -249,7 +249,7 @@ def test_bfs_distances_two_components(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     srcs = spark.createDataFrame([(0,)], "node long")
     got = {r["node"]: r["dist"]
-           for r in bfs_distances(df, srcs, max_hops=4).collect()}
+           for r in bfs_distances(df, srcs).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}  # 5,6 beyond hops;
     assert 10 not in got                          # triangle unreached
     assert got == _py_bfs(edges, [0], 4)
@@ -262,23 +262,24 @@ def test_bfs_multi_source_takes_nearest(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     srcs = spark.createDataFrame([(0,), (8,)], "node long")
     got = {r["node"]: r["dist"]
-           for r in bfs_distances(df, srcs, max_hops=4).collect()}
+           for r in bfs_distances(df, srcs).collect()}
     assert got == _py_bfs(edges, [0, 8], 4)
     assert got[4] == 4 and got[6] == 2  # nearest source wins
 
 
-def test_bfs_partitioning_invariant(spark):
+def test_bfs_partitioning_invariant(spark, monkeypatch):
     from serialization_agents_spark.operators.graph import bfs_distances
 
+    monkeypatch.setattr(G, "BFS_MAX_HOPS", 3)
     edges = [(i % 37, (i * 5 + 2) % 37) for i in range(150)]
     srcs_rows = [(0,), (13,)]
     a = bfs_distances(
         spark.createDataFrame(edges, "src long, dst long").coalesce(1),
-        spark.createDataFrame(srcs_rows, "node long"), max_hops=3,
+        spark.createDataFrame(srcs_rows, "node long"),
     )
     b = bfs_distances(
         spark.createDataFrame(edges, "src long, dst long").repartition(11),
-        spark.createDataFrame(srcs_rows, "node long"), max_hops=3,
+        spark.createDataFrame(srcs_rows, "node long"),
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert {r[0]: r[1] for r in a.collect()} == _py_bfs(edges, [0, 13], 3)

@@ -26,11 +26,11 @@ def test_interval_join_matches_naive_on_random_data(spark):
     for i in range(80):
         s = rng.randrange(0, 10_000)
         intervals.append((i, rng.randrange(5), s, s + rng.randrange(0, 4_000)))
-    p = spark.createDataFrame(points, "pid long, key long, ts long")
-    iv = spark.createDataFrame(intervals, "iid long, key long, start long, end long")
+    p = spark.createDataFrame(points, "pid long, key long, ts_us long")
+    iv = spark.createDataFrame(intervals, "iid long, key long, start_us long, end_us long")
     got = sorted(
         (r["pid"], r["iid"])
-        for r in interval_join(p, iv, key="key", ts_col="ts", chunk=1000)
+        for r in interval_join(p, iv, key="key", chunk=1000)
         .select("pid", "iid").collect()
     )
     assert got == _join_naive(points, intervals)
@@ -38,46 +38,45 @@ def test_interval_join_matches_naive_on_random_data(spark):
 
 def test_interval_join_half_open_boundaries(spark):
     p = spark.createDataFrame(
-        [(0, 1, 100), (1, 1, 199), (2, 1, 200)], "pid long, key long, ts long"
+        [(0, 1, 100), (1, 1, 199), (2, 1, 200)], "pid long, key long, ts_us long"
     )
     iv = spark.createDataFrame(
-        [(0, 1, 100, 200)], "iid long, key long, start long, end long"
+        [(0, 1, 100, 200)], "iid long, key long, start_us long, end_us long"
     )
-    got = {r["pid"] for r in interval_join(p, iv, key="key", ts_col="ts",
-                                           chunk=50).collect()}
+    got = {r["pid"] for r in interval_join(p, iv, key="key", chunk=50).collect()}
     assert got == {0, 1}  # start inclusive, end exclusive
 
 
 def test_interval_join_spans_many_chunks_no_dup(spark):
     # one long interval over 10 chunks; each matching point appears ONCE
     p = spark.createDataFrame(
-        [(i, 1, i * 100) for i in range(12)], "pid long, key long, ts long"
+        [(i, 1, i * 100) for i in range(12)], "pid long, key long, ts_us long"
     )
     iv = spark.createDataFrame(
-        [(0, 1, 0, 1000)], "iid long, key long, start long, end long"
+        [(0, 1, 0, 1000)], "iid long, key long, start_us long, end_us long"
     )
-    rows = interval_join(p, iv, key="key", ts_col="ts", chunk=100).collect()
+    rows = interval_join(p, iv, key="key", chunk=100).collect()
     assert sorted(r["pid"] for r in rows) == list(range(10))  # ts 0..900
     assert len(rows) == len({r["pid"] for r in rows})
 
 
 def test_interval_join_drops_empty_and_inverted(spark):
-    p = spark.createDataFrame([(0, 1, 5)], "pid long, key long, ts long")
+    p = spark.createDataFrame([(0, 1, 5)], "pid long, key long, ts_us long")
     iv = spark.createDataFrame(
-        [(0, 1, 5, 5), (1, 1, 9, 3)], "iid long, key long, start long, end long"
+        [(0, 1, 5, 5), (1, 1, 9, 3)], "iid long, key long, start_us long, end_us long"
     )
-    assert interval_join(p, iv, key="key", ts_col="ts", chunk=10).count() == 0
+    assert interval_join(p, iv, key="key", chunk=10).count() == 0
 
 
 def test_interval_join_plan_has_no_nested_loop(spark):
     import contextlib
     import io
 
-    p = spark.createDataFrame([(0, 1, 5)], "pid long, key long, ts long")
+    p = spark.createDataFrame([(0, 1, 5)], "pid long, key long, ts_us long")
     iv = spark.createDataFrame(
-        [(0, 1, 0, 10)], "iid long, key long, start long, end long"
+        [(0, 1, 0, 10)], "iid long, key long, start_us long, end_us long"
     )
-    df = interval_join(p, iv, key="key", ts_col="ts", chunk=10)
+    df = interval_join(p, iv, key="key", chunk=10)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

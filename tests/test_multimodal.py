@@ -3,7 +3,9 @@ decoders, and the per-row failure flag."""
 
 from __future__ import annotations
 
+from serialization_agents_spark.operators import multimodal as M
 from serialization_agents_spark.operators.multimodal import (
+    N_MEDIA,
     extract_audio_features,
     extract_image_features,
     resize_images,
@@ -13,12 +15,12 @@ from serialization_agents_spark.operators.multimodal import (
 
 
 def test_image_feature_extraction_schema_and_determinism(spark):
-    media = synth_media(spark, n=60)
+    media = synth_media(spark)
     out = extract_image_features(media)
     rows = {r["media_id"]: r for r in out.collect()}
     # only image rows (not audio id%3==0, not video id%7==1) survive
     assert set(rows) == {
-        i for i in range(60) if i % 3 != 0 and i % 7 != 1
+        i for i in range(N_MEDIA) if i % 3 != 0 and i % 7 != 1
     }
     r = rows[2]
     assert r["decode_ok"] and r["channels"] == 3
@@ -30,19 +32,19 @@ def test_image_feature_extraction_schema_and_determinism(spark):
 
 
 def test_audio_features_kind_filter_and_meta_carry(spark):
-    media = synth_media(spark, n=42)
+    media = synth_media(spark)
     rows = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    assert set(rows) == {i for i in range(42) if i % 3 == 0}
+    assert set(rows) == {i for i in range(N_MEDIA) if i % 3 == 0}
     r = rows[0]
     assert r["decode_ok"] and r["sample_rate"] == 16000
     assert 500 <= r["duration_ms"] <= 60_500 and len(r["feature"]) == 8
 
 
 def test_frame_sampling_fanout_is_bounded_and_deterministic(spark):
-    media = synth_media(spark, n=50)
-    frames = sample_video_frames(media, every_ms=1000, max_frames=16)
+    media = synth_media(spark)
+    frames = sample_video_frames(media)
     rows = frames.collect()
-    vids = {i for i in range(50) if i % 3 != 0 and i % 7 == 1}
+    vids = {i for i in range(N_MEDIA) if i % 3 != 0 and i % 7 == 1}
     assert {r["media_id"] for r in rows} == vids
     per = {}
     for r in rows:
@@ -57,9 +59,11 @@ def test_frame_sampling_fanout_is_bounded_and_deterministic(spark):
     assert again == first
 
 
-def test_resize_payload_shape(spark):
-    media = synth_media(spark, n=20)
-    out = resize_images(media, width=32, height=8).collect()
+def test_resize_payload_shape(spark, monkeypatch):
+    monkeypatch.setattr(M, "RESIZE_WIDTH", 32)
+    monkeypatch.setattr(M, "RESIZE_HEIGHT", 8)
+    media = synth_media(spark)
+    out = resize_images(media).collect()
     assert all(len(r["content"]) == 32 * 8 for r in out)
     assert all(r["width"] == 32 and r["height"] == 8 for r in out)
     assert all(r["resize_ok"] for r in out)
@@ -70,8 +74,6 @@ def test_resize_failure_is_flagged(spark, monkeypatch):
     resize_ok=False. The kernel runs in-process here: the stand-in
     resize cannot fail on real bytes."""
     import pandas as pd
-
-    from serialization_agents_spark.operators import multimodal as M
 
     kernels = []
 
@@ -85,7 +87,7 @@ def test_resize_failure_is_flagged(spark, monkeypatch):
         def mapInPandas(self, kernel, _schema):
             kernels.append(kernel)
 
-    M.resize_images(Frame(), width=4, height=4)
+    M.resize_images(Frame())
 
     def broken(*_args):
         raise ValueError("undecodable")

@@ -14,6 +14,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from serialization_agents_spark.operators import pack
 from serialization_agents_spark.operators.pack import shard_pack
 from serialization_agents_spark.operators.sample import mixture_sample
 
@@ -30,23 +31,25 @@ def _py_pack(docs, budget, seed="pack"):
     return out
 
 
-def test_shard_pack_hand_computed(spark):
+def test_shard_pack_hand_computed(spark, monkeypatch):
+    monkeypatch.setattr(pack, "PACK_BUDGET", 10)
     rows = [(i, " ".join(["w"] * (i % 7 + 1))) for i in range(30)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.shard_id for r in shard_pack(docs, budget=10).collect()}
+    got = {r.doc_id: r.shard_id for r in shard_pack(docs).collect()}
     want = _py_pack([(i, i % 7 + 1) for i in range(30)], budget=10)
     assert got == want
-    toks = {r.doc_id: r.n_tokens for r in shard_pack(docs, budget=10).collect()}
+    toks = {r.doc_id: r.n_tokens for r in shard_pack(docs).collect()}
     assert toks == {i: i % 7 + 1 for i in range(30)}
 
 
-def test_shard_pack_partitioning_invariant(spark):
+def test_shard_pack_partitioning_invariant(spark, monkeypatch):
+    monkeypatch.setattr(pack, "PACK_BUDGET", 64)
     rows = [(i, " ".join(["t"] * (i * 13 % 20 + 1))) for i in range(200)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     one = {r.doc_id: r.shard_id
-           for r in shard_pack(docs.coalesce(1), budget=64).collect()}
+           for r in shard_pack(docs.coalesce(1)).collect()}
     many = {r.doc_id: r.shard_id
-            for r in shard_pack(docs.repartition(17), budget=64).collect()}
+            for r in shard_pack(docs.repartition(17)).collect()}
     assert one == many
 
 
@@ -60,13 +63,14 @@ def shard_stats(packed):
     )
 
 
-def test_shard_stats_token_bounds(spark):
+def test_shard_stats_token_bounds(spark, monkeypatch):
     rows = [(i, " ".join(["t"] * (i * 13 % 20 + 1))) for i in range(400)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     budget, max_doc = 64, 20
+    monkeypatch.setattr(pack, "PACK_BUDGET", budget)
     stats = sorted(
         (r.shard_id, r.n_tokens)
-        for r in shard_stats(shard_pack(docs, budget=budget)).collect()
+        for r in shard_stats(shard_pack(docs)).collect()
     )
     # shards are contiguous 0..k and every non-final shard's total lands
     # in (budget - max_doc, budget + max_doc): a shard closes only when
@@ -81,7 +85,7 @@ def test_shard_stats_token_bounds(spark):
 def test_mixture_uniform_strata_keeps_everything(spark):
     rows = [(i, ["a", "b", "c", "d"][i % 4]) for i in range(400)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = mixture_sample(docs, stratum_col="lang").collect()
+    kept = mixture_sample(docs).collect()
     assert len(kept) == 400  # balanced strata -> every rate exactly 1.0
     assert all(r.mix_rate == 1.0 for r in kept)
 
@@ -90,7 +94,7 @@ def test_mixture_skewed_strata_rates_and_keepset(spark):
     # 300 head + 50 tail: head gets cut toward sqrt-share, tail capped at 1
     rows = [(i, "head" if i < 300 else "tail") for i in range(350)]
     docs = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = mixture_sample(docs, stratum_col="lang").collect()
+    kept = mixture_sample(docs).collect()
 
     counts = {"head": 300, "tail": 50}
     wu = {k: math.floor(math.sqrt(v) * 1e6) for k, v in counts.items()}
@@ -111,11 +115,9 @@ def test_mixture_skewed_strata_rates_and_keepset(spark):
 def test_mixture_partitioning_invariant(spark):
     rows = [(i, "x" if i % 5 else "y") for i in range(500)]
     a = mixture_sample(
-        spark.createDataFrame(rows, "doc_id long, lang string").coalesce(1),
-        stratum_col="lang",
+        spark.createDataFrame(rows, "doc_id long, lang string").coalesce(1)
     )
     b = mixture_sample(
-        spark.createDataFrame(rows, "doc_id long, lang string").repartition(13),
-        stratum_col="lang",
+        spark.createDataFrame(rows, "doc_id long, lang string").repartition(13)
     )
     assert sorted(r.doc_id for r in a.collect()) == sorted(r.doc_id for r in b.collect())

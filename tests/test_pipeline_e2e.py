@@ -1,7 +1,8 @@
 """End-to-end gates:
 
-1. Spark triples vs the pure-Python oracle — precision/recall >= 0.95
-   (BASELINE.json north_rule; in practice they should be identical).
+1. Spark vs the pure-Python oracle (tests/kg_oracle.py): the triples are
+   the oracle's set exactly, with no duplicate rows, and every canonical
+   row equals the oracle's field by field.
 2. Deterministic re-run: identical output checksums.
 3. Resume-from-checkpoint: killing after stage k and re-running skips
    completed stages and yields byte-identical results.
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 
 import kg_oracle
 from serialization_agents_spark import synth
+from serialization_agents_spark.operators.enumerate_ids import REGISTRY_ID_OFFSET
 from serialization_agents_spark.plans.pipeline import run_pipeline
 
 N_PAGES = 400
@@ -49,13 +51,6 @@ def corpus(spark):
     redirects = synth.synth_redirects(spark)
     blacklist = synth.synth_blacklist(spark)
     return pages, authority, redirects, blacklist
-
-
-def _pr(spark_triples: set, oracle_triples: set) -> tuple[float, float]:
-    tp = len(spark_triples & oracle_triples)
-    precision = tp / len(spark_triples) if spark_triples else 0.0
-    recall = tp / len(oracle_triples) if oracle_triples else 0.0
-    return precision, recall
 
 
 def test_error_log_side_table(spark, corpus, tmp_path):
@@ -106,25 +101,58 @@ def test_error_log_side_table(spark, corpus, tmp_path):
     assert res.triples.where(F.col("obj").contains("9431627")).count() == 0
 
 
+def _canonical_fields(row: dict, registry_id: int) -> tuple:
+    return (
+        registry_id,
+        sorted(row["viaf"] or []),
+        sorted(tuple(m) for m in row["merge_source"]),
+        row["name_controlled"],
+        row["type"],
+        row["lc_id"],
+        row["wikidata"],
+        row["dbpedia"],
+        row["is_controlled"],
+    )
+
+
 def test_triples_match_oracle(spark, corpus):
     pages, authority, redirects, blacklist = corpus
     res = run_pipeline(spark, pages, authority, redirects, blacklist)
-    spark_triples = {
-        (r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()
-    }
+    triple_rows = [(r["subj"], r["pred"], r["obj"]) for r in res.triples.collect()]
 
     pages_rows = [r.asDict() for r in pages.collect()]
     auth_rows = [r.asDict() for r in authority.collect()]
     red_rows = [r.asDict() for r in redirects.collect()]
     bl = [r["name"] for r in blacklist.collect()]
-    _, oracle_triples = kg_oracle.run_oracle(pages_rows, auth_rows, red_rows, bl)
-
-    precision, recall = _pr(spark_triples, oracle_triples)
-    only_spark = list(spark_triples - oracle_triples)[:5]
-    only_oracle = list(oracle_triples - spark_triples)[:5]
-    assert precision >= 0.95 and recall >= 0.95, (
-        f"P={precision:.4f} R={recall:.4f}\n+spark {only_spark}\n+oracle {only_oracle}"
+    oracle_canonical, oracle_triples = kg_oracle.run_oracle(
+        pages_rows, auth_rows, red_rows, bl
     )
+
+    assert len(triple_rows) == len(set(triple_rows)), "duplicate triple rows"
+    spark_triples = set(triple_rows)
+    assert spark_triples == oracle_triples, (
+        f"+spark {sorted(spark_triples - oracle_triples)[:5]}\n"
+        f"+oracle {sorted(oracle_triples - spark_triples)[:5]}"
+    )
+
+    # registry ids enumerate the entity keys in order from REGISTRY_ID_OFFSET
+    rank = {k: i for i, k in enumerate(sorted(g["entity_key"] for g in oracle_canonical))}
+    want = {
+        g["entity_key"]: _canonical_fields(g, REGISTRY_ID_OFFSET + rank[g["entity_key"]])
+        for g in oracle_canonical
+    }
+    canonical_rows = [r.asDict(recursive=True) for r in res.canonical.collect()]
+    got = {
+        r["entity_key"]: _canonical_fields(
+            {**r, "merge_source": [(m["source"], m["id"]) for m in r["merge_source"] or []]},
+            r["registry_id"],
+        )
+        for r in canonical_rows
+    }
+    assert len(got) == len(canonical_rows), "duplicate canonical entity keys"
+    assert got.keys() == want.keys()
+    wrong = {k: (got[k], want[k]) for k in got if got[k] != want[k]}
+    assert not wrong, f"{len(wrong)} canonical rows differ, e.g. {list(wrong.items())[:3]}"
 
 
 def test_rerun_is_deterministic(spark, corpus):

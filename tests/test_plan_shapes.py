@@ -291,15 +291,17 @@ def test_winnow_pairs_fingerprint_blocked(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_kmeans_assignment_is_arrow_kernel(spark):
+def test_kmeans_assignment_is_arrow_kernel(spark, monkeypatch):
     """ann_kmeans_refine's distributed work is the Arrow cell kernel +
     posexplode mean agg; the returned centroid table itself is a tiny
     local relation (bounded by n_centroids x dim, like the IVF centroid
     broadcast), so the query plan must be scan-free."""
-    from serialization_agents_spark.operators.similarity import kmeans_lloyd
+    from serialization_agents_spark.operators import similarity
 
+    monkeypatch.setattr(similarity, "KMEANS_CELLS", 4)
+    monkeypatch.setattr(similarity, "KMEANS_ITERS", 1)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = kmeans_lloyd(emb, n_centroids=4, n_iters=1)
+    df = similarity.kmeans_lloyd(emb)
     plan = _plan(df)
     assert "Scan parquet" not in plan  # driver-assembled centroid table
     assert df.count() == 4 * 64

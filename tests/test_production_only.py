@@ -12,18 +12,32 @@ in a string constant (the worker script `tools/cluster_scaling.py` runs
 in a fresh process) is scanned like a file. `@query` functions are
 reached through the `queries()` registry and are exempt.
 
-The same holds for options: a defaulted parameter that its function
-branches on must take two values across the non-test calls, or the
-branch it never selects runs only in tests.
+The same holds for options: every defaulted parameter must take two
+values across the non-test calls. A parameter that production always
+passes one value is a constant (a literal or an ALL_CAPS module
+constant, which a test may monkeypatch); an option that varies only in
+tests exists only for tests. `@query` functions, the
+`__spark_entry__.__all__` names and the `perfbench/` definitions are
+exempt, and so is `synth.py` (see SYNTH).
+
+Every keyword argument of a non-test call must name a parameter of the
+definition it calls, unless that definition takes `**kwargs`. Tier-1
+never runs `bench.py`, `tools/` or the embedded worker script, so a
+keyword left behind by a deleted parameter would otherwise fail only
+when that code runs.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "serialization_agents_spark"
+# perfbench/run.py::corpus_key hashes synth.py: editing it re-keys the
+# benchmark corpus and drops its checksum reference, so its options stay.
+SYNTH = PACKAGE / "synth.py"
 _SKIP_DIRS = {"tests", ".git", ".claude", "__pycache__", ".perfbench", "spark-warehouse"}
 
 
@@ -119,15 +133,6 @@ def _defaulted(fn: ast.AST) -> dict[str, ast.expr]:
     return out
 
 
-def _branched_on(fn: ast.AST) -> set[str]:
-    """Names read in the test of an `if`, `while` or conditional expression."""
-    return {
-        n.id
-        for node in ast.walk(fn) if isinstance(node, (ast.If, ast.While, ast.IfExp))
-        for n in ast.walk(node.test) if isinstance(n, ast.Name)
-    }
-
-
 def _calls(tree: ast.AST) -> list[tuple[ast.Call, ast.AST | None]]:
     """(call, innermost enclosing function definition or None) for each call."""
     out = []
@@ -160,18 +165,37 @@ def _passed(call: ast.Call, fn: ast.AST, param: str) -> ast.expr | None:
     return None
 
 
-def test_every_branching_option_has_two_values_in_use():
-    """A defaulted parameter that its function branches on must take at
-    least two values across the non-test calls, or one that varies.
+_REPO_ROOTS = {p.stem for p in REPO.iterdir()}  # top-level modules and packages
 
-    Each call contributes one entry: the literal it passes (or the default
-    when it omits the parameter); for a bare name that is a defaulted
-    parameter of the enclosing function, that parameter's own values; for
-    an ALL_CAPS constant, that constant; for any other expression,
-    "varies". A single value means the other branch runs only in tests.
-    `@query` functions and the `__spark_entry__.__all__` names are called
-    by the external driver and are exempt.
-    """
+
+def _repo_module_aliases(tree: ast.AST) -> set[str]:
+    """Local names that `import` / `from ... import` bind to this
+    repository's modules (or to names inside them)."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(
+                (a.asname or a.name).split(".")[0]
+                for a in node.names if a.name.split(".")[0] in _REPO_ROOTS
+            )
+        elif isinstance(node, ast.ImportFrom) and (
+            node.level or (node.module or "").split(".")[0] in _REPO_ROOTS
+        ):
+            out.update(a.asname or a.name for a in node.names)
+    return out
+
+
+@functools.cache
+def _call_graph():
+    """(trees, unique, calls, entry_all) over the non-test files: each
+    file's tree; name -> (file, definition) for the function names
+    defined exactly once outside perfbench/; name -> [(call, enclosing
+    function, file)] for every call of such a name, embedded sources
+    included; and `__spark_entry__.__all__`.
+
+    A call counts when it names the function bare (`f(...)`) or as an
+    attribute of a module imported from this repository (`D.f(...)`),
+    not as a method of some other object (`subprocess.run(...)`)."""
     trees = {path: ast.parse(path.read_text()) for path in _user_files()}
     entry_all = next(
         ast.literal_eval(node.value)
@@ -186,14 +210,36 @@ def test_every_branching_option_has_two_values_in_use():
                 if isinstance(node, _FUNCTION):
                     defs.setdefault(node.name, []).append((path, node))
     unique = {name: ds[0] for name, ds in defs.items() if len(ds) == 1}
-    calls = {}  # name -> [(call, enclosing function)]
-    for tree in trees.values():
+    calls = {}  # name -> [(call, enclosing function, file)]
+    for path, tree in trees.items():
         for sub in [tree, *_embedded_sources(tree)]:
+            ours = _repo_module_aliases(sub)
             for call, encl in _calls(sub):
                 f = call.func
-                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if isinstance(f, ast.Name):
+                    name = f.id
+                elif isinstance(f, ast.Attribute) and getattr(f.value, "id", None) in ours:
+                    name = f.attr
+                else:
+                    continue
                 if name in unique:
-                    calls.setdefault(name, []).append((call, encl))
+                    calls.setdefault(name, []).append((call, encl, path))
+    return trees, unique, calls, entry_all
+
+
+def test_every_option_has_two_values_in_use():
+    """Every defaulted parameter must take at least two values across
+    the non-test calls, or one that varies.
+
+    Each call contributes one entry: the literal it passes (or the default
+    when it omits the parameter); for a bare name that is a defaulted
+    parameter of the enclosing function, that parameter's own values; for
+    an ALL_CAPS constant, that constant; for any other expression,
+    "varies". A single value means the option exists only for tests.
+    `@query` functions and the `__spark_entry__.__all__` names are called
+    by the external driver and are exempt; so are SYNTH's options.
+    """
+    _trees, unique, calls, entry_all = _call_graph()
 
     memo = {}
 
@@ -205,7 +251,7 @@ def test_every_branching_option_has_two_values_in_use():
             fn = unique[name][1]
             memo[name, param] = set().union(*(
                 value(_defaulted(fn)[param], None) if expr is None else value(expr, encl)
-                for call, encl in calls.get(name, ())
+                for call, encl, _path in calls.get(name, ())
                 for expr in [_passed(call, fn, param)]
             ))
         return memo[name, param]
@@ -227,12 +273,34 @@ def test_every_branching_option_has_two_values_in_use():
     single = [
         f"{'.'.join(path.relative_to(REPO).with_suffix('').parts)}.{name}({param}): "
         + (", ".join(sorted(vals)) or "no call")
-        for name, (path, fn) in sorted(unique.items())
-        for param in sorted(_branched_on(fn) & set(_defaulted(fn)))
+        for name, (path, fn) in sorted(unique.items()) if path != SYNTH
+        for param in sorted(_defaulted(fn))
         for vals in [values(name, param)]
         if len(vals) < 2 and _VARIES not in vals
     ]
     assert not single, (
-        "options whose every non-test caller passes one value (delete the "
-        "branch the value never selects, and the option):\n" + "\n".join(single)
+        "options whose every non-test caller passes one value (make the "
+        "value a constant and delete the option):\n" + "\n".join(single)
+    )
+
+
+def test_every_keyword_names_a_parameter():
+    """A keyword argument in a non-test call names a parameter of the
+    definition it calls (unless that definition takes `**kwargs`)."""
+    _trees, unique, calls, _entry_all = _call_graph()
+    stale = []
+    for name, sites in sorted(calls.items()):
+        path, fn = unique[name]
+        if fn.args.kwarg is not None:
+            continue
+        params = {p.arg for p in fn.args.args + fn.args.kwonlyargs}
+        stale.extend(
+            f"{site.relative_to(REPO)}:{call.lineno}: {name}({k.arg}=...)"
+            for call, _encl, site in sites
+            for k in call.keywords
+            if k.arg is not None and k.arg not in params
+        )
+    assert not stale, (
+        "keyword arguments that name no parameter of the called "
+        "definition:\n" + "\n".join(stale)
     )

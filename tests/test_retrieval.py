@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+from serialization_agents_spark.operators import retrieval
 from serialization_agents_spark.operators.retrieval import bm25_topk
 
 DOCS = [
@@ -46,7 +47,7 @@ def test_bm25_matches_python_reference(spark):
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     got = {
         r.doc_id: (r.n_matched, r.score_e4)
-        for r in bm25_topk(docs, ["cat", "fish"], k=10).collect()
+        for r in bm25_topk(docs, ["cat", "fish"]).collect()
     }
     assert got == _py_bm25(DOCS, ["cat", "fish"])
 
@@ -56,15 +57,16 @@ def test_bm25_rare_term_outranks_common(spark):
     # the rare doc must rank first on idf alone
     rows = [(i, "common pad pad") for i in range(9)] + [(9, "rare pad pad")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    top = bm25_topk(docs, ["common", "rare"], k=10).collect()
+    top = bm25_topk(docs, ["common", "rare"]).collect()
     assert top[0].doc_id == 9
     assert top[0].score_e4 > top[1].score_e4
 
 
-def test_bm25_topk_limit_and_tie_order(spark):
+def test_bm25_topk_limit_and_tie_order(spark, monkeypatch):
+    monkeypatch.setattr(retrieval, "TOPK", 5)
     rows = [(i, "term pad") for i in range(20)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    top = bm25_topk(docs, ["term"], k=5).collect()
+    top = bm25_topk(docs, ["term"]).collect()
     # identical docs tie on score; the deterministic tiebreak is doc_id asc
     assert [r.doc_id for r in top] == [0, 1, 2, 3, 4]
     assert len({r.score_e4 for r in top}) == 1
@@ -75,10 +77,10 @@ def test_bm25_partitioning_invariant(spark):
             for i in range(100)]
     a = bm25_topk(
         spark.createDataFrame(rows, "doc_id long, text string").coalesce(1),
-        ["cat", "dog"], k=15,
+        ["cat", "dog"],
     ).collect()
     b = bm25_topk(
         spark.createDataFrame(rows, "doc_id long, text string").repartition(13),
-        ["cat", "dog"], k=15,
+        ["cat", "dog"],
     ).collect()
     assert [(r.doc_id, r.score_e4) for r in a] == [(r.doc_id, r.score_e4) for r in b]

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from serialization_agents_spark.operators.sample import sample_corpus, uniform_hash
+from serialization_agents_spark.operators import vocab
 from serialization_agents_spark.operators.vocab import vocab_stats
 
 
@@ -43,15 +44,6 @@ def test_sample_rates_respected(spark):
     assert 90 <= by_lang.get("en", 0) <= 210  # ~150 expected at 0.5
 
 
-def test_sample_default_rate_and_seed(spark):
-    docs = _docs(spark)
-    none_kept = sample_corpus(docs, rates={}, default_rate=0.0)
-    assert none_kept.count() == 0
-    s1 = {r.doc_id for r in sample_corpus(docs, {"en": 0.5}, seed="a").collect()}
-    s2 = {r.doc_id for r in sample_corpus(docs, {"en": 0.5}, seed="b").collect()}
-    assert s1 != s2  # different seeds draw different keep-sets
-
-
 def test_uniform_hash_matches_python_md5(spark):
     import hashlib
 
@@ -77,9 +69,10 @@ def test_vocab_stats_conservation(spark):
     assert sum(r.term_freq for r in rows.values()) == 8
 
 
-def test_tfidf_topk_ranking_and_ties(spark):
+def test_tfidf_topk_ranking_and_ties(spark, monkeypatch):
     from serialization_agents_spark.operators.vocab import tfidf_topk
 
+    monkeypatch.setattr(vocab, "TFIDF_K", 2)
     docs = spark.createDataFrame(
         [
             (0, "rare rare common"),
@@ -90,7 +83,7 @@ def test_tfidf_topk_ranking_and_ties(spark):
     )
     rows = [
         (r.doc_id, r.term, r.rank)
-        for r in tfidf_topk(docs, k=2).orderBy("doc_id", "rank").collect()
+        for r in tfidf_topk(docs).orderBy("doc_id", "rank").collect()
     ]
     # 'common' appears in all 3 docs -> idf = ln(1) = 0 -> score 0;
     # unique terms (idf ln 3) dominate; zero-score ties break on term asc.
@@ -98,7 +91,7 @@ def test_tfidf_topk_ranking_and_ties(spark):
     assert rows[2] == (1, "other", 1) and rows[3] == (1, "common", 2)
     assert rows[4] == (2, "zebra", 1) and rows[5] == (2, "common", 2)
     scores = {
-        (r.doc_id, r.term): r.score for r in tfidf_topk(docs, k=2).collect()
+        (r.doc_id, r.term): r.score for r in tfidf_topk(docs).collect()
     }
     assert scores[(0, "common")] == 0.0
     assert scores[(0, "rare")] == round(2 * round(__import__("math").log(3), 4), 4)
@@ -117,46 +110,49 @@ def test_bpe_pair_stats_conservation(spark):
     assert total == 3 + 1
 
 
-def test_inverted_index_hand_computed(spark):
+def test_inverted_index_hand_computed(spark, monkeypatch):
     from serialization_agents_spark.operators.vocab import inverted_index
 
+    monkeypatch.setattr(vocab, "MAX_POSTINGS", 2)
     docs = spark.createDataFrame(
         [(1, "a b a"), (2, "b c"), (3, "a"), (4, "b"), (5, "")],
         "doc_id long, text string",
     )
-    rows = {r.term: r for r in inverted_index(docs, max_postings=2).collect()}
+    rows = {r.term: r for r in inverted_index(docs).collect()}
     assert set(rows) == {"a", "b", "c"}  # empty doc contributes nothing
     a, b, c = rows["a"], rows["b"], rows["c"]
     assert (a.term_freq, a.doc_freq, a.truncated, a.postings_head) == (3, 2, False, "1,3")
-    # b appears in 3 docs > max_postings=2: head keeps the 2 SMALLEST ids
+    # b appears in 3 docs > MAX_POSTINGS=2: head keeps the 2 SMALLEST ids
     assert (b.term_freq, b.doc_freq, b.truncated, b.postings_head) == (3, 3, True, "1,2")
     assert (c.term_freq, c.doc_freq, c.truncated, c.postings_head) == (1, 1, False, "2")
 
 
-def test_inverted_index_head_is_partitioning_invariant(spark):
+def test_inverted_index_head_is_partitioning_invariant(spark, monkeypatch):
     from serialization_agents_spark.operators.vocab import inverted_index
 
+    monkeypatch.setattr(vocab, "MAX_POSTINGS", 3)
     docs = spark.createDataFrame(
         [(i, "common tok%d" % (i % 5)) for i in range(40)],
         "doc_id long, text string",
     )
     one = {r.term: r.postings_head
-           for r in inverted_index(docs.coalesce(1), max_postings=3).collect()}
+           for r in inverted_index(docs.coalesce(1)).collect()}
     many = {r.term: r.postings_head
-            for r in inverted_index(docs.repartition(11), max_postings=3).collect()}
+            for r in inverted_index(docs.repartition(11)).collect()}
     assert one == many
     assert one["common"] == "0,1,2"
 
 
-def test_ngram_counts_hand_computed(spark):
+def test_ngram_counts_hand_computed(spark, monkeypatch):
     from serialization_agents_spark.operators.vocab import ngram_counts
 
+    monkeypatch.setattr(vocab, "NGRAM_N", 2)
     docs = spark.createDataFrame(
         [(1, "a b a b"), (2, "b a"), (3, "x"), (4, "c d"), (5, "")],
         "doc_id long, text string",
     )
     got = {r.ngram: r.n_occurrences
-           for r in ngram_counts(docs, n=2, min_count=2).collect()}
+           for r in ngram_counts(docs).collect()}
     # "a b" twice in doc1; "b a" once in doc1 + once in doc2; "c d" and
     # the short/empty docs fall below min_count or produce no grams
     assert got == {"a b": 2, "b a": 2}
@@ -170,7 +166,7 @@ def test_ngram_counts_trigram_threshold(spark):
         "doc_id long, text string",
     )
     got = {r.ngram: r.n_occurrences
-           for r in ngram_counts(docs, n=3, min_count=2).collect()}
+           for r in ngram_counts(docs).collect()}
     # doc1 windows: [the quick fox, quick fox the, fox the quick,
     # the quick fox]; doc2 adds one more "the quick fox" -> 3 total.
     # Every other trigram occurs once and falls below min_count=2.

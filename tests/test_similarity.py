@@ -11,6 +11,11 @@ from serialization_agents_spark.operators import similarity as S
 SF = "/root/testdata/sf0.001"
 
 
+def _patch(monkeypatch, **constants):
+    for name, value in constants.items():
+        monkeypatch.setattr(S, name, value)
+
+
 def _emb(spark):
     # 8-dim vectors: 0/1 nearly parallel, 2 orthogonal-ish, 3 opposite of 0
     rows = [
@@ -27,7 +32,7 @@ def test_cosine_topk_exact(spark):
     emb = _emb(spark)
     q = emb.where("vec_id = 0")
     corpus = emb.where("vec_id != 0")
-    out = S.cosine_topk(corpus, q, k=3).collect()
+    out = S.cosine_topk(corpus, q).collect()
     order = [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])]
     assert order[0] in (1, 4) and order[1] in (1, 4)  # the two near-parallels
     assert order[2] == 2
@@ -41,11 +46,12 @@ def test_cosine_topk_exact(spark):
     assert abs(got - round(want, 4)) < 1e-9
 
 
-def test_lsh_bucket_topk_finds_parallel_vector(spark):
+def test_lsh_bucket_topk_finds_parallel_vector(spark, monkeypatch):
+    _patch(monkeypatch, LSH_PLANES=4, DIM=8)
     emb = _emb(spark)
     q = emb.where("vec_id = 0")
     corpus = emb.where("vec_id != 0")
-    out = S.lsh_bucket_topk(corpus, q, k=3, n_planes=4, dim=8).collect()
+    out = S.lsh_bucket_topk(corpus, q).collect()
     # sign-signature of near-parallel vectors matches the query's bucket
     ids = {r["neighbor_id"] for r in out}
     assert 1 in ids or 4 in ids
@@ -96,11 +102,12 @@ def _twin_corpus(spark):
     return emb, n_q, dim
 
 
-def test_lsh_multiprobe_recall_dominates_single_probe(spark):
+def test_lsh_multiprobe_recall_dominates_single_probe(spark, monkeypatch):
     """Multi-probe must (a) never return duplicate (query, neighbor)
     pairs, (b) reach recall >= the single-bucket variant, measured
     against brute-force ground truth on a deterministic corpus."""
     emb, n_q, dim = _twin_corpus(spark)
+    _patch(monkeypatch, DIM=dim)
     q = emb.where("vec_id < 100")
     corpus = emb.where("vec_id >= 100")
 
@@ -111,8 +118,8 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark):
             if r["rank"] == 1 and r["neighbor_id"] == r["query_id"] + 100
         }
 
-    single_df = S.lsh_bucket_topk(corpus, q, k=3, n_planes=8, dim=dim)
-    multi_df = S.lsh_bucket_topk(corpus, q, k=3, n_planes=8, dim=dim, n_probes=3)
+    single_df = S.lsh_bucket_topk(corpus, q)
+    multi_df = S.lsh_bucket_topk(corpus, q, n_probes=3)
     multi_rows = multi_df.collect()
     pairs = [(r["query_id"], r["neighbor_id"]) for r in multi_rows]
     assert len(set(pairs)) == len(pairs)  # no duplicate pairs across probes
@@ -124,15 +131,13 @@ def test_lsh_multiprobe_recall_dominates_single_probe(spark):
     assert r_multi >= 0.9
 
 
-def test_ivf_recall_on_planted_twins(spark):
+def test_ivf_recall_on_planted_twins(spark, monkeypatch):
     """With 4 of 16 cells probed, a query's planted twin (a small
     perturbation — its cell is almost always among the query's best
     cells) must surface as rank-1 for most queries."""
     emb, n_q, dim = _twin_corpus(spark)
-    out = S.ivf_topk(
-        emb.where("vec_id >= 100"), emb.where("vec_id < 100"),
-        k=3, n_centroids=16, n_probes=4, dim=dim,
-    ).collect()
+    _patch(monkeypatch, DIM=dim)
+    out = S.ivf_topk(emb.where("vec_id >= 100"), emb.where("vec_id < 100")).collect()
     pairs = [(r["query_id"], r["neighbor_id"]) for r in out]
     assert len(set(pairs)) == len(pairs)  # one cell per corpus row: no dups
     hits = {
@@ -142,7 +147,7 @@ def test_ivf_recall_on_planted_twins(spark):
     assert len(hits) / n_q >= 0.75
 
 
-def test_kmeans_refine_reduces_sse(spark):
+def test_kmeans_refine_reduces_sse(spark, monkeypatch):
     """Lloyd refinement (kmeans_lloyd) over two tight blobs must cut
     within-cell SSE relative to its LCG init."""
     import random
@@ -151,6 +156,7 @@ def test_kmeans_refine_reduces_sse(spark):
 
     rng = random.Random(5)
     dim = 8
+    _patch(monkeypatch, DIM=dim, KMEANS_CELLS=4)
     mu_a = [1.0] * dim
     mu_b = [-1.0] * dim
     rows = []
@@ -158,7 +164,7 @@ def test_kmeans_refine_reduces_sse(spark):
         mu = mu_a if i % 2 == 0 else mu_b
         rows.append((i, [m + rng.uniform(-0.1, 0.1) for m in mu]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c0 = S.ivf_centroids(4, dim=dim)
+    c0 = S.ivf_centroids(4)
 
     def sse(cents):
         C = np.asarray(cents)
@@ -167,19 +173,18 @@ def test_kmeans_refine_reduces_sse(spark):
         return d.min(axis=1).sum()
 
     c1 = [[0.0] * dim for _ in range(4)]
-    for r in S.kmeans_lloyd(emb, n_centroids=4, n_iters=2, dim=dim).collect():
+    for r in S.kmeans_lloyd(emb).collect():
         c1[r["cell"]][r["pos"]] = r["c_val"]
     assert sse(c1) < sse(c0) * 0.5
 
 
-def test_embedding_neardup_finds_planted_twins(spark):
+def test_embedding_neardup_finds_planted_twins(spark, monkeypatch):
     """The LSH-blocked cosine near-dup pass must surface planted twin
     pairs above threshold, never duplicate a pair, and respect the
     threshold on every returned row."""
     emb, n_q, dim = _twin_corpus(spark)
-    pairs_df, dropped = S.embedding_neardup_pairs(
-        emb, threshold=0.9, n_planes=4, dim=dim
-    )
+    _patch(monkeypatch, NEARDUP_THRESHOLD=0.9, DIM=dim)
+    pairs_df, dropped = S.embedding_neardup_pairs(emb)
     rows = pairs_df.collect()
     assert dropped.count() == 0
     keys = [(r["id_a"], r["id_b"]) for r in rows]
@@ -191,7 +196,7 @@ def test_embedding_neardup_finds_planted_twins(spark):
     assert len(twin_hits) / n_q >= 0.5
 
 
-def test_kernels_tolerate_null_and_ragged_vectors(spark):
+def test_kernels_tolerate_null_and_ragged_vectors(spark, monkeypatch):
     """ADVICE round-3: a NULL or wrong-length embedding must not kill the
     job (np.stack would raise) — the kernels route such rows to a NULL
     bucket/cell, which drops out of every equi-join."""
@@ -199,33 +204,32 @@ def test_kernels_tolerate_null_and_ragged_vectors(spark):
 
     rng = random.Random(7)
     dim = 8
+    _patch(monkeypatch, DIM=dim, LSH_PLANES=4, IVF_CELLS=4)
     good = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(20)]
     bad = [(100, None), (101, [1.0, 2.0]), (102, [])]
     emb = spark.createDataFrame(good + bad, "vec_id long, embedding array<double>")
     q = emb.where("vec_id < 3")
 
-    out = S.lsh_bucket_topk(emb.where("vec_id >= 3"), q, k=3,
-                            n_planes=4, dim=dim).collect()
+    out = S.lsh_bucket_topk(emb.where("vec_id >= 3"), q).collect()
     assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
 
-    out = S.ivf_topk(emb.where("vec_id >= 3"), q, k=3,
-                     n_centroids=4, n_probes=4, dim=dim).collect()
+    out = S.ivf_topk(emb.where("vec_id >= 3"), q).collect()
     assert {r["neighbor_id"] for r in out}.isdisjoint({100, 101, 102})
 
-    pairs, _ = S.embedding_neardup_pairs(emb, threshold=0.0,
-                                         n_planes=2, dim=dim)
+    _patch(monkeypatch, NEARDUP_THRESHOLD=0.0, NEARDUP_PLANES=2)
+    pairs, _ = S.embedding_neardup_pairs(emb)
     ids = {x for r in pairs.collect() for x in (r["id_a"], r["id_b"])}
     assert ids.isdisjoint({100, 101, 102})
 
 
-def _py_kmeans_lloyd(vectors, n_centroids, n_iters, dim, seed=42):
+def _py_kmeans_lloyd(vectors, n_centroids, n_iters, dim):
     """Pure-Python replay of kmeans_lloyd's quantized Lloyd contract:
     argmax-dot assignment with lowest-index ties, HALF_UP 4dp means."""
 
     def half_up(x):
         return math.copysign(math.floor(abs(x) * 10000 + 0.5) / 10000, x) + 0.0
 
-    cents = S.ivf_centroids(n_centroids, dim, seed)
+    cents = S.ivf_centroids(n_centroids)
     counts = {}
     for _ in range(n_iters):
         members = {}
@@ -249,7 +253,7 @@ def _py_kmeans_lloyd(vectors, n_centroids, n_iters, dim, seed=42):
     }
 
 
-def test_kmeans_lloyd_matches_python_reference(spark):
+def test_kmeans_lloyd_matches_python_reference(spark, monkeypatch):
     # 4-dim corpus in two tight blobs plus a NULL and a ragged vector
     # (dropped from the vote); n_centroids=4 guarantees empty cells that
     # must keep their LCG init with n_members = 0.
@@ -257,9 +261,10 @@ def test_kmeans_lloyd_matches_python_reference(spark):
     rows += [(10 + i, [-0.9, 1.1 + (i % 2) * 0.02, 0.4, -1.0]) for i in range(5)]
     rows += [(99, None), (98, [1.0, 2.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    _patch(monkeypatch, DIM=4, KMEANS_CELLS=4)
     got = {
         (r["cell"], r["pos"]): (r["c_val"], r["n_members"])
-        for r in S.kmeans_lloyd(emb, n_centroids=4, n_iters=2, dim=4).collect()
+        for r in S.kmeans_lloyd(emb).collect()
     }
     want = _py_kmeans_lloyd(
         [(i, v) for i, v in rows], n_centroids=4, n_iters=2, dim=4
@@ -271,12 +276,13 @@ def test_kmeans_lloyd_matches_python_reference(spark):
     assert 0 in n_by_cell.values()
 
 
-def test_kmeans_lloyd_no_negative_zero(spark):
+def test_kmeans_lloyd_no_negative_zero(spark, monkeypatch):
     # means that land exactly on -0.0 must fold to +0.0 (oracle parity:
     # DuckDB's round keeps the sign, Spark's drops it)
     rows = [(0, [-1e-9, 1.0]), (1, [1e-9, 1.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for r in S.kmeans_lloyd(emb, n_centroids=2, n_iters=1, dim=2).collect():
+    _patch(monkeypatch, DIM=2, KMEANS_CELLS=2, KMEANS_ITERS=1)
+    for r in S.kmeans_lloyd(emb).collect():
         assert math.copysign(1.0, r["c_val"]) > 0 or r["c_val"] != 0.0
 
 
@@ -305,7 +311,7 @@ def _py_sq8(corpus, queries, k, dim):
     return out
 
 
-def test_sq8_topk_matches_python_reference(spark):
+def test_sq8_topk_matches_python_reference(spark, monkeypatch):
     import random
 
     rng = random.Random(3)
@@ -315,7 +321,8 @@ def test_sq8_topk_matches_python_reference(spark):
     c = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
     q = spark.createDataFrame(queries, "vec_id long, embedding array<double>")
     got = {}
-    for r in S.sq8_topk(c, q, k=3, dim=8).collect():
+    _patch(monkeypatch, DIM=8)
+    for r in S.sq8_topk(c, q).collect():
         got.setdefault(r["query_id"], []).append(
             (r["neighbor_id"], r["dot_q"], r["rank"])
         )
@@ -325,29 +332,28 @@ def test_sq8_topk_matches_python_reference(spark):
         assert [(n, d) for n, d, _ in rows] == want[qid]
 
 
-def test_sq8_degenerate_dim_and_ragged(spark):
+def test_sq8_degenerate_dim_and_ragged(spark, monkeypatch):
     # dim 1 is constant across the corpus (span defaults to 1.0, code 0);
     # a ragged vector is excluded from both the grid and the results
     corpus = [(10, [0.5, 7.0]), (11, [-0.5, 7.0]), (12, [0.1])]
     queries = [(0, [0.4, 7.0])]
     c = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
     q = spark.createDataFrame(queries, "vec_id long, embedding array<double>")
-    rows = S.sq8_topk(c, q, k=5, dim=2).collect()
+    _patch(monkeypatch, DIM=2)
+    rows = S.sq8_topk(c, q).collect()
     assert {r["neighbor_id"] for r in rows} == {10, 11}  # 12 dropped
-    codes, mins, maxs = S.sq8_codes(c, dim=2)
+    codes, mins, maxs = S.sq8_codes(c)
     assert mins == [-0.5, 7.0] and maxs == [0.5, 7.0]
     got = {r["vid"]: r["code"] for r in codes.collect()}
     assert got[10] == [255, 0] and got[11] == [0, 0]
 
 
-def test_rp_projection_preserves_neighborhoods(spark):
-    """JL sanity on planted twins: in the 16-dim projected space, most
+def test_rp_projection_preserves_neighborhoods(spark, monkeypatch):
+    """JL sanity on planted twins: in the 8-dim projected space, most
     planted near-duplicates must still be their query's top-1."""
     emb, n_q, dim = _twin_corpus(spark)
-    out = S.rp_topk(
-        emb.where("vec_id >= 100"), emb.where("vec_id < 100"),
-        k=3, out_dim=8, dim=dim,
-    ).collect()
+    _patch(monkeypatch, DIM=dim, RP_DIM=8)
+    out = S.rp_topk(emb.where("vec_id >= 100"), emb.where("vec_id < 100")).collect()
     hits = {
         r["query_id"] for r in out
         if r["rank"] == 1 and r["neighbor_id"] == r["query_id"] + 100
@@ -355,16 +361,16 @@ def test_rp_projection_preserves_neighborhoods(spark):
     assert len(hits) / n_q >= 0.9
     # projection is deterministic: same planes, same result
     again = S.rp_topk(
-        emb.where("vec_id >= 100").repartition(9),
-        emb.where("vec_id < 100"), k=3, out_dim=8, dim=dim,
+        emb.where("vec_id >= 100").repartition(9), emb.where("vec_id < 100")
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_rp_project_nulls_and_shape(spark):
+def test_rp_project_nulls_and_shape(spark, monkeypatch):
     rows = [(0, [1.0] * 4), (1, None), (2, [1.0, 2.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vid"]: r["rv"] for r in S.rp_project(emb, out_dim=2, dim=4).collect()}
+    _patch(monkeypatch, DIM=4, RP_DIM=2)
+    got = {r["vid"]: r["rv"] for r in S.rp_project(emb).collect()}
     assert got[1] is None and got[2] is None
     assert len(got[0]) == 2
     import numpy as np

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark import synth
 from serialization_agents_spark.sources import (
+    bucketed,
     read_authority,
     read_blacklist,
     read_bucketed,
@@ -86,7 +87,7 @@ def test_schema_enforcement_fails_loudly(spark, tmp_path, reader):
         reader(spark, path)
 
 
-def test_bucketed_join_and_agg_shuffle_nothing(spark, tmp_path):
+def test_bucketed_join_and_agg_shuffle_nothing(spark, tmp_path, monkeypatch):
     """Two tables bucketed on entity_key equi-join AND group-aggregate
     with zero Exchange operators — the co-located-join contract the
     100 TB maintenance jobs rely on."""
@@ -94,8 +95,9 @@ def test_bucketed_join_and_agg_shuffle_nothing(spark, tmp_path):
         F.concat(F.lit("viaf:"), F.col("id")).alias("entity_key"),
         (F.col("id") % 7).alias("v"),
     )
-    write_bucketed(agents, "t_agents_a", str(tmp_path / "ba"), n_buckets=8)
-    write_bucketed(agents, "t_agents_b", str(tmp_path / "bb"), n_buckets=8)
+    monkeypatch.setattr(bucketed, "N_BUCKETS", 8)
+    write_bucketed(agents, "t_agents_a", str(tmp_path / "ba"))
+    write_bucketed(agents, "t_agents_b", str(tmp_path / "bb"))
     a, b = read_bucketed(spark, "t_agents_a"), read_bucketed(spark, "t_agents_b")
 
     joined = a.hint("merge").join(b, "entity_key")  # forbid broadcast

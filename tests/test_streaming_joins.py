@@ -55,11 +55,7 @@ def test_stream_stream_join_matches_batch_and_drops_late(spark, tmp_path):
     )
     batch = {
         (r["event_id"], r["win_id"])
-        for r in interval_join(
-            p, iv, key="user_id", ts_col="ts_us",
-            start_col="start_us", end_col="end_us",
-            chunk=3600 * 1000000,
-        ).collect()
+        for r in interval_join(p, iv, key="user_id", chunk=3600 * 1000000).collect()
     }
     assert got == batch
     assert (0, 100) in got and (2, 101) in got and (1, 100) not in got

@@ -15,6 +15,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from serialization_agents_spark.operators import urls
 from serialization_agents_spark.operators.urls import (
     canonical_url,
     canonical_url_sql,
@@ -116,7 +117,7 @@ def test_dedup_latest_capture_partitioning_invariant(spark):
     assert sorted(a, key=key) == sorted(b, key=key)
 
 
-def test_domain_stats_and_filter(spark):
+def test_domain_stats_and_filter(spark, monkeypatch):
     stats = {r["domain"]: r for r in domain_stats(_captures(spark)).collect()}
     assert stats["news.example"]["n_pages"] == 3
     assert stats["news.example"]["n_canonical"] == 1
@@ -127,10 +128,13 @@ def test_domain_stats_and_filter(spark):
     assert stats["rich.example"]["total_tokens"] == 40
 
     # min_pages=2 drops the singleton; min_avg_tokens=2 drops tie (avg 1)
-    kept = domain_filter(_captures(spark), min_pages=2, min_avg_tokens=2)
+    monkeypatch.setattr(urls, "MIN_AVG_TOKENS", 2)
+    kept = domain_filter(_captures(spark))
     assert {r["domain"] for r in kept.collect()} == {"news.example"}
     # relax both gates -> everything survives
-    all_kept = domain_filter(_captures(spark), min_pages=1, min_avg_tokens=1)
+    monkeypatch.setattr(urls, "MIN_PAGES", 1)
+    monkeypatch.setattr(urls, "MIN_AVG_TOKENS", 1)
+    all_kept = domain_filter(_captures(spark))
     assert all_kept.count() == 6
 
 

@@ -74,8 +74,7 @@ spark.stop()
 """
 
 
-def run_cluster(n_exec: int, cores: int, mem_mb: int, n_pages: int,
-                timeout: float = 3600) -> dict:
+def run_cluster(n_exec: int, cores: int, mem_mb: int, n_pages: int) -> dict:
     env = dict(
         os.environ,
         PYTHONPATH=os.pathsep.join(
@@ -88,7 +87,7 @@ def run_cluster(n_exec: int, cores: int, mem_mb: int, n_pages: int,
     )
     out = subprocess.run(
         [sys.executable, "-c", WORKER], env=env, capture_output=True,
-        text=True, timeout=timeout,
+        text=True, timeout=3600,
     )
     lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
     if not lines:
