@@ -177,7 +177,7 @@ def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     sh = df.select(F.col("doc_id"), shingles(F.col("text")).alias("sh"))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    scored = (
+    return (
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .select(
@@ -189,7 +189,6 @@ def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return scored.where(F.col("jaccard") >= 0.0)
 
 
 def simhash(df: DataFrame) -> DataFrame:
@@ -499,6 +498,5 @@ def winnow_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 1)
     )
     return pairs, dropped.select("fp", "bucket_size")

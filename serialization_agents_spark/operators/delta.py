@@ -17,9 +17,7 @@ Design (Spark-first):
   shuffles twice more, and `EXCEPT` compares WHOLE rows so it cannot
   distinguish `changed` from `removed`+`added`.
 - The key is the snapshot's primary key (unique), so the shuffle is
-  skew-free; with both snapshots stored bucketed by the key
-  (sources/bucketed.py) the join plans with ZERO Exchange — the diff
-  becomes a local zipper merge per bucket.
+  skew-free.
 - Content comparison goes through a fingerprint column (md5 here, the
   oracle-replayable choice; xxhash64 at production scale, same contract
   as operators/dedup.py `hash_fn`) so wide `html`/`text` payloads never

@@ -52,7 +52,6 @@ from serialization_agents_spark.operators.mentions import detect_mentions
 from serialization_agents_spark.operators.merge import merge_entities, score_alt_forms
 from serialization_agents_spark.operators.triples import materialize_triples
 from serialization_agents_spark.schemas import LINEAGE_METRICS
-from serialization_agents_spark.sources.bucketed import read_bucketed, write_bucketed
 
 
 _STAGE_ORDER = ("extract", "mentions", "linked", "agents", "canonical", "triples")
@@ -126,27 +125,15 @@ def run_pipeline(
     out_dir: str | None = None,
     run_id: str = "run0",
     cache: bool = True,
-    agents_table: str | None = None,
     until: str = "triples",
 ) -> PipelineResult:
-    """`agents_table` (requires out_dir): persist the agents stage as a
-    catalog table BUCKETED on entity_key (sources/bucketed.py) instead of
-    plain parquet, and hand the catalog-read frame downstream — the
-    canonicalize groupBys and every later entity_key join/aggregation
-    over the agents table then plan with NO shuffle Exchange on the
-    agents side (asserted by tests/test_pipeline_e2e.py). At 10^12 entities
-    this removes the dominant network cost of the maintenance jobs; on
-    resume the bucket spec comes from the metastore (in-session here; a
-    real deployment's persistent metastore keeps it across jobs — absent
-    that, resume falls back to the unbucketed parquet read).
-
-    `until`: stop after the named stage ("extract", "mentions",
+    """`until`: stop after the named stage ("extract", "mentions",
     "linked", "agents", "canonical", or "triples", the default) —
     later-stage frames come back None and, crucially, their plans are
-    never DECLARED, so Spark schedules nothing for them. A maintenance
-    job that only refreshes the agents table (the common 10^12-scale
-    case) must not pay the CC loop, triple explode, and error audit of
-    the full flagship run.
+    never DECLARED, so Spark schedules nothing for them. A run that needs
+    only the agents stage (an incremental-fold batch, or an `out_dir` run
+    a later call resumes) does not pay the CC loop, triple explode, and
+    error audit of the full flagship run.
 
     `cache` (in-memory runs only): pin the frames later stages read more
     than once — the authority, `linked`, the agents, the canonical rows.
@@ -154,12 +141,6 @@ def run_pipeline(
     (a streaming micro-batch)."""
     if until not in _STAGE_ORDER:
         raise ValueError(f"until must be one of {_STAGE_ORDER}, got {until!r}")
-    if agents_table is not None and out_dir is None:
-        raise ValueError(
-            "agents_table requires out_dir: the bucketed catalog table is "
-            "written alongside the stage parquet, so without out_dir the "
-            "request would be silently ignored"
-        )
     pin = cache and out_dir is None
     res = PipelineResult()
 
@@ -179,13 +160,10 @@ def run_pipeline(
         empty `key` marks a side table: written, but neither counted nor
         listed."""
         path = os.path.join(out_dir, name) if out_dir is not None else None
-        bucketed = name == "agents" and agents_table is not None
         listed = bool(key)
         if path is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
             if listed:
                 res.stages_resumed.append(name)
-            if bucketed and spark.catalog.tableExists(agents_table):
-                return read_bucketed(spark, agents_table)
             return spark.read.parquet(path)
         with _job_group(spark, f"{run_id}:{name}"):
             df = build()
@@ -209,12 +187,8 @@ def run_pipeline(
                 F.count(F.lit(1)).alias("row_count"),
                 F.bit_xor(F.xxhash64(*key)).alias("key_checksum"),
             )
-            if bucketed:
-                write_bucketed(df, agents_table, path)
-                out = read_bucketed(spark, agents_table)
-            else:
-                df.write.mode("overwrite").parquet(path)
-                out = spark.read.parquet(path)
+            df.write.mode("overwrite").parquet(path)
+            out = spark.read.parquet(path)
             res.observations[name] = obs
             # get blocks until the listener delivers: read it only now,
             # after the write action has returned

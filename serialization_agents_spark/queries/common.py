@@ -311,14 +311,6 @@ def scratch_dir(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     return path
 
 
-def scratch_table(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """A catalog table one query call writes, dropped by kg_cache_clear
-    before the scratch dirs registered ahead of it are removed."""
-    stack = _SCRATCH.setdefault(_key(spark, sf_dir), ExitStack())
-    stack.callback(spark.sql, f"DROP TABLE IF EXISTS {name}")
-    return name
-
-
 def await_query(q: StreamingQuery, name: str) -> None:
     """Block until an availableNow query has drained its input; raise if
     it timed out or failed."""
@@ -335,11 +327,11 @@ def kg_cache_clear(
     sf_dir: str | None = None, wait_cleanup_s: float = 0.0
 ) -> int:
     """Release the memoized kg pipeline's persisted frames and every
-    query call's scratch — temp dirs and catalog tables — (all entries,
-    or just one sf_dir's). The bench/driver processes are short-lived so
-    the cache can stay pinned there, but a long-lived session embedding
-    queries() should call this between corpora to avoid leaking executor
-    storage and disk. Returns the number of pipeline entries released.
+    query call's scratch dirs (all entries, or just one sf_dir's). The
+    bench/driver processes are short-lived so the cache can stay pinned
+    there, but a long-lived session embedding queries() should call this
+    between corpora to avoid leaking executor storage and disk. Returns
+    the number of pipeline entries released.
 
     `.unpersist()` covers the two explicit persists; the pipeline's
     `localCheckpoint` blocks (authority, merged agents, CC loop,

@@ -30,7 +30,6 @@ from serialization_agents_spark.queries.common import (
     kg_redirects,
     registry,
     scratch_dir,
-    scratch_table,
     string_score_walk,
     table,
 )
@@ -42,8 +41,8 @@ from serialization_agents_spark.streaming.windowed import windowed_page_metrics
 
 ENTRIES, query = registry()
 
-# The agents surface kg_agents certifies; kg_agents_bucketed and
-# kg_incremental_fold build the same table other ways and must match it.
+# The agents surface kg_agents certifies; kg_agents_bucketed (the persisted
+# stage) and kg_incremental_fold (the fold) must match it.
 _AGENT_COLS = (
     "entity_key", "name_controlled", "is_controlled", "type", "ulan", "mention_count"
 )
@@ -245,24 +244,19 @@ def kg_agents(spark, sf):
 
 @query(_KG_AGENTS_SQL)
 def kg_agents_bucketed(spark, sf):
-    """The SAME agents surface as kg_agents, but produced through the
-    flagship plan runner with `agents_table=` set (VERDICT r4 #5): the
-    agents stage is persisted as a catalog table BUCKETED on
-    entity_key (sources/bucketed.py) and handed downstream through
-    the catalog, so every later entity_key join/aggregation plans
-    with no shuffle Exchange on the agents side — the 10^12-entity
-    maintenance-join layout, now exercised in the driver flow, not
-    only in tests. Hash-certified against kg_agents' oracle: the
-    bucketed layout must be a pure physical choice with zero effect
-    on results."""
+    """The SAME agents surface as kg_agents, but from the PERSISTED
+    agents stage: `run_pipeline(out_dir=...)` writes it as plain parquet
+    and hands on the frame read back from that parquet — the stage
+    every resume reads. Hash-certified against kg_agents' oracle, so
+    persisting is a pure physical choice with zero effect on results.
+    The name is kept for the pinned key order
+    (tests/test_query_order.py)."""
     res = run_pipeline(
         spark,
         *kg_inputs(spark, sf),
         out_dir=scratch_dir(spark, sf, "kg_bucketed_") + "/run",
-        agents_table=scratch_table(spark, sf, "kg_agents_bucketed_stage"),
-        # the agents-refresh maintenance job: stop at the agents
-        # stage — CC/triples/errors are never declared (until=),
-        # keeping this gate row at the cost of the stages it tests
+        # CC/triples/errors are never declared (until=), keeping this
+        # gate row at the cost of the stage it tests
         until="agents",
     )
     return res.agents.select(*_AGENT_COLS)

@@ -7,7 +7,7 @@ The reference runs as a Node process over Mongo cursors
         --py-files serialization_agents_spark.zip \
         runner.py --pages s3://corpus/pages --authority s3://dims/authority \
         --out-dir s3://kg/run42 [--redirects ...] [--blacklist ...] \
-        [--lang en] [--dates 2024-01-01 2024-01-31] [--agents-table kg.agents]
+        [--lang en] [--dates 2024-01-01 2024-01-31]
 
 where the zip is built by `python tools/package_pyfiles.py` and this file
 is the primary script (it imports the package from the shipped zip).
@@ -60,16 +60,11 @@ def build_arg_parser() -> argparse.ArgumentParser:
         help="crawl_date partition range, YYYY-MM-DD inclusive",
     )
     p.add_argument(
-        "--agents-table",
-        help="persist the agents stage as a catalog table bucketed on "
-        "entity_key (zero-shuffle maintenance joins)",
-    )
-    p.add_argument(
         "--until", default="triples",
         choices=("extract", "mentions", "linked", "agents", "canonical",
                  "triples"),
-        help="stop after this stage (agents-table maintenance runs pass "
-        "--until agents and skip CC/triples entirely)",
+        help="stop after this stage; a later run on the same --out-dir "
+        "resumes from it",
     )
     p.add_argument(
         "--master",
@@ -116,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
         lang_filter=args.lang,
         out_dir=args.out_dir,
         run_id=args.run_id,
-        agents_table=args.agents_table,
         until=args.until,
     )
     rows = dict(

@@ -19,10 +19,11 @@ The fold is a BUCKETED partial rewrite (`fold_batch_into_agents`): the
 agents table is hash-partitioned on entity_key and each micro-batch
 rewrites only the buckets its keys touch — O(batch) work per batch, not
 O(|agents|) — with a persisted last-batch marker + batch-keyed staging
-for replay safety. Canonicalization (CC) and
-enumeration remain periodic batch jobs over the maintained agents
-table — exactly the reference's split between continuous serializers
-and the final enumerate pass (/root/reference/README.md:22-46).
+for replay safety. The folded table is certified against kg_agents'
+oracle (the kg_incremental_fold query); no run resumes canonicalization
+(CC) and enumeration from it yet, which would give the reference's split
+between continuous serializers and the final enumerate pass
+(/root/reference/README.md:22-46).
 """
 
 from __future__ import annotations

@@ -159,13 +159,8 @@ def test_rerun_is_deterministic(spark, corpus):
     pages, authority, redirects, blacklist = corpus
     r1 = run_pipeline(spark, pages, authority, redirects, blacklist)
     r2 = run_pipeline(spark, pages, authority, redirects, blacklist)
-    c1 = global_checksum(
-        r1.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
-    )
-    c2 = global_checksum(
-        r2.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
-    )
-    assert c1 == c2
+    key = STAGE_KEYS["triples"]
+    assert global_checksum(r1.triples, *key) == global_checksum(r2.triples, *key)
 
 
 def test_in_memory_run_leaves_no_storage(spark, corpus):
@@ -231,9 +226,14 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
         want_stage = global_checksum(df, *STAGE_KEYS[stage])
         assert (got["row_count"], got["key_checksum"]) == want_stage, stage
     assert set(_assert_one_metrics_row_per_stage(spark, out).values()) == {"run0"}
-    want = global_checksum(
-        full.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
-    )
+    # the persisted agents stage, read back, equals an in-memory run's
+    def agents_by_key(agents) -> dict:
+        cols = ("entity_key", "mention_count", "name_controlled")
+        return {r[0]: tuple(r[1:]) for r in agents.select(*cols).collect()}
+
+    in_memory = run_pipeline(spark, pages, authority, redirects, blacklist, until="agents")
+    assert agents_by_key(full.agents) == agents_by_key(in_memory.agents)
+    want = global_checksum(full.triples, *STAGE_KEYS["triples"])
 
     # a completed out_dir is read back whole: no stage operator is called
     # and the `_errors` side table is not rewritten
@@ -251,9 +251,7 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     assert not again.stages_computed
     assert os.stat(errors_done).st_mtime_ns == errors_mtime
     assert again.cc_iterations == 0
-    assert global_checksum(
-        again.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
-    ) == want
+    assert global_checksum(again.triples, *STAGE_KEYS["triples"]) == want
 
     # simulate a crash after 'linked': drop everything later
     for stage in ["agents", "canonical", "triples"]:
@@ -264,9 +262,7 @@ def test_resume_from_checkpoint(spark, corpus, tmp_path, monkeypatch):
     )
     assert set(resumed.stages_resumed) >= {"extract", "mentions", "linked"}
     assert set(resumed.stages_computed) == {"agents", "canonical", "triples"}
-    got = global_checksum(
-        resumed.triples.select(F.concat_ws("", "subj", "pred", "obj").alias("k")), "k"
-    )
+    got = global_checksum(resumed.triples, *STAGE_KEYS["triples"])
     assert got == want
     # still one row per stage: the recomputed stages' rows were replaced
     run_ids = _assert_one_metrics_row_per_stage(spark, out)
@@ -355,67 +351,3 @@ def test_until_agents_skips_downstream_and_resumes_forward(spark, corpus, tmp_pa
     assert {"extract", "mentions", "linked", "agents"} <= set(full.stages_resumed)
     assert {"canonical", "triples"} <= set(full.stages_computed)
     assert full.triples.count() > 0
-
-
-def test_agents_table_without_out_dir_raises(spark, corpus):
-    """ADVICE round-4: agents_table with out_dir=None was silently
-    ignored — must fail loudly instead."""
-    import pytest
-
-    pages, authority, redirects, blacklist = corpus
-    with pytest.raises(ValueError, match="agents_table requires out_dir"):
-        run_pipeline(
-            spark, pages, authority, redirects, blacklist,
-            agents_table="t_orphan",
-        )
-
-
-def test_bucketed_agents_stage_joins_without_exchange(spark, corpus, tmp_path):
-    """VERDICT round-3 #5: with `agents_table` set, the agents stage is
-    persisted BUCKETED on entity_key and handed downstream through the
-    catalog — an entity_key aggregation or self-join over it plans with
-    NO shuffle Exchange on the agents side, and the pipeline output is
-    unchanged."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    def _plan(df) -> str:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    pages, authority, redirects, blacklist = corpus
-    out = str(tmp_path / "bucketed_run")
-    res = run_pipeline(
-        spark, pages, authority, redirects, blacklist,
-        out_dir=out, agents_table="t_agents_stage",
-    )
-    # the catalog-read agents frame aggregates on its bucket key with no
-    # Exchange — the maintenance-join contract as a PIPELINE behavior
-    agg = res.agents.groupBy("entity_key").agg(
-        F.sum("mention_count").alias("m")
-    )
-    assert "Exchange" not in _plan(agg), "bucketed agents agg shuffled"
-    join = res.agents.hint("merge").join(
-        res.agents.select("entity_key"), "entity_key"
-    )
-    assert "Exchange" not in _plan(join), "bucketed agents join shuffled"
-
-    # output parity with the plain-parquet run
-    plain = run_pipeline(spark, pages, authority, redirects, blacklist)
-    want = {r["entity_key"]: r["mention_count"] for r in plain.agents.collect()}
-    got = {r["entity_key"]: r["mention_count"] for r in res.agents.collect()}
-    assert got == want
-
-    # resume path: re-run reuses the catalog table (agents not recomputed)
-    res2 = run_pipeline(
-        spark, pages, authority, redirects, blacklist,
-        out_dir=out, agents_table="t_agents_stage",
-    )
-    assert "agents" in res2.stages_resumed
-    assert "Exchange" not in _plan(
-        res2.agents.groupBy("entity_key").agg(F.count(F.lit(1)).alias("c"))
-    )

@@ -1,7 +1,7 @@
-"""A query that stages files or a catalog table for its lazily-read
-result returns the same rows when called twice in one session, and
-kg_cache_clear removes everything it staged: no temp dir and no catalog
-table is left behind."""
+"""A query that stages files for its lazily-read result returns the same
+rows when called twice in one session, and kg_cache_clear removes
+everything it staged: no temp dir is left behind, and no catalog table
+appears."""
 
 from __future__ import annotations
 
@@ -44,4 +44,3 @@ def test_staging_query_twice_leaves_no_residue(spark, name):
     entry.kg_cache_clear()
     assert not _staged() - dirs_before, "scratch dirs left behind"
     assert not _tables(spark) - tables_before, "catalog tables left behind"
-    assert "kg_agents_bucketed_stage" not in _tables(spark)

@@ -38,7 +38,7 @@ def test_runner_cli_parses_and_validates():
     p = build_arg_parser()
     a = p.parse_args(
         ["--pages", "/p", "--authority", "/a", "--out-dir", "/o",
-         "--dates", "2024-01-01", "2024-01-31", "--agents-table", "t"]
+         "--dates", "2024-01-01", "2024-01-31"]
     )
     assert a.master == "inherit" and a.dates == ["2024-01-01", "2024-01-31"]
     with pytest.raises(SystemExit):

@@ -1,5 +1,5 @@
-"""Source connectors: schema enforcement, partition pruning, format
-round-trips, and the zero-shuffle bucketed-join contract."""
+"""Source connectors: schema enforcement, partition pruning, and format
+round-trips."""
 
 from __future__ import annotations
 
@@ -11,13 +11,10 @@ from pyspark.sql import functions as F
 
 from serialization_agents_spark import synth
 from serialization_agents_spark.sources import (
-    bucketed,
     read_authority,
     read_blacklist,
-    read_bucketed,
     read_pages,
     read_redirects,
-    write_bucketed,
 )
 
 
@@ -85,28 +82,6 @@ def test_schema_enforcement_fails_loudly(spark, tmp_path, reader):
     spark.range(3).write.mode("overwrite").parquet(path)
     with pytest.raises(ValueError, match="missing columns"):
         reader(spark, path)
-
-
-def test_bucketed_join_and_agg_shuffle_nothing(spark, tmp_path, monkeypatch):
-    """Two tables bucketed on entity_key equi-join AND group-aggregate
-    with zero Exchange operators — the co-located-join contract the
-    100 TB maintenance jobs rely on."""
-    agents = spark.range(500).select(
-        F.concat(F.lit("viaf:"), F.col("id")).alias("entity_key"),
-        (F.col("id") % 7).alias("v"),
-    )
-    monkeypatch.setattr(bucketed, "N_BUCKETS", 8)
-    write_bucketed(agents, "t_agents_a", str(tmp_path / "ba"))
-    write_bucketed(agents, "t_agents_b", str(tmp_path / "bb"))
-    a, b = read_bucketed(spark, "t_agents_a"), read_bucketed(spark, "t_agents_b")
-
-    joined = a.hint("merge").join(b, "entity_key")  # forbid broadcast
-    assert "Exchange" not in _plan(joined), "bucketed join shuffled"
-    assert joined.count() == 500
-
-    agg = a.groupBy("entity_key").agg(F.sum("v").alias("s"))
-    assert "Exchange" not in _plan(agg), "bucketed aggregation shuffled"
-    assert agg.count() == 500
 
 
 def test_csv_roundtrip_preserves_bytes_and_prunes(spark, pages, tmp_path):
