@@ -20,12 +20,18 @@ Determinism note: `normalize_name_py` is the canonical byte-stable
 definition (pure `unicodedata` NFD fold + a small explicit table for
 non-decomposable letters, no locale dependence); the Spark expression's
 translate table is GENERATED from the same fold, so Spark and Python
-agree by construction over Basic Latin..Latin Extended-B, bare combining
-marks, and Latin Extended Additional (property-swept in
-tests/test_normalize.py). DuckDB's strip_accents matches NFD semantics
-over that range too, with ONE known exception: U+034F (combining
-grapheme joiner, combining class 0) is stripped by DuckDB but folds to
-whitespace here — scope NORMALIZE_SQL accordingly.
+agree by construction over the whole BMP (property-swept in
+tests/test_normalize.py). DuckDB's strip_accents (1.0) matches NFD
+semantics over Basic Latin..Latin Extended Additional with ONE known
+exception, U+034F; over the whole BMP it differs on marks only (also
+swept) — scope NORMALIZE_SQL accordingly:
+
+- marks of combining class 0 — U+034F (combining grapheme joiner) and
+  the Indic vowel signs and enclosing marks like it (U+0903, U+093E,
+  U+20DD, ...) — are stripped by DuckDB but fold to whitespace here;
+- 37 marks of nonzero class that DuckDB's Unicode tables predate —
+  U+0898..U+089F, U+08CA..U+08D2, U+0C3C, U+1715, U+1ABF..U+1ACE,
+  U+1DFA, U+A82C — are deleted here but fold to whitespace in DuckDB.
 """
 
 from __future__ import annotations
@@ -47,16 +53,25 @@ _EXTRA_DST = "oldin"
 _EXTRA_MAP = str.maketrans(_EXTRA_SRC, _EXTRA_DST)
 
 
+# Every non-ASCII BMP code point except CJK Extension A .. CJK Unified
+# Ideographs, Hangul syllables, surrogates and the private-use area. The
+# skipped ranges hold no combining mark, no case mapping and no canonical
+# decomposition into anything but other ideographs or Hangul jamo, and
+# Unicode's stability policy keeps it so: none of their chars can enter
+# the table, and skipping them keeps the scan to a few ms per process.
+_FOLD_SCAN = [*range(0xA0, 0x3400), *range(0xA000, 0xAC00), *range(0xF900, 0x10000)]
+
+
 def _gen_fold_table() -> tuple[str, str]:
-    """Generate the JVM translate() table from the canonical NFD fold:
-    every Latin-1 Supplement .. Latin Extended Additional (U+00A0..U+1EFF)
-    lowercase char whose NFD decomposition strips to a single ASCII
-    letter, plus the non-decomposable extras above, plus bare combining
-    marks (deleted — translate drops src chars with no dst counterpart),
-    so pre-decomposed input ('Nguye'+U+0303+'n') folds identically to
-    composed input. Deterministic (pure unicodedata) — the JVM path and
-    normalize_name_py agree by CONSTRUCTION, asserted over the whole
-    Basic Latin..Latin Extended Additional range by tests/test_normalize.
+    """Generate the JVM translate() table from the canonical NFD fold,
+    over the whole BMP: every char whose fold is a single ASCII letter or
+    digit maps to it, and every char whose fold is empty (a combining
+    mark, or a char whose NFD is only combining marks) is deleted —
+    translate drops src chars with no dst counterpart — so pre-decomposed
+    input ('Nguye'+U+0303+'n') folds identically to composed input.
+    Deterministic (pure unicodedata) — the JVM path and normalize_name_py
+    agree by CONSTRUCTION, asserted over the whole BMP by
+    tests/test_normalize.
 
     NFD (canonical-only), NOT NFKD: compatibility decompositions are
     one-to-many (¼ -> '1⁄4', ª -> 'a'), which a 1:1 translate cannot
@@ -66,27 +81,23 @@ def _gen_fold_table() -> tuple[str, str]:
     # Both cases enter the table and translate runs BEFORE lower(): JVM
     # lower() expands 'İ' to 'i' + combining dot, which a post-lower
     # table can never fold back. The fold composes NFD + _EXTRA_MAP so
-    # accented non-decomposables (ǿ -> ø -> o) land too. The scan skips
-    # the non-Latin blocks between Extended-B and Extended Additional
-    # (their chars never NFD-fold to ASCII, so they'd be no-ops anyway).
-    src, dst = [], []
-    for cp in [*range(0xA0, 0x250), *range(0x1E00, 0x1F00)]:
-        ch = chr(cp)
-        folded = "".join(
-            c for c in unicodedata.normalize("NFD", ch) if not unicodedata.combining(c)
-        )
-        folded = folded.lower().translate(_EXTRA_MAP)
-        if len(folded) == 1 and folded.isascii() and folded.isalnum():
-            src.append(ch)
-            dst.append(folded)
-    # Combining Diacritical Marks (U+0300..U+036F): delete outright, the
-    # same thing the canonical Python fold does to a bare combining mark.
-    # Criterion is combining()!=0, same as the Python fold — U+034F
+    # accented non-decomposables (ǿ -> ø -> o) land too. It runs on all
+    # scanned chars at once: NUL is a starter that folds to itself, so
+    # joining on it keeps each char's fold in its own segment. Criterion
+    # for a mark is combining()!=0, same as normalize_name_py — U+034F
     # (COMBINING GRAPHEME JOINER) is class 0 and folds to space in both.
-    src.extend(
-        chr(cp) for cp in range(0x300, 0x370) if unicodedata.combining(chr(cp))
-    )
-    return "".join(src), "".join(dst)
+    chars = "".join(map(chr, _FOLD_SCAN))
+    marks = "".join(filter(unicodedata.combining, chars))
+    nfd = unicodedata.normalize("NFD", "\0".join(chars))
+    folded = re.sub(f"[{re.escape(marks)}]", "", nfd).lower().translate(_EXTRA_MAP)
+    src, dst, deleted = [], [], []
+    for ch, fold in zip(chars, folded.split("\0")):
+        if not fold:
+            deleted.append(ch)
+        elif len(fold) == 1 and fold.isascii() and fold.isalnum():
+            src.append(ch)
+            dst.append(fold)
+    return "".join(src + deleted), "".join(dst)
 
 
 _FOLD_SRC, _FOLD_DST = _gen_fold_table()
@@ -109,8 +120,7 @@ def normalize_name_py(s: str | None) -> str | None:
 
 def normalize_name_expr(col: Column) -> Column:
     """JVM-side fast path (whole-stage codegen), byte-identical to
-    normalize_name_py over the full Latin-1..Latin Extended Additional
-    range (and for bare combining marks): the translate table is
+    normalize_name_py over the whole BMP: the translate table is
     GENERATED from the same NFD fold (see _gen_fold_table), so the two
     impls cannot drift. Chars outside the table fold to whitespace in
     both (same as punctuation).

@@ -41,9 +41,11 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType
 
 from serialization_agents_spark.functions.normalize import normalize_name_expr
 from serialization_agents_spark.operators.merge import argmin_by, capped_union
+from serialization_agents_spark.schemas import AGENTS
 
 MAX_CC_ITERATIONS = 25
 _LABELS_ARROW = pa.schema([("entity_key", pa.string()), ("component", pa.string())])
@@ -257,7 +259,7 @@ def _project(df: DataFrame, viaf_merged: F.Column, merge_source: F.Column) -> Da
     `component`; only the merge lineage differs between singletons and
     merged components."""
     return df.select(
-        F.lit(None).cast("long").alias("registry_id"),
+        F.lit(None).cast(LongType()).alias("registry_id"),
         "entity_key",
         F.array_sort("viaf").alias("viaf"),
         "is_controlled",
@@ -362,8 +364,8 @@ def canonicalize_agents(agents: DataFrame) -> tuple[DataFrame, int]:
     empty = F.array()
     out = _project(
         singles.withColumn("component", F.col("entity_key")),
-        empty.cast("array<string>"),
-        empty.cast("array<struct<source:string,id:string>>"),
+        empty.cast(ArrayType(StringType())),
+        empty.cast(AGENTS["merge_source"].dataType),
     )
     if labels is not None:
         out = out.unionByName(_merge_components(agents.join(labels, "entity_key"), n_active))

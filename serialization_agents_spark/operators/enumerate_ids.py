@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 REGISTRY_ID_OFFSET = 10_000_000  # /root/reference/lib/enumerate_agents.js:166
@@ -51,7 +52,7 @@ def running_offsets(df: DataFrame, order: list[str], weight: Column) -> DataFram
     )
     return parted.withColumn(
         "_before",
-        F.lit(offsets).cast("array<bigint>")[F.col("_pid")] + F.sum(weight).over(w) - weight,
+        F.lit(offsets).cast(ArrayType(LongType()))[F.col("_pid")] + F.sum(weight).over(w) - weight,
     ).drop("_pid")
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 _ENTITIES = [
     ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"),
@@ -41,7 +42,7 @@ _BLOCK_RE_JAVA = (
 def extract_text_expr(html: Column) -> Column:
     """JVM-side extractor — identical contract, zero Python in the plan;
     stays inside whole-stage codegen."""
-    s = html.cast("string")  # binary -> UTF-8 string (Spark semantic)
+    s = html.cast(StringType())  # binary -> UTF-8 string (Spark semantic)
     s = F.regexp_replace(s, _BLOCK_RE_JAVA, " ")
     s = F.regexp_replace(s, r"(?s)<[^>]*>", " ")
     for ent, ch in _ENTITIES:

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from serialization_agents_spark.functions.normalize import fuzzy_score_expr
 
@@ -63,7 +64,7 @@ def resolve_redirects(
     `removeViafFromShadowcatAgent`, lib/utils_shadowcat.js:152-173).
     """
     if "lc_hint" not in mentions.columns:
-        mentions = mentions.withColumn("lc_hint", F.lit(None).cast("string"))
+        mentions = mentions.withColumn("lc_hint", F.lit(None).cast(StringType()))
     if redirects is None:
         m = mentions.withColumn("viaf_resolved", F.col("viaf_hint"))
         dead = mentions.limit(0).select(
@@ -168,7 +169,7 @@ def link_mentions(
         )
 
     cand_t = exploded.schema["auth_n"].dataType
-    best_t = f"struct<a:{cand_t.simpleString()},s:double>"
+    best_t = StructType([StructField("a", cand_t), StructField("s", DoubleType())])
     # score each candidate ONCE via transform, then a tiny first-wins
     # fold over the pre-scored structs — the interpreted walk used to
     # appear twice per fold step (condition + value), doubling both the
@@ -198,7 +199,7 @@ def link_mentions(
                 F.size("cands") == 1,
                 F.struct(
                     F.element_at("cands", 1).alias("a"),
-                    F.lit(None).cast("double").alias("s"),
+                    F.lit(None).cast(DoubleType()).alias("s"),
                 ),
             ).otherwise(argmax).alias("nb"),
         )

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from serialization_agents_spark.functions.normalize import normalize_name_expr
 
@@ -62,7 +63,7 @@ def detect_mentions(pages: DataFrame, include_subjects: bool = False) -> DataFra
     single page scan (equivalent to unioning promote_subject_mentions,
     minus one full corpus scan).
     """
-    html_s = F.col("html").cast("string")
+    html_s = F.col("html").cast(StringType())
 
     # ONE pass over each page: every span kind is gathered into a single
     # struct array and exploded once. (A union of per-kind branches
@@ -72,10 +73,10 @@ def detect_mentions(pages: DataFrame, include_subjects: bool = False) -> DataFra
         return F.struct(
             name.alias("name_raw"), viaf.alias("viaf_hint"), lc.alias("lc_hint"),
             F.lit(src).alias("source"),
-            F.lit(prio).cast("int").alias("source_priority"),
+            F.lit(prio).cast(IntegerType()).alias("source_priority"),
         )
 
-    null_s = F.lit(None).cast("string")
+    null_s = F.lit(None).cast(StringType())
     hinted = F.transform(
         F.arrays_zip(
             F.regexp_extract_all(html_s, F.lit(MARKUP_VIAF_RE), F.lit(2)).alias("name"),
@@ -142,7 +143,7 @@ def promote_subject_mentions(pages: DataFrame) -> DataFrame:
     linking cascade with a lower source priority so an agent-span mention
     of the same entity wins scalar conflicts.
     """
-    html_s = F.col("html").cast("string")
+    html_s = F.col("html").cast(StringType())
     return (
         pages.select(
             "url",
@@ -157,10 +158,10 @@ def promote_subject_mentions(pages: DataFrame) -> DataFrame:
             ),
             "name_raw",
             normalize_name_expr(F.col("name_raw")).alias("name_norm"),
-            F.lit(None).cast("string").alias("viaf_hint"),
-            F.lit(None).cast("string").alias("lc_hint"),
+            F.lit(None).cast(StringType()).alias("viaf_hint"),
+            F.lit(None).cast(StringType()).alias("lc_hint"),
             F.lit(SUBJECT_SOURCE).alias("source"),
-            F.lit(SUBJECT_PRIORITY).cast("int").alias("source_priority"),
+            F.lit(SUBJECT_PRIORITY).cast(IntegerType()).alias("source_priority"),
         )
         .where(F.length("name_norm") > 0)
     )
@@ -183,10 +184,10 @@ def detect_mentions_prose(pages_with_text: DataFrame) -> DataFrame:
             ),
             "name_raw",
             normalize_name_expr(F.col("name_raw")).alias("name_norm"),
-            F.lit(None).cast("string").alias("viaf_hint"),
-            F.lit(None).cast("string").alias("lc_hint"),
+            F.lit(None).cast(StringType()).alias("viaf_hint"),
+            F.lit(None).cast(StringType()).alias("lc_hint"),
             F.lit("web_prose").alias("source"),
-            F.lit(2).cast("int").alias("source_priority"),
+            F.lit(2).cast(IntegerType()).alias("source_priority"),
         )
         .where(F.length("name_norm") > 0)
     )
@@ -221,7 +222,7 @@ def detect_mentions_gazetteer(
                             F.sequence(F.lit(0), F.size("toks") - L),
                             _shingler(L),
                         ),
-                    ).otherwise(F.array().cast("array<string>"))
+                    ).otherwise(F.array().cast(ArrayType(StringType())))
                     for L in range(1, 3)
                 ])
             )
@@ -237,7 +238,7 @@ def detect_mentions_gazetteer(
         F.col("shingle").alias("name_raw"),
         F.col("shingle").alias("name_norm"),
         F.col("viaf_id").alias("viaf_hint"),
-        F.lit(None).cast("string").alias("lc_hint"),
+        F.lit(None).cast(StringType()).alias("lc_hint"),
         F.lit("web_gazetteer").alias("source"),
-        F.lit(3).cast("int").alias("source_priority"),
+        F.lit(3).cast(IntegerType()).alias("source_priority"),
     )

@@ -33,12 +33,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
 
 from serialization_agents_spark.functions.normalize import (
     fuzzy_score_expr,
     normalize_name_expr,
     percent_overlap_expr,
 )
+from serialization_agents_spark.schemas import AGENTS
 
 N_SALT = 16
 MAX_ALT_FORMS = 64
@@ -112,9 +114,9 @@ def prepare_mention_facts(linked: DataFrame) -> DataFrame:
                 # distinct struct and blow the collect_set cap for head
                 # entities; the reference's `id` is the source-record id,
                 # which web pages don't have a stable analogue for.
-                F.lit(None).cast("string").alias("id"),
-                F.lit(None).cast("double").alias("poverlap"),  # score_alt_forms
-                F.lit(None).cast("double").alias("fuzzy"),     # fills these
+                F.lit(None).cast(StringType()).alias("id"),
+                F.lit(None).cast(DoubleType()).alias("poverlap"),  # score_alt_forms
+                F.lit(None).cast(DoubleType()).alias("fuzzy"),     # fills these
             ),
         )
     )
@@ -161,14 +163,14 @@ def merge_entities(linked: DataFrame) -> DataFrame:
     name_controlled = F.col("name_pref.v")
     auth = F.col("auth")
     return agg.select(
-        F.lit(None).cast("long").alias("registry_id"),
+        F.lit(None).cast(LongType()).alias("registry_id"),
         "entity_key",
-        F.coalesce(auth["viaf_all"], F.array().cast("array<string>")).alias("viaf"),
+        F.coalesce(auth["viaf_all"], F.array().cast(ArrayType(StringType()))).alias("viaf"),
         auth["viaf_id"].isNotNull().alias("is_controlled"),
         name_controlled.alias("name_controlled"),
         auth["wikidata_id"].alias("wikidata"),
         auth["lc_id"].alias("lc_id"),
-        auth["getty_id"].cast("long").alias("ulan"),
+        auth["getty_id"].cast(LongType()).alias("ulan"),
         auth["dbpedia_id"].alias("dbpedia"),
         auth["birth"].alias("birth"),
         auth["death"].alias("death"),
@@ -180,16 +182,16 @@ def merge_entities(linked: DataFrame) -> DataFrame:
             F.array_distinct(
                 F.concat(
                     F.col("name_normalized"),
-                    F.coalesce(auth["normalized"], F.array().cast("array<string>")),
+                    F.coalesce(auth["normalized"], F.array().cast(ArrayType(StringType()))),
                 )
             )
         ).alias("name_normalized"),
         F.filter(
             F.array_sort(F.col("alt_forms")), lambda a: a["name"] != name_controlled
         ).alias("alt_forms"),
-        F.coalesce(auth["fast"], F.array().cast("array<long>")).alias("fast"),
-        F.array().cast("array<string>").alias("viaf_merged"),
-        F.array().cast("array<struct<source:string,id:string>>").alias("merge_source"),
+        F.coalesce(auth["fast"], F.array().cast(ArrayType(LongType()))).alias("fast"),
+        F.array().cast(ArrayType(StringType())).alias("viaf_merged"),
+        F.array().cast(AGENTS["merge_source"].dataType).alias("merge_source"),
         F.col("mention_count"),
         F.col("source_priority"),
         F.col("src_pref")["v"].alias("primary_source"),

@@ -27,8 +27,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 AGENT_IRI_PREFIX = "registry:agent/"
+# the type of an array of _po() structs
+_PO_ARRAY = ArrayType(
+    StructType([StructField("pred", StringType()), StructField("obj", StringType())])
+)
 
 
 def agent_iri(col) -> Column:
@@ -54,7 +59,7 @@ def materialize_triples(canonical: DataFrame, linked: DataFrame | None = None) -
         F.when(
             F.col("name_controlled").isNotNull(),
             F.array(_po("skos:prefLabel", F.col("name_controlled"))),
-        ).otherwise(F.array().cast("array<struct<pred:string,obj:string>>")),
+        ).otherwise(F.array().cast(_PO_ARRAY)),
         F.transform(alt_names, lambda n: _po("skos:altLabel", n)),
         F.transform(
             "viaf",

@@ -32,9 +32,9 @@ ERRORS = StructType(
 def _as_errors(df: DataFrame, stage: str, reason: str, url_col, detail_col) -> DataFrame:
     return df.select(
         F.lit(stage).alias("stage"),
-        url_col.cast("string").alias("url"),
+        url_col.cast(StringType()).alias("url"),
         F.lit(reason).alias("reason"),
-        detail_col.cast("string").alias("detail"),
+        detail_col.cast(StringType()).alias("detail"),
     )
 
 

@@ -6,6 +6,28 @@ Common-Crawl-style pages) while remaining correct on local[N] test runs:
 - AQE on (runtime coalescing, skew-join splitting);
 - Arrow execution for pandas UDFs (the only Python hot path we allow);
 - shuffle partitions sized by caller (tests: 32; cluster: ~2-4x cores).
+
+Two defaults skip one-time start-up work that no pipeline output depends
+on; each process (every KG build runs in a fresh one) paid it:
+
+- ``spark.sql.icu.caseMappings.enabled=false``: ``lower()``/``upper()``
+  use ``UTF8String``'s own case mapping (an ASCII fast path, else
+  ``String.toLowerCase``) instead of ICU. The ICU path's class init
+  builds a title-case table through ICU's BreakIterator; the first
+  ``lower()`` of a build (``normalize_name_expr``, in the mention scan)
+  paid it while every other executor thread waited. Both paths follow
+  the JVM default locale (ICU's one-argument ``toLowerCase`` reads it
+  too), so this adds no locale dependence; ``normalize_name_expr`` and
+  ``fuzzy_score_expr`` give the same values under both (swept in
+  tests/test_normalize.py).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark no
+  longer wraps each Column/DataFrame call to capture its Python call
+  site (a conf round-trip, a stack walk, an IPython import probe and an
+  origin round-trip per call; a build makes hundreds). The one loss: an
+  analysis error's context no longer names the Python file and line.
+
+Both are builder defaults, so ``extra_conf`` overrides them; a session
+that already exists keeps its own settings and gives the same results.
 """
 
 from __future__ import annotations
@@ -66,6 +88,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(map=explicit)
